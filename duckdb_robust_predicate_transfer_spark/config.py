@@ -387,7 +387,9 @@ class RPTConfig:
     #: enables runtime blooms by itself once scans clear the 10 GB
     #: gate, so composed is what production looks like anyway; the r6
     #: early-suppression fix (Engine.sql) removed its one interaction
-    #: loss (Q22: eager build jobs used to run with injection live).
+    #: loss (Q22: eager build jobs used to run with injection live;
+    #: EAGER_AB_r10 re-checked it at the 100M JOB regime: suppressed
+    #: eager jobs 1.043x faster than with injection live).
     suppress_native_rf: bool = True
     #: ...except when the HOST plan's own bloom evidence says native
     #: carries selectivity the transfer left on the table: per-query
@@ -419,7 +421,7 @@ class RPTConfig:
     #: (VERDICT r9: composed 0.893x of native; jq3 0.37, jq25 0.43,
     #: jq18/jq20 0.50). Mechanism: BEFORE any eager job, plan the
     #: ORIGINAL statement once under injection (pure planning, cached)
-    #: and dry-run the gate stack (rewrite.plan_candidates). When every
+    #: and dry-run the gate stack (rewrite.dry_run). When every
     #: candidate op's (probe, cols, build) edge is covered by a native
     #: bloom — i.e. the host expresses the same per-edge filtering with
     #: LAZY, AQE-integrated bloom subqueries while our expression costs
@@ -451,14 +453,6 @@ class RPTConfig:
     #: the flat 0.2 guess cannot. 0 disables the floor (always ride
     #: native when ceding).
     cede_suppress_max_probe_rows: int = 8_000_000
-    #: A/B knob (VERDICT r9 #4): False runs reduce()'s eager jobs with
-    #: native injection still live instead of suppressing first — the
-    #: Q22-era lesson said suppress (eager jobs with injection live
-    #: plant blooms inside themselves, TPCH_SCALE_X1000_r06), but raw
-    #: dual beat composed on v3 shapes and the assumption deserves its
-    #: regime-specific A/B (tools/eager_ab.py). Default keeps the
-    #: certified behavior.
-    suppress_during_eager: bool = True
     #: persist reduced tables that both feed a key-set and the final join
     persist_reduced: bool = True
     #: ...but only when the reduced build side is big enough that

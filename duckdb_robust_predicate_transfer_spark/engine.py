@@ -27,7 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from .catalog import Catalog, get_catalog
 from .config import DEFAULT, RPTConfig
-from .operators.rewrite import TransferResult, apply_transfer
+from .operators.rewrite import (KEY_TIERS, TransferResult, apply_transfer,
+                                 dry_run)
 from .plans.graph import (JoinGraph, execution_order_dag, join_order_dag,
                           largest_root_tree)
 from .plans.ir import JoinEdge, TableNode
@@ -102,14 +103,34 @@ _ORIG_RF_CACHE: dict = {}
 
 #: (statement cache key, rf-threshold confs, footer-row stats, filtered
 #: aliases, cede config knobs) -> (cede, ride_off): the arbitration
-#: VERDICT itself. plan_candidates' job-free dry run of the gate stack
-#: is pure Python but still cost 20-40 ms per call on the widest
-#: flagship queries (r11 pricing: 15-19% of their construction), and
-#: its inputs are all deterministic functions of the key — the footer
-#: row estimates join the key so a fixture change invalidates the
-#: entry (same rationale as the catalog's path+mtime+size-keyed
-#: footer cache: metadata keying, not result caching).
+#: VERDICT itself. The job-free dry run of the gate stack
+#: (rewrite.dry_run) is pure Python but still cost 20-40 ms per call on
+#: the widest flagship queries (r11 pricing: 15-19% of their
+#: construction), and its inputs are all deterministic functions of the
+#: key — the footer row estimates join the key so a fixture change
+#: invalidates the entry (same rationale as the catalog's
+#: path+mtime+size-keyed footer cache: metadata keying, not result
+#: caching).
 _CEDE_CACHE: dict = {}
+
+
+def _memo_put(cache: dict, key, value, cap: int = 256):
+    """Store ``value`` in a bounded FIFO memo (the oldest entry goes at
+    capacity); returns it."""
+    if len(cache) >= cap:
+        cache.pop(next(iter(cache)))
+    cache[key] = value
+    return value
+
+
+#: the planner confs that decide where Spark plants runtime blooms; the
+#: bloom-evidence caches key on their values
+_RF_CONF_KEYS = (
+    "spark.sql.optimizer.runtime.bloomFilter."
+    "applicationSideScanSizeThreshold",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+    "spark.sql.autoBroadcastJoinThreshold")
+_RF_ENABLED = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
 
 import re as _re
@@ -236,7 +257,7 @@ class Engine:
             pass
         if not auto_rpt or not cfg.enabled or self.catalog is None:
             return df
-        if cfg.suppress_native_rf and cfg.suppress_during_eager:
+        if cfg.suppress_native_rf:
             # suppress BEFORE the transfer runs, not after: reduce()'s
             # eager jobs (observe counts, min/max aggs, key-set builds,
             # persists) are real queries, and with injection still live
@@ -296,35 +317,13 @@ class Engine:
         default and flipping to dual needs positive evidence."""
         if getattr(self.spark, "_drpt_rf_stash", None) != "true":
             return False
-        from .plans.catalyst_order import native_bloom_edges
-
-        rf_confs = []
-        for k in ("spark.sql.optimizer.runtime.bloomFilter."
-                  "applicationSideScanSizeThreshold",
-                  "spark.sql.optimizer.runtime.bloomFilter."
-                  "creationSideThreshold",
-                  "spark.sql.autoBroadcastJoinThreshold"):
-            try:
-                rf_confs.append(self.spark.conf.get(k))
-            except Exception:
-                rf_confs.append("")
         ek = (getattr(self, "_stmt_ck", None) or query,
-              tuple(rf_confs), repr(cfg))
+              self._rf_confs(), repr(cfg))
         if ek in _DUAL_RF_CACHE:
             return _DUAL_RF_CACHE[ek]
-        key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
         dual = False
         try:
-            prior = self.spark.conf.get(key, "false")
-        except Exception:
-            prior = "false"
-        try:
-            self.spark.conf.set(key, "true")
-            table_paths = {t: self.catalog.path(t)
-                           for t in self.catalog.known_tables()}
-            blooms = native_bloom_edges(self.spark.sql(query),
-                                        table_paths,
-                                        self._table_cols())
+            blooms = self._native_blooms(query)
             covered = set()
             alias_t = getattr(self, "_last_alias_tables", {})
             if self.last_result is not None:
@@ -337,7 +336,7 @@ class Engine:
                         # "uncovered" verdict (ADVICE r8)
                         covered.add((str(pt).lower(), pc.lower(),
                                      str(bt).lower()))
-            for b in blooms or ():
+            for b in blooms:
                 if None in (b["probe_table"], b["probe_col"],
                             b["build_table"]):
                     continue
@@ -347,19 +346,45 @@ class Engine:
                     break
         except Exception:
             dual = False
+        return _memo_put(_DUAL_RF_CACHE, ek, dual)
+
+    def _rf_confs(self) -> tuple:
+        """Current values of the runtime-filter planner confs
+        (_RF_CONF_KEYS); "" for an unset one."""
+        out = []
+        for k in _RF_CONF_KEYS:
+            try:
+                out.append(self.spark.conf.get(k))
+            except Exception:
+                out.append("")
+        return tuple(out)
+
+    def _native_blooms(self, query: str) -> list:
+        """The native runtime bloom edges Spark plants in ``query``
+        planned with bloom injection enabled (native_bloom_edges dicts).
+        Pure planning: a fresh spark.sql, so no returned DataFrame is
+        ever optimized under the temporarily-enabled conf."""
+        from .plans.catalyst_order import native_bloom_edges
+
+        try:
+            prior = self.spark.conf.get(_RF_ENABLED, "false")
+        except Exception:
+            prior = "false"
+        try:
+            self.spark.conf.set(_RF_ENABLED, "true")
+            table_paths = {t: self.catalog.path(t)
+                           for t in self.catalog.known_tables()}
+            return list(native_bloom_edges(self.spark.sql(query),
+                                           table_paths,
+                                           self._table_cols()) or ())
         finally:
             try:
                 # restore the observed pre-call value, not a literal:
-                # the stash-exists precondition makes "false" safe
-                # TODAY, but a future call site outside the shadow
-                # window would clobber a user-enabled conf (ADVICE r8)
-                self.spark.conf.set(key, prior)
+                # a call site outside the suppression window must not
+                # clobber a user-enabled conf (ADVICE r8)
+                self.spark.conf.set(_RF_ENABLED, prior)
             except Exception:
                 pass
-        if len(_DUAL_RF_CACHE) >= 256:
-            _DUAL_RF_CACHE.pop(next(iter(_DUAL_RF_CACHE)))
-        _DUAL_RF_CACHE[ek] = dual
-        return dual
 
     def _orig_bloom_edges(self, query: str, cfg: RPTConfig) -> frozenset:
         """Lowercased (probe_table, probe_col, build_table) edges of the
@@ -374,63 +399,31 @@ class Engine:
         suppression+engagement is the certified default. One planning
         pass (~0.2-0.5 s) per novel statement, cached like the
         gate-2e/dual evidence."""
-        rf_confs = []
-        for k in ("spark.sql.optimizer.runtime.bloomFilter."
-                  "applicationSideScanSizeThreshold",
-                  "spark.sql.optimizer.runtime.bloomFilter."
-                  "creationSideThreshold",
-                  "spark.sql.autoBroadcastJoinThreshold"):
-            try:
-                rf_confs.append(self.spark.conf.get(k))
-            except Exception:
-                rf_confs.append("")
-        ek = (getattr(self, "_stmt_ck", None) or query, tuple(rf_confs))
+        ek = (getattr(self, "_stmt_ck", None) or query, self._rf_confs())
         if ek in _ORIG_RF_CACHE:
             return _ORIG_RF_CACHE[ek]
-        from .plans.catalyst_order import native_bloom_edges
-
-        key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-        edges: frozenset = frozenset()
         try:
-            prior = self.spark.conf.get(key, "false")
-        except Exception:
-            prior = "false"
-        try:
-            self.spark.conf.set(key, "true")
-            table_paths = {t: self.catalog.path(t)
-                           for t in self.catalog.known_tables()}
-            blooms = native_bloom_edges(self.spark.sql(query),
-                                        table_paths,
-                                        self._table_cols())
             edges = frozenset(
                 (b["probe_table"].lower(), b["probe_col"].lower(),
                  b["build_table"].lower())
-                for b in blooms or ()
+                for b in self._native_blooms(query)
                 if None not in (b["probe_table"], b["probe_col"],
                                 b["build_table"]))
         except Exception:
             edges = frozenset()
-        finally:
-            try:
-                self.spark.conf.set(key, prior)
-            except Exception:
-                pass
-        if len(_ORIG_RF_CACHE) >= 256:
-            _ORIG_RF_CACHE.pop(next(iter(_ORIG_RF_CACHE)))
-        _ORIG_RF_CACHE[ek] = edges
-        return edges
+        return _memo_put(_ORIG_RF_CACHE, ek, edges)
 
     def _cede_verdict(self, query: str, cfg: RPTConfig, plan, dfs: dict,
-                      rows_est: dict, filtered: set, rows_base: dict,
-                      neighbor_edges: dict, opaque: set,
-                      host_prefiltered) -> "tuple[bool, bool]":
+                      rows_est: dict, filtered: set,
+                      evidence: dict) -> "tuple[bool, bool]":
         """(cede, ride_off): should this query DISENGAGE and hand its
         edges to native runtime blooms (config.cede_covered_edges)?
 
         Runs inside reduce() after scheduling but BEFORE any eager job
         — the whole point is not to sink the jobs the cession avoids.
-        Candidates come from the job-free dry run of the gate stack
-        (rewrite.plan_candidates); coverage from the ORIGINAL plan's
+        Candidates are the key-tier landings of the job-free dry run of
+        the gate stack (rewrite.dry_run, fed the same ``evidence``
+        apply_transfer gets); coverage from the ORIGINAL plan's
         native bloom edges. Cede when every candidate edge is covered
         or the uncovered candidates' probe mass is within
         cede_extra_probe_frac of the query's largest relation — the
@@ -447,74 +440,51 @@ class Engine:
         # verdict cache (_CEDE_CACHE): every input below is a
         # deterministic function of (statement, planner confs, footer
         # stats, config) — skip the per-call dry run on repeats
-        vk = None
+        rows_base = evidence.get("rows_base") or {}
         try:
-            rf_confs = []
-            for k in ("spark.sql.optimizer.runtime.bloomFilter."
-                      "applicationSideScanSizeThreshold",
-                      "spark.sql.optimizer.runtime.bloomFilter."
-                      "creationSideThreshold",
-                      "spark.sql.autoBroadcastJoinThreshold"):
-                try:
-                    rf_confs.append(self.spark.conf.get(k))
-                except Exception:
-                    rf_confs.append("")
             # repr(cfg) (the _BAIL_CACHE convention) keys the WHOLE
-            # config: plan_candidates reads the full gate stack, not
-            # just the cede knobs
+            # config: the dry run reads the full gate stack, not just
+            # the cede knobs
             vk = (getattr(self, "_stmt_ck", None) or query,
-                  tuple(rf_confs),
-                  frozenset((rows_base or {}).items()),
-                  frozenset(filtered or ()),
-                  repr(cfg))
+                  self._rf_confs(), frozenset(rows_base.items()),
+                  frozenset(filtered or ()), repr(cfg))
             if vk in _CEDE_CACHE:
                 return _CEDE_CACHE[vk]
         except TypeError:
             vk = None  # unhashable component: fall through uncached
         res = self._cede_verdict_uncached(query, cfg, plan, dfs,
-                                          rows_est, filtered, rows_base,
-                                          neighbor_edges, opaque,
-                                          host_prefiltered)
-        if vk is not None:
-            if len(_CEDE_CACHE) >= 256:
-                _CEDE_CACHE.pop(next(iter(_CEDE_CACHE)))
-            _CEDE_CACHE[vk] = res
-        return res
+                                          rows_est, filtered, evidence)
+        return res if vk is None else _memo_put(_CEDE_CACHE, vk, res)
 
     def _cede_verdict_uncached(self, query, cfg, plan, dfs, rows_est,
-                               filtered, rows_base, neighbor_edges,
-                               opaque, host_prefiltered):
-        from .operators.rewrite import plan_candidates
-
-        cand = plan_candidates(dfs, rows_est, filtered, plan, cfg,
-                               rows_base=rows_base,
-                               neighbor_edges=neighbor_edges,
-                               opaque_rels=opaque,
-                               host_prefiltered=host_prefiltered)
+                               filtered, evidence):
+        cand = [d.op for d in dry_run(dfs, rows_est, filtered, plan, cfg,
+                                      **evidence)
+                if d.tier in KEY_TIERS]
         if not cand:
             return False, False
+        rows_base = evidence.get("rows_base") or {}
         alias_t = getattr(self, "_last_alias_tables", {})
         # correlated-subquery virtual nodes: their reduction reaches
         # subquery occurrences through the shadowed view — value no
         # host bloom can express (TPC-H Q17's 2.5x); never cede
         if any(str(a).startswith("__sub")
-               for op, _t in cand for a in (op.build, op.probe)):
+               for op in cand for a in (op.build, op.probe)):
             return False, False
         covered = self._orig_bloom_edges(query, cfg)
         if not covered:
             return False, False
-        maxrows = max((r for r in (rows_base or {}).values() if r),
-                      default=0.0)
+        maxrows = max((r for r in rows_base.values() if r), default=0.0)
         if maxrows <= 0:
             return False, False
         extra = 0.0
-        for op, _tier in cand:
+        for op in cand:
             pt = str(alias_t.get(op.probe, op.probe)).lower()
             bt = str(alias_t.get(op.build, op.build)).lower()
             if all((pt, str(pc).lower(), bt) in covered
                    for pc in op.probe_cols):
                 continue
-            pr = (rows_base or {}).get(op.probe) or float("inf")
+            pr = rows_base.get(op.probe) or float("inf")
             extra = max(extra, pr)
         if extra > cfg.cede_extra_probe_frac * maxrows:
             return False, False
@@ -522,8 +492,8 @@ class Engine:
         if cfg.cede_suppress_max_probe_rows > 0:
             alias_filters = getattr(self, "_last_alias_filters", {})
             mass = 0.0
-            for op, _tier in cand:
-                base = (rows_base or {}).get(op.probe, 0.0) or 0.0
+            for op in cand:
+                base = rows_base.get(op.probe, 0.0) or 0.0
                 pri = 1.0
                 for f in alias_filters.get(op.probe, ()):
                     try:
@@ -576,17 +546,16 @@ class Engine:
         (workload/common.py), so instance state would die between the
         engaged query that suppressed injection and the later
         un-engaged query that must restore it (ADVICE r5)."""
-        key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
         try:
             if engaged:
-                cur = self.spark.conf.get(key, "false")
+                cur = self.spark.conf.get(_RF_ENABLED, "false")
                 if cur == "true":
                     self.spark._drpt_rf_stash = cur
-                    self.spark.conf.set(key, "false")
+                    self.spark.conf.set(_RF_ENABLED, "false")
             else:
                 stash = getattr(self.spark, "_drpt_rf_stash", None)
                 if stash is not None:
-                    self.spark.conf.set(key, stash)
+                    self.spark.conf.set(_RF_ENABLED, stash)
                     self.spark._drpt_rf_stash = None
         except Exception:
             pass
@@ -633,9 +602,7 @@ class Engine:
         else:
             ext = extract_join_graph(df, known)
             if ext is not TRANSIENT_BAIL:
-                if len(_EXT_CACHE) >= 256:
-                    _EXT_CACHE.pop(next(iter(_EXT_CACHE)))
-                _EXT_CACHE[ck] = ext
+                _memo_put(_EXT_CACHE, ck, ext)
         if ext is None or ext is TRANSIENT_BAIL:
             return None
         #: alias -> base table name, read by _uncovered_rf_evidence to
@@ -782,10 +749,8 @@ class Engine:
             if pk in _PREFILTER_CACHE:
                 host_pre = _PREFILTER_CACHE[pk]
             else:
-                host_pre = scan_prefilter_pairs(df, alias_paths)
-                if len(_PREFILTER_CACHE) >= 256:
-                    _PREFILTER_CACHE.pop(next(iter(_PREFILTER_CACHE)))
-                _PREFILTER_CACHE[pk] = host_pre
+                host_pre = _memo_put(_PREFILTER_CACHE, pk,
+                                     scan_prefilter_pairs(df, alias_paths))
             if host_pre:
                 excl = ({v[0] for v in virt_edges}
                         | set(virt_rels)
@@ -796,11 +761,9 @@ class Engine:
         # reduce() releases the previous query's persists at entry; nulling
         # last_result here instead would leak them for the life of the
         # session (CacheManager plan pollution — see reduce()'s docstring)
-        def _cede(plan, dfs_, rows_est_, filtered_, rows_base_, nbr,
-                  opq, hp):
+        def _cede(plan, dfs_, rows_est_, filtered_, evidence):
             v, off = self._cede_verdict(query, cfg, plan, dfs_,
-                                        rows_est_, filtered_,
-                                        rows_base_, nbr, opq, hp)
+                                        rows_est_, filtered_, evidence)
             self._cede_ride_off = off
             return v
 
@@ -820,21 +783,12 @@ class Engine:
                     "off" if self._cede_ride_off else "native")
             except Exception:
                 pass
-            if len(_BAIL_CACHE) >= 512:
-                _BAIL_CACHE.pop(next(iter(_BAIL_CACHE)))
-            _BAIL_CACHE[bk] = ("cede_off" if self._cede_ride_off
-                               else "cede")
+            _memo_put(_BAIL_CACHE, bk,
+                      "cede_off" if self._cede_ride_off else "cede", 512)
             return None
         if self.last_result is None:
-            if len(_BAIL_CACHE) >= 512:
-                _BAIL_CACHE.pop(next(iter(_BAIL_CACHE)))
-            _BAIL_CACHE[bk] = True
+            _memo_put(_BAIL_CACHE, bk, True, 512)
             return None  # planner bailed (gates / <=1 edge)
-        if cfg.suppress_native_rf and not cfg.suppress_during_eager:
-            # A/B path (config.suppress_during_eager=False): the eager
-            # jobs above ran with injection live; suppress now so the
-            # final-plan arbitration semantics stay identical
-            self._sync_native_rf(engaged=True)
 
         # shadow each single-occurrence table whose relation the rewrite
         # actually reduced, re-analyze the same SQL against the shadows,
@@ -915,9 +869,7 @@ class Engine:
                                         for k in lr.drops))
                 if dup_bail:
                     self._keep_rf_suppressed = True
-                if len(_BAIL_CACHE) >= 512:
-                    _BAIL_CACHE.pop(next(iter(_BAIL_CACHE)))
-                _BAIL_CACHE[bk] = "dup" if dup_bail else True
+                _memo_put(_BAIL_CACHE, bk, "dup" if dup_bail else True, 512)
                 return None
             if (cfg.suppress_native_rf and cfg.compose_subtree_rf
                     and "empty" not in self.last_result.applied_tiers):
@@ -943,8 +895,9 @@ class Engine:
 
         ``cede_check`` (the SQL path's cession arbitration closure,
         config.cede_covered_edges) is invoked after scheduling but
-        before ANY eager job, with the planned schedule and the same
-        evidence apply_transfer would get; returning True makes reduce
+        before ANY eager job as ``cede_check(plan, dfs, rows_est,
+        filtered, evidence)``, ``evidence`` being the keyword arguments
+        apply_transfer gets; returning True makes reduce
         disengage — inputs returned untouched, ``self.last_cede`` set.
 
         Persisted build sides from the PREVIOUS reduce are released
@@ -1090,31 +1043,25 @@ class Engine:
         # only when the probe has a DIFFERENT-key edge to a
         # non-broadcastable neighbor (the reduction then shrinks a
         # second, otherwise-unavoidable exchange of the probe)
-        neighbors: dict = {}
         neighbor_edges: dict = {}
         for e in graph.edges:
-            neighbors.setdefault(e.left, set()).add(e.right)
-            neighbors.setdefault(e.right, set()).add(e.left)
             neighbor_edges.setdefault(e.left, []).append(
                 (e.right, tuple(e.left_cols)))
             neighbor_edges.setdefault(e.right, []).append(
                 (e.left, tuple(e.right_cols)))
-        degrees = {a: len(ns) for a, ns in neighbors.items()}
+        evidence = dict(probe_paths=paths, colocated=colocated,
+                        rows_base=rows_base, neighbor_edges=neighbor_edges,
+                        opaque_rels=opaque or set(),
+                        host_prefiltered=host_prefiltered)
 
         if cede_check is not None and cede_check(
-                plan, dfs, rows_est, filtered, rows_base,
-                neighbor_edges, opaque or set(), host_prefiltered):
+                plan, dfs, rows_est, filtered, evidence):
             # cession: hand the query to the host's native blooms —
             # nothing eager has run yet, nothing to release
             self.last_cede = True
             return dfs
 
-        res = apply_transfer(dfs, rows_est, filtered, plan, cfg,
-                             probe_paths=paths, colocated=colocated,
-                             rows_base=rows_base, degrees=degrees,
-                             neighbor_edges=neighbor_edges,
-                             opaque_rels=opaque or set(),
-                             host_prefiltered=host_prefiltered)
+        res = apply_transfer(dfs, rows_est, filtered, plan, cfg, **evidence)
         res.planning_ms = planning_ms
         if cfg.profiling:
             # the reference prints its per-op summary at QueryEnd when

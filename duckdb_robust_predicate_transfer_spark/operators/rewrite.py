@@ -33,7 +33,7 @@ the stages.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -74,6 +74,41 @@ class StepStat:
     probe_ms: float = 0.0
 
 
+#: tiers that ship build keys (exact set or bitmap): the reach the
+#: cession arbitration weighs. A min/max-only landing is not counted.
+KEY_TIERS = ("exact_broadcast", "exact_shuffle", "sketch")
+
+
+@dataclass(frozen=True)
+class Decision:
+    """The gate stack's verdict on one scheduled op: the tier it lands
+    on or the gate that dropped it, plus the evidence: the estimate or
+    observed count that was compared and the threshold it was compared
+    with (None for the structural gates ``info`` and ``gate4``)."""
+
+    op: TransferOp
+    #: "exact_broadcast" | "exact_shuffle" | "sketch" | "minmax" (only
+    #: the min/max tier can land) | "empty"; None when dropped
+    tier: str | None = None
+    #: "info" | "gate1" | "gate2g" | "gate2" | "gate2b" | "gate2b3" |
+    #: "gate2c" | "dup" | "gate3" | "gate3a" | "gate3b" | "gate4" |
+    #: "noop"; None when the op lands
+    gate: str | None = None
+    value: float | None = None
+    threshold: float | None = None
+    #: an eager job measured a count while this op was decided or
+    #: applied; from here on the real pass may depart from a dry run
+    observed: bool = False
+    #: the min/max tier lands too (eager agg, or bitmap stat columns)
+    minmax: bool = False
+    #: gate that suppressed the key tier of a "minmax" decision: the
+    #: drop reported when the range then prunes nothing
+    suppressed: str | None = None
+    #: forward sketch rescue (gate 2f): the bloom's observed cardinality
+    #: is re-checked before the probe is touched
+    rescue: bool = False
+
+
 @dataclass
 class TransferResult:
     dfs: dict
@@ -93,14 +128,24 @@ class TransferResult:
     #: "empty" — certification tooling reads it to attribute wins to
     #: the gate-2f rescue vs the ordinary tiers
     applied_tiers: list = field(default_factory=list)
-    #: gate-name -> count of scheduled ops that gate dropped. "dup" =
-    #: duplication economics (gates 2d/2e: the host plan performs the
-    #: same filtering itself); Engine.sql's composed arbitration reads
-    #: it — a query whose ONLY lost candidates were dup-drops is an
-    #: all-BHJ shape where native runtime blooms duplicate the same
-    #: joins too, so injection stays suppressed for it (JOB jq1/jq4/jq6
-    #: measured native 0.6-1.3x of off on exactly these).
-    drops: dict = field(default_factory=dict)
+    #: one Decision per scheduled op, in schedule order, as the apply
+    #: step settled it (a landing tier, or the dropping gate)
+    decisions: list = field(default_factory=list)
+
+    @property
+    def drops(self) -> dict:
+        """gate-name -> count of scheduled ops that gate dropped. "dup" =
+        duplication economics (gates 2d/2e: the host plan performs the
+        same filtering itself); Engine.sql's composed arbitration reads
+        it — a query whose ONLY lost candidates were dup-drops is an
+        all-BHJ shape where native runtime blooms duplicate the same
+        joins too, so injection stays suppressed for it (JOB jq1/jq4/jq6
+        measured native 0.6-1.3x of off on exactly these)."""
+        out: dict = {}
+        for d in self.decisions:
+            if d.gate:
+                out[d.gate] = out.get(d.gate, 0) + 1
+        return out
 
     def release(self):
         for df in self.persisted:
@@ -142,7 +187,17 @@ class TransferResult:
                 lines.append(
                     f"      {phase:<8}  TOTAL{'':<20} {'':>10}  {tin:>10}"
                     f"  {tout:>10}   {pct:>7}  {tms:>29.1f}")
+        for d in self.decisions:
+            if d.gate:
+                op = d.op
+                edge = f"{op.build}({','.join(op.build_cols)}) -> {op.probe}"
+                lines.append(f"drop  {op.phase:<8}  {edge:<24} {d.gate:<7}"
+                             f"  {_num(d.value)} vs {_num(d.threshold)}")
         return "\n".join(lines)
+
+
+def _num(x) -> str:
+    return "-" if x is None else f"{x:.6g}"
 
 
 def _minmax_filter(probe: DataFrame, build: DataFrame, op: TransferOp,
@@ -301,173 +356,560 @@ def _sketch_tier(cfg, est: float) -> bool:
             and est <= cfg.sketch_max_keys)
 
 
-def plan_candidates(dfs: dict, rows_est: dict, filtered: set,
-                    plan: TransferPlan, cfg: RPTConfig,
-                    rows_base: dict | None = None,
-                    neighbor_edges: dict | None = None,
-                    opaque_rels: set | None = None,
-                    host_prefiltered: "set | None" = None) -> list:
-    """Job-free dry run of ``apply_transfer``'s gate stack: which ops
-    WOULD apply (and on which tier), using estimates only — no
-    observation counts, no bloom builds, no min/max aggs, no persists.
+class TransferState:
+    """What the gate stack reads, and the planner state it carries from
+    op to op: estimates (overwritten by observed counts), which
+    relations were reduced, and what each one knows. ``rows_est`` is
+    used in place — the real pass's observed counts reach the caller
+    (Engine.last_rows_est); a dry run hands in a copy."""
+
+    def __init__(self, dfs: dict, rows_est: dict, filtered: set,
+                 plan: TransferPlan, cfg: RPTConfig,
+                 probe_paths: dict | None = None,
+                 colocated: dict | None = None,
+                 rows_base: dict | None = None,
+                 neighbor_edges: dict | None = None,
+                 opaque_rels: set | None = None,
+                 host_prefiltered: "set | None" = None):
+        self.inputs = dfs
+        self.dfs = dict(dfs)
+        self.rows_est = rows_est
+        self.filtered = filtered
+        self.plan = plan
+        self.probe_paths = probe_paths or {}
+        self.colocated = colocated or {}
+        self.rows_base = rows_base
+        self.neighbor_edges = neighbor_edges
+        self.opaque_rels = opaque_rels or set()
+        self.host_prefiltered = host_prefiltered
+        #: aliases some forward op builds from: reducing them is
+        #: transitive, so the duplication gates 2d/2e never fire on them
+        self.forward_builds = {o.build for o in plan.ops
+                               if o.phase == "forward"}
+        #: pre-decay estimates: local-filter selectivity only, updated
+        #: by OBSERVED counts (min/max agg, bloom build) but never by the
+        #: fixed semi-reduction decay guess — the conservative key-count
+        #: figure for the broadcast-benefit gate (decay undershot Q3's
+        #: true key count 2.4x at TPCH_SCALE x100)
+        self.rows_pre = dict(rows_est)
+        self.reduced: set = set()
+        #: alias -> set of aliases whose base filters have influenced it
+        #: via applied ops (itself included when base-filtered). An op
+        #: only carries NEW information when the build knows something
+        #: the probe doesn't — otherwise it is a provable no-op: e.g.
+        #: after forward lineitem->orders, the backward orders->lineitem
+        #: hop removes exactly 0 rows (every kept lineitem orderkey is,
+        #: by construction, in the kept orders), yet costs a full pass
+        #: over the fact's lineage (measured 0.00% removed for ~10 s at
+        #: TPCH_SCALE 100x). The reference schedules such ops too, but
+        #: its in-process filters are ~free; Spark's cost real jobs, so
+        #: provable no-ops must die. (Pure FK-orphan removal is not
+        #: modeled as information — that is gate 1's
+        #: require_selective_build.) Identity counts as information only
+        #: when FK-orphan-removal ops are enabled
+        #: (require_selective_build=False, the reference's
+        #: always-transfer mode): an unfiltered build can then still
+        #: remove probe rows with no matching build row at all.
+        self.info: dict = {a: ({a} if (a in filtered
+                                       or not cfg.require_selective_build)
+                               else set()) for a in dfs}
+        #: builds whose rows were observed exactly this schedule
+        self.observed: set = set()
+        #: the subset observed BY GATE 2g (weak-build observation): the
+        #: keep-frac drop prices only these — a build observed via gate
+        #: 0b's near-boundary tiering or the 2f rescue's backward path
+        #: keeps its r8 behavior, and weak_observe_max_base=0 genuinely
+        #: disables the whole feature (ADVICE r9)
+        self.observed_weak: set = set()
+        #: alias -> its reduction lineage is scan-local (no shuffled semi
+        #: applied to it): broadcast semis, bloom probes, min/max
+        #: BETWEENs and empty-build short-circuits all fuse into the
+        #: relation's own scan stage, so an eager job over the lineage
+        #: (gate 2f's observe count / bloom build) costs one scan and no
+        #: exchange. A shuffled semi breaks that — re-deriving it eagerly
+        #: pays a full exchange, which is the r6 sketch-regime Q7 loss
+        #: (SKETCH_REGIME_r06).
+        self.scan_local: dict = {a: True for a in dfs}
+        #: alias -> number of reductions landed on it: keys the key-set
+        #: and bloom caches so a further-reduced build is never served a
+        #: stale filter
+        self.epochs: dict = {}
+        self._dsv2: dict = {}
+
+    def is_dsv2(self, alias: str) -> bool:
+        """Is the alias's input scan the DSv2 rptparquet source (read off
+        the un-reduced input, once per alias)? A broadcast semi into a
+        key-prunable scan pays AT THE SCAN (runtime row-group pruning,
+        cold IO) with no downstream exchange needed, so the tier gates
+        exempt it. Unknown counts as DSv2: do not suppress."""
+        if alias not in self._dsv2:
+            try:
+                self._dsv2[alias] = "rptparquet" in (
+                    self.inputs[alias]._jdf.queryExecution().analyzed()
+                    .toString())
+            except Exception:
+                self._dsv2[alias] = True
+        return self._dsv2[alias]
+
+    def note(self, alias: str, n: float, weak: bool = False) -> float:
+        """Record an observed row count for ``alias``; returns it."""
+        self.observed.add(alias)
+        if weak:
+            self.observed_weak.add(alias)
+        self.rows_est[alias] = self.rows_pre[alias] = n
+        return n
+
+    def land(self, op: TransferOp, tier: str) -> None:
+        """Commit a predicate landing on ``op.probe`` (the dry run
+        commits every landing decision). A provable no-op — a minmax
+        range that prunes nothing, with no key tier — must not be
+        committed: marking the probe reduced would let the information
+        gate skip ops that could still prune (ADVICE r4)."""
+        self.reduced.add(op.probe)
+        self.info[op.probe] |= self.info[op.build]
+        self.epochs[op.probe] = self.epochs.get(op.probe, 0) + 1
+        if op.probe in self.rows_est:
+            self.rows_est[op.probe] *= REDUCTION_DECAY
+        if tier == "exact_shuffle":
+            self.scan_local[op.probe] = False
+
+
+def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
+           observe=None) -> Decision:
+    """Run every transfer gate on ``op``, in order, once.
+
+    ``observe(alias, persist=False) -> float`` is how a gate obtains an
+    observed row count (gates 0b and 2g, and the backward branch of the
+    2f rescue); the real pass passes a callback that (optionally
+    persists and) counts the build. A dry run passes None: those gates
+    keep the estimate. Observations are recorded in ``s``; landing is
+    the caller's (``TransferState.land``)."""
+    inf = float("inf")
+    bkr = cfg.broadcast_key_rows
+    est = s.rows_est.get(op.build, inf)
+    base = (s.rows_base or {}).get(op.build, 0.0)
+    seen = False
+
+    def drop(gate, value=None, threshold=None) -> Decision:
+        return Decision(op, gate=gate, value=value, threshold=threshold,
+                        observed=seen)
+
+    # 0. information gate: skip ops that provably cannot remove rows
+    if not (s.info[op.build] - s.info[op.probe] - {op.probe}):
+        return drop("info")
+
+    # 0b. near-boundary tier observation (config.observe_est_factor):
+    # a guessed estimate just above the broadcast ceiling may hide a
+    # genuinely broadcastable key set (x300 Q10: guess 9M, actual
+    # 1.7M — the difference between a scan-fused broadcast semi and
+    # re-shuffling the 60M-row probe). Pay one scan+filter count on
+    # UNREDUCED filtered builds only (a reduced build's lineage is a
+    # real join; its ops already run on observed/decayed figures),
+    # then let every gate below see the exact number.
+    if (observe is not None and cfg.observe_est_factor > 0
+            and op.build not in s.reduced
+            and op.build in s.filtered and op.build not in s.observed
+            and bkr < est <= cfg.observe_est_factor * bkr):
+        est, seen = s.note(op.build, observe(op.build)), True
+
+    # bounded-downside gates — the robustness margin the reference
+    # lacks (it always applies when >1 edge; its in-process filters
+    # are ~free, ours cost real Spark exchanges):
+    # 1. an unfiltered, never-reduced build side only removes
+    #    FK-orphan probe rows — skip unless allowed
+    if (op.build not in s.filtered and op.build not in s.reduced
+            and (cfg.require_selective_build
+                 or est > cfg.max_unfiltered_build_rows)):
+        return drop("gate1", est, 0.0 if cfg.require_selective_build
+                    else cfg.max_unfiltered_build_rows)
+    # 2g. weak-build observation (config.weak_observe_max_base):
+    #     a local filter's true selectivity is unproven — LIKE
+    #     '%Pictures%' keeps 100% where the decay guess says 20% —
+    #     so for dim-sized bases pay one scan+filter count and
+    #     apply gate 2b's keep-frac rule to EVERY tier: a build
+    #     still holding most of its domain removes almost nothing
+    #     while its eager key-set jobs are real (JOB jq17/jq23).
+    #     Dropping here (not "dup") leaves native runtime blooms
+    #     welcome on the edge: the composed arbitration hands weak
+    #     arms to the host's lazy AQE-planned blooms.
+    if (observe is not None and cfg.weak_observe_max_base > 0
+            and s.rows_base is not None
+            and op.build not in s.reduced and op.build in s.filtered
+            and op.build not in s.observed
+            and cfg.weak_observe_min_base <= base
+            <= cfg.weak_observe_max_base):
+        est, seen = s.note(op.build, observe(op.build), weak=True), True
+    if (op.build in s.observed_weak and op.build not in s.reduced
+            and base > 0 and est >= cfg.max_build_keep_frac * base):
+        return drop("gate2g", est, cfg.max_build_keep_frac * base)
+    # 2. transfer only into probes big enough to repay an exchange —
+    #    but ONLY for shuffle-tier builds. A broadcast-tier build
+    #    (est <= broadcast_key_rows) costs no exchange at all: the
+    #    semi join rides the probe's own scan stage as a broadcast
+    #    hash join, exactly like the reference's free in-process
+    #    filters. Skipping those breaks the CASCADE: an unreduced
+    #    tiny dim (supplier, customer) then fails gate 1 as a build
+    #    side and its parent's selective filter (the nation gate in
+    #    TPC-H Q5/Q7/Q8/Q9) never reaches the fact tables — measured
+    #    at TPCH_SCALE 100x as the whole rpt-leg regression.
+    probe_rows = s.rows_est.get(op.probe, inf)
+    if est > bkr and probe_rows < cfg.min_probe_rows:
+        return drop("gate2", probe_rows, cfg.min_probe_rows)
+    # 2b. shuffle-tier builds must also be SELECTIVE: the op costs a
+    #     distinct-key shuffle + a shuffled semi join + (big probes)
+    #     an eager min/max job, so a build side still holding most
+    #     of its base table can only remove a minority of probe rows
+    #     — bounded downside says skip it. Broadcast-tier builds are
+    #     exempt (free), as is any build with no footer baseline.
+    if est > bkr and base > 0 and est >= cfg.max_build_keep_frac * base:
+        return drop("gate2b", est, cfg.max_build_keep_frac * base)
+    # 2b2/2b3. a shuffled semi never SAVES an exchange of the probe:
+    #      it shuffles the probe's full current rows by the op keys —
+    #      the same exchange the final probe<->build join pays — and
+    #      only reduces per-row work downstream. It is therefore
+    #      redundant unless the reduction reaches ANOTHER exchange:
+    #      the probe must have a different join edge (different keys,
+    #      different neighbor) whose other side is itself too big to
+    #      broadcast, i.e. the final plan will shuffle the probe
+    #      AGAIN and the semi shrinks that second shuffle. Only
+    #      scan-local tiers (broadcast, sketch) can land a reduction
+    #      BEFORE the first exchange, the way the reference's
+    #      in-process filters always do. r5 shipped the degree-1
+    #      special case (Q3/Q10); the r6 clean-room A/B generalized
+    #      it: on EVERY full-22 x1000 query with a shuffle-tier op
+    #      the no-shuffle-semi leg was faster (Q5 13.8->11.1s,
+    #      Q7 10.7->5.5s, Q8 13.6->10.3s, Q17 7.4->6.4s vs off
+    #      30.3/15.1/14.3/14.2) — their downstream joins are all
+    #      broadcast dims, so the "reduction feeds the probe's other
+    #      joins" rationale priced at zero exchanges saved.
+    force_sketch = rescue = unproven = False
+    if (cfg.skip_redundant_shuffle_semi and s.neighbor_edges is not None
+            and est > bkr and not _sketch_tier(cfg, est)):
+        saves_exchange = any(
+            n != op.build and set(cols) != set(op.probe_cols)
+            and s.rows_est.get(n, inf) > cfg.host_broadcast_rows
+            for n, cols in s.neighbor_edges.get(op.probe, []))
+        if not saves_exchange:
+            # gate 2f: subtree sketch rescue (config.sketch_rescue)
+            # — the hop is otherwise LOST, and with it the
+            # transitive selectivity of the build's whole reduced
+            # subtree (the jq10/jq11/jq13 gap vs native's
+            # subtree-built blooms, JOB_REGIME_r07). Re-express it
+            # scan-locally when the guards hold; never replace a
+            # live shuffled semi (the r6 sketch_auto mistake).
+            # both passes are eligible: a backward hop whose
+            # observed build turns out broadcast-tier (jq15's
+            # 234-key movie_keyword after its kw semi) passes gate
+            # 3a below on the observed number; one that stays
+            # shuffle-tier is still killed there (the r6 lesson —
+            # an eager bloom over the root's lineage never pays)
+            build_base = base or est
+            ok = (cfg.sketch_rescue
+                  and est <= cfg.sketch_max_keys
+                  # string/binary probe keys only — the rescue's
+                  # repay is the probe join's PER-ROW cost (string
+                  # hashing + equality on every surviving row),
+                  # which the pre-exchange cut removes; integer-key
+                  # joins are too cheap per row to repay an eager
+                  # bloom over a 100M+-row build lineage (measured
+                  # in-round at x1000: the unconditioned rescue
+                  # planted orders->lineitem on Q3/Q10 and
+                  # lineitem->orders on Q7, turning Q7's 2.8x win
+                  # into 0.89x via 15-31 s eager builds; the JOB
+                  # wins jq10/jq11/jq13 are all string-key)
+                  and _string_keys(s.dfs[op.probe], op.probe_cols)
+                  # gate 3's observation-independent backward check,
+                  # hoisted so a doomed hop never pays the count
+                  and (op.phase == "forward"
+                       or probe_rows >= cfg.backward_min_probe_rows)
+                  and s.scan_local.get(op.build, True)
+                  and _downstream_weight(
+                      op.probe, s.plan.ops, s.rows_base or s.rows_est)
+                  >= cfg.sketch_rescue_probe_factor * build_base)
+            if not ok:
+                return drop("gate2b3", est, bkr)
+            if op.phase == "forward" and op.build not in s.observed:
+                # forward rescue goes straight to the bitmap: the
+                # bloom build's word-count totals the observed
+                # cardinality for free (_build_once), so a separate
+                # count scan would only duplicate it; weakness/
+                # overflow are re-checked post-build and the probe
+                # withheld then (Decision.rescue). The apply step
+                # persists the build first.
+                force_sketch = rescue = True
+            else:
+                # backward hops must PROVE broadcast-tier — gate 3a
+                # reads the observed number (an eager bitmap over a
+                # shuffle-tier ROOT lineage is the r6-documented
+                # loser); already-observed builds re-tier for free.
+                # The count persists the build: its materialization
+                # (selective by gate 2b, so small) then serves the
+                # bloom build and the final join too (measured on
+                # jq13: 3 extra 12.5M-row movie_company scans behind
+                # a 124k-row reduction).
+                if op.build not in s.observed:
+                    if observe is None:
+                        # dry run: the proof is unavailable; assume
+                        # the bitmap lands so reach is never under-
+                        # listed
+                        unproven = True
+                    else:
+                        est = s.note(op.build,
+                                     observe(op.build, persist=True))
+                        seen = True
+                # re-check size and selectivity on the OBSERVED
+                # count: a weak build (keeps >= max_build_keep_frac
+                # of its base) cuts too little to repay the eager
+                # bloom build (jq7's 50%-country company arm), and
+                # an over-large one is beyond the bitmap's
+                # broadcast ceiling
+                if est > cfg.sketch_max_keys:
+                    return drop("gate2b3", est, cfg.sketch_max_keys)
+                if (s.rows_base is not None and build_base > 0
+                        and est >= cfg.max_build_keep_frac * build_base):
+                    return drop("gate2b3", est,
+                                cfg.max_build_keep_frac * build_base)
+                # est == 0 rides the sketch branch too: its
+                # empty-build short-circuit (probe WHERE false) is
+                # the reference's always-false filter
+                # (physical_create_bf.cpp:290-297), and the
+                # broadcast-tier gates below must not reclaim the
+                # op (a zero-key build duplicates no host join)
+                force_sketch = est > bkr or est == 0
+    #: probe-side tier choice (config.bloom_probe_min_rows): on a
+    #: huge probe the per-row filter cost IS the op, and the
+    #: bitmap's bit-tests are 4-5x cheaper than a broadcast-hash
+    #: semi's hash lookups — but ONLY for string/binary keys, where
+    #: the hash relation pays per-row string hashing + equality
+    #: (measured, 50M-row string-key fact). On integer keys the
+    #: broadcast-hash semi's lookup is as cheap as the bit-test AND
+    #: stays lazy inside AQE's replanning, which the eager bitmap
+    #: build forfeits — the r5/r6 clean-room sketch A/Bs measured
+    #: exactly that as Q7's win turning into a loss (SKETCH_AB_r05,
+    #: SKETCH_REGIME_r06), and the unconditioned escalation
+    #: reproduced it at x1000 (Q7 6.3->19.0 s, Q3/Q10 engaging ops
+    #: gate 2c used to drop — the r8 in-round regression).
+    probe_big = (cfg.bloom_probe_min_rows > 0
+                 and s.rows_est.get(op.probe, 0.0)
+                 >= cfg.bloom_probe_min_rows
+                 and _string_keys(s.dfs[op.probe], op.probe_cols))
+    #: (gate, value, threshold) that suppressed the key-set tier
+    supp = None
+    # 2c. broadcast-tier benefit gate: BroadcastExchange collects the
+    #     key set to the driver and builds the hash relation single-
+    #     threaded, so a MID-SIZE key set (above bf_cheap_keys) is a
+    #     real fixed cost — require the probe to dwarf it. Priced on
+    #     the PRE-DECAY build estimate: the per-semi decay is a fixed
+    #     0.2 guess that can undershoot the true key count severalfold
+    #     and sneak an expensive build under the bar (TPC-H Q3 at
+    #     x100/x300, the r4 bounded-downside break). Minmax-only mode
+    #     ships no keys, and the sketch tier's parallel JVM build +
+    #     bitmap broadcast has no driver hash relation — both exempt.
+    #     Failing this gate suppresses ONLY the key-set tier: the
+    #     minmax tier ships two scalars per column (no driver hash
+    #     relation) and is separately payoff-checked below
+    #     (clustering + base-size bounds), so it must not be lost
+    #     with the keys (ADVICE r5).
+    exact_bc = est <= bkr and not force_sketch and not _sketch_tier(cfg, est)
+    if (cfg.bf_benefit_probe_ratio > 0 and cfg.filter_type != "minmax_only"
+            and exact_bc):
+        pre = s.rows_pre.get(op.build, est)
+        if (pre > cfg.bf_cheap_keys
+                and probe_rows < cfg.bf_benefit_probe_ratio * pre):
+            if probe_big and not s.is_dsv2(op.probe):
+                # the bitmap ships no driver hash relation — gate
+                # 2c's fixed cost vanishes, so escalate the tier
+                # instead of losing the op
+                force_sketch, exact_bc = True, False
+            else:
+                supp = ("gate2c", probe_rows,
+                        cfg.bf_benefit_probe_ratio * pre)
+    hp = s.host_prefiltered
+
+    def host_filters() -> bool:
+        return any(p == op.probe and b == op.build
+                   and (k is None or set(op.probe_cols) <= k)
+                   for p, b, k in hp)
+    # 2d. exchange-benefit gate for the BROADCAST tier (gate 2b3's
+    #     insight one tier down): when every other neighbor of the
+    #     probe is itself broadcastable, the final plan joins the
+    #     probe with broadcast-hash joins only — which drop misses
+    #     at the same per-row hash cost our semi pays — so the semi
+    #     duplicates work row for row and adds its build jobs on
+    #     top (JOB-regime jq1/jq4: 0.6-0.7x on 1-2 s queries whose
+    #     dims all broadcast). Reduction pays only when it crosses
+    #     an exchange: keep the semi if ANY other neighbor is too
+    #     big to broadcast (a shuffle join of the probe exists), if
+    #     the probe holds plan edges the graph cannot see
+    #     (anti/full outer -> opaque), or if the probe scan is
+    #     key-prunable (DSv2: the reduction lands IN the scan).
+    #     The min/max tier is exempt as in gate 2c — it prunes the
+    #     scan itself and is separately payoff-checked.
+    #     CASCADE GUARD: never suppress an op whose probe is the
+    #     BUILD of a later forward op — reduction through an
+    #     intermediate dim is transitive (Q5: region->nation looks
+    #     all-broadcast locally, but reduced nation is what shrinks
+    #     customer, then orders, then lineitem; suppressing the hop
+    #     collapsed the whole cascade, x1000 subset recheck). A
+    #     probe no forward op ever builds from (a terminal fact:
+    #     jq1's movie_company, a star fact) has no transitive value
+    #     — only there can local all-broadcast duplication hold.
+    if (supp is None and cfg.skip_no_exchange_probe
+            and cfg.host_broadcast_rows > 0
+            and op.probe not in s.forward_builds
+            and exact_bc
+            # the build itself may be broadcast-SEMI-able for us yet
+            # too big for the HOST to broadcast in the final join —
+            # that join is then a shuffle of the probe, and the semi's
+            # reduction lands before it: a crossed exchange, keep
+            and est <= cfg.host_broadcast_rows
+            and op.probe not in s.opaque_rels
+            and op.probe in (s.neighbor_edges or {})):
+        widest = max((s.rows_est.get(n, inf)
+                      for n, _cols in s.neighbor_edges[op.probe]
+                      if n != op.build), default=0.0)
+        # SQL-path refinement (r8): gate 2d's graph estimates model
+        # the plan join_all would build (size-hinted BHJs), but the
+        # REPLAYED host plan broadcasts by Catalyst's STATIC
+        # sizeInBytes, which ignores filter selectivity — a
+        # year-filtered 60MB title stays SMJ, the probe fact pays
+        # its full shuffle map-write, and the suppressed semi was
+        # the only thing that could have landed the reduction
+        # before it (JOB jq13: castinfo's 50M-row exchange behind a
+        # suppressed title->castinfo hop; native's subtree bloom
+        # wins exactly by filtering that write). When host-plan
+        # evidence exists, suppression additionally requires the
+        # host to REALLY pre-filter this pair below the probe's
+        # first exchange — the same certainty bar as gate 2e.
+        if (widest <= cfg.host_broadcast_rows
+                and (hp is None or host_filters())
+                and not s.is_dsv2(op.probe)):
+            supp = ("dup", widest, cfg.host_broadcast_rows)
+    # 2e. host-prefiltered duplication: the un-rewritten host plan
+    #     already inner-BHJ-joins this build into the probe's scan
+    #     pipeline below the probe's first shuffle — same rows
+    #     dropped, same per-row hash cost, same pre-exchange
+    #     position — so the semi duplicates it even though the
+    #     probe crosses an exchange later (Q9's part->lineitem at
+    #     x1000: the one residual gate 2d's graph-only evidence
+    #     could not see). Guards: forward-cascade as in 2d; the
+    #     BUILD must not itself carry transfer reductions (a
+    #     cascade INTO the build means the semi filters on
+    #     already-reduced keys the host's bare-table BHJ cannot
+    #     express — ADVICE r7); the host join's probe-side keys
+    #     must cover the op's probe columns (unknown keys = no
+    #     suppression); probe huge enough (10x broadcast_key_rows)
+    #     that any backward op building from it stays shuffle-tier,
+    #     which gate 3a (backward_broadcast_only) already skips —
+    #     so no transitive reduction is lost; DSv2 probes keep the
+    #     op (scan-local reduction is strictly cheaper than the
+    #     host join). The engine excludes shared-subquery/virtual
+    #     probes before handing over the pairs (config docstring).
+    if (supp is None and cfg.skip_host_prefiltered_semi and hp
+            and host_filters() and exact_bc
+            and op.build not in s.reduced
+            and op.probe not in s.forward_builds
+            and cfg.backward_broadcast_only
+            and s.rows_est.get(op.probe, 0.0) > 10 * bkr
+            and not s.is_dsv2(op.probe)):
+        supp = ("dup", s.rows_est.get(op.probe, 0.0), 10 * bkr)
+    if supp and cfg.filter_type == "bf_only":
+        return drop(*supp)  # no minmax tier to fall back to
+    if op.phase == "backward":
+        # 3. backward ops need an even bigger probe: the forward pass
+        #    already reduced the root, so the marginal win is smaller
+        if probe_rows < cfg.backward_min_probe_rows:
+            return drop("gate3", probe_rows, cfg.backward_min_probe_rows)
+        # 3a. shuffle-tier backward hops are opt-in (see config
+        #     docstring)
+        if cfg.backward_broadcast_only and est > bkr and not unproven:
+            return drop("gate3a", est, bkr)
+        # 3b. benefit gate: a probe whose reduced size already fits the
+        #     host broadcast hint will be BROADCAST in the final join —
+        #     reducing it further cannot convert row savings into
+        #     shuffle savings (it only trims a hash table the host
+        #     builds once), while the backward key-set re-derives the
+        #     root's reduced lineage: a full extra pass over the
+        #     biggest table. The forward cascade is exempt — its
+        #     reductions feed the NEXT hop's build regardless of how
+        #     the final join consumes the probe. Scale-adaptive via the
+        #     min/max jobs' observed-rows feedback (rows_est is the
+        #     measured count once a relation has served as a build
+        #     side): at cluster scale a still-huge probe stays above
+        #     the bar and the backward pass engages. Measured at
+        #     TPCH_SCALE 100x: Q7 rpt 10.6s -> 4.2s with the backward
+        #     legs' broadcastable probes skipped, no cascade-fixture
+        #     regression (the cascade's backward ops target facts).
+        if cfg.host_broadcast_rows and probe_rows <= cfg.host_broadcast_rows:
+            return drop("gate3b", probe_rows, cfg.host_broadcast_rows)
+    # 4. both endpoints declared bucketed on this edge's keys: the
+    #    join is already exchange-free, and transfer along it only
+    #    adds probe work (measured: BUCKETED_r03.json)
+    if (s.colocated.get(op.build) == frozenset(op.build_cols)
+            and s.colocated.get(op.probe) == frozenset(op.probe_cols)):
+        return drop("gate4")
+
+    # min/max pushdown is an *eager* driver-side agg job per op; it
+    # only pays when the probe side is a big scan whose PushedFilters
+    # benefit (the reference pushes unconditionally because its
+    # filters are free in-process; ours cost a Spark job) ... and only
+    # from broadcast-tier builds (unless minmax_only is forced): a
+    # shuffle-tier build's eager agg re-derives a multi-million-row
+    # lineage for a range that, on hash-uniform FKs, never narrows the
+    # probe footer anyway (measured at TPCH_SCALE 100x: 3.6 s agg,
+    # predicate dropped by the footer skip, zero pruning). Builds that
+    # carry range-correlated filters are precisely the small,
+    # already-reduced ones. ... and the eager agg's cost scales with
+    # the build's BASE scan (it re-derives the whole reduction
+    # lineage), so huge-base builds skip it even in "all" mode —
+    # measured 0.5-0.8s per op on the 15M-row orders lineage at x100
+    # for a predicate the footer skip then dropped. minmax_only mode
+    # stays unbounded (explicit ask).
+    minmax = (cfg.filter_type == "minmax_only"
+              or (cfg.filter_type == "all"
+                  and probe_rows >= cfg.minmax_min_probe_rows
+                  and est <= bkr
+                  and (cfg.minmax_max_build_base <= 0 or base <= 0
+                       or base <= cfg.minmax_max_build_base)
+                  and _probe_clustered(s.probe_paths.get(op.probe),
+                                       op.probe_cols,
+                                       cfg.minmax_max_clustering)))
+    if supp or cfg.filter_type == "minmax_only":
+        if not minmax:
+            return drop(*supp)
+        value, threshold = supp[1:] if supp else (est, bkr)
+        return Decision(op, tier="minmax", value=value,
+                        threshold=threshold, observed=seen, minmax=True,
+                        suppressed=supp[0] if supp else None, rescue=rescue)
+    if (_sketch_tier(cfg, est) or force_sketch
+            or (probe_big and not s.is_dsv2(op.probe))):
+        tier = "sketch"
+    else:
+        tier = "exact_shuffle" if est > bkr else "exact_broadcast"
+    return Decision(op, tier=tier, value=est, threshold=bkr, observed=seen,
+                    minmax=minmax, rescue=rescue)
+
+
+def dry_run(dfs: dict, rows_est: dict, filtered: set, plan: TransferPlan,
+            cfg: RPTConfig, **evidence) -> list:
+    """Job-free run of the gate stack: ``decide`` without ``observe``
+    over a copy of the estimates, committing every landing decision as
+    the real pass commits a landed predicate (a "minmax" one included).
+    No counts, bloom builds, min/max aggs or persists.
 
     Feeds the cession arbitration (engine._cede_verdict): the decision
     whether to disengage and hand a query to native runtime blooms must
     come BEFORE any eager job runs, or the jobs it exists to avoid are
-    already sunk. Divergence from the real pass is one-sided by
-    construction: observation-driven drops (gate 2g, the rescue's
-    post-observation re-checks) cannot be seen here, so the dry run may
-    list a candidate the real pass would drop — which can only make the
-    "extra reach" look bigger and REFUSE a cession, never fabricate
-    one. Minmax-only applications are ignored (an op whose key tier is
-    suppressed and whose only landing would be a BETWEEN predicate does
-    not count as reach).
-
-    Returns [(op, tier)] with tier in "exact_broadcast" |
-    "exact_shuffle" | "sketch" | "empty"-free (no empty detection
-    without jobs).
-    """
-    opaque_rels = opaque_rels or set()
-    rows_est = dict(rows_est)
-    rows_pre = dict(rows_est)
-    reduced: set = set()
-    out: list = []
-    info: dict = {a: ({a} if (a in filtered
-                              or not cfg.require_selective_build)
-                      else set()) for a in dfs}
-    scan_local: dict = {a: True for a in dfs}
-
-    def _is_dsv2(alias: str) -> bool:
-        try:
-            return "rptparquet" in (
-                dfs[alias]._jdf.queryExecution().analyzed().toString())
-        except Exception:
-            return True
-
+    already sunk. It departs from ``apply_transfer`` only where an
+    observed count would have replaced an estimate. Returns one
+    Decision per scheduled op."""
+    s = TransferState(dfs, dict(rows_est), filtered, plan, cfg, **evidence)
+    out = []
     for op in plan.ops:
-        est = rows_est.get(op.build, float("inf"))
-        if not (info[op.build] - info[op.probe] - {op.probe}):
-            continue
-        if (op.build not in filtered and op.build not in reduced
-                and (cfg.require_selective_build
-                     or est > cfg.max_unfiltered_build_rows)):
-            continue
-        if (est > cfg.broadcast_key_rows
-                and rows_est.get(op.probe, float("inf"))
-                < cfg.min_probe_rows):
-            continue
-        if est > cfg.broadcast_key_rows and rows_base is not None:
-            base = rows_base.get(op.build, 0.0)
-            if base > 0 and est >= cfg.max_build_keep_frac * base:
-                continue
-        force_sketch = False
-        if (cfg.skip_redundant_shuffle_semi
-                and neighbor_edges is not None
-                and est > cfg.broadcast_key_rows
-                and not _sketch_tier(cfg, est)):
-            others = neighbor_edges.get(op.probe, [])
-            saves_exchange = any(
-                n != op.build and set(cols) != set(op.probe_cols)
-                and rows_est.get(n, float("inf")) > cfg.host_broadcast_rows
-                for n, cols in others)
-            if not saves_exchange:
-                build_base = (rows_base or {}).get(op.build, 0.0) or est
-                ok = (cfg.sketch_rescue
-                      and est <= cfg.sketch_max_keys
-                      and _string_keys(dfs[op.probe], op.probe_cols)
-                      and (op.phase == "forward"
-                           or rows_est.get(op.probe, float("inf"))
-                           >= cfg.backward_min_probe_rows)
-                      and scan_local.get(op.build, True)
-                      and _downstream_weight(
-                          op.probe, plan.ops, rows_base or rows_est)
-                      >= cfg.sketch_rescue_probe_factor * build_base)
-                if not ok:
-                    continue
-                force_sketch = True
-        probe_big = (cfg.bloom_probe_min_rows > 0
-                     and rows_est.get(op.probe, 0.0)
-                     >= cfg.bloom_probe_min_rows
-                     and _string_keys(dfs[op.probe], op.probe_cols))
-        suppress_bf = False
-        if (cfg.bf_benefit_probe_ratio > 0
-                and cfg.filter_type != "minmax_only"
-                and est <= cfg.broadcast_key_rows
-                and not force_sketch
-                and not _sketch_tier(cfg, est)):
-            pre = rows_pre.get(op.build, est)
-            if (pre > cfg.bf_cheap_keys
-                    and rows_est.get(op.probe, float("inf"))
-                    < cfg.bf_benefit_probe_ratio * pre):
-                if probe_big and not _is_dsv2(op.probe):
-                    force_sketch = True
-                else:
-                    suppress_bf = True
-        if (not suppress_bf and cfg.skip_no_exchange_probe
-                and cfg.host_broadcast_rows > 0
-                and not any(o.build == op.probe and o.phase == "forward"
-                            for o in plan.ops)
-                and est <= cfg.broadcast_key_rows
-                and not force_sketch
-                and est <= cfg.host_broadcast_rows
-                and not _sketch_tier(cfg, est)
-                and op.probe not in opaque_rels
-                and op.probe in (neighbor_edges or {})):
-            others = [(n, cols) for n, cols in neighbor_edges[op.probe]
-                      if n != op.build]
-            crosses_exchange = any(
-                rows_est.get(n, float("inf")) > cfg.host_broadcast_rows
-                for n, _cols in others)
-            host_really_filters = (host_prefiltered is None or any(
-                p == op.probe and b == op.build
-                and (k is None or set(op.probe_cols) <= k)
-                for p, b, k in host_prefiltered))
-            if (not crosses_exchange and host_really_filters
-                    and not _is_dsv2(op.probe)):
-                suppress_bf = True
-        if (not suppress_bf and cfg.skip_host_prefiltered_semi
-                and host_prefiltered
-                and any(p == op.probe and b == op.build
-                        and (k is None or set(op.probe_cols) <= k)
-                        for p, b, k in host_prefiltered)
-                and est <= cfg.broadcast_key_rows
-                and not force_sketch
-                and not _sketch_tier(cfg, est)
-                and op.build not in reduced
-                and not any(o.build == op.probe and o.phase == "forward"
-                            for o in plan.ops)
-                and cfg.backward_broadcast_only
-                and rows_est.get(op.probe, 0.0)
-                > 10 * cfg.broadcast_key_rows
-                and not _is_dsv2(op.probe)):
-            suppress_bf = True
-        if (op.phase == "backward"
-                and rows_est.get(op.probe, float("inf"))
-                < cfg.backward_min_probe_rows):
-            continue
-        if (op.phase == "backward" and cfg.backward_broadcast_only
-                and est > cfg.broadcast_key_rows and not force_sketch):
-            continue
-        if (op.phase == "backward" and cfg.host_broadcast_rows
-                and rows_est.get(op.probe, float("inf"))
-                <= cfg.host_broadcast_rows):
-            continue
-        if suppress_bf or cfg.filter_type == "minmax_only":
-            continue
-        sketch = _sketch_tier(cfg, est) or force_sketch or probe_big
-        if sketch:
-            tier = "sketch"
-            scan_local[op.probe] = scan_local.get(op.probe, True)
-        elif est > cfg.broadcast_key_rows:
-            tier = "exact_shuffle"
-            scan_local[op.probe] = False
-        else:
-            tier = "exact_broadcast"
-        out.append((op, tier))
-        reduced.add(op.probe)
-        info[op.probe] |= info[op.build]
-        if op.probe in rows_est:
-            rows_est[op.probe] *= REDUCTION_DECAY
+        d = decide(op, s, cfg)
+        if d.tier is not None:
+            s.land(op, d.tier)
+        out.append(d)
     return out
 
 
@@ -476,7 +918,6 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                    probe_paths: dict | None = None,
                    colocated: dict | None = None,
                    rows_base: dict | None = None,
-                   degrees: dict | None = None,
                    neighbor_edges: dict | None = None,
                    opaque_rels: set | None = None,
                    host_prefiltered: "set | None" = None) -> TransferResult:
@@ -494,36 +935,20 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
     graph cannot see (anti / full outer) — gate 2d never suppresses
     transfer into them. ``host_prefiltered`` ((probe, build) pairs the
     host plan already filters below the probe's first exchange,
-    plans/catalyst_order.scan_prefilter_pairs) feeds gate 2e."""
-    probe_paths = probe_paths or {}
-    colocated = colocated or {}
-    opaque_rels = opaque_rels or set()
-    #: alias -> probe scan is the DSv2 rptparquet source (computed
-    #: lazily, once per alias): a broadcast semi into a key-prunable
-    #: scan pays AT THE SCAN (runtime row-group pruning, cold IO) with
-    #: no downstream exchange needed, so gate 2d exempts it
-    dsv2_probe: dict = {}
+    plans/catalyst_order.scan_prefilter_pairs) feeds gate 2e.
 
-    def _is_dsv2(alias: str) -> bool:
-        if alias not in dsv2_probe:
-            try:
-                dsv2_probe[alias] = "rptparquet" in (
-                    dfs[alias]._jdf.queryExecution().analyzed().toString())
-            except Exception:
-                dsv2_probe[alias] = True  # unknown: do not suppress
-        return dsv2_probe[alias]
-    dfs = dict(dfs)
-    res = TransferResult(dfs=dfs, plan=plan)
-
-    def _drop(reason: str) -> None:
-        res.drops[reason] = res.drops.get(reason, 0) + 1
-    reduced: set = set()
-    #: pre-decay estimates: local-filter selectivity only, updated by
-    #: OBSERVED counts (min/max agg, bloom build) but never by the fixed
-    #: semi-reduction decay guess — the conservative key-count figure
-    #: for the broadcast-benefit gate (decay undershot Q3's true key
-    #: count 2.4x at TPCH_SCALE x100)
-    rows_pre: dict = dict(rows_est)
+    Each op is decided (``decide``, with an ``observe`` callback that
+    counts the build) and then applied: the key-set, bloom and min/max
+    jobs run here, and the apply step may still revise the decision —
+    an observed count re-tiers the key set, a forward rescue's bloom
+    may prove too weak, a min/max range may prune nothing."""
+    s = TransferState(dfs, rows_est, filtered, plan, cfg,
+                      probe_paths=probe_paths, colocated=colocated,
+                      rows_base=rows_base, neighbor_edges=neighbor_edges,
+                      opaque_rels=opaque_rels,
+                      host_prefiltered=host_prefiltered)
+    res = TransferResult(dfs=s.dfs, plan=plan)
+    inf = float("inf")
     #: (build alias, build_cols, reduction epoch) -> keys DataFrame; when
     #: one build side feeds several probes on the same columns (a column
     #: equivalence class, e.g. nation.n_nationkey into both customer and
@@ -532,7 +957,6 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
     #: 1070-1158. The epoch (number of reductions applied to the build so
     #: far) keys the cache so a later, further-reduced build is not
     #: served a stale key set.
-    epochs: dict = {}
     keys_cache: dict = {}
     #: same sharing for the bitmap tier: one build feeding several
     #: probes on the same columns builds the bloom once
@@ -549,459 +973,24 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
         colsets.setdefault(op.build, set()).add(op.build_cols)
     multi_filter_builds = {b for b, cs in colsets.items() if len(cs) > 1}
 
-    #: alias -> set of aliases whose base filters have influenced it via
-    #: applied ops (itself included when base-filtered). An op only
-    #: carries NEW information when the build knows something the probe
-    #: doesn't — otherwise it is a provable no-op: e.g. after forward
-    #: lineitem->orders, the backward orders->lineitem hop removes
-    #: exactly 0 rows (every kept lineitem orderkey is, by construction,
-    #: in the kept orders), yet costs a full pass over the fact's
-    #: lineage (measured 0.00% removed for ~10 s at TPCH_SCALE 100x).
-    #: The reference schedules such ops too, but its in-process filters
-    #: are ~free; Spark's cost real jobs, so provable no-ops must die.
-    #: (Pure FK-orphan removal is intentionally not modeled as
-    #: information — that is gate 1's require_selective_build.)
-    #: identity counts as information only when FK-orphan-removal ops
-    #: are enabled (require_selective_build=False, the reference's
-    #: always-transfer mode): an unfiltered build can then still remove
-    #: probe rows with no matching build row at all.
-    info: dict = {a: ({a} if (a in filtered
-                              or not cfg.require_selective_build)
-                      else set()) for a in dfs}
+    def persisted(alias: str) -> DataFrame:
+        df = s.dfs[alias]
+        if cfg.persist_reduced and df not in res.persisted:
+            df = s.dfs[alias] = df.persist()
+            res.persisted.append(df)
+        return df
 
-    #: builds whose rows were observed exactly this schedule (count paid)
-    observed: set = set()
-    #: the subset observed BY GATE 2g (weak-build observation): the
-    #: keep-frac drop below prices only these — a build observed via
-    #: gate 0b's near-boundary tiering or the 2f rescue's backward path
-    #: keeps its r8 behavior, and weak_observe_max_base=0 genuinely
-    #: disables the whole feature (ADVICE r9)
-    observed_weak: set = set()
-
-    #: alias -> its reduction lineage is scan-local (no shuffled semi
-    #: applied to it): broadcast semis, bloom probes, min/max BETWEENs
-    #: and empty-build short-circuits all fuse into the relation's own
-    #: scan stage, so an eager job over the lineage (gate 2f's observe
-    #: count / bloom build) costs one scan and no exchange. A shuffled
-    #: semi breaks that — re-deriving it eagerly pays a full exchange,
-    #: which is the r6 sketch-regime Q7 loss (SKETCH_REGIME_r06).
-    scan_local: dict = {a: True for a in dfs}
+    def observe(alias: str, persist: bool = False) -> float:
+        return float((persisted(alias) if persist
+                      else s.dfs[alias]).count())
 
     for op in plan.ops:
-        build, probe = dfs[op.build], dfs[op.probe]
-        est = rows_est.get(op.build, float("inf"))
-
-        # 0. information gate: skip ops that provably cannot remove rows
-        if not (info[op.build] - info[op.probe] - {op.probe}):
-            _drop("info")
+        d = decide(op, s, cfg, observe)
+        if d.tier is None:
+            res.decisions.append(d)
             continue
-
-        # 0b. near-boundary tier observation (config.observe_est_factor):
-        # a guessed estimate just above the broadcast ceiling may hide a
-        # genuinely broadcastable key set (x300 Q10: guess 9M, actual
-        # 1.7M — the difference between a scan-fused broadcast semi and
-        # re-shuffling the 60M-row probe). Pay one scan+filter count on
-        # UNREDUCED filtered builds only (a reduced build's lineage is a
-        # real join; its ops already run on observed/decayed figures),
-        # then let every gate below see the exact number.
-        if (cfg.observe_est_factor > 0 and op.build not in reduced
-                and op.build in filtered and op.build not in observed
-                and cfg.broadcast_key_rows < est
-                <= cfg.observe_est_factor * cfg.broadcast_key_rows):
-            observed.add(op.build)
-            est = float(build.count())
-            rows_est[op.build] = est
-            rows_pre[op.build] = est
-
-        # bounded-downside gates — the robustness margin the reference
-        # lacks (it always applies when >1 edge; its in-process filters
-        # are ~free, ours cost real Spark exchanges):
-        # 1. an unfiltered, never-reduced build side only removes
-        #    FK-orphan probe rows — skip unless allowed
-        if (op.build not in filtered and op.build not in reduced
-                and (cfg.require_selective_build
-                     or est > cfg.max_unfiltered_build_rows)):
-            _drop("gate1")
-            continue
-        # 2g. weak-build observation (config.weak_observe_max_base):
-        #     a local filter's true selectivity is unproven — LIKE
-        #     '%Pictures%' keeps 100% where the decay guess says 20% —
-        #     so for dim-sized bases pay one scan+filter count and
-        #     apply gate 2b's keep-frac rule to EVERY tier: a build
-        #     still holding most of its domain removes almost nothing
-        #     while its eager key-set jobs are real (JOB jq17/jq23).
-        #     Dropping here (not "dup") leaves native runtime blooms
-        #     welcome on the edge: the composed arbitration hands weak
-        #     arms to the host's lazy AQE-planned blooms.
-        if (cfg.weak_observe_max_base > 0 and rows_base is not None
-                and op.build not in reduced and op.build in filtered
-                and op.build not in observed
-                and cfg.weak_observe_min_base
-                <= rows_base.get(op.build, 0.0)
-                <= cfg.weak_observe_max_base):
-            observed.add(op.build)
-            observed_weak.add(op.build)
-            est = float(build.count())
-            rows_est[op.build] = est
-            rows_pre[op.build] = est
-        if (op.build in observed_weak and op.build not in reduced
-                and rows_base is not None):
-            bb = rows_base.get(op.build, 0.0)
-            if bb > 0 and est >= cfg.max_build_keep_frac * bb:
-                _drop("gate2g")
-                continue
-        # 2. transfer only into probes big enough to repay an exchange —
-        #    but ONLY for shuffle-tier builds. A broadcast-tier build
-        #    (est <= broadcast_key_rows) costs no exchange at all: the
-        #    semi join rides the probe's own scan stage as a broadcast
-        #    hash join, exactly like the reference's free in-process
-        #    filters. Skipping those breaks the CASCADE: an unreduced
-        #    tiny dim (supplier, customer) then fails gate 1 as a build
-        #    side and its parent's selective filter (the nation gate in
-        #    TPC-H Q5/Q7/Q8/Q9) never reaches the fact tables — measured
-        #    at TPCH_SCALE 100x as the whole rpt-leg regression.
-        if (est > cfg.broadcast_key_rows
-                and rows_est.get(op.probe, float("inf"))
-                < cfg.min_probe_rows):
-            _drop("gate2")
-            continue
-        # 2b. shuffle-tier builds must also be SELECTIVE: the op costs a
-        #     distinct-key shuffle + a shuffled semi join + (big probes)
-        #     an eager min/max job, so a build side still holding most
-        #     of its base table can only remove a minority of probe rows
-        #     — bounded downside says skip it. Broadcast-tier builds are
-        #     exempt (free), as is any build with no footer baseline.
-        if (est > cfg.broadcast_key_rows and rows_base is not None):
-            base = rows_base.get(op.build, 0.0)
-            if base > 0 and est >= cfg.max_build_keep_frac * base:
-                _drop("gate2b")
-                continue
-        # 2b2/2b3. a shuffled semi never SAVES an exchange of the probe:
-        #      it shuffles the probe's full current rows by the op keys —
-        #      the same exchange the final probe<->build join pays — and
-        #      only reduces per-row work downstream. It is therefore
-        #      redundant unless the reduction reaches ANOTHER exchange:
-        #      the probe must have a different join edge (different keys,
-        #      different neighbor) whose other side is itself too big to
-        #      broadcast, i.e. the final plan will shuffle the probe
-        #      AGAIN and the semi shrinks that second shuffle. Only
-        #      scan-local tiers (broadcast, sketch) can land a reduction
-        #      BEFORE the first exchange, the way the reference's
-        #      in-process filters always do. r5 shipped the degree-1
-        #      special case (Q3/Q10); the r6 clean-room A/B generalized
-        #      it: on EVERY full-22 x1000 query with a shuffle-tier op
-        #      the no-shuffle-semi leg was faster (Q5 13.8->11.1s,
-        #      Q7 10.7->5.5s, Q8 13.6->10.3s, Q17 7.4->6.4s vs off
-        #      30.3/15.1/14.3/14.2) — their downstream joins are all
-        #      broadcast dims, so the "reduction feeds the probe's other
-        #      joins" rationale priced at zero exchanges saved.
-        force_sketch = False
-        rescue_post_check = False
-        if (cfg.skip_redundant_shuffle_semi
-                and neighbor_edges is not None
-                and est > cfg.broadcast_key_rows
-                and not _sketch_tier(cfg, est)):
-            others = neighbor_edges.get(op.probe, [])
-            saves_exchange = any(
-                n != op.build and set(cols) != set(op.probe_cols)
-                and rows_est.get(n, float("inf")) > cfg.host_broadcast_rows
-                for n, cols in others)
-            if not saves_exchange:
-                # gate 2f: subtree sketch rescue (config.sketch_rescue)
-                # — the hop is otherwise LOST, and with it the
-                # transitive selectivity of the build's whole reduced
-                # subtree (the jq10/jq11/jq13 gap vs native's
-                # subtree-built blooms, JOB_REGIME_r07). Re-express it
-                # scan-locally when the guards hold; never replace a
-                # live shuffled semi (the r6 sketch_auto mistake).
-                # both passes are eligible: a backward hop whose
-                # observed build turns out broadcast-tier (jq15's
-                # 234-key movie_keyword after its kw semi) passes gate
-                # 3a below on the observed number; one that stays
-                # shuffle-tier is still killed there (the r6 lesson —
-                # an eager bloom over the root's lineage never pays)
-                build_base = (rows_base or {}).get(op.build, 0.0) or est
-                ok = (cfg.sketch_rescue
-                      and est <= cfg.sketch_max_keys
-                      # string/binary probe keys only — the rescue's
-                      # repay is the probe join's PER-ROW cost (string
-                      # hashing + equality on every surviving row),
-                      # which the pre-exchange cut removes; integer-key
-                      # joins are too cheap per row to repay an eager
-                      # bloom over a 100M+-row build lineage (measured
-                      # in-round at x1000: the unconditioned rescue
-                      # planted orders->lineitem on Q3/Q10 and
-                      # lineitem->orders on Q7, turning Q7's 2.8x win
-                      # into 0.89x via 15-31 s eager builds; the JOB
-                      # wins jq10/jq11/jq13 are all string-key)
-                      and _string_keys(probe, op.probe_cols)
-                      # gate 3's observation-independent backward check,
-                      # hoisted so a doomed hop never pays the count
-                      and (op.phase == "forward"
-                           or rows_est.get(op.probe, float("inf"))
-                           >= cfg.backward_min_probe_rows)
-                      and scan_local.get(op.build, True)
-                      and _downstream_weight(
-                          op.probe, plan.ops, rows_base or rows_est)
-                      >= cfg.sketch_rescue_probe_factor * build_base)
-                if not ok:
-                    _drop("gate2b3")
-                    continue
-                # PERSIST the build: its materialization (selective
-                # by gate 2b, so small) makes the bloom build plus the
-                # final join read the cached rows instead of
-                # re-deriving the multi-million-row scan-local lineage
-                # once each (measured on jq13: 3 extra 12.5M-row
-                # movie_company scans behind a 124k-row reduction).
-                # Released with the schedule's other persists on the
-                # next reduce().
-                if (op.phase == "forward" and op.build not in observed):
-                    # forward rescue goes straight to the bitmap: the
-                    # bloom build's word-count totals the observed
-                    # cardinality for free (_build_once), so a
-                    # separate count scan would only duplicate it;
-                    # weakness/overflow are re-checked post-build and
-                    # the probe withheld then (rescue_post_check)
-                    if (cfg.persist_reduced
-                            and build not in res.persisted):
-                        build = build.persist()
-                        dfs[op.build] = build
-                        res.persisted.append(build)
-                    force_sketch = True
-                    rescue_post_check = True
-                else:
-                    # backward hops must PROVE broadcast-tier — gate 3a
-                    # reads the observed number (an eager bitmap over a
-                    # shuffle-tier ROOT lineage is the r6-documented
-                    # loser); already-observed builds re-tier for free
-                    if op.build not in observed:
-                        observed.add(op.build)
-                        if (cfg.persist_reduced
-                                and build not in res.persisted):
-                            build = build.persist()
-                            dfs[op.build] = build
-                            res.persisted.append(build)
-                        est = float(build.count())
-                        rows_est[op.build] = est
-                        rows_pre[op.build] = est
-                    else:
-                        est = rows_est.get(op.build, est)
-                    # re-check size and selectivity on the OBSERVED
-                    # count: a weak build (keeps >= max_build_keep_frac
-                    # of its base) cuts too little to repay the eager
-                    # bloom build (jq7's 50%-country company arm), and
-                    # an over-large one is beyond the bitmap's
-                    # broadcast ceiling
-                    if est > cfg.sketch_max_keys:
-                        _drop("gate2b3")
-                        continue
-                    if (rows_base is not None and build_base > 0
-                            and est >= cfg.max_build_keep_frac
-                            * build_base):
-                        _drop("gate2b3")
-                        continue
-                    # est == 0 rides the sketch branch too: its
-                    # empty-build short-circuit (probe WHERE false) is
-                    # the reference's always-false filter
-                    # (physical_create_bf.cpp:290-297), and the
-                    # broadcast-tier gates below must not reclaim the
-                    # op (a zero-key build duplicates no host join)
-                    force_sketch = (est > cfg.broadcast_key_rows
-                                    or est == 0)
-        # 2c. broadcast-tier benefit gate: BroadcastExchange collects the
-        #     key set to the driver and builds the hash relation single-
-        #     threaded, so a MID-SIZE key set (above bf_cheap_keys) is a
-        #     real fixed cost — require the probe to dwarf it. Priced on
-        #     the PRE-DECAY build estimate: the per-semi decay is a fixed
-        #     0.2 guess that can undershoot the true key count severalfold
-        #     and sneak an expensive build under the bar (TPC-H Q3 at
-        #     x100/x300, the r4 bounded-downside break). Minmax-only mode
-        #     ships no keys, and the sketch tier's parallel JVM build +
-        #     bitmap broadcast has no driver hash relation — both exempt.
-        #     Failing this gate suppresses ONLY the key-set tier: the
-        #     minmax tier ships two scalars per column (no driver hash
-        #     relation) and is separately payoff-checked below
-        #     (clustering + base-size bounds), so it must not be lost
-        #     with the keys (ADVICE r5).
-        #: probe-side tier choice (config.bloom_probe_min_rows): on a
-        #: huge probe the per-row filter cost IS the op, and the
-        #: bitmap's bit-tests are 4-5x cheaper than a broadcast-hash
-        #: semi's hash lookups — but ONLY for string/binary keys, where
-        #: the hash relation pays per-row string hashing + equality
-        #: (measured, 50M-row string-key fact). On integer keys the
-        #: broadcast-hash semi's lookup is as cheap as the bit-test AND
-        #: stays lazy inside AQE's replanning, which the eager bitmap
-        #: build forfeits — the r5/r6 clean-room sketch A/Bs measured
-        #: exactly that as Q7's win turning into a loss (SKETCH_AB_r05,
-        #: SKETCH_REGIME_r06), and the unconditioned escalation
-        #: reproduced it at x1000 (Q7 6.3->19.0 s, Q3/Q10 engaging ops
-        #: gate 2c used to drop — the r8 in-round regression).
-        probe_big = (cfg.bloom_probe_min_rows > 0
-                     and rows_est.get(op.probe, 0.0)
-                     >= cfg.bloom_probe_min_rows
-                     and _string_keys(probe, op.probe_cols))
-        suppress_bf = False
-        dup_evidence = False  # suppression specifically by gates 2d/2e
-        if (cfg.bf_benefit_probe_ratio > 0 and cfg.filter_type != "minmax_only"
-                and est <= cfg.broadcast_key_rows
-                and not force_sketch
-                and not _sketch_tier(cfg, est)):
-            pre = rows_pre.get(op.build, est)
-            if (pre > cfg.bf_cheap_keys
-                    and rows_est.get(op.probe, float("inf"))
-                    < cfg.bf_benefit_probe_ratio * pre):
-                if probe_big and not _is_dsv2(op.probe):
-                    # the bitmap ships no driver hash relation — gate
-                    # 2c's fixed cost vanishes, so escalate the tier
-                    # instead of losing the op
-                    force_sketch = True
-                else:
-                    suppress_bf = True
-        # 2d. exchange-benefit gate for the BROADCAST tier (gate 2b3's
-        #     insight one tier down): when every other neighbor of the
-        #     probe is itself broadcastable, the final plan joins the
-        #     probe with broadcast-hash joins only — which drop misses
-        #     at the same per-row hash cost our semi pays — so the semi
-        #     duplicates work row for row and adds its build jobs on
-        #     top (JOB-regime jq1/jq4: 0.6-0.7x on 1-2 s queries whose
-        #     dims all broadcast). Reduction pays only when it crosses
-        #     an exchange: keep the semi if ANY other neighbor is too
-        #     big to broadcast (a shuffle join of the probe exists), if
-        #     the probe holds plan edges the graph cannot see
-        #     (anti/full outer -> opaque), or if the probe scan is
-        #     key-prunable (DSv2: the reduction lands IN the scan).
-        #     The min/max tier is exempt as in gate 2c — it prunes the
-        #     scan itself and is separately payoff-checked.
-        #     CASCADE GUARD: never suppress an op whose probe is the
-        #     BUILD of a later forward op — reduction through an
-        #     intermediate dim is transitive (Q5: region->nation looks
-        #     all-broadcast locally, but reduced nation is what shrinks
-        #     customer, then orders, then lineitem; suppressing the hop
-        #     collapsed the whole cascade, x1000 subset recheck). A
-        #     probe no forward op ever builds from (a terminal fact:
-        #     jq1's movie_company, a star fact) has no transitive value
-        #     — only there can local all-broadcast duplication hold.
-        if (not suppress_bf and cfg.skip_no_exchange_probe
-                and cfg.host_broadcast_rows > 0
-                and not any(o.build == op.probe and o.phase == "forward"
-                            for o in plan.ops)
-                and est <= cfg.broadcast_key_rows
-                and not force_sketch
-                # the build itself may be broadcast-SEMI-able for us yet
-                # too big for the HOST to broadcast in the final join —
-                # that join is then a shuffle of the probe, and the semi's
-                # reduction lands before it: a crossed exchange, keep
-                and est <= cfg.host_broadcast_rows
-                and not _sketch_tier(cfg, est)
-                and op.probe not in opaque_rels
-                and op.probe in (neighbor_edges or {})):
-            others = [(n, cols) for n, cols in neighbor_edges[op.probe]
-                      if n != op.build]
-            crosses_exchange = any(
-                rows_est.get(n, float("inf")) > cfg.host_broadcast_rows
-                for n, _cols in others)
-            # SQL-path refinement (r8): gate 2d's graph estimates model
-            # the plan join_all would build (size-hinted BHJs), but the
-            # REPLAYED host plan broadcasts by Catalyst's STATIC
-            # sizeInBytes, which ignores filter selectivity — a
-            # year-filtered 60MB title stays SMJ, the probe fact pays
-            # its full shuffle map-write, and the suppressed semi was
-            # the only thing that could have landed the reduction
-            # before it (JOB jq13: castinfo's 50M-row exchange behind a
-            # suppressed title->castinfo hop; native's subtree bloom
-            # wins exactly by filtering that write). When host-plan
-            # evidence exists, suppression additionally requires the
-            # host to REALLY pre-filter this pair below the probe's
-            # first exchange — the same certainty bar as gate 2e.
-            host_really_filters = (host_prefiltered is None or any(
-                p == op.probe and b == op.build
-                and (k is None or set(op.probe_cols) <= k)
-                for p, b, k in host_prefiltered))
-            if (not crosses_exchange and host_really_filters
-                    and not _is_dsv2(op.probe)):
-                suppress_bf = True
-                dup_evidence = True
-        # 2e. host-prefiltered duplication: the un-rewritten host plan
-        #     already inner-BHJ-joins this build into the probe's scan
-        #     pipeline below the probe's first shuffle — same rows
-        #     dropped, same per-row hash cost, same pre-exchange
-        #     position — so the semi duplicates it even though the
-        #     probe crosses an exchange later (Q9's part->lineitem at
-        #     x1000: the one residual gate 2d's graph-only evidence
-        #     could not see). Guards: forward-cascade as in 2d; the
-        #     BUILD must not itself carry transfer reductions (a
-        #     cascade INTO the build means the semi filters on
-        #     already-reduced keys the host's bare-table BHJ cannot
-        #     express — ADVICE r7); the host join's probe-side keys
-        #     must cover the op's probe columns (unknown keys = no
-        #     suppression); probe huge enough (10x broadcast_key_rows)
-        #     that any backward op building from it stays shuffle-tier,
-        #     which gate 3a (backward_broadcast_only) already skips —
-        #     so no transitive reduction is lost; DSv2 probes keep the
-        #     op (scan-local reduction is strictly cheaper than the
-        #     host join). The engine excludes shared-subquery/virtual
-        #     probes before handing over the pairs (config docstring).
-        if (not suppress_bf and cfg.skip_host_prefiltered_semi
-                and host_prefiltered
-                and any(p == op.probe and b == op.build
-                        and (k is None or set(op.probe_cols) <= k)
-                        for p, b, k in host_prefiltered)
-                and est <= cfg.broadcast_key_rows
-                and not force_sketch
-                and not _sketch_tier(cfg, est)
-                and op.build not in reduced
-                and not any(o.build == op.probe and o.phase == "forward"
-                            for o in plan.ops)
-                and cfg.backward_broadcast_only
-                and rows_est.get(op.probe, 0.0)
-                > 10 * cfg.broadcast_key_rows
-                and not _is_dsv2(op.probe)):
-            suppress_bf = True
-            dup_evidence = True
-        if suppress_bf and cfg.filter_type == "bf_only":
-            _drop("dup" if dup_evidence else "gate2c")
-            continue  # no minmax tier to fall back to
-        # 3. backward ops need an even bigger probe: the forward pass
-        #    already reduced the root, so the marginal win is smaller
-        if (op.phase == "backward"
-                and rows_est.get(op.probe, float("inf"))
-                < cfg.backward_min_probe_rows):
-            _drop("gate3")
-            continue
-        # 3a. shuffle-tier backward hops are opt-in (see config docstring)
-        if (op.phase == "backward" and cfg.backward_broadcast_only
-                and est > cfg.broadcast_key_rows):
-            _drop("gate3a")
-            continue
-        # 3b. benefit gate: a probe whose reduced size already fits the
-        #     host broadcast hint will be BROADCAST in the final join —
-        #     reducing it further cannot convert row savings into
-        #     shuffle savings (it only trims a hash table the host
-        #     builds once), while the backward key-set re-derives the
-        #     root's reduced lineage: a full extra pass over the
-        #     biggest table. The forward cascade is exempt — its
-        #     reductions feed the NEXT hop's build regardless of how
-        #     the final join consumes the probe. Scale-adaptive via the
-        #     min/max jobs' observed-rows feedback (rows_est is the
-        #     measured count once a relation has served as a build
-        #     side): at cluster scale a still-huge probe stays above
-        #     the bar and the backward pass engages. Measured at
-        #     TPCH_SCALE 100x: Q7 rpt 10.6s -> 4.2s with the backward
-        #     legs' broadcastable probes skipped, no cascade-fixture
-        #     regression (the cascade's backward ops target facts).
-        if (op.phase == "backward" and cfg.host_broadcast_rows
-                and rows_est.get(op.probe, float("inf"))
-                <= cfg.host_broadcast_rows):
-            _drop("gate3b")
-            continue
-        # 4. both endpoints declared bucketed on this edge's keys: the
-        #    join is already exchange-free, and transfer along it only
-        #    adds probe work (measured: BUCKETED_r03.json)
-        if (colocated.get(op.build) == frozenset(op.build_cols)
-                and colocated.get(op.probe) == frozenset(op.probe_cols)):
-            _drop("gate4")
-            continue
-
+        build, probe = s.dfs[op.build], s.dfs[op.probe]
+        est = s.rows_est.get(op.build, inf)
         st = StepStat(op=op)
         if cfg.profiling:
             st.rows_in = probe.count()
@@ -1014,63 +1003,23 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
         # Sketch-tier builds measured FASTER without a forced persist
         # here: the bloom aggregation needs only the key columns, so a
         # column-pruned recompute of the reduction lineage beats
-        # materializing the build's full (wide) row payload.
-        sketch_tier = (cfg.filter_type in ("all", "bf_only")
-                       and (_sketch_tier(cfg, est) or force_sketch
-                            or (probe_big and not suppress_bf
-                                and not _is_dsv2(op.probe))))
-        if (cfg.persist_reduced and op.build in reduced
-                and (est >= cfg.persist_min_rows
-                     or op.build in multi_filter_builds)
-                and build not in res.persisted):
-            build = build.persist()
-            dfs[op.build] = build
-            res.persisted.append(build)
+        # materializing the build's full (wide) row payload. A forward
+        # rescue persists regardless: its bloom build and the final
+        # join then read the cached rows (see gate 2f).
+        if d.rescue or (op.build in s.reduced
+                        and (est >= cfg.persist_min_rows
+                             or op.build in multi_filter_builds)):
+            build = persisted(op.build)
 
-        # min/max pushdown is an *eager* driver-side agg job per op; it
-        # only pays when the probe side is a big scan whose PushedFilters
-        # benefit (the reference pushes unconditionally because its
-        # filters are free in-process; ours cost a Spark job)
-        probe_est = rows_est.get(op.probe, float("inf"))
-        empty = False
-        #: did any predicate / semi join actually land on the probe? A
-        #: provable no-op (minmax range prunes nothing, no bf tier) must
-        #: NOT mark the probe reduced or propagate info — the later
-        #: information gate would then skip ops that could still prune
-        #: (ADVICE r4)
-        applied = False
-        tier = "minmax"
-        # ... and only from broadcast-tier builds (unless minmax_only is
-        # forced): a shuffle-tier build's eager agg re-derives a
-        # multi-million-row lineage for a range that, on hash-uniform
-        # FKs, never narrows the probe footer anyway (measured at
-        # TPCH_SCALE 100x: 3.6 s agg, predicate dropped by the footer
-        # skip, zero pruning). Builds that carry range-correlated
-        # filters are precisely the small, already-reduced ones.
-        # ... and the eager agg's cost scales with the build's BASE scan
-        # (it re-derives the whole reduction lineage), so huge-base builds
-        # skip it even in "all" mode — measured 0.5-0.8s per op on the
-        # 15M-row orders lineage at x100 for a predicate the footer skip
-        # then dropped. minmax_only mode stays unbounded (explicit ask).
-        base_rows = (rows_base or {}).get(op.build, 0.0)
-        minmax_base_ok = (cfg.minmax_max_build_base <= 0 or base_rows <= 0
-                          or base_rows <= cfg.minmax_max_build_base)
-        want_minmax = (cfg.filter_type in ("all", "minmax_only")
-                       and ((probe_est >= cfg.minmax_min_probe_rows
-                             and est <= cfg.broadcast_key_rows
-                             and minmax_base_ok
-                             and _probe_clustered(
-                                 probe_paths.get(op.probe), op.probe_cols,
-                                 cfg.minmax_max_clustering))
-                            or cfg.filter_type == "minmax_only"))
-        if want_minmax and not sketch_tier:
+        landed = None
+        if d.minmax and d.tier != "sketch":
             t0 = time.perf_counter()
             # the footer range is a superset of the probe's actual range
             # (reductions only shrink it), so "build range covers the
             # footer range => the predicate prunes nothing" stays valid
             # even for an already-reduced probe
             n, pred = _minmax_filter(probe, build, op,
-                                     probe_path=probe_paths.get(op.probe))
+                                     probe_path=s.probe_paths.get(op.probe))
             st.minmax_ms = (time.perf_counter() - t0) * 1e3
             # AQE-style mid-schedule feedback (SURVEY §7: "measure at
             # persist time ... a place we can beat the reference"): the
@@ -1080,19 +1029,15 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
             # THIS op's own key-set tier choice below (a decayed estimate
             # that undershot a genuinely huge build must not force a
             # driver-side broadcast of its keys)
-            rows_est[op.build] = float(n)
-            rows_pre[op.build] = float(n)  # observed beats any estimate
-            est = float(n)
+            s.rows_est[op.build] = s.rows_pre[op.build] = est = float(n)
             if n == 0:
-                dfs[op.probe] = probe.where(F.lit(False))
-                empty = True
-                applied = True
+                s.dfs[op.probe] = probe.where(F.lit(False))
+                landed = "empty"
             elif pred is not None:
-                probe = probe.where(pred)
-                dfs[op.probe] = probe
-                applied = True
+                probe = s.dfs[op.probe] = probe.where(pred)
+                landed = "minmax"
 
-        if not empty and sketch_tier:
+        if d.tier == "sketch":
             # sketch tier: ship a fixed-size bitmap instead of the key
             # set — for build sides whose distinct-key shuffle would
             # dominate (PTBloomFilter's role, bloom_filter.cpp:27-78).
@@ -1103,69 +1048,53 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
             from .bloom import build_bloom, probe_bloom
 
             t0 = time.perf_counter()
-            bck = (op.build, op.build_cols, epochs.get(op.build, 0))
+            bck = (op.build, op.build_cols, s.epochs.get(op.build, 0))
             bloom = bloom_cache.get(bck)
             if bloom is None:
-                stat_cols = _minmax_cols(build, op) if want_minmax else []
                 # a decayed estimate can undershoot the reduced build;
                 # build_bloom's resize rule self-corrects with one
                 # rebuild (ref physical_create_bf.cpp:385-406)
-                bloom = build_bloom(build, list(op.build_cols),
-                                    est if est != float("inf") else 1e6,
-                                    stat_cols=stat_cols)
-                bloom_cache[bck] = bloom
+                bloom = bloom_cache[bck] = build_bloom(
+                    build, list(op.build_cols), est if est != inf else 1e6,
+                    stat_cols=_minmax_cols(build, op) if d.minmax else [])
             st.build_ms = (time.perf_counter() - t0) * 1e3
-            rows_est[op.build] = float(bloom.n_rows)
-            rows_pre[op.build] = float(bloom.n_rows)
-            observed.add(op.build)
-            if rescue_post_check and bloom.n_rows > 0:
-                bb = (rows_base or {}).get(op.build, 0.0)
-                if (bloom.n_rows > cfg.sketch_max_keys
-                        or (bb > 0 and bloom.n_rows
-                            >= cfg.max_build_keep_frac * bb)):
-                    # the observed build is too weak/big to probe with:
-                    # the bitmap job is sunk (one scan, same as the
-                    # observe-then-refuse path), the probe is withheld
-                    _drop("gate2b3")
-                    res.stats.append(st)
-                    continue
-            if bloom.n_rows == 0:
-                dfs[op.probe] = probe.where(F.lit(False))
+            n = s.note(op.build, float(bloom.n_rows))
+            bb = (s.rows_base or {}).get(op.build, 0.0)
+            if d.rescue and n > 0 and (
+                    n > cfg.sketch_max_keys
+                    or (bb > 0 and n >= cfg.max_build_keep_frac * bb)):
+                # the observed build is too weak/big to probe with:
+                # the bitmap job is sunk (one scan, same as the
+                # observe-then-refuse path), the probe is withheld
+                res.decisions.append(Decision(
+                    op, gate="gate2b3", value=n, observed=True,
+                    threshold=(cfg.sketch_max_keys
+                               if n > cfg.sketch_max_keys
+                               else cfg.max_build_keep_frac * bb)))
+                res.stats.append(st)
+                continue
+            if n == 0:
+                s.dfs[op.probe] = probe.where(F.lit(False))
             else:
                 pred = _range_pred(bloom.ranges, op,
-                                   probe_paths.get(op.probe))
+                                   s.probe_paths.get(op.probe))
                 if pred is not None:
                     probe = probe.where(pred)
-                dfs[op.probe] = probe_bloom(probe, list(op.probe_cols),
-                                            bloom)
-            res.applied.append(op)
-            res.applied_tiers.append("sketch")
-            reduced.add(op.probe)
-            info[op.probe] |= info[op.build]
-            epochs[op.probe] = epochs.get(op.probe, 0) + 1
-            if op.probe in rows_est:
-                rows_est[op.probe] *= REDUCTION_DECAY
-            if cfg.profiling:
-                t0 = time.perf_counter()
-                st.rows_out = dfs[op.probe].count()
-                st.probe_ms = (time.perf_counter() - t0) * 1e3
-            res.stats.append(st)
-            continue
-
-        if not empty and not suppress_bf and cfg.filter_type in ("all", "bf_only"):
-            ck = (op.build, op.build_cols, epochs.get(op.build, 0))
-            cached = keys_cache.get(ck)
-            if cached is None:
+                s.dfs[op.probe] = probe_bloom(probe, list(op.probe_cols),
+                                              bloom)
+            landed = "sketch"
+        elif d.tier != "minmax" and landed != "empty":
+            ck = (op.build, op.build_cols, s.epochs.get(op.build, 0))
+            keys = keys_cache.get(ck)
+            if keys is None:
                 keys = build.select(
                     *[F.col(b).alias(f"__k{i}")
                       for i, b in enumerate(op.build_cols)])
-                if est <= cfg.broadcast_key_rows:
-                    # broadcast semi join dedups in hash-table build; an
-                    # extra distinct shuffle would only slow it down
-                    keys = F.broadcast(keys)
-                else:
-                    keys = keys.dropDuplicates()
-                keys_cache[ck] = keys
+                # broadcast semi join dedups in hash-table build; an
+                # extra distinct shuffle would only slow it down
+                keys = keys_cache[ck] = (
+                    F.broadcast(keys) if est <= cfg.broadcast_key_rows
+                    else keys.dropDuplicates())
                 if cfg.profiling:
                     # force the key-set materialization so its cost is
                     # attributed to the CREATE, not the consumer stage
@@ -1173,37 +1102,30 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                     t0 = time.perf_counter()
                     keys.count()
                     st.build_ms = (time.perf_counter() - t0) * 1e3
-            else:
-                keys = cached
             cond = None
             for i, p in enumerate(op.probe_cols):
                 c = F.col(p) == F.col(f"__k{i}")
                 cond = c if cond is None else (cond & c)
-            dfs[op.probe] = probe.join(keys, cond, "left_semi")
-            if est > cfg.broadcast_key_rows:
-                scan_local[op.probe] = False
-                tier = "exact_shuffle"
-            else:
-                tier = "exact_broadcast"
-            applied = True
+            s.dfs[op.probe] = probe.join(keys, cond, "left_semi")
+            landed = ("exact_shuffle" if est > cfg.broadcast_key_rows
+                      else "exact_broadcast")
 
-        if applied or empty:
+        observed = d.observed or d.minmax or d.tier == "sketch"
+        if landed:
             res.applied.append(op)
-            res.applied_tiers.append(
-                "empty" if empty else tier)
-            reduced.add(op.probe)
-            info[op.probe] |= info[op.build]
-            epochs[op.probe] = epochs.get(op.probe, 0) + 1
-            if op.probe in rows_est:
-                rows_est[op.probe] *= REDUCTION_DECAY
+            res.applied_tiers.append(landed)
+            s.land(op, landed)
+            d = replace(d, tier=landed, observed=observed,
+                        value=est if landed.startswith("exact") else d.value)
         else:
-            # op survived every skip but landed nothing (suppressed key
+            # survived every gate but landed nothing (suppressed key
             # tier with a no-op minmax range, usually)
-            _drop("dup" if dup_evidence
-                  else ("gate2c" if suppress_bf else "noop"))
+            d = replace(d, tier=None, gate=d.suppressed or "noop",
+                        observed=observed)
+        res.decisions.append(d)
         if cfg.profiling:
             t0 = time.perf_counter()
-            st.rows_out = dfs[op.probe].count()
+            st.rows_out = s.dfs[op.probe].count()
             st.probe_ms = (time.perf_counter() - t0) * 1e3
         res.stats.append(st)
 

@@ -153,6 +153,19 @@ def test_profiling_stats(spark, sf_dir):
     assert res.planning_ms > 0
     prof = res.format_profile()
     assert "planning:" in prof and "build_ms" in prof and "TOTAL" in prof
+    # one line per dropped Decision: gate, compared quantity, threshold
+    # (the information gate drops the backward echoes once identity
+    # stops counting as information)
+    e.reduce(STAR_RELS, STAR_EDGES, RPTConfig(
+        profiling=True, **{**FORCE, "require_selective_build": True}))
+    res = e.last_result
+    prof = res.format_profile()
+    dropped = [d for d in res.decisions if d.gate]
+    drop_lines = [ln for ln in prof.splitlines() if ln.startswith("drop")]
+    assert dropped and len(drop_lines) == len(dropped), prof
+    for d, ln in zip(dropped, drop_lines):
+        assert f" {d.gate} " in ln and " vs " in ln, ln
+    assert sum(res.drops.values()) == len(dropped)
 
 
 def test_multi_filter_build_persists_once(spark, sf_dir):

@@ -20,19 +20,10 @@ echo "JOB rc=$?"
 git add JOB_REGIME_r10.json 2>/dev/null && \
   git commit -q -m "JOB regime r10: 57 queries at 100M with the cession arbitration" || true
 
-# 2. Eager-suppression A/B on the same fixture (VERDICT r9 #4):
-#    still-engaged queries, suppressed vs eager-under-injection, runs=3.
-DRPT_JOB_DIR=/tmp/drpt_job DRPT_JOB_FACT=100000000 \
-  python -u tools/eager_ab.py --runs 3 --json EAGER_AB_r10.json \
-  > /tmp/eager_ab_r10.log 2>&1
-echo "EAGER_AB rc=$?"
-git add EAGER_AB_r10.json 2>/dev/null && \
-  git commit -q -m "A/B: eager transfer jobs under live native injection vs suppressed (JOB 100M)" || true
-
-# 3. Reclaim the JOB fixtures before the x1000 leg needs the disk.
+# 2. Reclaim the JOB fixtures before the x1000 leg needs the disk.
 rm -rf /tmp/drpt_job /tmp/drpt_job_v2
 
-# 4. At-HEAD sweep discipline (the r7/r9 standard): full oracle sweep
+# 3. At-HEAD sweep discipline (the r7/r9 standard): full oracle sweep
 #    x3 SFs + Arrow-off parity, breadth, plan audit — correctness-only,
 #    sequenced before the x1000 timing leg so the evidence lands even
 #    if the round ends mid-x1000.
@@ -79,7 +70,7 @@ cp /tmp/PLAN_AUDIT_r10.json PLAN_AUDIT_r10.json 2>/dev/null || true
 git add ORACLE_SWEEP_r10.json BREADTH_r10.json PLAN_AUDIT_r10.json 2>/dev/null && \
   git commit -q -m "r10 at-HEAD sweeps: oracle x3 SFs + Arrow-off, breadth, plan audit" || true
 
-# 5. TPC-H x1000: full 22, runs=3, in-run oracle, 24g driver, zstd —
+# 4. TPC-H x1000: full 22, runs=3, in-run oracle, 24g driver, zstd —
 #    the same protocol as TPCH_SCALE_X1000_r09, now with the cession
 #    arbitration live and engaged-only geomeans recorded. Bloom counts
 #    reused from the r9 artifact (native-plan evidence is engine-
