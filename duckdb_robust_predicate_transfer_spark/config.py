@@ -370,11 +370,10 @@ class RPTConfig:
     #: bloom injection on the SAME joins is pure double-filtering —
     #: its creation jobs re-derive key sets our semi joins already
     #: shipped (measured at TPCH_SCALE x100: composed Q7 4.21s vs rpt
-    #: alone 2.54s). With this on, Engine.sql disables native bloom
-    #: injection for a query the rewrite engaged on and restores the
-    #: session value on the next non-engaged query. Caveat: the toggle
-    #: is session-scoped and read at execution, so collect rewritten
-    #: DataFrames before planning the next query.
+    #: alone 2.54s). With this on, Engine.sql runs a query the rewrite
+    #: engaged on with native bloom injection off, set in that
+    #: statement's own cloned session; the caller's session keeps its
+    #: value.
     #: CERTIFIED CLUSTER DEFAULT (r6): run COMPOSED — leave Spark's
     #: runtime bloom filters enabled alongside the engine and let this
     #: per-edge suppression arbitrate. Composed beats transfer-alone on
@@ -402,9 +401,9 @@ class RPTConfig:
     #: on an edge NO applied op covers — typically a hop the gates
     #: refused because the exact-key build would shuffle a 100M-key
     #: intermediate the reference reduces for free in shared memory
-    #: (rpt_optimizer.cpp:884-937) — the engine restores injection for
-    #: the final run: planning's eager jobs still run suppressed; only
-    #: the result plan gets the blooms. Measured at the 100M JOB
+    #: (rpt_optimizer.cpp:884-937) — the engine turns injection back on
+    #: for the final run: planning's eager jobs still run suppressed;
+    #: only the result plan gets the blooms. Measured at the 100M JOB
     #: fixture: jq2's rewritten plan blooms keyword->movie_keyword (the
     #: refused hop; dual leg 6.25->2.37 s), jq3/jq5/jq10 bloom
     #: person->castinfo (20.5->10.0, 12.8->4.2, 11.2->4.8); while

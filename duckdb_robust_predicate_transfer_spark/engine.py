@@ -21,6 +21,7 @@ way (README.md:21).
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -114,13 +115,50 @@ _ORIG_RF_CACHE: dict = {}
 _CEDE_CACHE: dict = {}
 
 
+#: guards every write to the module memos above and the session clone
+#: (Engine.sql may run on several threads over one SparkSession)
+_LOCK = threading.Lock()
+
+#: memo-lookup sentinel: a cached value may itself be None
+_MISS = object()
+
+
 def _memo_put(cache: dict, key, value, cap: int = 256):
     """Store ``value`` in a bounded FIFO memo (the oldest entry goes at
-    capacity); returns it."""
-    if len(cache) >= cap:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
+    capacity); returns it. Readers use ``cache.get`` — one atomic
+    lookup, so a concurrent eviction cannot fail a checked read."""
+    with _LOCK:
+        if len(cache) >= cap:
+            cache.pop(next(iter(cache)))
+        cache[key] = value
     return value
+
+
+def _clone_session(spark: SparkSession) -> SparkSession:
+    """A new session with a copy of ``spark``'s SQL conf and temp views
+    (``cloneSession``; ``newSession`` would drop the runtime confs).
+    Conf writes and view shadows in the clone never reach ``spark``.
+    PySpark's constructor re-points ``RDD.toDF`` at the newest session;
+    it is put back so the clone stays private."""
+    from pyspark import RDD
+
+    with _LOCK:
+        to_df = RDD.toDF
+        clone = SparkSession(spark.sparkContext,
+                             spark._jsparkSession.cloneSession())
+        RDD.toDF = to_df
+    return clone
+
+
+def _bind(df: DataFrame, s: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a fresh DataFrame of session ``s``:
+    planning and jobs on it run under ``s``'s conf, and planning it
+    leaves ``df``'s own plan unfixed. Not ``s.table(name)``: replacing
+    a temp view uncaches every cached plan that reads it by name, so
+    shadowing ``name`` would drop the transfer's persisted builds."""
+    jds = s._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        s._jsparkSession, df._jdf.queryExecution().analyzed())
+    return DataFrame(jds, s)
 
 
 #: the planner confs that decide where Spark plants runtime blooms; the
@@ -218,11 +256,19 @@ class Engine:
         deterministic WHERE clauses are idempotent, so results are
         identical — the reference's core invariant (README.md:21).
 
+        Each rewrite-enabled statement runs in its own clone of the
+        caller's session (_clone_session), as the reference rewrites
+        each plan inside one optimizer pass that only reads its
+        settings: the shadows, the eager transfer jobs and the
+        runtime-bloom arbitration's one conf write live in the clone,
+        and the returned DataFrame is bound to it. The caller's session
+        is never changed, and a DataFrame planned now executes under its
+        own arbitration whatever later statements decide.
+
         Any extraction bail-out (unsupported construct, <=2 edges after
         gating, no instance actually reduced) returns the plain result.
         """
         self.catalog.register_views()
-        df = self.spark.sql(query)
         cfg = (config or self.config).validate()
         #: True when the last sql() call actually applied the transfer
         #: rewrite (extraction succeeded AND the planner's gates kept at
@@ -230,71 +276,40 @@ class Engine:
         #: reference's "rules_applied" profiling counter
         #: (rpt_profiling.hpp:40-55). Read by tools/breadth_check.py.
         self.last_sql_rewritten = False
-        #: set by _auto_transfer_sql when an UN-engaged query's bail
-        #: evidence is pure duplication economics (every lost candidate
-        #: died to gates 2d/2e): the query's joins are all broadcast-
-        #: hash joins that drop the same rows a filter would, so
-        #: native runtime blooms are the same pure overhead our semis
-        #: would be — keep injection suppressed for it (JOB jq1: native
-        #: 1.65 s vs off 0.95 s on exactly this shape, JOB_REGIME_r07).
-        self._keep_rf_suppressed = False
-        #: set inside _auto_transfer_sql's shadow window when the
-        #: rewritten plan carries an uncovered native bloom edge
-        #: (compose_subtree_rf): sql() then restores injection for the
-        #: final run — per-query dual
-        self._dual_rf = False
         #: set by reduce() when the cession arbitration disengaged the
         #: query to hand its covered edges to native runtime blooms
-        #: (config.cede_covered_edges); _cede_ride_off additionally
-        #: means the floor kept native suppressed too (ride off)
+        #: (config.cede_covered_edges)
         self.last_cede = False
-        self._cede_ride_off = False
-        try:
-            # session-stashed observability twin (workload functions
-            # construct Engines internally; harnesses read this)
-            self.spark._drpt_last_cede = None
-        except Exception:
-            pass
+        # session-stashed observability twin (workload functions
+        # construct Engines internally; harnesses read this)
+        self.spark._drpt_last_cede = None
         if not auto_rpt or not cfg.enabled or self.catalog is None:
-            return df
-        if cfg.suppress_native_rf:
-            # suppress BEFORE the transfer runs, not after: reduce()'s
-            # eager jobs (observe counts, min/max aggs, key-set builds,
-            # persists) are real queries, and with injection still live
-            # Spark plants bloom filters inside THEM — pure planning-job
-            # overhead that showed up as a composed-only Q22 loss at
-            # x1000 (8.2 s vs rpt 5.1 s with ZERO blooms in the final
-            # plan, TPCH_SCALE_X1000_r06). Restored below when the
-            # rewrite does not engage.
-            self._sync_native_rf(engaged=True)
-        try:
-            out = self._auto_transfer_sql(query, df, cfg)
-        except Exception:
-            # the transfer's eager jobs (observe counts, min/max aggs,
-            # key-set builds) are real Spark jobs that can throw; leave
-            # the session's bloom-injection conf as the caller had it
-            if cfg.suppress_native_rf:
-                self._sync_native_rf(engaged=False)
-            raise
+            return self.spark.sql(query)
+        s = _clone_session(self.spark)
+        # one filtering mechanism per edge (config.suppress_native_rf).
+        # With the caller's injection on, the statement plans and runs
+        # its eager jobs (observe counts, min/max aggs, key-set builds,
+        # persists) with it off: with injection live Spark plants bloom
+        # filters inside THEM — pure planning-job overhead that showed
+        # up as a composed-only Q22 loss at x1000 (8.2 s vs rpt 5.1 s
+        # with ZERO blooms in the final plan, TPCH_SCALE_X1000_r06).
+        # The arbitration then decides the final run's value once.
+        rf_live = (cfg.suppress_native_rf
+                   and self.spark.conf.get(_RF_ENABLED, "false") == "true")
+        if rf_live:
+            s.conf.set(_RF_ENABLED, "false")
+        df = s.sql(query)
+        out, rf_off = self._auto_transfer_sql(query, s, df, cfg, rf_live)
         self.last_sql_rewritten = out is not None
-        if (cfg.suppress_native_rf and out is None
-                and not self._keep_rf_suppressed):
-            self._sync_native_rf(engaged=False)
-        elif out is not None and getattr(self, "_dual_rf", False):
-            # per-query dual: the REWRITTEN plan would carry >=1 native
-            # bloom on an edge the transfer's applied ops do NOT cover —
-            # selectivity the rewrite leaves on the table
-            # (cfg.compose_subtree_rf docstring). Restore injection for
-            # the final run; the transfer's eager planning jobs above
-            # already ran suppressed, so the Q22-class interaction loss
-            # the early suppression was built for cannot recur.
-            self._sync_native_rf(engaged=False)
+        if rf_live and not rf_off:
+            s.conf.set(_RF_ENABLED, "true")
         return out if out is not None else df
 
-    def _uncovered_rf_evidence(self, query: str, cfg: RPTConfig) -> bool:
-        """True when the REWRITTEN plan (views currently shadowed by
-        their reduced DataFrames — call only from _auto_transfer_sql's
-        shadow window) would carry at least one native bloom on a
+    def _uncovered_rf_evidence(self, s: SparkSession, query: str,
+                               cfg: RPTConfig) -> bool:
+        """True when the REWRITTEN plan (``s``'s views shadowed by their
+        reduced DataFrames — call only from _auto_transfer_sql once it
+        has shadowed them) would carry at least one native bloom on a
         (probe_table, probe_col, build_table) edge no applied op covers.
 
         Why the rewritten plan, not the original: InjectRuntimeFilter
@@ -303,27 +318,24 @@ class Engine:
         fixture: jq2's rewritten plan blooms keyword->movie_keyword —
         the hop whose exact-key build the gates refused — while its
         un-rewritten plan only blooms the company edge the ops already
-        cover). Planning is a fresh spark.sql against the shadows, so
-        the RETURNED DataFrame's QueryExecution is never optimized
-        under the temporarily-enabled conf — a bloom-laden cached plan
-        executing under nominal suppression would silently defeat the
-        arbitration.
+        cover). Planning runs in a throwaway clone of ``s``
+        (_native_blooms), so neither ``s`` nor the returned DataFrame
+        is ever planned with injection on.
 
         Costs one planning pass (~0.2-0.5 s), cached per
         statement+data+config like the gate-2e prefilter evidence.
-        Only meaningful when the session had injection on (a stash
-        exists) — otherwise there is nothing to restore. Unresolvable
-        bloom edges count as covered: suppression is the certified
-        default and flipping to dual needs positive evidence."""
-        if getattr(self.spark, "_drpt_rf_stash", None) != "true":
-            return False
+        Only meaningful when the caller had injection on — otherwise
+        there is nothing to hand back. Unresolvable bloom edges count
+        as covered: suppression is the certified default and flipping
+        to dual needs positive evidence."""
         ek = (getattr(self, "_stmt_ck", None) or query,
               self._rf_confs(), repr(cfg))
-        if ek in _DUAL_RF_CACHE:
-            return _DUAL_RF_CACHE[ek]
+        hit = _DUAL_RF_CACHE.get(ek, _MISS)
+        if hit is not _MISS:
+            return hit
         dual = False
         try:
-            blooms = self._native_blooms(query)
+            blooms = self._native_blooms(s, query)
             covered = set()
             alias_t = getattr(self, "_last_alias_tables", {})
             if self.last_result is not None:
@@ -359,34 +371,21 @@ class Engine:
                 out.append("")
         return tuple(out)
 
-    def _native_blooms(self, query: str) -> list:
+    def _native_blooms(self, s: SparkSession, query: str) -> list:
         """The native runtime bloom edges Spark plants in ``query``
-        planned with bloom injection enabled (native_bloom_edges dicts).
-        Pure planning: a fresh spark.sql, so no returned DataFrame is
-        ever optimized under the temporarily-enabled conf."""
+        (native_bloom_edges dicts), planned in a throwaway clone of
+        ``s`` with bloom injection on: pure planning, and ``s`` keeps
+        its own conf and views."""
         from .plans.catalyst_order import native_bloom_edges
 
-        try:
-            prior = self.spark.conf.get(_RF_ENABLED, "false")
-        except Exception:
-            prior = "false"
-        try:
-            self.spark.conf.set(_RF_ENABLED, "true")
-            table_paths = {t: self.catalog.path(t)
-                           for t in self.catalog.known_tables()}
-            return list(native_bloom_edges(self.spark.sql(query),
-                                           table_paths,
-                                           self._table_cols()) or ())
-        finally:
-            try:
-                # restore the observed pre-call value, not a literal:
-                # a call site outside the suppression window must not
-                # clobber a user-enabled conf (ADVICE r8)
-                self.spark.conf.set(_RF_ENABLED, prior)
-            except Exception:
-                pass
+        probe = _clone_session(s)
+        probe.conf.set(_RF_ENABLED, "true")
+        table_paths = {t: self.catalog.path(t)
+                       for t in self.catalog.known_tables()}
+        return list(native_bloom_edges(probe.sql(query), table_paths,
+                                       self._table_cols()) or ())
 
-    def _orig_bloom_edges(self, query: str, cfg: RPTConfig) -> frozenset:
+    def _orig_bloom_edges(self, s: SparkSession, query: str) -> frozenset:
         """Lowercased (probe_table, probe_col, build_table) edges of the
         native runtime blooms Spark would plant in the ORIGINAL
         statement — the cession arbitration's coverage evidence.
@@ -400,24 +399,26 @@ class Engine:
         pass (~0.2-0.5 s) per novel statement, cached like the
         gate-2e/dual evidence."""
         ek = (getattr(self, "_stmt_ck", None) or query, self._rf_confs())
-        if ek in _ORIG_RF_CACHE:
-            return _ORIG_RF_CACHE[ek]
+        hit = _ORIG_RF_CACHE.get(ek, _MISS)
+        if hit is not _MISS:
+            return hit
         try:
             edges = frozenset(
                 (b["probe_table"].lower(), b["probe_col"].lower(),
                  b["build_table"].lower())
-                for b in self._native_blooms(query)
+                for b in self._native_blooms(s, query)
                 if None not in (b["probe_table"], b["probe_col"],
                                 b["build_table"]))
         except Exception:
             edges = frozenset()
         return _memo_put(_ORIG_RF_CACHE, ek, edges)
 
-    def _cede_verdict(self, query: str, cfg: RPTConfig, plan, dfs: dict,
-                      rows_est: dict, filtered: set,
-                      evidence: dict) -> "tuple[bool, bool]":
-        """(cede, ride_off): should this query DISENGAGE and hand its
-        edges to native runtime blooms (config.cede_covered_edges)?
+    def _cede_verdict(self, s: SparkSession, query: str, cfg: RPTConfig,
+                      plan, dfs: dict, rows_est: dict, filtered: set,
+                      evidence: dict) -> "str | None":
+        """Should this query DISENGAGE and hand its edges to native
+        runtime blooms (config.cede_covered_edges)? None = no; else the
+        final run's mode, "native" or "off".
 
         Runs inside reduce() after scheduling but BEFORE any eager job
         — the whole point is not to sink the jobs the cession avoids.
@@ -428,15 +429,10 @@ class Engine:
         or the uncovered candidates' probe mass is within
         cede_extra_probe_frac of the query's largest relation — the
         host then expresses (almost) everything our eager ops would,
-        lazily. ride_off additionally keeps native suppressed when the
-        shape-prior probe mass is under cede_suppress_max_probe_rows
-        (the jq1 floor: the off plan's pushed filters already leave
-        nothing worth blooming)."""
-        if not (cfg.suppress_native_rf and cfg.compose_subtree_rf
-                and cfg.cede_covered_edges):
-            return False, False
-        if getattr(self.spark, "_drpt_rf_stash", None) != "true":
-            return False, False
+        lazily. "off" keeps native suppressed too when the shape-prior
+        probe mass is under cede_suppress_max_probe_rows (the jq1 floor:
+        the off plan's pushed filters already leave nothing worth
+        blooming)."""
         # verdict cache (_CEDE_CACHE): every input below is a
         # deterministic function of (statement, planner confs, footer
         # stats, config) — skip the per-call dry run on repeats
@@ -448,21 +444,22 @@ class Engine:
             vk = (getattr(self, "_stmt_ck", None) or query,
                   self._rf_confs(), frozenset(rows_base.items()),
                   frozenset(filtered or ()), repr(cfg))
-            if vk in _CEDE_CACHE:
-                return _CEDE_CACHE[vk]
+            hit = _CEDE_CACHE.get(vk, _MISS)
+            if hit is not _MISS:
+                return hit
         except TypeError:
             vk = None  # unhashable component: fall through uncached
-        res = self._cede_verdict_uncached(query, cfg, plan, dfs,
+        res = self._cede_verdict_uncached(s, query, cfg, plan, dfs,
                                           rows_est, filtered, evidence)
         return res if vk is None else _memo_put(_CEDE_CACHE, vk, res)
 
-    def _cede_verdict_uncached(self, query, cfg, plan, dfs, rows_est,
+    def _cede_verdict_uncached(self, s, query, cfg, plan, dfs, rows_est,
                                filtered, evidence):
         cand = [d.op for d in dry_run(dfs, rows_est, filtered, plan, cfg,
                                       **evidence)
                 if d.tier in KEY_TIERS]
         if not cand:
-            return False, False
+            return None
         rows_base = evidence.get("rows_base") or {}
         alias_t = getattr(self, "_last_alias_tables", {})
         # correlated-subquery virtual nodes: their reduction reaches
@@ -470,13 +467,13 @@ class Engine:
         # host bloom can express (TPC-H Q17's 2.5x); never cede
         if any(str(a).startswith("__sub")
                for op in cand for a in (op.build, op.probe)):
-            return False, False
-        covered = self._orig_bloom_edges(query, cfg)
+            return None
+        covered = self._orig_bloom_edges(s, query)
         if not covered:
-            return False, False
+            return None
         maxrows = max((r for r in rows_base.values() if r), default=0.0)
         if maxrows <= 0:
-            return False, False
+            return None
         extra = 0.0
         for op in cand:
             pt = str(alias_t.get(op.probe, op.probe)).lower()
@@ -487,7 +484,7 @@ class Engine:
             pr = rows_base.get(op.probe) or float("inf")
             extra = max(extra, pr)
         if extra > cfg.cede_extra_probe_frac * maxrows:
-            return False, False
+            return None
         ride_off = False
         if cfg.cede_suppress_max_probe_rows > 0:
             alias_filters = getattr(self, "_last_alias_filters", {})
@@ -502,7 +499,7 @@ class Engine:
                         pri *= 0.2
                 mass = max(mass, base * max(pri, 0.02))
             ride_off = mass <= cfg.cede_suppress_max_probe_rows
-        return True, ride_off
+        return "off" if ride_off else "native"
 
     def _table_cols(self) -> dict:
         """table -> lowercase column-name set for every known table,
@@ -524,7 +521,7 @@ class Engine:
             # part.parquet) — reading a missing one raised out of
             # _table_cols and silently disabled the arbitration for
             # EVERY query on that fixture (r9 in-round regression:
-            # composed_dual_rf all-False at 100M)
+            # no query at 100M ever got the per-query dual)
             try:
                 cache[t] = {c.lower()
                             for c in self.catalog.table(t).columns}
@@ -533,35 +530,16 @@ class Engine:
         self.catalog._drpt_table_cols = (names, cache)
         return cache
 
-    def _sync_native_rf(self, engaged: bool) -> None:
-        """One mechanism per edge (config.suppress_native_rf): disable
-        Spark's runtime bloom injection while a rewritten query is the
-        latest planned one; restore the session's value when a query
-        runs un-rewritten. Only called on the enabled-rewrite path, so
-        benchmark legs that drive the conf directly (rpt/native/off
-        ablations re-assert it before every leg) are never fought.
-
-        The stashed conf value lives ON the SparkSession object (not on
-        this Engine): the workload layer builds a fresh Engine per query
-        (workload/common.py), so instance state would die between the
-        engaged query that suppressed injection and the later
-        un-engaged query that must restore it (ADVICE r5)."""
-        try:
-            if engaged:
-                cur = self.spark.conf.get(_RF_ENABLED, "false")
-                if cur == "true":
-                    self.spark._drpt_rf_stash = cur
-                    self.spark.conf.set(_RF_ENABLED, "false")
-            else:
-                stash = getattr(self.spark, "_drpt_rf_stash", None)
-                if stash is not None:
-                    self.spark.conf.set(_RF_ENABLED, stash)
-                    self.spark._drpt_rf_stash = None
-        except Exception:
-            pass
-
-    def _auto_transfer_sql(self, query: str, df: DataFrame,
-                           cfg: RPTConfig) -> "DataFrame | None":
+    def _auto_transfer_sql(self, query: str, s: SparkSession,
+                           df: DataFrame, cfg: RPTConfig, rf_live: bool
+                           ) -> "tuple[DataFrame | None, bool]":
+        """(rewritten DataFrame or None for a bail, rf_off) for ``query``
+        in its statement session ``s`` (``df`` = ``s.sql(query)``).
+        ``rf_off``: the final run keeps native bloom injection off —
+        an engaged query whose rewritten plan leaves no native bloom
+        uncovered, a duplication bail, a cession riding off. Only read
+        when ``rf_live`` (suppression on and the caller's injection
+        on)."""
         import os
 
         from .plans.extract import extract_join_graph
@@ -597,14 +575,13 @@ class Engine:
         #: keys on the same statement+data fingerprint so a
         #: re-registered fixture cannot replay stale bloom evidence
         self._stmt_ck = ck
-        if ck in _EXT_CACHE:
-            ext = _EXT_CACHE[ck]
-        else:
+        ext = _EXT_CACHE.get(ck, _MISS)
+        if ext is _MISS:
             ext = extract_join_graph(df, known)
             if ext is not TRANSIENT_BAIL:
                 _memo_put(_EXT_CACHE, ck, ext)
         if ext is None or ext is TRANSIENT_BAIL:
-            return None
+            return None, False
         #: alias -> base table name, read by _uncovered_rf_evidence to
         #: compare native bloom edges with the applied ops' edges
         self._last_alias_tables = {a: i.table
@@ -621,15 +598,24 @@ class Engine:
         # dominant cost of repeated small JOB-regime queries after gate
         # 2d disengages them. Data changes invalidate via the mtime/size
         # fingerprints in ck; the config repr keys gate-relevant knobs.
-        # The key also carries whether native injection is live for
-        # this leg (the suppression stash): the cession arbitration's
-        # bail depends on it, and one cfg serves both the rpt leg
-        # (injection off — must engage) and the composed leg (injection
-        # on — may cede); sharing their entries would replay one leg's
-        # verdict into the other.
-        rf_live = getattr(self.spark, "_drpt_rf_stash", None) == "true"
+        # The key also carries rf_live: the cession arbitration's bail
+        # depends on it, and one cfg serves both the rpt leg (injection
+        # off — must engage) and the composed leg (injection on — may
+        # cede); sharing their entries would replay one leg's verdict
+        # into the other.
         bk = (ck, repr(cfg), rf_live)
-        if _BAIL_CACHE.get(bk):
+
+        def bail(verdict):
+            """The bail return for ``verdict``: True (plain), "dup"
+            (duplication economics) or a cession mode ("native" /
+            "off", replayed into the observability fields)."""
+            if verdict in ("native", "off"):
+                self.last_cede = True
+                self.spark._drpt_last_cede = verdict
+            return None, verdict in ("dup", "off")
+
+        cached = _BAIL_CACHE.get(bk)
+        if cached:
             # a bail-cache hit returns before reduce() runs, so the
             # PREVIOUS engaged query's persists (stashed on the session)
             # must be released here too, or repeated cached-bail
@@ -638,23 +624,7 @@ class Engine:
             if prev is not None:
                 prev.release()
                 self.spark._drpt_prev_result = None
-            # replay the composed arbitration the first run decided
-            cached = _BAIL_CACHE.get(bk)
-            if cached == "dup":
-                self._keep_rf_suppressed = True
-            elif cached == "cede":
-                self.last_cede = True  # plain bail path restores RF
-            elif cached == "cede_off":
-                self.last_cede = True
-                self._cede_ride_off = True
-                self._keep_rf_suppressed = True
-            if cached in ("cede", "cede_off"):
-                try:
-                    self.spark._drpt_last_cede = (
-                        "off" if cached == "cede_off" else "native")
-                except Exception:
-                    pass
-            return None
+            return bail(cached)
         # correlated-scalar-subquery (DELIM) edges: the reference walks
         # LOGICAL_DELIM_JOIN as an edge source (rpt_optimizer.cpp:49-50)
         # so its transfer reaches the scan inside Q17-style correlated
@@ -673,7 +643,7 @@ class Engine:
                 # one virtual node per subquery occurrence; one edge per
                 # outer instance it correlates with
                 valias = f"__sub{vi}_{gi}_{t}"
-                virt_rels[valias] = Rel(t)
+                virt_rels[valias] = Rel(t, df=_bind(self.table(t), s))
                 by_outer: dict = {}
                 for inner_col, oalias, ocol in group:
                     by_outer.setdefault(oalias, []).append(
@@ -694,17 +664,19 @@ class Engine:
                          tuple(p[0] for p in pairs),
                          "left"))
         if len(ext.edges) + len(virt_edges) <= 1:
-            return None
+            return None, False
         # at least one relation must be substitutable (single-occurrence
         # table) for the rewrite to have any effect — e.g. a pure
         # self-join offers nothing to shadow
         if not any(ext.occurrences(i.table) == 1 and not i.protected
                    for i in ext.instances.values()):
-            return None
+            return None, False
 
+        # relations bound to ``s`` (here and for the virtual nodes), so
+        # the eager jobs built on them run under the statement's conf
         rels: dict = {}
         for alias, inst in ext.instances.items():
-            d = self.table(inst.table).alias(alias)
+            d = _bind(self.table(inst.table), s).alias(alias)
             if inst.table in shared_tables:
                 # a local filter baked into a shared-subquery table's
                 # shadow would leak into the subquery's own scan and
@@ -746,11 +718,14 @@ class Engine:
             except Exception:
                 thresh = ""
             pk = (ck, thresh)
-            if pk in _PREFILTER_CACHE:
-                host_pre = _PREFILTER_CACHE[pk]
-            else:
-                host_pre = _memo_put(_PREFILTER_CACHE, pk,
-                                     scan_prefilter_pairs(df, alias_paths))
+            host_pre = _PREFILTER_CACHE.get(pk, _MISS)
+            if host_pre is _MISS:
+                # planned through a rebound frame: fixing ``df``'s own
+                # plan now would pin it to the planning-time injection
+                # value, and a bail returns ``df``
+                host_pre = _memo_put(
+                    _PREFILTER_CACHE, pk,
+                    scan_prefilter_pairs(_bind(df, s), alias_paths))
             if host_pre:
                 excl = ({v[0] for v in virt_edges}
                         | set(virt_rels)
@@ -761,39 +736,35 @@ class Engine:
         # reduce() releases the previous query's persists at entry; nulling
         # last_result here instead would leak them for the life of the
         # session (CacheManager plan pollution — see reduce()'s docstring)
+        ceded: list = []
+
         def _cede(plan, dfs_, rows_est_, filtered_, evidence):
-            v, off = self._cede_verdict(query, cfg, plan, dfs_,
-                                        rows_est_, filtered_, evidence)
-            self._cede_ride_off = off
-            return v
+            ceded.append(self._cede_verdict(s, query, cfg, plan, dfs_,
+                                            rows_est_, filtered_,
+                                            evidence))
+            return ceded[-1] is not None
 
         red = self.reduce(rels, list(ext.edges) + virt_edges, cfg,
                           opaque=getattr(ext, "opaque", None),
                           host_prefiltered=host_pre,
-                          cede_check=_cede)
-        if getattr(self, "last_cede", False):
+                          cede_check=(_cede if rf_live
+                                      and cfg.compose_subtree_rf
+                                      and cfg.cede_covered_edges
+                                      else None))
+        if self.last_cede:
             # cession (config.cede_covered_edges): the host's lazy
-            # blooms cover everything the ops would do — disengage.
-            # Plain return restores injection (ride native) unless the
-            # floor said the off plan is already minimal (ride off).
-            if self._cede_ride_off:
-                self._keep_rf_suppressed = True
-            try:
-                self.spark._drpt_last_cede = (
-                    "off" if self._cede_ride_off else "native")
-            except Exception:
-                pass
-            _memo_put(_BAIL_CACHE, bk,
-                      "cede_off" if self._cede_ride_off else "cede", 512)
-            return None
+            # blooms cover everything the ops would do — disengage,
+            # riding native unless the floor said the off plan is
+            # already minimal (ride off)
+            return bail(_memo_put(_BAIL_CACHE, bk, ceded[-1], 512))
         if self.last_result is None:
-            _memo_put(_BAIL_CACHE, bk, True, 512)
-            return None  # planner bailed (gates / <=1 edge)
+            # planner bailed (gates / <=1 edge)
+            return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
 
-        # shadow each single-occurrence table whose relation the rewrite
-        # actually reduced, re-analyze the same SQL against the shadows,
-        # then restore the original views (analysis is eager, so the
-        # returned DataFrame keeps the reduced plan). A shadow the
+        # shadow, in ``s``, each single-occurrence table whose relation
+        # the rewrite actually reduced and re-analyze the same SQL
+        # against the shadows; the caller's views are never touched. A
+        # shadow the
         # transfer measured as small carries an explicit broadcast hint
         # — the view keeps the hint through re-analysis, giving the SQL
         # path the same host-size feedback as join_all (a filtered dim's
@@ -831,58 +802,57 @@ class Engine:
             return True
 
         shadowed = False
-        try:
-            for alias, inst in ext.instances.items():
-                if (ext.occurrences(inst.table) == 1
-                        and red[alias] is not rels[alias].df):
-                    if (inst.table in shared_tables
-                            and not _shared_ops_ok(
-                                alias, shared_tables[inst.table])):
-                        continue
-                    shadow = red[alias]
-                    rows = self.last_rows_est.get(alias, 0.0)
-                    if (0.0 < rows <= self._host_broadcast_rows
-                            and all(self.last_rows_est.get(n, float("inf"))
-                                    >= rows for n in nbr.get(alias, ()))):
-                        shadow = F.broadcast(shadow)
-                    shadow.createOrReplaceTempView(inst.table)
-                    shadowed = True
-            if not shadowed:
-                # all ops gated away (e.g. gate 2d on an all-broadcast
-                # probe): deterministic for this statement+data+config,
-                # so repeats skip the planning path entirely. When the
-                # ONLY forward candidates lost died to the duplication
-                # gates (2d/2e — the host's broadcast joins already do
-                # the filtering), native runtime blooms would duplicate
-                # the same joins too: the composed arbitration keeps
-                # injection suppressed for this query (_keep_rf_
-                # suppressed). Shuffle-economics drops (gates 2/2b/2b3,
-                # incl. a refused sketch rescue) instead mean a shape
-                # we could NOT serve scan-locally — there native's
-                # subtree blooms stay welcome.
-                lr = self.last_result
-                dup_bail = (lr is not None and not lr.applied
-                            and lr.drops.get("dup", 0) > 0
-                            and not any(k in ("gate2", "gate2b",
-                                              "gate2b3", "gate2c",
-                                              "noop")
-                                        for k in lr.drops))
-                if dup_bail:
-                    self._keep_rf_suppressed = True
-                _memo_put(_BAIL_CACHE, bk, "dup" if dup_bail else True, 512)
-                return None
-            if (cfg.suppress_native_rf and cfg.compose_subtree_rf
-                    and "empty" not in self.last_result.applied_tiers):
-                # must run inside the shadow window: the evidence is
-                # the REWRITTEN plan's bloom edges (see the docstring).
-                # An empty-build cascade skips the pass outright: the
-                # short-circuit leaves ~nothing for native to filter,
-                # and the ~0.3 s planning pass was the whole composed
-                # overhead on JOB jq24 (0.91 s vs rpt 0.33 s)
-                self._dual_rf = self._uncovered_rf_evidence(query, cfg)
-            return self.spark.sql(query)
-        finally:
-            self.catalog.register_views()
+        for alias, inst in ext.instances.items():
+            if (ext.occurrences(inst.table) == 1
+                    and red[alias] is not rels[alias].df):
+                if (inst.table in shared_tables
+                        and not _shared_ops_ok(
+                            alias, shared_tables[inst.table])):
+                    continue
+                shadow = red[alias]
+                rows = self.last_rows_est.get(alias, 0.0)
+                if (0.0 < rows <= self._host_broadcast_rows
+                        and all(self.last_rows_est.get(n, float("inf"))
+                                >= rows for n in nbr.get(alias, ()))):
+                    shadow = F.broadcast(shadow)
+                shadow.createOrReplaceTempView(inst.table)
+                shadowed = True
+        if not shadowed:
+            # all ops gated away (e.g. gate 2d on an all-broadcast
+            # probe): deterministic for this statement+data+config, so
+            # repeats skip the planning path entirely. When the ONLY
+            # forward candidates lost died to the duplication gates
+            # (2d/2e — the host's broadcast joins already do the
+            # filtering), native runtime blooms would duplicate the
+            # same joins too: the composed arbitration keeps injection
+            # suppressed for this query ("dup"; JOB jq1: native 1.65 s
+            # vs off 0.95 s on exactly this shape, JOB_REGIME_r07).
+            # Shuffle-economics drops
+            # (gates 2/2b/2b3, incl. a refused sketch rescue) instead
+            # mean a shape we could NOT serve scan-locally — there
+            # native's subtree blooms stay welcome.
+            lr = self.last_result
+            dup_bail = (lr is not None and not lr.applied
+                        and lr.drops.get("dup", 0) > 0
+                        and not any(k in ("gate2", "gate2b", "gate2b3",
+                                          "gate2c", "noop")
+                                    for k in lr.drops))
+            return bail(_memo_put(_BAIL_CACHE, bk,
+                                  "dup" if dup_bail else True, 512))
+        # per-query dual (cfg.compose_subtree_rf): the REWRITTEN plan
+        # would carry >=1 native bloom on an edge the applied ops do
+        # NOT cover — selectivity the rewrite leaves on the table — so
+        # the final run gets the caller's injection back; the eager
+        # jobs above already ran suppressed. Evidence is read from the
+        # shadowed views (see _uncovered_rf_evidence). An empty-build
+        # cascade skips the pass outright: the short-circuit leaves
+        # ~nothing for native to filter, and the ~0.3 s planning pass
+        # was the whole composed overhead on JOB jq24 (0.91 s vs rpt
+        # 0.33 s)
+        dual = (rf_live and cfg.compose_subtree_rf
+                and "empty" not in self.last_result.applied_tiers
+                and self._uncovered_rf_evidence(s, query, cfg))
+        return s.sql(query), not dual
 
     # -- the rewrite ---------------------------------------------------
 
@@ -914,8 +884,8 @@ class Engine:
             self.last_result = None
         # cross-instance release: the workload layer builds a fresh
         # Engine per query, so the PREVIOUS query's persists can belong
-        # to an Engine this instance never saw — stashed on the session
-        # (the _rf_stash pattern, ADVICE r5). Without it a long-lived
+        # to an Engine this instance never saw — stashed on the caller's
+        # session (ADVICE r5). Without it a long-lived
         # session accumulates one query's persisted builds per
         # execution, and CacheManager substitution plus storage-memory
         # pressure make repeat timings bimodal (Q5 at x1000 measured

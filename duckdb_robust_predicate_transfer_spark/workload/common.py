@@ -97,16 +97,7 @@ _RF_CREATE_GATE = ("spark.sql.optimizer.runtime.bloomFilter."
 
 def set_native_rf(spark: SparkSession, on: bool) -> None:
     """Toggle Spark's native runtime bloom filters for a benchmark leg,
-    with thresholds that let them fire at local fixture sizes.
-
-    Asserting the conf also clears the engine's suppression stash
-    (Engine._sync_native_rf): the stash means "restore this value when
-    the next query runs un-engaged", and a leg that just asserted the
-    conf OWNS it — a stale stash left by an earlier leg's ENGAGED query
-    would otherwise be restored mid-leg by the first un-engaged query,
-    silently timing an rpt leg with native injection live (found r8:
-    un-engaged JOB rpt legs drifting toward their native-leg times;
-    regression: test_leg_assertion_clears_stale_suppression_stash)."""
+    with thresholds that let them fire at local fixture sizes."""
     if on:
         spark.conf.set(_RF_ENABLED, "true")
         spark.conf.set(_RF_APP_GATE, "64MB")
@@ -115,7 +106,6 @@ def set_native_rf(spark: SparkSession, on: bool) -> None:
         spark.conf.set(_RF_ENABLED, "false")
         spark.conf.unset(_RF_APP_GATE)
         spark.conf.unset(_RF_CREATE_GATE)
-    spark._drpt_rf_stash = None
 
 
 def count_native_blooms(df) -> int:

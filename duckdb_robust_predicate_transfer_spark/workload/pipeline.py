@@ -779,14 +779,17 @@ def _footer_ts_us(path: str) -> "tuple[int, int] | None":
     whole events table once for three scalars). Returns None when any
     row group lacks statistics — callers fall back to the original agg
     job. Handles both fixture flavors: MICROS-NTZ (datetime stats) and
-    NANOS (integer-nanosecond or Timestamp stats). The values feed only
+    NANOS (integer-nanosecond or Timestamp stats). An integer statistic
+    counts as nanoseconds only when the footer declares
+    TIMESTAMP(NANOS) (catalog.parquet_ts_unit); any other integer
+    flavor (plain INT64) returns None. The values feed only
     output-invariant decisions (ts-range cut points, the far-future
     sentinel, state-bucket sizing), but footer min/max are exact anyway.
     """
     import calendar
     import datetime as _dt
 
-    from ..catalog import parquet_col_range
+    from ..catalog import parquet_col_range, parquet_ts_unit
 
     rng = parquet_col_range(path, "ts")
     if rng is None:
@@ -797,6 +800,8 @@ def _footer_ts_us(path: str) -> "tuple[int, int] | None":
             return (calendar.timegm(v.utctimetuple()) * 1_000_000
                     + v.microsecond)
         if isinstance(v, int):
+            if parquet_ts_unit(path) != "ns":
+                raise TypeError("integer ts statistic of unknown unit")
             return v // 1000  # NANOS flavor: int64 nanoseconds
         value = getattr(v, "value", None)  # pandas Timestamp: ns int
         if value is not None:

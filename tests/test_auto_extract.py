@@ -484,8 +484,9 @@ def test_delim_virtual_edge_never_reduces_outer(spark, sf_dir):
 
 def test_engaged_rewrite_suppresses_native_blooms(eng, spark, sf_dir):
     """config.suppress_native_rf: one mechanism per edge — an engaged
-    rewrite turns Spark's own bloom injection off for that query; the
-    next un-rewritten query restores the session value."""
+    rewrite turns Spark's own bloom injection off for that query (in
+    the returned DataFrame's session); the next un-rewritten query runs
+    with the caller's value, which the engine never changes."""
     from duckdb_robust_predicate_transfer_spark.workload.common import (
         count_native_blooms)
 
@@ -496,22 +497,23 @@ def test_engaged_rewrite_suppresses_native_blooms(eng, spark, sf_dir):
         forced = Engine(spark, sf_dir, FORCE)
         df = forced.sql(FLAGSHIP_SQL)
         assert forced.last_sql_rewritten
-        assert spark.conf.get(key) == "false"
+        assert df.sparkSession.conf.get(key) == "false"
+        assert spark.conf.get(key) == "true"
         assert count_native_blooms(df) == 0
-        forced.sql("SELECT COUNT(*) AS c FROM nation")
+        plain = forced.sql("SELECT COUNT(*) AS c FROM nation")
         assert not forced.last_sql_rewritten
+        assert plain.sparkSession.conf.get(key) == "true"
         assert spark.conf.get(key) == "true"
     finally:
         spark.conf.set(key, prev)
 
 
 def test_native_rf_restore_across_engine_instances(spark, sf_dir):
-    """The suppression stash is SESSION-scoped, not Engine-scoped: the
-    workload layer builds a fresh Engine per query, so an engaged query
-    on one instance must have its conf restore fire on the next
-    un-engaged query even when that runs through a DIFFERENT instance
-    (ADVICE r5 — instance state silently left native blooms disabled
-    for the rest of the session)."""
+    """The workload layer builds a fresh Engine per query: an engaged
+    query on one instance must not leave native blooms disabled for a
+    later un-engaged query on a DIFFERENT instance (ADVICE r5). Each
+    statement's value lives in its own cloned session, so the caller's
+    conf is never changed and the later query runs with it."""
     key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
     prev = spark.conf.get(key, "false")
     spark.conf.set(key, "true")
@@ -519,12 +521,12 @@ def test_native_rf_restore_across_engine_instances(spark, sf_dir):
         forced = Engine(spark, sf_dir, FORCE)
         forced.sql(FLAGSHIP_SQL)
         assert forced.last_sql_rewritten
-        assert spark.conf.get(key) == "false"
-        # fresh instance, un-engaged query: restore must still fire
-        other = Engine(spark, sf_dir, FORCE)
-        other.sql("SELECT COUNT(*) AS c FROM nation")
-        assert not other.last_sql_rewritten
         assert spark.conf.get(key) == "true"
+        # fresh instance, un-engaged query: runs with the caller's value
+        other = Engine(spark, sf_dir, FORCE)
+        plain = other.sql("SELECT COUNT(*) AS c FROM nation")
+        assert not other.last_sql_rewritten
+        assert plain.sparkSession.conf.get(key) == "true"
     finally:
         spark.conf.set(key, prev)
 

@@ -296,3 +296,93 @@ def test_broadcast_tier_bypasses_probe_size_gate(spark, sf_dir):
     executed = {(s.op.build, s.op.probe) for s in e.last_result.stats}
     assert ("rg", "n") in executed, executed
     assert ("n", "c") in executed, executed
+
+
+def test_concurrent_sql_on_one_session(spark, sf_dir):
+    """Two threads run Engine.sql on one SparkSession at once: an
+    engaged query that shadows ``orders`` and another query over
+    ``orders``. Each statement shadows views only in its own cloned
+    session, so both return their rewrite-off results every round."""
+    import threading
+
+    engaged_sql = """
+        SELECT o_orderpriority, COUNT(*) AS n, SUM(l_quantity) AS q
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        WHERE c_mktsegment = 'BUILDING'
+        GROUP BY o_orderpriority
+    """
+    other_sql = """
+        SELECT o_orderpriority, COUNT(*) AS n
+        FROM orders GROUP BY o_orderpriority
+    """
+    cfg = RPTConfig(**FORCE)
+    off = RPTConfig(enabled=False)
+    want = {q: _collect_set(Engine(spark, sf_dir, off).sql(q))
+            for q in (engaged_sql, other_sql)}
+    e = Engine(spark, sf_dir, cfg)
+    e.sql(engaged_sql)
+    assert e.last_sql_rewritten
+    assert any(op.probe == "orders" for op in e.last_result.applied), \
+        "premise: the engaged query shadows orders"
+
+    rounds = 4
+    barrier = threading.Barrier(2)
+    got: dict = {q: [] for q in want}
+    errors: list = []
+
+    def run(q):
+        try:
+            for _ in range(rounds):
+                barrier.wait(timeout=300)
+                got[q].append(_collect_set(Engine(spark, sf_dir, cfg).sql(q)))
+        except Exception as exc:  # surfaced by the main thread
+            errors.append(exc)
+            barrier.abort()
+
+    threads = [threading.Thread(target=run, args=(q,)) for q in want]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(900)
+    assert not any(t.is_alive() for t in threads), "a statement hung"
+    assert not errors, errors
+    for q, results in got.items():
+        assert results == [want[q]] * rounds
+
+
+def test_memo_put_concurrent_eviction():
+    """The engine's statement memos are shared by every thread that runs
+    Engine.sql. Concurrent inserts at capacity must neither raise (two
+    evictions popping the same oldest key, or iterating a dict another
+    thread resizes) nor overfill the memo."""
+    import sys
+    import threading
+
+    from duckdb_robust_predicate_transfer_spark.engine import _memo_put
+
+    cache: dict = {}
+    cap, n_threads, per_thread = 8, 16, 3000
+    errors: list = []
+
+    def hammer(tid):
+        try:
+            for i in range(per_thread):
+                _memo_put(cache, (tid, i), i, cap)
+        except Exception as exc:  # surfaced by the main thread
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(t,))
+                   for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(cache) <= cap

@@ -14,7 +14,10 @@ baseline plan — zero ``might_contain`` anywhere. These tests pin:
    original bug: if this ever starts injecting, the lowered-threshold
    emulation in set_native_rf should be revisited);
 3. ``set_native_rf`` round-trips the session confs (benchmark legs must
-   not leak lowered gates into later legs).
+   not leak lowered gates into later legs);
+4. the engine's per-query arbitration lands on the DataFrame it
+   returns (bound to the statement's cloned session) and never on the
+   caller's session.
 """
 
 import pytest
@@ -86,8 +89,10 @@ def test_composed_arbitration_dup_bail_keeps_suppression(spark):
     all-broadcast-join shape where native runtime blooms duplicate the
     same joins — Engine.sql must keep injection suppressed for it even
     though the rewrite did not engage (JOB jq1/jq4/jq6). A query that
-    bails for any other reason must restore the session value (Q21's
-    self-join class, where native blooms reach shapes we skip)."""
+    bails for any other reason runs with the caller's value (Q21's
+    self-join class, where native blooms reach shapes we skip). The
+    verdict is read off each returned DataFrame's session; the
+    caller's conf never changes."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -109,17 +114,17 @@ def test_composed_arbitration_dup_bail_keeps_suppression(spark):
     try:
         for attempt in ("first", "bail-cache"):  # cached path must match
             e = Engine(spark, sf, cfg)
-            e.sql(dup_sql)
+            df = e.sql(dup_sql)
             assert not e.last_sql_rewritten
-            assert e._keep_rf_suppressed, attempt
-            assert spark.conf.get(_ENABLED) == "false", attempt
+            assert df.sparkSession.conf.get(_ENABLED) == "false", attempt
+            assert spark.conf.get(_ENABLED) == "true", attempt
             assert e.last_result is None or (
                 not e.last_result.applied
                 and e.last_result.drops.get("dup", 0) > 0)
-            # a non-dup bail restores the stashed session value
+            # a non-dup bail runs with the caller's value
             e2 = Engine(spark, sf, cfg)
-            e2.sql(one_edge_sql)
-            assert not e2._keep_rf_suppressed, attempt
+            df2 = e2.sql(one_edge_sql)
+            assert df2.sparkSession.conf.get(_ENABLED) == "true", attempt
             assert spark.conf.get(_ENABLED) == "true", attempt
     finally:
         spark.conf.set(_ENABLED, "false")
@@ -127,12 +132,12 @@ def test_composed_arbitration_dup_bail_keeps_suppression(spark):
 
 def test_leg_assertion_clears_stale_suppression_stash(spark):
     """Benchmark-leg integrity (r8): an ENGAGED query under composed
-    mode leaves the suppression stash ('restore true later') on the
-    session; when a later leg asserts injection OFF via set_native_rf,
-    that leg owns the conf — the first un-engaged query afterwards must
-    NOT restore the stale 'true' mid-leg (pre-fix, un-engaged rpt legs
-    timed with native injection live whenever any earlier composed leg
-    had engaged)."""
+    mode must not leave anything behind that a later leg inherits. When
+    a later leg asserts injection OFF via set_native_rf, that leg owns
+    the conf — the first un-engaged query afterwards must run with
+    injection off (r8 found un-engaged rpt legs timed with native
+    injection live whenever an earlier composed leg had engaged). The
+    engine never writes the caller's conf at all."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -152,21 +157,25 @@ def test_leg_assertion_clears_stale_suppression_stash(spark):
         SELECT COUNT(*) AS n
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     """
-    # composed leg: injection on; the engaged query stashes + suppresses
+    # composed leg: injection on; the engaged query runs suppressed
     set_native_rf(spark, True)
     try:
         e = Engine(spark, sf, cfg)
-        e.sql(star_sql)
+        star_df = e.sql(star_sql)
         assert e.last_sql_rewritten, "engagement premise broken"
-        assert spark.conf.get(_ENABLED) == "false"  # suppressed while engaged
+        assert star_df.sparkSession.conf.get(_ENABLED) == "false"
+        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
         # rpt leg: the harness asserts injection OFF (owns the conf)
         set_native_rf(spark, False)
-        # un-engaged query inside the rpt leg: must stay off
+        # un-engaged query inside the rpt leg: must run with it off
         e2 = Engine(spark, sf, cfg)
-        e2.sql(bail_sql)
+        bail_df = e2.sql(bail_sql)
         assert not e2.last_sql_rewritten
-        assert spark.conf.get(_ENABLED) == "false", \
-            "stale stash restored injection into an off-asserted leg"
+        assert spark.conf.get(_ENABLED) == "false", "caller conf changed"
+        assert bail_df.sparkSession.conf.get(_ENABLED) == "false", \
+            "un-engaged query runs with injection on in an off leg"
+        bail_df.collect()
+        assert count_native_blooms(bail_df) == 0
     finally:
         set_native_rf(spark, False)
 
@@ -237,14 +246,14 @@ def test_composed_dual_arbitration_by_bloom_coverage(spark):
         assert e.last_sql_rewritten
         ops = {(o.build, o.probe) for o in e.last_result.applied}
         assert ("customer", "orders") in ops, ops
-        assert spark.conf.get(_ENABLED) == "false"
+        assert covered_df.sparkSession.conf.get(_ENABLED) == "false"
+        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
         # the suppression must hold through EXECUTION, not just the
         # conf: a bloom-laden cached plan running under nominal
         # suppression would silently defeat the arbitration
         covered_df.collect()
         assert count_native_blooms(covered_df) == 0, \
             "covered leg executed with native blooms under suppression"
-        spark.conf.set(_ENABLED, "true")  # next leg re-asserts
 
         # uncovered: gate 2c (bf_benefit_probe_ratio) suppresses the
         # orders->lineitem key set (orders' ~700 filtered keys sit above
@@ -264,7 +273,7 @@ def test_composed_dual_arbitration_by_bloom_coverage(spark):
         ops2 = {(o.build, o.probe) for o in e2.last_result.applied}
         assert ("orders", "lineitem") not in ops2, ops2
         assert ("customer", "orders") in ops2, ops2
-        assert spark.conf.get(_ENABLED) == "true", \
+        assert dual_df.sparkSession.conf.get(_ENABLED) == "true", \
             "uncovered native bloom must flip the engaged query to dual"
         # ...and the restored injection must reach the EXECUTED plan
         # (the optimized-plan-caching failure mode the engine docstring
@@ -287,7 +296,8 @@ def test_cession_arbitration(spark):
     riding native when the shape-prior probe mass is real, riding OFF
     (suppression kept) when the off plan's pushed filters already
     leave nothing worth blooming (the jq1 floor). A query whose
-    candidates reach beyond the blooms stays engaged."""
+    candidates reach beyond the blooms stays engaged. The ride mode is
+    read off the returned DataFrame's session."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -320,29 +330,28 @@ def test_cession_arbitration(spark):
     try:
         # floor: sf0.001 probe masses are tiny -> cede AND ride off
         e = Engine(spark, sf, RPTConfig(**base))
-        e.sql(covered_sql)
-        assert e.last_cede and e._cede_ride_off, \
-            (e.last_cede, e._cede_ride_off)
+        df = e.sql(covered_sql)
+        assert e.last_cede
         assert not e.last_sql_rewritten
-        assert spark.conf.get(_ENABLED) == "false", "floor must ride off"
-        spark.conf.set(_ENABLED, "true")
+        assert df.sparkSession.conf.get(_ENABLED) == "false", \
+            "floor must ride off"
+        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
 
         # floor disabled -> cede and ride native (injection restored);
         # exercise the bail-cache replay on the second pass
         for attempt in ("first", "cached"):
             e2 = Engine(spark, sf, RPTConfig(
                 **base, cede_suppress_max_probe_rows=0))
-            e2.sql(covered_sql)
-            assert e2.last_cede and not e2._cede_ride_off, attempt
+            df2 = e2.sql(covered_sql)
+            assert e2.last_cede, attempt
             assert not e2.last_sql_rewritten, attempt
-            assert spark.conf.get(_ENABLED) == "true", \
-                f"cession must restore injection ({attempt})"
+            assert df2.sparkSession.conf.get(_ENABLED) == "true", \
+                f"cession must ride native ({attempt})"
 
         # master switch off -> engaged as before
         e3 = Engine(spark, sf, RPTConfig(**base, cede_covered_edges=False))
         e3.sql(covered_sql)
         assert not e3.last_cede and e3.last_sql_rewritten
-        spark.conf.set(_ENABLED, "true")
 
         # uncovered reach -> no cession, engaged
         e4 = Engine(spark, sf, RPTConfig(**base))
@@ -351,6 +360,70 @@ def test_cession_arbitration(spark):
         assert e4.last_sql_rewritten
         ops = {(o.build, o.probe) for o in e4.last_result.applied}
         assert ("orders", "lineitem") in ops, ops
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        spark.conf.set(_ENABLED, "false")
+        spark.conf.unset(_APP)
+        spark.conf.unset(_CREATE)
+
+
+def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
+    """Per-query scope: plan A (engaged, injection suppressed for its
+    final run), then plan B (a bail, which runs with the caller's
+    injection), then execute A. A must execute bloom-free exactly as
+    when it runs alone: B's verdict must not reach A's plan. After
+    every statement the caller's conf and views are as they were."""
+    from duckdb_robust_predicate_transfer_spark.config import RPTConfig
+    from duckdb_robust_predicate_transfer_spark.engine import Engine
+
+    sf = sf_dir
+    chain_sql = """
+        SELECT COUNT(*) AS n
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        WHERE o_orderpriority = '1-URGENT' AND c_mktsegment = 'BUILDING'
+    """
+    one_edge_sql = """
+        SELECT COUNT(*) AS n
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE o_orderstatus = 'F'
+    """
+    cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
+                    skip_no_exchange_probe=False,
+                    skip_host_prefiltered_semi=False,
+                    require_selective_build=False,
+                    cede_covered_edges=False)
+    orders_rows = spark.read.parquet(f"{sf}/orders.parquet").count()
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(_ENABLED, "true")
+    spark.conf.set(_APP, "1")
+    spark.conf.set(_CREATE, "8GB")
+
+    def caller_untouched():
+        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
+        assert spark.table("orders").count() == orders_rows, \
+            "caller's orders view left shadowed"
+
+    try:
+        alone = Engine(spark, sf, cfg).sql(chain_sql)
+        want = alone.collect()
+        assert count_native_blooms(alone) == 0, "premise: A suppressed"
+
+        ea = Engine(spark, sf, cfg)
+        a_df = ea.sql(chain_sql)  # planned, not collected
+        assert ea.last_sql_rewritten
+        caller_untouched()
+        eb = Engine(spark, sf, cfg)
+        b_df = eb.sql(one_edge_sql)
+        assert not eb.last_sql_rewritten
+        assert b_df.sparkSession.conf.get(_ENABLED) == "true"
+        caller_untouched()
+
+        assert a_df.collect() == want
+        assert count_native_blooms(a_df) == 0, \
+            "a later statement's verdict reached A's plan"
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.conf.set(_ENABLED, "false")

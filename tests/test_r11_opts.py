@@ -151,6 +151,49 @@ def test_footer_ts_range_none_without_stats(tmp_path):
     assert _footer_ts_us(p) is None
 
 
+def test_footer_ts_range_plain_int64_falls_back(tmp_path):
+    """An integer ts statistic is read as nanoseconds only under a
+    TIMESTAMP(NANOS) footer: a plain INT64 column (here holding micros)
+    must fall back to the agg job instead of coming back 1000x small."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_robust_predicate_transfer_spark.workload.pipeline import (
+        _footer_ts_us)
+
+    us = [1_700_000_000_000_000, 1_700_000_060_000_000]
+    p = str(tmp_path / "int64.parquet")
+    pq.write_table(pa.table({"ts": pa.array(us, type=pa.int64())}), p)
+    assert _footer_ts_us(p) is None
+    # the declared-unit flavors still read from the footer
+    for unit, scale in (("ns", 1000), ("us", 1)):
+        q = str(tmp_path / f"{unit}.parquet")
+        pq.write_table(pa.table({"ts": pa.array(
+            [u * scale for u in us], type=pa.timestamp(unit))}), q)
+        assert _footer_ts_us(q) == (us[0], us[1]), unit
+
+
+def test_observation_delivered_on_parquet_write(spark, tmp_path):
+    """The stream prep (workload/pipeline.q_stream_sessionize) reads
+    its user count from an ``observe()`` riding the b0 parquet write.
+    Pin that Spark delivers observed metrics for a file write:
+    ``obs.get`` must return the row count (read on a side thread, so a
+    missing delivery fails here instead of blocking the suite)."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df = spark.range(1234).observe(obs, F.count(F.lit(1)).alias("n"))
+    df.write.mode("overwrite").parquet(str(tmp_path / "obs"))
+    got: list = []
+    t = threading.Thread(target=lambda: got.append(obs.get), daemon=True)
+    t.start()
+    t.join(60)
+    assert got, "observed metrics were not delivered by the write"
+    assert got[0]["n"] == 1234
+
+
 def test_cc_pairs_canonical_same_labels(spark):
     """4. pairs_canonical skips the edge-dedup exchange; labels must be
     identical to the default path on canonical (distinct, a<b) input."""

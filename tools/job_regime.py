@@ -46,6 +46,7 @@ NC = max(200, FACT // 200)      # companies
 NK = max(100, FACT // 700)      # keywords
 NP = max(500, FACT // 100)      # persons
 SHUFFLE = int(os.environ.get("DRPT_SHUFFLE_PARTITIONS", "64"))
+RF_ENABLED = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
 os.environ.setdefault("DRPT_DRIVER_MEM", "16g")
 
@@ -813,16 +814,18 @@ def main() -> int:
     arb_suppressed: dict = {}
     for name, sql in QUERIES.items():
         e = Engine(spark, OUT_DIR)
-        got = _canon(tuple(r) for r in e.sql(sql).collect())
+        df = e.sql(sql)
+        got = _canon(tuple(r) for r in df.collect())
         engaged[name] = bool(e.last_sql_rewritten)
         lr = e.last_result
         ops_inv[name] = ([f"{op.phase[0]}:{op.build}->{op.probe}[{t}]"
                           for op, t in zip(lr.applied, lr.applied_tiers)]
                          if lr is not None else [])
         # composed arbitration verdict for UN-engaged queries: True =
-        # the dup-bail evidence keeps native injection suppressed
-        arb_suppressed[name] = bool(getattr(e, "_keep_rf_suppressed",
-                                            False))
+        # the bail kept native injection suppressed (dup evidence or a
+        # cession riding off), read off the returned DataFrame's session
+        arb_suppressed[name] = (not engaged[name] and df.sparkSession.conf
+                                .get(RF_ENABLED) == "false")
         want = _canon(con.sql(sql).fetchall())
         oracle_ok[name] = (got == want)
         print(f"# oracle {name}: match={oracle_ok[name]} "
@@ -863,13 +866,15 @@ def main() -> int:
         try:
             t = time.time()
             e = Engine(spark, OUT_DIR, cfg)
-            e.sql(QUERIES[name], auto_rpt=cfg.enabled).collect()
+            df = e.sql(QUERIES[name], auto_rpt=cfg.enabled)
+            df.collect()
             if mode == "composed":
-                composed_dual[name] = bool(getattr(e, "_dual_rf", False))
-                composed_cede[name] = (
-                    ("off" if getattr(e, "_cede_ride_off", False)
-                     else "native")
-                    if getattr(e, "last_cede", False) else None)
+                # the final run's injection, off the returned
+                # DataFrame's session (the leg asserted it on)
+                rf_on = df.sparkSession.conf.get(RF_ENABLED) == "true"
+                composed_dual[name] = e.last_sql_rewritten and rf_on
+                composed_cede[name] = (("native" if rf_on else "off")
+                                       if e.last_cede else None)
             return time.time() - t
         finally:
             set_native_rf(spark, False)

@@ -33,17 +33,7 @@ cp /tmp/tpch_scale_oracle_x1000_*.log ORACLE_X1000_r08.log 2>/dev/null || true
 git add TPCH_SCALE_X1000_r08.json ORACLE_X1000_r08.log 2>/dev/null && \
   git commit -q -m "TPC-H x1000 r8 artifact: full 22, runs=3, in-run oracle, 24g driver" || true
 
-# 3. composed-vs-dual at x1000 (regime-boundary evidence; also the A/B
-#    proving the new arbitration does not regress the TPC-H regime)
-DRPT_TPCH_SCALE_DIR=/tmp/drpt_tpch_x1000 DRPT_TPCH_SCALE_REP=1000 \
-  DRPT_TPCH_SCALE_SHUFFLE=128 DRPT_IO_CODEC=zstd DRPT_DRIVER_MEM=24g \
-  python -u tools/dual_x1000.py --runs 2 --json DUAL_X1000_r08.json \
-  > /tmp/dual_x1000_r08.log 2>&1
-echo "DUAL rc=$?"
-git add DUAL_X1000_r08.json 2>/dev/null && \
-  git commit -q -m "Composed-vs-dual A/B at x1000" || true
-
-# 4. gate-2e ablation A/B at the same fixture
+# 3. gate-2e ablation A/B at the same fixture
 DRPT_TPCH_SCALE_DIR=/tmp/drpt_tpch_x1000 DRPT_TPCH_SCALE_REP=1000 \
   DRPT_TPCH_SCALE_SHUFFLE=128 DRPT_IO_CODEC=zstd DRPT_DRIVER_MEM=24g \
   python -u tools/gate2e_ab.py --runs 2 --json GATE2E_AB_r08.json \

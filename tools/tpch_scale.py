@@ -193,14 +193,10 @@ def main() -> int:
             set_native_rf(spark, on)
         else:
             # true production defaults (x1000+: the scan clears the
-            # 10GB gate on its own). Clearing the engine's suppression
-            # stash too: this leg owns the conf now (set_native_rf
-            # docstring — a stale stash from an earlier leg's engaged
-            # query must not be restored mid-leg)
+            # 10GB gate on its own)
             spark.conf.set(
                 "spark.sql.optimizer.runtime.bloomFilter.enabled",
                 "true" if on else "false")
-            spark._drpt_rf_stash = None
 
     def set_mode(mode: str) -> None:
         set_default_config(None if mode in ("rpt", "composed")
