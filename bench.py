@@ -154,7 +154,7 @@ def main():
         # geometric mean (>1 means the rewrite helped)
         from duckdb_robust_predicate_transfer_spark.config import RPTConfig
         from duckdb_robust_predicate_transfer_spark.workload.common import (
-            set_default_config)
+            rotated_min, timed_leg)
         rpt_queries = [q for q in ("q_star_join_rpt", "q_job_style_wide",
                                    "q_snowflake_agg", "q_cyclic_join_graph",
                                    "q_multi_col_join", "q_in_subquery_mark")
@@ -168,56 +168,37 @@ def main():
         # the rule actually fires at fixture sizes (set_native_rf), and
         # the leg order rotates per iteration so no mode always pays the
         # first-leg codegen/page-cache warmup.
-        from duckdb_robust_predicate_transfer_spark.workload.common import (
-            set_native_rf)
         with_native = os.environ.get("BENCH_NATIVE_RF", "1") != "0"
-        try:
-            speedup, native = {}, {}
-            for name in rpt_queries:
-                try:
-                    best = {"off": math.inf, "on": math.inf,
-                            "nat": math.inf}
+        modes = ["off", "on"] + (["nat"] if with_native else [])
+        off_cfg = RPTConfig(enabled=False)
 
-                    def abl_leg(mode: str) -> float:
-                        set_default_config(None if mode == "on"
-                                           else RPTConfig(enabled=False))
-                        set_native_rf(spark, mode == "nat")
-                        t0 = time.time()
-                        force(QUERIES[name](spark, sf_dir))
-                        dt = time.time() - t0
-                        set_native_rf(spark, False)
-                        set_default_config(None)
-                        return dt
+        def abl_leg(name: str, mode: str) -> float:
+            return timed_leg(spark,
+                             lambda: force(QUERIES[name](spark, sf_dir)),
+                             None if mode == "on" else off_cfg,
+                             mode == "nat")
 
-                    modes = ["off", "on"] + (["nat"] if with_native else [])
-                    for it in range(max(runs, 3)):
-                        rot = it % len(modes)
-                        for mode in modes[rot:] + modes[:rot]:
-                            best[mode] = min(best[mode], abl_leg(mode))
-                    times[name] = min(times[name], round(best["on"], 3))
-                    speedup[name] = round(
-                        best["off"] / max(best["on"], 1e-3), 3)
-                    if with_native:
-                        native[name] = round(best["nat"], 3)
-                except Exception as exc:  # noqa: BLE001
-                    _err_line(f"ablation:{name}", exc)
-                    set_native_rf(spark, False)
-                    set_default_config(None)
-                spark.catalog.clearCache()
-            if speedup:
-                extra["rpt_speedup"] = speedup
-                extra["rpt_speedup_geomean"] = round(math.exp(
-                    sum(math.log(max(s, 1e-3)) for s in speedup.values())
-                    / len(speedup)), 3)
-            if with_native and native:
-                extra["native_rf_sec"] = native
-                # >1: our transfer beats Catalyst's one-hop filters
-                extra["rpt_vs_native_geomean"] = round(math.exp(
-                    sum(math.log(max(native[q] / max(times[q], 1e-3), 1e-3))
-                        for q in native) / len(native)), 3)
-        finally:
-            set_native_rf(spark, False)
-            set_default_config(None)
+        speedup, native = {}, {}
+        for name in rpt_queries:
+            try:
+                best = rotated_min(max(runs, 3), [name], modes, abl_leg)[name]
+                times[name] = min(times[name], round(best["on"], 3))
+                speedup[name] = round(best["off"] / max(best["on"], 1e-3), 3)
+                if with_native:
+                    native[name] = round(best["nat"], 3)
+            except Exception as exc:  # noqa: BLE001
+                _err_line(f"ablation:{name}", exc)
+        if speedup:
+            extra["rpt_speedup"] = speedup
+            extra["rpt_speedup_geomean"] = round(math.exp(
+                sum(math.log(max(s, 1e-3)) for s in speedup.values())
+                / len(speedup)), 3)
+        if with_native and native:
+            extra["native_rf_sec"] = native
+            # >1: our transfer beats Catalyst's one-hop filters
+            extra["rpt_vs_native_geomean"] = round(math.exp(
+                sum(math.log(max(native[q] / max(times[q], 1e-3), 1e-3))
+                    for q in native) / len(native)), 3)
 
     try:
         _cascade_section(spark, runs, extra)
@@ -259,35 +240,12 @@ def _cascade_section(spark, runs: int, extra: dict) -> None:
         # (workload/cascade.py — the scale shape the sf0.1 star join
         # cannot produce because every dim there broadcasts). Same
         # interleaved min-of-N protocol as the ablation legs.
-        from duckdb_robust_predicate_transfer_spark.config import RPTConfig
         from duckdb_robust_predicate_transfer_spark.workload import cascade
-        from duckdb_robust_predicate_transfer_spark.workload.common import (
-            set_native_rf)
 
         fdir = cascade.ensure_fixture(spark)
-        off_cfg = RPTConfig(enabled=False)
-
-        def cascade_leg(cfg, rf: bool) -> float:
-            # native leg via set_native_rf: lowers the 10GB scan gate so
-            # InjectRuntimeFilter fires at fixture sizes
-            set_native_rf(spark, rf)
-            t0 = time.time()
-            force(cascade.run_cascade(spark, fdir, cfg))
-            dt = time.time() - t0
-            set_native_rf(spark, False)
-            # legs must not see each other's persisted build sides
-            spark.catalog.clearCache()
-            return dt
-
-        cascade_leg(off_cfg, False)  # untimed: page cache + codegen warmup
-        legs = [("off", off_cfg, False), ("rpt", None, False),
-                ("rpt_sketch", cascade.CASCADE_SKETCH_CONFIG, False),
-                ("native_rf", off_cfg, True)]
-        best = {k: math.inf for k, _, _ in legs}
-        for it in range(max(runs, 3)):
-            rot = it % len(legs)  # rotate: no leg always pays warmup
-            for key, cfg, rf in legs[rot:] + legs[:rot]:
-                best[key] = min(best[key], cascade_leg(cfg, rf))
+        best = cascade.time_legs(
+            spark, lambda cfg: force(cascade.run_cascade(spark, fdir, cfg)),
+            max(runs, 3))
         extra["cascade"] = {
             "fact_rows": cascade.FACT_ROWS,
             "mid_rows": cascade.MID_ROWS,

@@ -12,7 +12,7 @@ filter, and AQE broadcasts small ones automatically).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 
 @dataclass
@@ -49,7 +49,6 @@ class RPTConfig:
     #: build sides where a distinct key-set shuffle would be costly)
     use_sketch: bool = False
     sketch_threshold_rows: int = 4_000_000
-    sketch_fpp: float = 0.01
     #: auto-escalate to the sketch tier when the exact key set is too big
     #: to broadcast (est > broadcast_key_rows), replacing the shuffled
     #: semi join with a bitmap fused into the probe scan. Default OFF,
@@ -74,12 +73,6 @@ class RPTConfig:
     #: Stays default-off until escalation is priced by expected probe
     #: reduction, not build size alone.
     sketch_auto: bool = False
-    #: ...but only up to this many estimated build keys: the bitmap is
-    #: m = NextPow2(12 bits/key), so 64M keys -> 128 MB broadcast — about
-    #: the ceiling where shipping it to every executor still beats a
-    #: probe-wide shuffle. Beyond, the exact shuffle-tier semi join
-    #: remains the right tool (bloom.py module docstring).
-    sketch_max_keys: int = 64_000_000
     #: probe-side tier choice (r8): when the probe has at least this
     #: many estimated rows, a key-set op ships as a scan-fused Bloom
     #: BITMAP even though the build is broadcast-tier — the bitmap's
@@ -102,9 +95,6 @@ class RPTConfig:
     #: the unconditioned escalation reproduced the r5/r6 sketch A/Bs'
     #: Q7 loss at x1000 (6.3->19.0 s; in-round r8 regression, fixed).
     bloom_probe_min_rows: int = 8_000_000
-    #: skip transfer from build sides estimated larger than this unless they
-    #: carry a filter (bounded-downside gate; the Robust paper's point)
-    max_unfiltered_build_rows: int = 50_000_000
     #: skip the whole transfer when every relation except the largest is
     #: small enough to broadcast (estimated rows after local filters): the
     #: final join is then a chain of broadcast hash joins — ONE pass over
@@ -238,7 +228,7 @@ class RPTConfig:
     #:   downstream mass repays them (jq13: castinfo 100M vs
     #:   movie_company 25M; transitive value counts because the reduced
     #:   probe feeds later broadcast-tier hops).
-    #: - observed cardinality must stay within sketch_max_keys.
+    #: - observed cardinality must stay within rewrite.SKETCH_MAX_KEYS.
     #: - the PROBE keys must be string/binary-typed: the rescue's repay
     #:   is the probe join's per-row cost (string hashing + equality on
     #:   every surviving row), which the pre-exchange cut removes;
@@ -330,23 +320,6 @@ class RPTConfig:
     #: _minmax_filter), so only the agg job itself remains as overhead —
     #: filter_type='bf_only' removes that too for known-uniform keys
     minmax_min_probe_rows: int = 5_000_000
-    #: ...and only from builds whose BASE table (raw footer rows) is at
-    #: most this big: the eager agg re-derives the build's whole
-    #: reduction lineage, so its cost scales with the base scan, not
-    #: with the reduced key count (measured at TPCH_SCALE x100: 0.5-0.8s
-    #: per op on the 15M-row orders lineage for a predicate the footer
-    #: skip then drops). Small-base builds (dims, cascade mid) keep the
-    #: range transfer; huge fact-derived builds skip straight to the
-    #: key/sketch tier. 0 disables the bound.
-    minmax_max_build_base: int = 4_000_000
-    #: ...and only into probes whose parquet row groups are actually
-    #: range-clustered on the transfer key: footer stats give
-    #: avg(row-group span)/global span for free, and when every row
-    #: group spans ~the whole domain (hash layout) a pushed BETWEEN
-    #: cannot drop a single row group — the eager agg job would buy two
-    #: comparisons per row at best. Probes must score BELOW this.
-    #: Unknown layouts (no stats / non-numeric keys) pass. >=1 disables.
-    minmax_max_clustering: float = 0.5
     #: backward-pass ops only into probes at least this big: reducing a
     #: small table can't help (the final join already handles it cheaply);
     #: reducing a big one avoids a large shuffle/hash build. The forward
@@ -388,32 +361,13 @@ class RPTConfig:
     #: early-suppression fix (Engine.sql) removed its one interaction
     #: loss (Q22: eager build jobs used to run with injection live;
     #: EAGER_AB_r10 re-checked it at the 100M JOB regime: suppressed
-    #: eager jobs 1.043x faster than with injection live).
+    #: eager jobs 1.043x faster than with injection live). An engaged
+    #: query whose rewritten plan carries a native bloom on an edge no
+    #: applied op covers gets injection back for its final run (the
+    #: per-query dual, Engine._uncovered_rf_evidence).
     suppress_native_rf: bool = True
-    #: ...except when the HOST plan's own bloom evidence says native
-    #: carries selectivity the transfer left on the table: per-query
-    #: dual. Spark only ever builds a native bloom from a bare
-    #: selective-filter-over-scan (InjectRuntimeFilter's
-    #: extractSelectiveFilterOverScan), so every injected bloom is a
-    #: (probe_table, probe_col, build_table) edge directly comparable
-    #: to a transfer op's edge. When the REWRITTEN plan (replanned by
-    #: InjectRuntimeFilter against the reduced sizes) carries >=1 bloom
-    #: on an edge NO applied op covers — typically a hop the gates
-    #: refused because the exact-key build would shuffle a 100M-key
-    #: intermediate the reference reduces for free in shared memory
-    #: (rpt_optimizer.cpp:884-937) — the engine turns injection back on
-    #: for the final run: planning's eager jobs still run suppressed;
-    #: only the result plan gets the blooms. Measured at the 100M JOB
-    #: fixture: jq2's rewritten plan blooms keyword->movie_keyword (the
-    #: refused hop; dual leg 6.25->2.37 s), jq3/jq5/jq10 bloom
-    #: person->castinfo (20.5->10.0, 12.8->4.2, 11.2->4.8); while
-    #: fully-covered bloom sets (jq1's star — native's blooms duplicate
-    #: the transfer's own semis, dual 2.20 vs composed 1.54; jq13/jq18
-    #: likewise) keep suppression. Plan-shape evidence only, never
-    #: timing.
-    compose_subtree_rf: bool = True
-    #: per-query NATIVE CESSION (r10) — the mirror image of
-    #: compose_subtree_rf's uncovered-edge dual. That arbitration can
+    #: per-query NATIVE CESSION (r10) — the mirror image of the
+    #: per-query uncovered-edge dual. That arbitration can
     #: only ADD native blooms on edges no op covers; it cannot hand a
     #: covered-but-weaker edge to the host, which is exactly how the
     #: composed default lost to plain native on the v3 JOB regime
@@ -425,7 +379,7 @@ class RPTConfig:
     #: bloom — i.e. the host expresses the same per-edge filtering with
     #: LAZY, AQE-integrated bloom subqueries while our expression costs
     #: serialized eager jobs — and the reach we would uniquely add
-    #: beyond the host's blooms is small (see cede_extra_probe_frac),
+    #: beyond the host's blooms is small (engine.CEDE_EXTRA_PROBE_FRAC),
     #: DISENGAGE and ride native for this query. Queries whose ops
     #: reach tables native cannot (multi-hop transfer into unfiltered
     #: arms — jq15's movie_info, jq5's castinfo, every TPC-H cascade
@@ -433,14 +387,6 @@ class RPTConfig:
     #: --no-jfp discipline completed in both directions: one mechanism
     #: per edge, whichever is cheaper (test_job_queries.sh:123-138).
     cede_covered_edges: bool = True
-    #: ...the "uniquely added reach is small" bound: cede only when the
-    #: largest footer-row probe among UNCOVERED candidate ops is at most
-    #: this fraction of the query's largest relation. 0.15 separates
-    #: title-only extra reach (2.5M / 100M fact at the JOB regime) from
-    #: genuine unique value (jq15's movie_info 20M / 33M = 0.6, TPC-H's
-    #: lineitem cascades = 1.0). Relative, so it scales with fixture
-    #: size. 0 cedes only on full coverage.
-    cede_extra_probe_frac: float = 0.15
     #: query-level engagement floor (VERDICT r9 #3): when ceding, ride
     #: OFF (keep native suppressed too) instead of native if every
     #: candidate probe's predicate-shape-prior row estimate is at most
@@ -464,8 +410,6 @@ class RPTConfig:
     #: print the DAG derived from the host optimizer's join order as 2-D
     #: boxes (reference: rpt_display_physical_dag, dag_printer.cpp:13-180)
     display_physical_dag: bool = False
-    #: extra free-form knobs
-    extra: dict = field(default_factory=dict)
 
     def validate(self) -> "RPTConfig":
         assert self.pass_mode in ("both", "forward_only"), self.pass_mode

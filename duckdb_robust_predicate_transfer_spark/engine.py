@@ -91,8 +91,7 @@ _PREFILTER_CACHE: dict = {}
 
 #: (statement cache key, rf-threshold confs, config) -> bool: whether
 #: the REWRITTEN plan carries a native bloom on an edge no applied op
-#: covers (the compose_subtree_rf arbitration evidence) — one planning
-#: pass each
+#: covers (the per-query dual's evidence) — one planning pass each
 _DUAL_RF_CACHE: dict = {}
 
 #: (statement cache key, rf-threshold confs) -> frozenset of lowercased
@@ -113,6 +112,14 @@ _ORIG_RF_CACHE: dict = {}
 #: path+mtime+size-keyed footer cache: metadata keying, not result
 #: caching).
 _CEDE_CACHE: dict = {}
+
+#: the cession's "uniquely added reach is small" bound: cede only when
+#: the largest footer-row probe among UNCOVERED candidate ops is at most
+#: this fraction of the query's largest relation. 0.15 separates
+#: title-only extra reach (2.5M / 100M fact at the JOB regime) from
+#: genuine unique value (jq15's movie_info 20M / 33M = 0.6, TPC-H's
+#: lineitem cascades = 1.0). Relative, so it scales with fixture size.
+CEDE_EXTRA_PROBE_FRAC = 0.15
 
 
 #: guards every write to the module memos above and the session clone
@@ -280,9 +287,6 @@ class Engine:
         #: query to hand its covered edges to native runtime blooms
         #: (config.cede_covered_edges)
         self.last_cede = False
-        # session-stashed observability twin (workload functions
-        # construct Engines internally; harnesses read this)
-        self.spark._drpt_last_cede = None
         if not auto_rpt or not cfg.enabled or self.catalog is None:
             return self.spark.sql(query)
         s = _clone_session(self.spark)
@@ -311,6 +315,25 @@ class Engine:
         reduced DataFrames — call only from _auto_transfer_sql once it
         has shadowed them) would carry at least one native bloom on a
         (probe_table, probe_col, build_table) edge no applied op covers.
+
+        This is the per-query dual, the exception to
+        config.suppress_native_rf: native carries selectivity the
+        transfer left on the table. Spark only ever builds a native
+        bloom from a bare selective-filter-over-scan
+        (InjectRuntimeFilter's extractSelectiveFilterOverScan), so every
+        injected bloom is an edge directly comparable to a transfer op's
+        edge. An uncovered one is typically a hop the gates refused
+        because the exact-key build would shuffle a 100M-key
+        intermediate the reference reduces for free in shared memory
+        (rpt_optimizer.cpp:884-937). The engine then turns injection
+        back on for the final run only; planning's eager jobs still run
+        suppressed. Measured at the 100M JOB fixture: jq2's rewritten
+        plan blooms keyword->movie_keyword (the refused hop; dual leg
+        6.25->2.37 s), jq3/jq5/jq10 bloom person->castinfo (20.5->10.0,
+        12.8->4.2, 11.2->4.8); fully-covered bloom sets (jq1's star,
+        where native's blooms duplicate the transfer's own semis: dual
+        2.20 vs composed 1.54; jq13/jq18 likewise) keep suppression.
+        Plan-shape evidence only, never timing.
 
         Why the rewritten plan, not the original: InjectRuntimeFilter
         re-evaluates against the reduced sizes and fires on exactly the
@@ -427,7 +450,7 @@ class Engine:
         apply_transfer gets); coverage from the ORIGINAL plan's
         native bloom edges. Cede when every candidate edge is covered
         or the uncovered candidates' probe mass is within
-        cede_extra_probe_frac of the query's largest relation — the
+        CEDE_EXTRA_PROBE_FRAC of the query's largest relation — the
         host then expresses (almost) everything our eager ops would,
         lazily. "off" keeps native suppressed too when the shape-prior
         probe mass is under cede_suppress_max_probe_rows (the jq1 floor:
@@ -483,7 +506,7 @@ class Engine:
                 continue
             pr = rows_base.get(op.probe) or float("inf")
             extra = max(extra, pr)
-        if extra > cfg.cede_extra_probe_frac * maxrows:
+        if extra > CEDE_EXTRA_PROBE_FRAC * maxrows:
             return None
         ride_off = False
         if cfg.cede_suppress_max_probe_rows > 0:
@@ -611,7 +634,6 @@ class Engine:
             "off", replayed into the observability fields)."""
             if verdict in ("native", "off"):
                 self.last_cede = True
-                self.spark._drpt_last_cede = verdict
             return None, verdict in ("dup", "off")
 
         cached = _BAIL_CACHE.get(bk)
@@ -748,7 +770,6 @@ class Engine:
                           opaque=getattr(ext, "opaque", None),
                           host_prefiltered=host_pre,
                           cede_check=(_cede if rf_live
-                                      and cfg.compose_subtree_rf
                                       and cfg.cede_covered_edges
                                       else None))
         if self.last_cede:
@@ -839,7 +860,7 @@ class Engine:
                                     for k in lr.drops))
             return bail(_memo_put(_BAIL_CACHE, bk,
                                   "dup" if dup_bail else True, 512))
-        # per-query dual (cfg.compose_subtree_rf): the REWRITTEN plan
+        # per-query dual (_uncovered_rf_evidence): the REWRITTEN plan
         # would carry >=1 native bloom on an edge the applied ops do
         # NOT cover — selectivity the rewrite leaves on the table — so
         # the final run gets the caller's injection back; the eager
@@ -849,7 +870,7 @@ class Engine:
         # ~nothing for native to filter, and the ~0.3 s planning pass
         # was the whole composed overhead on JOB jq24 (0.91 s vs rpt
         # 0.33 s)
-        dual = (rf_live and cfg.compose_subtree_rf
+        dual = (rf_live
                 and "empty" not in self.last_result.applied_tiers
                 and self._uncovered_rf_evidence(s, query, cfg))
         return s.sql(query), not dual

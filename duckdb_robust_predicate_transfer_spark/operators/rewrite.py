@@ -55,6 +55,37 @@ _MINMAX_TYPES = (
 #: through CREATE_BF the same way, table_manager.cpp:64-69).
 REDUCTION_DECAY = 0.2
 
+#: the sketch tier ships builds of at most this many estimated keys: the
+#: bitmap is m = NextPow2(12 bits/key), so 64M keys -> 128 MB broadcast —
+#: about the ceiling where shipping it to every executor still beats a
+#: probe-wide shuffle. Beyond, the exact shuffle-tier semi join remains
+#: the right tool (bloom.py module docstring).
+SKETCH_MAX_KEYS = 64_000_000
+
+#: gate 1 skips transfer from build sides estimated larger than this
+#: unless they carry a filter (bounded-downside gate; the Robust paper's
+#: point)
+MAX_UNFILTERED_BUILD_ROWS = 50_000_000
+
+#: the min/max tier only builds from builds whose BASE table (raw footer
+#: rows) is at most this big: the eager agg re-derives the build's whole
+#: reduction lineage, so its cost scales with the base scan, not with
+#: the reduced key count (measured at TPCH_SCALE x100: 0.5-0.8s per op
+#: on the 15M-row orders lineage for a predicate the footer skip then
+#: drops). Small-base builds (dims, cascade mid) keep the range
+#: transfer; huge fact-derived builds skip straight to the key/sketch
+#: tier.
+MINMAX_MAX_BUILD_BASE = 4_000_000
+
+#: ...and only into probes whose parquet row groups are actually
+#: range-clustered on the transfer key: footer stats give avg(row-group
+#: span)/global span for free, and when every row group spans ~the whole
+#: domain (hash layout) a pushed BETWEEN cannot drop a single row group —
+#: the eager agg job would buy two comparisons per row at best. Probes
+#: must score BELOW this. Unknown layouts (no stats / non-numeric keys)
+#: pass.
+MINMAX_MAX_CLUSTERING = 0.5
+
 
 @dataclass
 class StepStat:
@@ -234,14 +265,11 @@ def _minmax_cols(build: DataFrame, op: TransferOp) -> list:
     return [c for c in op.build_cols if dtypes.get(c) in _MINMAX_TYPES]
 
 
-def _probe_clustered(probe_path: str | None, probe_cols,
-                     max_clustering: float) -> bool:
+def _probe_clustered(probe_path: str | None, probe_cols) -> bool:
     """Payoff-possibility check for the eager min/max agg: at least one
     probe key column's row groups must be range-clustered (footer-only,
     cached). Unknown layouts pass — absence of evidence must not turn
     the tier off for non-parquet probes."""
-    if max_clustering >= 1.0:
-        return True
     if probe_path is None:
         return True
     from ..catalog import parquet_col_clustering
@@ -255,7 +283,7 @@ def _probe_clustered(probe_path: str | None, probe_cols,
         if c is None:
             continue
         saw_any = True
-        if c < max_clustering:
+        if c < MINMAX_MAX_CLUSTERING:
             return True
     return not saw_any
 
@@ -348,12 +376,12 @@ def _sketch_tier(cfg, est: float) -> bool:
     TPCH_SCALE_X1000 Q3/Q8/Q9 downside, while the bitmap's membership
     test fuses into the probe scan (the reference's PTBloomFilter never
     shuffles the probe, physical_use_bf.cpp:128-190). Capped at
-    ``sketch_max_keys``: an unknown (inf) or huge estimate keeps the
+    ``SKETCH_MAX_KEYS``: an unknown (inf) or huge estimate keeps the
     exact tier."""
     if cfg.use_sketch and est > cfg.sketch_threshold_rows:
         return True
     return (cfg.sketch_auto and cfg.broadcast_key_rows < est
-            and est <= cfg.sketch_max_keys)
+            and est <= SKETCH_MAX_KEYS)
 
 
 class TransferState:
@@ -519,9 +547,9 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #    FK-orphan probe rows — skip unless allowed
     if (op.build not in s.filtered and op.build not in s.reduced
             and (cfg.require_selective_build
-                 or est > cfg.max_unfiltered_build_rows)):
+                 or est > MAX_UNFILTERED_BUILD_ROWS)):
         return drop("gate1", est, 0.0 if cfg.require_selective_build
-                    else cfg.max_unfiltered_build_rows)
+                    else MAX_UNFILTERED_BUILD_ROWS)
     # 2g. weak-build observation (config.weak_observe_max_base):
     #     a local filter's true selectivity is unproven — LIKE
     #     '%Pictures%' keeps 100% where the decay guess says 20% —
@@ -605,7 +633,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
             # an eager bloom over the root's lineage never pays)
             build_base = base or est
             ok = (cfg.sketch_rescue
-                  and est <= cfg.sketch_max_keys
+                  and est <= SKETCH_MAX_KEYS
                   # string/binary probe keys only — the rescue's
                   # repay is the probe join's PER-ROW cost (string
                   # hashing + equality on every surviving row),
@@ -663,8 +691,8 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
                 # bloom build (jq7's 50%-country company arm), and
                 # an over-large one is beyond the bitmap's
                 # broadcast ceiling
-                if est > cfg.sketch_max_keys:
-                    return drop("gate2b3", est, cfg.sketch_max_keys)
+                if est > SKETCH_MAX_KEYS:
+                    return drop("gate2b3", est, SKETCH_MAX_KEYS)
                 if (s.rows_base is not None and build_base > 0
                         and est >= cfg.max_build_keep_frac * build_base):
                     return drop("gate2b3", est,
@@ -869,11 +897,9 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
               or (cfg.filter_type == "all"
                   and probe_rows >= cfg.minmax_min_probe_rows
                   and est <= bkr
-                  and (cfg.minmax_max_build_base <= 0 or base <= 0
-                       or base <= cfg.minmax_max_build_base)
+                  and (base <= 0 or base <= MINMAX_MAX_BUILD_BASE)
                   and _probe_clustered(s.probe_paths.get(op.probe),
-                                       op.probe_cols,
-                                       cfg.minmax_max_clustering)))
+                                       op.probe_cols)))
     if supp or cfg.filter_type == "minmax_only":
         if not minmax:
             return drop(*supp)
@@ -1061,15 +1087,15 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
             n = s.note(op.build, float(bloom.n_rows))
             bb = (s.rows_base or {}).get(op.build, 0.0)
             if d.rescue and n > 0 and (
-                    n > cfg.sketch_max_keys
+                    n > SKETCH_MAX_KEYS
                     or (bb > 0 and n >= cfg.max_build_keep_frac * bb)):
                 # the observed build is too weak/big to probe with:
                 # the bitmap job is sunk (one scan, same as the
                 # observe-then-refuse path), the probe is withheld
                 res.decisions.append(Decision(
                     op, gate="gate2b3", value=n, observed=True,
-                    threshold=(cfg.sketch_max_keys
-                               if n > cfg.sketch_max_keys
+                    threshold=(SKETCH_MAX_KEYS
+                               if n > SKETCH_MAX_KEYS
                                else cfg.max_build_keep_frac * bb)))
                 res.stats.append(st)
                 continue

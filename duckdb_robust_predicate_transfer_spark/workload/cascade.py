@@ -34,10 +34,11 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import RPTConfig
+from ..config import BASELINE, RPTConfig
 from ..engine import Engine, Rel
 
 DEFAULT_DIR = os.environ.get("DRPT_CASCADE_DIR", "/tmp/drpt_cascade")
@@ -120,6 +121,38 @@ CASCADE_CONFIG = RPTConfig(pass_mode="forward_only")
 #: exercised and measured.
 CASCADE_SKETCH_CONFIG = CASCADE_CONFIG.with_(
     use_sketch=True, sketch_threshold_rows=500_000)
+
+
+#: the cascade leg set, leg name -> (config, native_rf): no transfer,
+#: the exact-key cascade, the bitmap mid -> fact hop, and Spark's native
+#: one-hop blooms (set_native_rf lowers the 10GB application-side scan
+#: gate so InjectRuntimeFilter fires at fixture sizes). Config None is
+#: the query's own default.
+LEGS = {"off": (BASELINE, False), "rpt": (None, False),
+        "rpt_sketch": (CASCADE_SKETCH_CONFIG, False),
+        "native_rf": (BASELINE, True)}
+
+
+def time_legs(spark: SparkSession, run, runs: int,
+              legs: dict = LEGS) -> dict:
+    """The cascade harnesses' leg timing (bench.py, cascade2.main,
+    tools/cascade_big.py): ``run(config)`` executes the query under each
+    leg of ``legs``. The first leg runs once untimed (page cache,
+    codegen), then every leg is timed with rotated min-of-``runs``.
+    Returns {leg: minimum seconds}."""
+    from .common import rotated_min, timed_leg
+
+    def leg(_, name: str) -> float:
+        cfg, rf = legs[name]
+        return timed_leg(spark, lambda: run(cfg), native_rf=rf)
+
+    def progress(r: int, best: dict) -> None:
+        print(f"# run {r + 1}/{runs}: "
+              f"{ {k: round(v, 2) for k, v in best[None].items()} }",
+              file=sys.stderr, flush=True)
+
+    leg(None, next(iter(legs)))
+    return rotated_min(runs, [None], legs, leg, progress)[None]
 
 
 def run_cascade(spark: SparkSession, base_dir: str = DEFAULT_DIR,

@@ -125,43 +125,24 @@ def run_cascade2(spark: SparkSession, base_dir: str = DEFAULT_DIR,
 
 
 def main() -> int:
-    import math
-    import time
-
     from ..session import get_spark
 
     spark = get_spark(app_name="drpt-cascade2")
     spark.sparkContext.setLogLevel("ERROR")
-    from .common import set_native_rf
+    from .cascade import time_legs
 
     fdir = ensure_fixture(spark)
     off_cfg = RPTConfig(enabled=False)
-
-    def leg(cfg, rf=False) -> float:
-        # set_native_rf lowers Spark's 10GB application-side scan gate so
-        # InjectRuntimeFilter actually fires at this fixture size
-        set_native_rf(spark, rf)
-        t0 = time.time()
-        run_cascade2(spark, fdir, cfg).write.format("noop") \
-            .mode("overwrite").save()
-        set_native_rf(spark, False)
-        # legs must not see each other's persisted build sides
-        spark.catalog.clearCache()
-        return time.time() - t0
-
     # hash-uniform FKs mean the build sides' min/max spans the probe's
     # whole range: the eager min/max aggs (~1.3 s here) cannot prune a
     # single row group. rpt_filter_type='bf_only' is the reference's own
     # knob for exactly this workload shape — report both.
     bf_cfg = CASCADE2_CONFIG.with_(filter_type="bf_only")
-    leg(off_cfg)  # warmup
-    legs = [("off", off_cfg, False), ("rpt", None, False),
-            ("rpt_bf_only", bf_cfg, False), ("native_rf", off_cfg, True)]
-    best = {k: math.inf for k, _, _ in legs}
-    for it in range(4):
-        rot = it % len(legs)  # rotate: no leg always pays warmup
-        for key, cfg, rf in legs[rot:] + legs[:rot]:
-            best[key] = min(best[key], leg(cfg, rf))
+    best = time_legs(
+        spark, lambda cfg: run_cascade2(spark, fdir, cfg).write
+        .format("noop").mode("overwrite").save(), 4,
+        {"off": (off_cfg, False), "rpt": (None, False),
+         "rpt_bf_only": (bf_cfg, False), "native_rf": (off_cfg, True)})
 
     # correctness: rpt == off row-for-row
     on_rows = sorted(map(tuple, run_cascade2(spark, fdir).collect()))

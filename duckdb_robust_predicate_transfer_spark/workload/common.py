@@ -13,6 +13,9 @@ Cross-engine determinism rules (SURVEY.md section 7 "What's hard" #5):
 
 from __future__ import annotations
 
+import math
+import time
+
 from pyspark.sql import Column, SparkSession, functions as F
 
 from ..engine import Engine, Rel  # noqa: F401  (re-exported for queries)
@@ -32,7 +35,7 @@ def set_default_config(config: RPTConfig | None) -> None:
 
 #: the Engine constructed by the most recent eng() call — certification
 #: tooling reads its last_result (applied ops + tiers) after building a
-#: declared query, e.g. tools/gate2e_ab.py's op inventories
+#: declared query, e.g. tools/tpch_scale.py's engagement capture
 last_engine: Engine | None = None
 
 
@@ -106,6 +109,44 @@ def set_native_rf(spark: SparkSession, on: bool) -> None:
         spark.conf.set(_RF_ENABLED, "false")
         spark.conf.unset(_RF_APP_GATE)
         spark.conf.unset(_RF_CREATE_GATE)
+
+
+def timed_leg(spark: SparkSession, run, config: RPTConfig | None = None,
+              native_rf: bool = False) -> float:
+    """Seconds one benchmark leg's ``run()`` takes under the declared-query
+    config override ``config`` and native runtime blooms ``native_rf``.
+    Both are reset afterwards, and the cache cleared so the next leg
+    sees none of this leg's persisted build sides, even if ``run()``
+    raises."""
+    set_default_config(config)
+    set_native_rf(spark, native_rf)
+    try:
+        t0 = time.time()
+        run()
+        return time.time() - t0
+    finally:
+        set_native_rf(spark, False)
+        set_default_config(None)
+        spark.catalog.clearCache()
+
+
+def rotated_min(runs: int, items, legs, time_leg, after_run=None) -> dict:
+    """Interleaved min-of-N, the reference's baseline-vs-rpt protocol: in
+    each run, for each item, time every leg once as ``time_leg(item,
+    leg)``, starting the leg order at position ``run % len(legs)`` so no
+    leg always pays the first-leg warmup (codegen, page cache). Returns
+    {item: {leg: minimum seconds}}; ``after_run(run, best)`` follows
+    each run."""
+    legs = list(legs)
+    best = {item: dict.fromkeys(legs, math.inf) for item in items}
+    for r in range(runs):
+        rot = r % len(legs)
+        for item in items:
+            for leg in legs[rot:] + legs[:rot]:
+                best[item][leg] = min(best[item][leg], time_leg(item, leg))
+        if after_run is not None:
+            after_run(r, best)
+    return best
 
 
 def count_native_blooms(df) -> int:

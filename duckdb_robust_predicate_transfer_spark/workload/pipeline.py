@@ -814,9 +814,13 @@ def _footer_ts_us(path: str) -> "tuple[int, int] | None":
         return None
 
 
-#: epoch origin for converting footer micros back to naive datetimes
-#: (session timezone is UTC; the fixtures are NTZ)
-_EPOCH = __import__("datetime").datetime(1970, 1, 1)
+#: epoch origin for converting footer micros back to datetimes. It is
+#: UTC-aware: PySpark converts a naive datetime through the DRIVER's
+#: local zone but an aware one by its own offset, so the footer-path
+#: sentinel names the same instant as the agg path's collected (local,
+#: naive) max on any driver timezone
+_EPOCH = __import__("datetime").datetime(
+    1970, 1, 1, tzinfo=__import__("datetime").timezone.utc)
 
 
 def _scratch_base() -> str:

@@ -1,0 +1,103 @@
+"""The shared benchmark leg protocol (workload/common.py): rotated
+min-of-N and the per-leg config/conf restore. No Spark needed — a fake
+session records the conf and cache calls."""
+
+import pytest
+
+from duckdb_robust_predicate_transfer_spark.config import RPTConfig
+from duckdb_robust_predicate_transfer_spark.workload import common
+from duckdb_robust_predicate_transfer_spark.workload.common import (
+    _RF_APP_GATE, _RF_CREATE_GATE, _RF_ENABLED, rotated_min, timed_leg)
+
+
+def test_rotated_min_rotation_order_and_minima():
+    legs = ("off", "rpt", "native")
+    items = ("q1", "q2")
+    calls = []
+    secs = {}  # (run, item, leg) -> the scrambled seconds it returned
+
+    def time_leg(item, leg):
+        run = len(calls) // (len(items) * len(legs))
+        calls.append((run, item, leg))
+        secs[run, item, leg] = float(len(calls) * 7 % 11)
+        return secs[run, item, leg]
+
+    ran = []
+    best = rotated_min(len(legs), items, legs, time_leg,
+                       lambda r, b: ran.append((r, len(calls))))
+
+    assert ran == [(r, (r + 1) * len(items) * len(legs))
+                   for r in range(len(legs))]
+
+    # run -> item -> leg nesting, every leg once per (run, item)
+    assert [(r, i) for r, i, _ in calls] == [
+        (r, i) for r in range(len(legs)) for i in items for _ in legs]
+    # every leg takes every position exactly once over len(legs) runs
+    for item in items:
+        orders = [[leg for r2, i, leg in calls if r2 == r and i == item]
+                  for r in range(len(legs))]
+        assert orders[0] == list(legs)
+        for pos in range(len(legs)):
+            assert sorted(o[pos] for o in orders) == sorted(legs)
+    # per-leg minima
+    assert best == {item: {leg: min(secs[r, item, leg]
+                                    for r in range(len(legs)))
+                           for leg in legs} for item in items}
+
+
+class _Conf:
+    def __init__(self, log):
+        self.log = log
+
+    def set(self, key, value):
+        self.log.append(("set", key, value))
+
+    def unset(self, key):
+        self.log.append(("unset", key))
+
+
+class _Catalog:
+    def __init__(self, log):
+        self.log = log
+
+    def clearCache(self):
+        self.log.append(("clearCache",))
+
+
+class _FakeSpark:
+    def __init__(self):
+        self.log = []
+        self.conf = _Conf(self.log)
+        self.catalog = _Catalog(self.log)
+
+
+def test_timed_leg_restores_on_exception(monkeypatch):
+    monkeypatch.setattr(common, "_CONFIG_OVERRIDE", None)
+    spark = _FakeSpark()
+    cfg = RPTConfig(enabled=False)
+    during = []
+
+    def run():
+        during.append(common._CONFIG_OVERRIDE)
+        raise RuntimeError("leg failed")
+
+    with pytest.raises(RuntimeError):
+        timed_leg(spark, run, cfg, native_rf=True)
+
+    assert during == [cfg]
+    assert common._CONFIG_OVERRIDE is None
+    restore = spark.log[3:]  # after the three native-rf sets
+    assert spark.log[:3] == [("set", _RF_ENABLED, "true"),
+                             ("set", _RF_APP_GATE, "64MB"),
+                             ("set", _RF_CREATE_GATE, "1GB")]
+    assert restore == [("set", _RF_ENABLED, "false"),
+                       ("unset", _RF_APP_GATE),
+                       ("unset", _RF_CREATE_GATE),
+                       ("clearCache",)]
+
+
+def test_timed_leg_returns_seconds():
+    spark = _FakeSpark()
+    assert timed_leg(spark, lambda: None) >= 0.0
+    assert spark.log[-1] == ("clearCache",)
+    assert common._CONFIG_OVERRIDE is None

@@ -209,11 +209,12 @@ def test_native_bloom_edges_extraction(spark):
 
 
 def test_composed_dual_arbitration_by_bloom_coverage(spark):
-    """compose_subtree_rf: an ENGAGED query keeps injection suppressed
-    when every native bloom's edge is covered by an applied op (single
-    mechanism per edge), but restores injection for the final run when
-    the host would plant a bloom on an edge the transfer left on the
-    table (per-query dual — JOB_REGIME_r08: jq2 6.25->2.37 s)."""
+    """Engine._uncovered_rf_evidence: an ENGAGED query keeps injection
+    suppressed when every native bloom's edge is covered by an applied
+    op (single mechanism per edge), but restores injection for the
+    final run when the host would plant a bloom on an edge the transfer
+    left on the table (per-query dual — JOB_REGIME_r08: jq2
+    6.25->2.37 s)."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 

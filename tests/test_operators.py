@@ -109,12 +109,12 @@ def test_sketch_auto_escalation(spark, sf_dir):
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine, Rel
     from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
-        _sketch_tier)
+        SKETCH_MAX_KEYS, _sketch_tier)
 
     cfg = RPTConfig(sketch_auto=True)
     assert not _sketch_tier(cfg, cfg.broadcast_key_rows)         # exact
     assert _sketch_tier(cfg, cfg.broadcast_key_rows + 1)         # bitmap
-    assert not _sketch_tier(cfg, cfg.sketch_max_keys + 1)        # shuffle
+    assert not _sketch_tier(cfg, SKETCH_MAX_KEYS + 1)        # shuffle
     assert not _sketch_tier(cfg, float("inf"))                   # unknown
     assert not _sketch_tier(RPTConfig(), cfg.broadcast_key_rows + 1)
 
@@ -439,7 +439,7 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
          {"rg": 1, "n": 25, "c": 150}, {"rg"},
          ["exact_broadcast", "exact_broadcast", "info"])
     # an unfiltered, unreduced build only removes FK orphans: allowed
-    # up to max_unfiltered_build_rows
+    # up to MAX_UNFILTERED_BUILD_ROWS
     case([("o", "l", fw)], {"o": 6e7, "l": 1e9}, set(), ["gate1"],
          cfg={"require_selective_build": False})
     # shuffle-tier build into a small probe / into a probe it cannot

@@ -482,13 +482,11 @@ def test_minmax_clustering_gate(spark, tmp_path):
     ch = parquet_col_clustering(hp, "k")
     assert cs is not None and cs < 0.5, cs
     assert ch is not None and ch > 0.9, ch
-    assert _probe_clustered(sp, ("k",), 0.5)
-    assert not _probe_clustered(hp, ("k",), 0.5)
+    assert _probe_clustered(sp, ("k",))
+    assert not _probe_clustered(hp, ("k",))
     # unknown layouts (no stats / missing path) must pass
-    assert _probe_clustered(None, ("k",), 0.5)
-    assert _probe_clustered(hp, ("nope",), 0.5)
-    # >=1 disables
-    assert _probe_clustered(hp, ("k",), 1.0)
+    assert _probe_clustered(None, ("k",))
+    assert _probe_clustered(hp, ("nope",))
 
 
 def test_host_prefiltered_gate_2e(spark, sf_dir):

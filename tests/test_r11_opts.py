@@ -132,8 +132,61 @@ def test_footer_ts_range_matches_agg(spark, sf_dir):
         F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts")),
         F.max("ts")).collect()[0]
     assert rng == (lo, hi)
-    from datetime import timedelta
-    assert _EPOCH + timedelta(microseconds=rng[1]) == mx
+    # the same instant (the collected max is a driver-local naive
+    # datetime, _EPOCH is UTC-aware; .timestamp() reads either zone)
+    assert (_EPOCH + timedelta(microseconds=rng[1])).timestamp() \
+        == mx.timestamp()
+
+
+def test_stream_sentinel_independent_of_driver_tz(spark, sf_dir,
+                                                  monkeypatch, tmp_path):
+    """ADVICE r11: on a non-UTC driver the footer path and the agg-job
+    path of BOTH stream preps must plant the far-future sentinel at the
+    same instant (max ts + 11 days). PySpark converts naive datetimes
+    through the driver's local zone, so a naive UTC footer value used
+    to land hours off the agg path's collected value."""
+    import time
+
+    from duckdb_robust_predicate_transfer_spark.catalog import get_catalog
+    from duckdb_robust_predicate_transfer_spark.workload import pipeline
+
+    class _Stop(Exception):
+        pass
+
+    planted = []
+    real_one_row_df = pipeline._one_row_df
+
+    def capture(spark_, schema, values):
+        df = real_one_row_df(spark_, schema, values)
+        planted.append(df.select(F.unix_micros("ts")).first()[0])
+        raise _Stop  # the sentinel is all this test needs
+
+    monkeypatch.setattr(pipeline, "_one_row_df", capture)
+    monkeypatch.setattr(pipeline, "_scratch_base", lambda: str(tmp_path))
+    hi = get_catalog(spark, sf_dir).table("events").agg(
+        F.max(F.unix_micros("ts"))).first()[0]
+    want = hi + 11 * 86_400 * 1_000_000
+    footer = pipeline._footer_ts_us
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        for path, ts_us in (("footer", footer), ("agg", lambda p: None)):
+            monkeypatch.setattr(pipeline, "_footer_ts_us", ts_us)
+            for prep in (pipeline.q_stream_sessionize,
+                         pipeline.q_stream_asof):
+                planted.clear()
+                try:
+                    prep(spark, sf_dir)
+                except _Stop:
+                    pass
+                assert planted == [want], (path, prep.__name__)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
 
 
 def test_footer_ts_range_none_without_stats(tmp_path):

@@ -38,7 +38,6 @@ i.e. the co-located skip is finally pure savings.
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -67,6 +66,8 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.engine import Engine, Rel
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload import cascade
+    from duckdb_robust_predicate_transfer_spark.workload.common import (
+        rotated_min)
 
     spark = get_spark(app_name="drpt-bucketed")
     spark.sparkContext.setLogLevel("ERROR")
@@ -146,21 +147,18 @@ def main() -> int:
                 "rpt_hinted": n_join_shuffles(build(rpt_cfg, True))}
     spark.catalog.clearCache()
 
-    def leg(cfg, hinted: bool = False) -> float:
+    legs = {"off": (off_cfg, False), "rpt": (rpt_cfg, False),
+            "rpt_hinted": (rpt_cfg, True)}
+
+    def leg(_, key: str) -> float:
         t0 = time.time()
-        build(cfg, hinted).write.format("noop").mode("overwrite").save()
+        build(*legs[key]).write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
         spark.catalog.clearCache()
         return dt
 
-    leg(off_cfg)  # warmup
-    legs = [("off", off_cfg, False), ("rpt", rpt_cfg, False),
-            ("rpt_hinted", rpt_cfg, True)]
-    best = {k: math.inf for k, _, _ in legs}
-    for it in range(3):
-        rot = it % len(legs)  # rotate: no leg always pays warmup
-        for key, cfg, hinted in legs[rot:] + legs[:rot]:
-            best[key] = min(best[key], leg(cfg, hinted))
+    leg(None, "off")  # warmup
+    best = rotated_min(3, [None], legs, leg)[None]
 
     on_rows = sorted(map(tuple, build(rpt_cfg).collect()))
     hint_rows = sorted(map(tuple, build(rpt_cfg, True).collect()))

@@ -28,7 +28,6 @@ at the scale the r3 verdict asked for).
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -60,7 +59,6 @@ def main() -> int:
         else:
             i += 1
 
-    from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload import cascade
 
@@ -72,34 +70,11 @@ def main() -> int:
     print(f"# fixture ready in {gen_s}s at {fdir}", file=sys.stderr,
           flush=True)
 
-    from duckdb_robust_predicate_transfer_spark.workload.common import (
-        set_native_rf)
-    off_cfg = RPTConfig(enabled=False)
-
-    def leg(cfg, rf: bool) -> float:
-        # set_native_rf lowers Spark's 10GB application-side scan gate so
-        # InjectRuntimeFilter actually fires at this fixture size
-        set_native_rf(spark, rf)
-        t = time.time()
+    def run(cfg) -> None:
         n = len(cascade.run_cascade(spark, fdir, cfg).collect())
-        dt = time.time() - t
         assert n == 100, f"cascade result rows {n} != 100"
-        set_native_rf(spark, False)
-        spark.catalog.clearCache()
-        return dt
 
-    leg(off_cfg, False)  # untimed warmup: page cache + codegen
-    legs = [("off", off_cfg, False), ("rpt", None, False),
-            ("rpt_sketch", cascade.CASCADE_SKETCH_CONFIG, False),
-            ("native_rf", off_cfg, True)]
-    best = {k: math.inf for k, _, _ in legs}
-    for r in range(runs):
-        rot = r % len(legs)  # rotate: no leg always pays first-leg warmup
-        for key, cfg, rf in legs[rot:] + legs[:rot]:
-            best[key] = min(best[key], leg(cfg, rf))
-        print(f"# run {r + 1}/{runs}: "
-              f"{ {k: round(v, 2) for k, v in best.items()} }",
-              file=sys.stderr, flush=True)
+    best = cascade.time_legs(spark, run, runs)
 
     summary = {
         "suite": "cascade-big",

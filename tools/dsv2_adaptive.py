@@ -58,6 +58,9 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_robust_predicate_transfer_spark.workload.common import (
+        rotated_min)
+
     spark = (SparkSession.builder.master(f"local[{CPUS}]")
              .appName("drpt-dsv2-adaptive")
              .config("spark.driver.memory",
@@ -107,6 +110,34 @@ def main() -> int:
                  (F.col("id") * 100 / KEY_SPACE).cast("int").alias("d_pct"))
          .coalesce(1).write.mode("overwrite").parquet(dim_dir))
 
+    def time_legs(q, log: str):
+        """Rotated min-of-3 of ``q`` over the three fact readers; returns
+        each leg's sorted rows and best seconds, and the row-filter
+        audit events of the filtered leg."""
+        facts = {
+            "row_filter": (spark.read.format("rptparquet")
+                           .option("filterColumns", "f_mk")
+                           .option("logFile", log).load(fact_dir)),
+            "no_row_filter": (spark.read.format("rptparquet")
+                              .option("filterColumns", "f_mk")
+                              .option("rowFilter", "false").load(fact_dir)),
+            "native": spark.read.parquet(fact_dir)}
+        rows = {}
+
+        def leg(_, name: str) -> float:
+            t0 = time.time()
+            rows[name] = sorted(map(tuple, q(facts[name]).collect()))
+            return time.time() - t0
+
+        q(facts["native"]).collect()  # warm page cache + codegen
+        best = rotated_min(3, [None], facts, leg)[None]
+        events = []
+        if os.path.exists(log):
+            with open(log) as fh:
+                events = [json.loads(ln) for ln in fh if ln.strip()]
+        return rows, best, [e for e in events
+                            if e.get("event") == "row_filter"]
+
     def run_regime(tag: str, pct_keep: int) -> dict:
         log = os.path.join(FIX, f"prune_{tag}.log")
         if os.path.exists(log):
@@ -119,30 +150,7 @@ def main() -> int:
                          F.sum("f_amount").alias("amt"),
                          F.sum("d_k").alias("dsum"))
 
-        fact_on = (spark.read.format("rptparquet")
-                   .option("filterColumns", "f_mk")
-                   .option("logFile", log).load(fact_dir))
-        fact_off = (spark.read.format("rptparquet")
-                    .option("filterColumns", "f_mk")
-                    .option("rowFilter", "false").load(fact_dir))
-        fact_native = spark.read.parquet(fact_dir)
-
-        legs = (("row_filter", fact_on), ("no_row_filter", fact_off),
-                ("native", fact_native))
-        rows, best = {}, {n: float("inf") for n, _ in legs}
-        q(fact_native).collect()  # warm page cache + codegen
-        for it in range(3):
-            rot = it % len(legs)
-            for name, fact in legs[rot:] + legs[:rot]:
-                t0 = time.time()
-                rows[name] = sorted(map(tuple, q(fact).collect()))
-                best[name] = min(best[name], time.time() - t0)
-
-        events = []
-        if os.path.exists(log):
-            with open(log) as fh:
-                events = [json.loads(ln) for ln in fh if ln.strip()]
-        rf = [e for e in events if e.get("event") == "row_filter"]
+        rows, best, rf = time_legs(q, log)
         seen = sum(e["rows_seen"] for e in rf)
         passed = sum(e["rows_passed"] for e in rf)
         return {
@@ -182,30 +190,7 @@ def main() -> int:
                          F.sum("f_amount").alias("amt"),
                          F.sum("d_k").alias("dsum"))
 
-        fact_on = (spark.read.format("rptparquet")
-                   .option("filterColumns", "f_mk")
-                   .option("logFile", log).load(fact_dir))
-        fact_off = (spark.read.format("rptparquet")
-                    .option("filterColumns", "f_mk")
-                    .option("rowFilter", "false").load(fact_dir))
-        fact_native = spark.read.parquet(fact_dir)
-
-        legs = (("row_filter", fact_on), ("no_row_filter", fact_off),
-                ("native", fact_native))
-        rows, best = {}, {n: float("inf") for n, _ in legs}
-        q(fact_native).collect()  # warm page cache + codegen
-        for it in range(3):
-            rot = it % len(legs)
-            for name, fact in legs[rot:] + legs[:rot]:
-                t0 = time.time()
-                rows[name] = sorted(map(tuple, q(fact).collect()))
-                best[name] = min(best[name], time.time() - t0)
-
-        events = []
-        if os.path.exists(log):
-            with open(log) as fh:
-                events = [json.loads(ln) for ln in fh if ln.strip()]
-        rf = [e for e in events if e.get("event") == "row_filter"]
+        rows, best, rf = time_legs(q, log)
         seen = sum(e["rows_seen"] for e in rf)
         passed = sum(e["rows_passed"] for e in rf)
         return {

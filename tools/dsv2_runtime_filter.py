@@ -53,6 +53,9 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_robust_predicate_transfer_spark.workload.common import (
+        rotated_min)
+
     spark = (SparkSession.builder.master(f"local[{CPUS}]")
              .appName("drpt-dsv2-rf")
              .config("spark.driver.memory",
@@ -120,28 +123,23 @@ def main() -> int:
     has_dpp = ("dynamicpruning" in plan.lower()
                or "RuntimeFilters: [" in plan)
 
-    def leg(fact) -> tuple:
-        t0 = time.time()
-        rows = q(fact).collect()
-        return time.time() - t0, sorted(map(tuple, rows))
-
-    legs = {}
+    facts = {"pruned": fact_rf, "unpruned": fact_plain,
+             "native": fact_native}
     rows = {}
-    legs["native"], rows["native"] = leg(fact_native)  # warm fs cache
+
+    def leg(_, name: str) -> float:
+        t0 = time.time()
+        r = q(facts[name]).collect()
+        dt = time.time() - t0
+        rows[name] = sorted(map(tuple, r))
+        return dt
+
+    leg(None, "native")  # warm fs cache
     # interleaved min-of-3 (the bench.py / reference-harness protocol):
     # sequential per-leg timing lets machine-load drift bias the
     # comparison between legs
-    facts = (("pruned", fact_rf), ("unpruned", fact_plain),
-             ("native", fact_native))
-    best = {name: float("inf") for name, _ in facts}
-    for it in range(3):
-        rot = it % len(facts)  # rotate: no leg always pays warmup
-        for name, fact in facts[rot:] + facts[:rot]:
-            t, r = leg(fact)
-            best[name] = min(best[name], t)
-            rows[name] = r
-    for name, _ in facts:
-        legs[name] = round(best[name], 3)
+    legs = {name: round(t, 3)
+            for name, t in rotated_min(3, [None], facts, leg)[None].items()}
 
     audit = []
     if os.path.exists(log):

@@ -31,7 +31,6 @@ artifact committed as DSV2_COMPOSE_r{N}.json)
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -121,6 +120,8 @@ def main() -> int:
 
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine, Rel
+    from duckdb_robust_predicate_transfer_spark.workload.common import (
+        rotated_min)
 
     spark = (SparkSession.builder.master(
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
@@ -187,31 +188,27 @@ def main() -> int:
         except OSError:
             pass
 
-    def leg(name):
+    rows = {}
+
+    def leg(_, name):
         if cold:
             drop_caches()
         t0 = time.time()
         if name == "off_native":
-            rows = run(fact_native, RPTConfig(enabled=False)).collect()
+            r = run(fact_native, RPTConfig(enabled=False)).collect()
         elif name == "rpt_native":
-            rows = run(fact_native, cfg).collect()
+            r = run(fact_native, cfg).collect()
         else:
-            rows = run(fact_dsv2(), cfg).collect()
+            r = run(fact_dsv2(), cfg).collect()
         dt = time.time() - t0
         spark.catalog.clearCache()
-        return dt, sorted(map(tuple, rows))
+        rows[name] = sorted(map(tuple, r))
+        return dt
 
-    legs = ("off_native", "rpt_native", "rpt_dsv2")
-    leg("rpt_native")  # warmup: page cache + codegen
-    best = {k: math.inf for k in legs}
-    rows = {}
+    leg(None, "rpt_native")  # warmup: page cache + codegen
     runs = int(os.environ.get("DRPT_COMPOSE_RUNS", "3"))
-    for it in range(runs):
-        rot = it % len(legs)  # rotate: no leg always pays warmup
-        for name in legs[rot:] + legs[:rot]:
-            t, r = leg(name)
-            best[name] = min(best[name], t)
-            rows[name] = r
+    best = rotated_min(runs, [None],
+                       ("off_native", "rpt_native", "rpt_dsv2"), leg)[None]
 
     audit = []
     if os.path.exists(log):

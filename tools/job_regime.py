@@ -794,7 +794,7 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms, set_native_rf)
+        count_native_blooms, rotated_min, set_native_rf, timed_leg)
 
     spark = get_spark(app_name="drpt-job-regime",
                       shuffle_partitions=SHUFFLE)
@@ -840,15 +840,10 @@ def main() -> int:
     #    bloom the transfer doesn't cover.
     MODES = ("off", "rpt", "native", "composed", "dual")
 
-    def set_mode(mode: str) -> None:
-        import duckdb_robust_predicate_transfer_spark.workload.common as wc
-        wc.set_default_config(None)
-        set_native_rf(spark, mode in ("native", "composed", "dual"))
-
     #: per-query composed verdict: True = the engaged query's rewritten
     #: plan carried an uncovered native bloom edge, so the engine
     #: restored injection for the final run (per-query dual,
-    #: config.compose_subtree_rf)
+    #: Engine._uncovered_rf_evidence)
     composed_dual: dict = {}
     #: per-query r10 cession verdict: "native" = disengaged and handed
     #: to the host's blooms, "off" = disengaged with suppression kept
@@ -862,9 +857,8 @@ def main() -> int:
             cfg = RPTConfig(suppress_native_rf=False)
         else:
             cfg = RPTConfig(enabled=False)
-        set_mode(mode)
-        try:
-            t = time.time()
+
+        def run() -> None:
             e = Engine(spark, OUT_DIR, cfg)
             df = e.sql(QUERIES[name], auto_rpt=cfg.enabled)
             df.collect()
@@ -875,14 +869,13 @@ def main() -> int:
                 composed_dual[name] = e.last_sql_rewritten and rf_on
                 composed_cede[name] = (("native" if rf_on else "off")
                                        if e.last_cede else None)
-            return time.time() - t
-        finally:
-            set_native_rf(spark, False)
-            spark.catalog.clearCache()
+
+        return timed_leg(spark, run,
+                         native_rf=mode in ("native", "composed", "dual"))
 
     blooms = {}
     for name in QUERIES:
-        set_mode("native")
+        set_native_rf(spark, True)
         try:
             blooms[name] = count_native_blooms(
                 Engine(spark, OUT_DIR,
@@ -893,14 +886,11 @@ def main() -> int:
         finally:
             set_native_rf(spark, False)
 
-    best = {q: {m: math.inf for m in MODES} for q in QUERIES}
     leg(next(iter(QUERIES)), "off")  # untimed warmup
-    for r_i in range(runs):
-        order = MODES[r_i % len(MODES):] + MODES[:r_i % len(MODES)]
-        for q in QUERIES:
-            for mode in order:
-                best[q][mode] = min(best[q][mode], leg(q, mode))
-        print(f"# run {r_i + 1}/{runs} done", file=sys.stderr, flush=True)
+    best = rotated_min(
+        runs, QUERIES, MODES, leg,
+        lambda r_i, _: print(f"# run {r_i + 1}/{runs} done",
+                             file=sys.stderr, flush=True))
 
     def geo(mode: str):
         vals = [best[q][mode] for q in QUERIES

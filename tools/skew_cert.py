@@ -29,7 +29,6 @@ Emits one JSON line; exit 0 when both mitigations beat plain.
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -92,6 +91,8 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.operators.skew import (
         detect_hot_keys, salted_join)
     from duckdb_robust_predicate_transfer_spark.session import get_spark
+    from duckdb_robust_predicate_transfer_spark.workload.common import (
+        rotated_min)
 
     spark = get_spark(app_name="drpt-skew-cert", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
@@ -132,28 +133,26 @@ def main() -> int:
         rows = df.collect()
         return time.time() - t, [tuple(r) for r in rows]
 
-    def leg(name):
+    results = {}
+
+    def leg(_, name):
         spark.conf.set(skew_conf, "true" if name == "aqe" else "false")
         df = leg_salted(hot) if name == "salted" else leg_plain()
         dt, rows = run(df)
         spark.conf.set(skew_conf, "true")
-        return dt, rows
+        if name in results:
+            assert results[name] == rows, f"{name} unstable across runs"
+        results[name] = rows
+        return dt
 
-    leg("aqe")  # untimed warmup: page cache + codegen
-    best = {k: math.inf for k in ("plain", "aqe", "salted")}
-    results = {}
-    names = ("plain", "aqe", "salted")
-    for r in range(runs):
-        rot = r % len(names)  # rotate: no leg always pays warmup
-        for name in names[rot:] + names[:rot]:
-            dt, rows = leg(name)
-            best[name] = min(best[name], dt)
-            if name in results:
-                assert results[name] == rows, f"{name} unstable across runs"
-            results[name] = rows
+    def progress(r, best):
         print(f"# run {r + 1}/{runs}: "
-              f"{ {k: round(v, 2) for k, v in best.items()} }",
+              f"{ {k: round(v, 2) for k, v in best[None].items()} }",
               file=sys.stderr, flush=True)
+
+    leg(None, "aqe")  # untimed warmup: page cache + codegen
+    best = rotated_min(runs, [None], ("plain", "aqe", "salted"), leg,
+                       progress)[None]
 
     match = (results["plain"] == results["aqe"] == results["salted"])
     summary = {

@@ -34,6 +34,7 @@ Exit 0 when the oracle check passes and every query ran in all legs.
 
 from __future__ import annotations
 
+import gc
 import json
 import math
 import os
@@ -50,6 +51,9 @@ OUT_DIR = os.environ.get("DRPT_TPCH_SCALE_DIR", "/tmp/drpt_tpch_x10")
 REP = int(os.environ.get("DRPT_TPCH_SCALE_REP", 10))
 
 os.environ.setdefault("DRPT_DRIVER_MEM", "16g")
+
+
+RF_ENABLED = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
 
 def _ratio(num, den):
@@ -156,13 +160,17 @@ def main() -> int:
 
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.workload import QUERIES
+    from duckdb_robust_predicate_transfer_spark.workload import common
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms, set_default_config, set_native_rf)
+        count_native_blooms, rotated_min, timed_leg)
 
     spark = get_spark(app_name="drpt-tpch-scale",
                       shuffle_partitions=SHUFFLE)
     spark.sparkContext.setLogLevel("ERROR")
+    failed: list = []
+    #: the query whose legs the live session has run (None: fresh)
+    session_q = None
 
     def restart_spark() -> None:
         """Bounded-disk discipline for big replications: shuffle files
@@ -172,7 +180,7 @@ def main() -> int:
         minutes and ENOSPC'd the r5 first attempts — so the session is
         recycled between queries, capping live spill at one query's
         four legs (~10 s restart cost each, paid equally by all legs)."""
-        nonlocal spark
+        nonlocal spark, session_q
         try:
             spark.stop()
         except Exception:
@@ -180,63 +188,64 @@ def main() -> int:
         spark = get_spark(app_name="drpt-tpch-scale",
                           shuffle_partitions=SHUFFLE)
         spark.sparkContext.setLogLevel("ERROR")
+        session_q = None
 
     def free_gb() -> float:
         st = os.statvfs("/tmp")
         return st.f_bavail * st.f_frsize / 2**30
 
-    def set_rf(on: bool) -> None:
-        if EMULATE_RF:
-            # native blooms need lowered thresholds to fire at local
-            # fixture sizes (set_native_rf docstring); at defaults a
-            # "native" leg silently times the plain off plan
-            set_native_rf(spark, on)
-        else:
-            # true production defaults (x1000+: the scan clears the
-            # 10GB gate on its own)
-            spark.conf.set(
-                "spark.sql.optimizer.runtime.bloomFilter.enabled",
-                "true" if on else "false")
+    off_cfg = RPTConfig(enabled=False)
 
-    def set_mode(mode: str) -> None:
-        set_default_config(None if mode in ("rpt", "composed")
-                           else RPTConfig(enabled=False))
-        set_rf(mode in ("native", "composed"))
+    def mode_leg(mode: str, run) -> float:
+        """timed_leg under ``mode``. Native blooms get lowered thresholds
+        (EMULATE_RF) or, at x1000+, where the scan clears the 10GB gate
+        on its own, just the enabled flag: true production defaults."""
+        rf = mode in ("native", "composed")
+
+        def body() -> None:
+            if rf and not EMULATE_RF:
+                spark.conf.set(RF_ENABLED, "true")
+            run()
+
+        return timed_leg(spark, body,
+                         None if mode in ("rpt", "composed") else off_cfg,
+                         rf and EMULATE_RF)
+
+    def verdict(df) -> tuple:
+        """(engaged, cession mode) of the statement that built ``df``,
+        off the query function's Engine and ``df``'s session."""
+        e = common.last_engine
+        engaged = bool(e.last_result is not None and e.last_result.applied)
+        rf_on = df.sparkSession.conf.get(RF_ENABLED) == "true"
+        return engaged, (("native" if rf_on else "off")
+                         if e.last_cede else None)
 
     def leg(name: str, mode: str) -> float:
         # emergency valve: a leg mid-query can still spill big; never
         # start one without headroom
         if free_gb() < 10:
             restart_spark()
-        set_mode(mode)
         # best-effort early release between legs (the hard guarantee is
-        # the per-query restart_spark below)
+        # the per-query restart_spark)
         try:
-            import gc as _pygc
-
-            _pygc.collect()
+            gc.collect()
             spark._jvm.System.gc()
         except Exception:
             pass
-        try:
-            t = time.time()
-            QUERIES[name](spark, OUT_DIR).collect()
-            dt = time.time() - t
+
+        def run() -> None:
+            df = QUERIES[name](spark, OUT_DIR)
+            df.collect()
             if mode == "composed":
-                # free engagement/cession capture off the session
-                # stashes (feeds the engaged-only geomeans) — works
-                # under DRPT_TPCH_SCALE_BLOOMS_FROM reuse too, where
-                # the blooms pass never runs
-                pr = getattr(spark, "_drpt_prev_result", None)
-                engaged[name] = bool(pr is not None and pr.applied)
-                c = getattr(spark, "_drpt_last_cede", None)
+                # free engagement/cession capture (feeds the
+                # engaged-only geomeans) — works under
+                # DRPT_TPCH_SCALE_BLOOMS_FROM reuse too, where the
+                # blooms pass never runs
+                engaged[name], c = verdict(df)
                 if c is not None or name not in cede:
                     cede[name] = c
-            return dt
-        finally:
-            set_default_config(None)
-            set_rf(False)
-            spark.catalog.clearCache()
+
+        return mode_leg(mode, run)
 
     MODES = ("off", "rpt", "native", "composed")
 
@@ -264,68 +273,60 @@ def main() -> int:
         for q in TPCH:
             blooms[q] = {}
             for mode in ("native", "composed"):
-                set_mode(mode)
-                try:
-                    blooms[q][mode] = count_native_blooms(
-                        QUERIES[q](spark, OUT_DIR))
+
+                def count() -> None:
+                    df = QUERIES[q](spark, OUT_DIR)
+                    blooms[q][mode] = count_native_blooms(df)
                     if mode == "composed":
-                        # the query function built its Engine
-                        # internally; the session stashes carry
-                        # engagement (persisted TransferResult with
-                        # applied ops) and the r10 cession verdict
-                        pr = getattr(spark, "_drpt_prev_result", None)
-                        engaged[q] = bool(pr is not None and pr.applied)
-                        cede[q] = getattr(spark, "_drpt_last_cede",
-                                          None)
+                        engaged[q], cede[q] = verdict(df)
+
+                try:
+                    mode_leg(mode, count)
                 except Exception:
                     blooms[q][mode] = None
-                finally:
-                    set_default_config(None)
-                    set_rf(False)
-                    spark.catalog.clearCache()
 
     if REP >= 300:
         restart_spark()  # shed any spill from the bloom-count pass
 
-    best: dict = {q: {m: math.inf for m in MODES} for q in TPCH}
-    failed = []
-    leg(TPCH[0], "off")  # untimed warmup: page cache + codegen
-    for r_i in range(runs):
-        # rotate the leg order every run: the first leg of a fresh query
-        # pays codegen compilation + page-cache faults that later legs
-        # ride for free (measured up to 40% on sub-second queries whose
-        # four legs share one physical plan) — min-of-N over rotated
-        # orders gives every mode a turn in each position
-        order = MODES[r_i % len(MODES):] + MODES[:r_i % len(MODES)]
-        for q in TPCH:
-            if q in failed:
-                continue
-            try:
-                if REP >= 300:
-                    # recycled-session fairness: the first leg after a
-                    # restart pays the fixture's page-cache faults and
-                    # codegen JIT (~10-25 s at x1000) — with few runs
-                    # the rotation alone leaves modes sampling unequal
-                    # positions (run 0+1 give 'off' a best position of
-                    # 3-warm vs 'rpt' 1-warm, measured as join-free Q1
-                    # "losing" 12% rpt-vs-off). An untimed off-mode
-                    # warmup per fresh session levels every position.
-                    leg(q, "off")
-                for mode in order:
-                    best[q][mode] = min(best[q][mode], leg(q, mode))
-            except Exception as exc:  # record and move on; artifact lands
-                print(f"# FAIL {q}: {str(exc)[:200]}", file=sys.stderr,
-                      flush=True)
-                failed.append(q)
-                restart_spark()  # a dead/ENOSPC'd session poisons the rest
-            # big replications: recycle the session so live spill never
-            # exceeds one query's legs (see restart_spark)
-            if REP >= 300:
-                restart_spark()
-        done = {q: round(v["rpt"], 2) for q, v in best.items()
-                if v["rpt"] < math.inf}
+    def timed(q: str, mode: str) -> float:
+        """One rotated leg of ``q``; a failed query times inf from then
+        on. Big replications give each query a fresh session (see
+        restart_spark) and level it with an untimed off-mode warmup:
+        the first leg after a restart pays page-cache faults and codegen
+        JIT (~10-25 s at x1000), and with few runs the rotation alone
+        left modes at unequal positions (join-free Q1 "losing" 12%
+        rpt-vs-off)."""
+        nonlocal session_q
+        if q in failed:
+            return math.inf
+        try:
+            if REP >= 300 and session_q != q:
+                if session_q is not None:
+                    restart_spark()
+                leg(q, "off")
+            session_q = q
+            return leg(q, mode)
+        except Exception as exc:  # record and move on; artifact lands
+            print(f"# FAIL {q}: {str(exc)[:200]}", file=sys.stderr,
+                  flush=True)
+            failed.append(q)
+            restart_spark()  # a dead/ENOSPC'd session poisons the rest
+            return math.inf
+
+    def progress(r_i: int, best: dict) -> None:
+        if REP >= 300:
+            restart_spark()
+        done = [q for q, v in best.items() if v["rpt"] < math.inf]
         print(f"# run {r_i + 1}/{runs}: {len(done)}/22 rpt legs ok",
               file=sys.stderr, flush=True)
+
+    leg(TPCH[0], "off")  # untimed warmup: page cache + codegen
+    # rotate the leg order every run: the first leg of a fresh query
+    # pays codegen compilation + page-cache faults that later legs ride
+    # for free (measured up to 40% on sub-second queries whose four legs
+    # share one physical plan) — min-of-N over rotated orders gives
+    # every mode a turn in each position
+    best = rotated_min(runs, TPCH, MODES, timed, progress)
 
     ok_qs = [q for q in TPCH if q not in failed]
 
