@@ -533,6 +533,8 @@ class Engine:
         instead of being skipped for the life of the session
         (ADVICE r9); schema reads are parquet-footer-only and the
         arbitration runs once per novel statement."""
+        import os
+
         names = frozenset(self.catalog.known_tables())
         stamped = getattr(self.catalog, "_drpt_table_cols", None)
         if stamped is not None and stamped[0] == names:
@@ -541,10 +543,12 @@ class Engine:
         for t in sorted(names):
             # known_tables() lists the standard catalog; a fixture
             # dir may materialize only a subset (the JOB dir has no
-            # part.parquet) — reading a missing one raised out of
-            # _table_cols and silently disabled the arbitration for
-            # EVERY query on that fixture (r9 in-round regression:
-            # no query at 100M ever got the per-query dual)
+            # part.parquet). A missing one is skipped without a Spark
+            # read: each such read fails with a logged stack trace, and
+            # one escaping here would disable the arbitration for every
+            # query on that fixture.
+            if not os.path.exists(self.catalog.path(t)):
+                continue
             try:
                 cache[t] = {c.lower()
                             for c in self.catalog.table(t).columns}

@@ -5,8 +5,9 @@ Near-dup detection (dedup.py / the portable-oracle pipelines) emits
 PAIRS; a training-data run needs CLUSTERS — "keep one document per
 group of mutual near-duplicates", where duplicate chains (a~b, b~c,
 a!~c) must still collapse to one survivor. That is connected
-components over the pair graph, computed here as iterative min-label
-propagation in pure DataFrame ops:
+components over the pair graph: finished on the driver when the edge
+list is small (Local finish, below), otherwise computed as iterative
+min-label propagation in pure DataFrame ops:
 
 - every node starts labeled with itself;
 - each round, a node takes the minimum label among itself and its
@@ -30,11 +31,37 @@ MapReduce CC literature). Two extra in-round self-joins trade against
 whole driver-sequenced rounds, each of which costs a checkpoint job
 plus a convergence-count job; duplicate-cluster graphs converge in
 2-3 rounds either way.
+
+When the loop stops at ``max_iters`` with labels still changing, one
+more job checks that every edge joins two equal labels. A label is
+always a reachable id no larger than its node, so agreement on every
+edge means each component carries its minimum: the labels are
+returned. Otherwise the call raises instead of returning an unconverged
+labelling.
+
+Local finish. Most calls never reach the loop. The edge checkpoint
+counts its rows through an ``observe()`` that rides the checkpoint job,
+and when rows x (8 + the edge schema's ``defaultSize``) fits under
+``spark.sql.autoBroadcastJoinThreshold`` the edges are collected and a
+min-root union-find labels them on the driver. That product is Spark's
+own per-row size estimate and the threshold is Spark's own bound for
+shipping a whole relation to the driver and back out (a broadcast
+join), so the choice adds no knob and is off wherever broadcasts are
+(threshold -1). The labels come back as a ``LocalRelation`` built
+through Arrow, with exact size statistics, so the anti-join in
+``dedup_clusters`` can broadcast them. The local result is the exact
+fixpoint whatever ``max_iters`` and ``pointer_jump`` say: those bound
+and shape the loop only. Near-duplicate pair sets are this small:
+``q_dedup_clusters``' few hundred edges take 7 Spark jobs this way,
+pair pipeline included, instead of 32.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..session import observed
 
 
 def connected_components(pairs: DataFrame, a_col: str = "id_a",
@@ -58,13 +85,21 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     distinctness — so the edge-dedup exchange+aggregate is skipped.
     Duplicate edges would only cost work, never correctness (min-label
     propagation is idempotent over repeated edges), so the flag is a
-    pure shuffle-removal knob (guide §2.4)."""
+    pure shuffle-removal knob (guide §2.4).
+
+    Edge lists under the broadcast threshold skip the loop (module
+    docstring, Local finish). The loop raises ``RuntimeError`` when
+    ``max_iters`` rounds end short of the fixpoint."""
     und = (pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
            .union(pairs.select(F.col(b_col).alias("src"),
                                F.col(a_col).alias("dst"))))
     if not pairs_canonical:
         und = und.distinct()
-    und = und.localCheckpoint(eager=True)
+    obs = Observation()
+    und = (und.observe(obs, F.count(F.lit(1)).alias("n"))
+           .localCheckpoint(eager=True))
+    if _fits_driver(und, observed(obs)):
+        return _local_components(und)
     labels = (und.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint(eager=True))
@@ -107,7 +142,80 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
         labels = new.select("node", "label")
         if changed == 0:
             break
+    else:
+        if _labels_disagree(und, labels):
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"max_iters={max_iters} rounds")
     return labels
+
+
+def _fits_driver(und: DataFrame, obs_row) -> bool:
+    """True when the observed edge count fits Spark's broadcast bound:
+    rows x (8 + the row schema's defaultSize) is the per-row size Spark
+    itself estimates. False when the count was not delivered."""
+    if obs_row is None:
+        return False
+    jconf = und.sparkSession._jsparkSession.sessionState().conf()
+    threshold = jconf.autoBroadcastJoinThreshold()
+    row_bytes = 8 + und._jdf.schema().defaultSize()
+    return obs_row["n"] * row_bytes <= threshold
+
+
+def _local_components(und: DataFrame) -> DataFrame:
+    """(node, label) over the collected directed edge list ``und``:
+    min-root union-find, so every root is its component's minimum id.
+    A null endpoint joins nothing, as in the loop: it is its own
+    (null, null) row."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for src, dst in und.collect():
+        if src is None or dst is None:
+            has_null = True
+            for x in (src, dst):
+                if x is not None:
+                    parent.setdefault(x, x)
+            continue
+        parent.setdefault(src, src)
+        parent.setdefault(dst, dst)
+        a, b = find(src), find(dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    nodes = list(parent)
+    labels = [find(n) for n in nodes]
+    if has_null:
+        nodes.append(None)
+        labels.append(None)
+    t = und.schema["src"].dataType
+    schema = StructType([StructField("node", t), StructField("label", t)])
+    # a pyarrow Table always takes the Arrow path (a LocalRelation with
+    # exact statistics), whatever spark.sql.execution.arrow.* says; a
+    # Python list would build an RDD-backed relation instead
+    return und.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "label": labels}), schema)
+
+
+def _labels_disagree(und: DataFrame, labels: DataFrame) -> bool:
+    """True when some edge joins two different labels: the labelling is
+    not yet the fixpoint."""
+    ls = labels.select(F.col("node").alias("src"),
+                       F.col("label").alias("l_src"))
+    ld = labels.select(F.col("node").alias("dst"),
+                       F.col("label").alias("l_dst"))
+    return bool(und.join(ls, "src").join(ld, "dst")
+                .filter(F.col("l_src") != F.col("l_dst"))
+                .limit(1).count())
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame,

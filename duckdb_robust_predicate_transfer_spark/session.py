@@ -79,3 +79,31 @@ def get_spark(app_name: str = "drpt-spark", master: str | None = None,
                 os.environ.get("DRPT_LOCAL_DIR", "/tmp/drpt-spark-local"))
     )
     return b.getOrCreate()
+
+
+#: How long ``observed`` waits for an observation's metrics. Delivery
+#: trails the observed action by milliseconds; the bound only stops a
+#: lost delivery from blocking the caller forever.
+OBSERVE_WAIT_S = 10.0
+
+
+def observed(obs, timeout_s: float = OBSERVE_WAIT_S) -> "dict | None":
+    """The metrics of ``obs`` (a ``pyspark.sql.Observation``) as a
+    dict, or None when it was never attached to a DataFrame or no
+    action delivered its metrics within ``timeout_s``.
+    ``Observation.get`` waits without a bound, and Spark posts the
+    metrics through the listener bus after the observed action has
+    already returned, so a caller that needs them must wait, but never
+    forever. Callers fall back to computing the value with a job."""
+    from py4j.protocol import Py4JJavaError
+
+    jo, jvm = getattr(obs, "_jo", None), getattr(obs, "_jvm", None)
+    if jo is None or jvm is None:
+        return None
+    wait = jvm.scala.concurrent.duration.Duration.create(
+        max(1, int(timeout_s * 1000)), "ms")
+    try:
+        jvm.scala.concurrent.Await.ready(jo.future(), wait)
+        return obs.get
+    except Py4JJavaError:  # timed out, or the observed action failed
+        return None

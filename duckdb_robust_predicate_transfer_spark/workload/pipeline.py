@@ -699,6 +699,7 @@ def q_stream_sessionize(spark, sf_dir):
     from ..streaming.ops import (adaptive_state_partitions,
                                  read_event_stream, run_to_memory,
                                  sessionize_stream)
+    from ..session import observed
 
     cat = get_catalog(spark, sf_dir)
     ev = cat.table("events")
@@ -740,7 +741,10 @@ def q_stream_sessionize(spark, sf_dir):
 
     _drop(ev, "b0")
     if obs is not None:
-        n_users = obs.get["nu"]  # the b0 write above computed it
+        got = observed(obs)  # the b0 write above computed it
+        n_users = (got["nu"] if got is not None
+                   else cat.table("events").agg(
+                       F.approx_count_distinct("user_id")).collect()[0][0])
     _drop(_one_row_df(spark, ev.schema,
                       (-1, far_future, -1, "view", 0.0, "{}")), "b1")
     stream = read_event_stream(spark, sdir, glob="b*.parquet")
@@ -998,6 +1002,7 @@ def q_stream_asof(spark, sf_dir):
     from ..catalog import get_catalog
     from ..streaming.ops import (adaptive_state_partitions, asof_stream,
                                  read_event_stream, run_to_memory)
+    from ..session import observed
 
     cat = get_catalog(spark, sf_dir)
     raw = cat.table("events")
@@ -1047,7 +1052,10 @@ def q_stream_asof(spark, sf_dir):
      .repartition(3, "_b")
      .write.mode("overwrite").partitionBy("_b").parquet(tmp))
     if obs is not None:
-        n_users = obs.get["nu"]  # the range write above computed it
+        got = observed(obs)  # the range write above computed it
+        n_users = (got["nu"] if got is not None
+                   else raw.agg(F.approx_count_distinct("user_id"))
+                   .collect()[0][0])
     for i in range(3):
         d = os.path.join(tmp, f"_b={i}")
         if os.path.isdir(d):
@@ -1495,7 +1503,7 @@ def _portable_minhash_pairs(e):
     "q_dedup_clusters",
     # same portable pair pipeline, then connected components as a
     # recursive CTE (transitive closure is fine at oracle scale; the
-    # Spark side iterates min-label propagation instead) and an
+    # Spark side runs a union-find or min-label propagation) and an
     # anti-join keeping one canonical survivor per duplicate cluster
     oracle="""
     WITH RECURSIVE w AS (
@@ -1546,8 +1554,10 @@ def _portable_minhash_pairs(e):
 )
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTER dedup: candidate pairs (portable MinHash+LSH)
-    -> connected components (operators/cluster.py iterative min-label
-    propagation) -> one canonical survivor per component (min doc_id).
+    -> connected components (operators/cluster.py: a driver-side
+    union-find when the pairs fit the broadcast threshold, iterative
+    min-label propagation otherwise) -> one canonical survivor per
+    component (min doc_id).
     The oracle computes the identical components with a recursive CTE.
     This is the iterative-algorithm surface: duplicate CHAINS (a~b,
     b~c, a!~c) collapse to one survivor, which pairwise dedup cannot

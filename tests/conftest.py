@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -35,3 +36,20 @@ def _clear_cache_between_tests(request, spark):
     scans."""
     yield
     spark.catalog.clearCache()
+
+
+@pytest.fixture
+def conf_set(spark):
+    """``with conf_set(key, value):`` sets a session conf for the block
+    and restores the previous value in a ``finally``. Tests force
+    connected_components onto its Spark loop this way, with
+    ``spark.sql.autoBroadcastJoinThreshold`` at -1."""
+    @contextmanager
+    def setting(key, value):
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+    return setting

@@ -430,3 +430,23 @@ def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
         spark.conf.set(_ENABLED, "false")
         spark.conf.unset(_APP)
         spark.conf.unset(_CREATE)
+
+
+def test_table_cols_skips_missing_tables(spark, tmp_path, monkeypatch):
+    """Engine._table_cols reads only tables whose file exists: a fixture
+    dir holding none of the standard catalog names must not pay one
+    failing Spark read (and logged stack trace) per absent name."""
+    from duckdb_robust_predicate_transfer_spark.catalog import (TABLES,
+                                                               Catalog)
+    from duckdb_robust_predicate_transfer_spark.engine import Engine
+
+    spark.range(3).withColumnRenamed("id", "T_ID").write.parquet(
+        str(tmp_path / "title.parquet"))
+    e = Engine(spark, str(tmp_path))
+    read = []
+    table = Catalog.table
+    monkeypatch.setattr(Catalog, "table",
+                        lambda self, n: read.append(n) or table(self, n))
+    assert e._table_cols() == {"title": {"t_id"}}
+    assert read == ["title"]
+    assert not set(read) & set(TABLES)

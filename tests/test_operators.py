@@ -2,6 +2,7 @@
 multimodal plumbing."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from duckdb_robust_predicate_transfer_spark.catalog import get_catalog
 
@@ -839,21 +840,153 @@ def test_connected_components_chain(spark):
     assert kept == [1, 7, 9]
 
 
-def test_connected_components_pointer_jump_long_chain(spark):
+def test_connected_components_pointer_jump_long_chain(spark, conf_set):
     """A 64-node path is the adversarial-diameter shape: plain min-label
     propagation moves the root label one hop per round (needs 63), the
     default pointer-jumping contraction doubles reach per round, so 10
-    rounds suffice."""
+    rounds suffice. Run on the Spark loop (broadcasts off), not the
+    local finish."""
     from duckdb_robust_predicate_transfer_spark.operators.cluster import (
         connected_components)
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a bigint, id_b bigint")
-    comp = connected_components(pairs, max_iters=10)
-    assert {r.label for r in comp.collect()} == {0}
-    # sanity: without the jump the same budget cannot converge
-    plain = connected_components(pairs, max_iters=10, pointer_jump=False)
-    assert {r.label for r in plain.collect()} != {0}
+    with conf_set("spark.sql.autoBroadcastJoinThreshold", "-1"):
+        comp = connected_components(pairs, max_iters=10)
+        assert {r.label for r in comp.collect()} == {0}
+        # without the jump the same budget cannot converge, and the
+        # unconverged labels are refused rather than returned
+        with pytest.raises(RuntimeError, match="max_iters=10"):
+            connected_components(pairs, max_iters=10, pointer_jump=False)
+
+
+def _bfs_labels(edges) -> dict:
+    """node -> minimum node id of its component, by plain BFS."""
+    from collections import defaultdict
+
+    adj = defaultdict(set)
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    label: dict = {}
+    for start in adj:
+        if start in label:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for n in adj[todo.pop()] - comp:
+                comp.add(n)
+                todo.append(n)
+        root = min(comp)
+        label.update((n, root) for n in comp)
+    return label
+
+
+def _graph_mix(seed: int) -> list:
+    """Chains, stars, cycles and lone pairs over shuffled ids (so the
+    minimum sits anywhere in a shape), with some edges repeated and
+    some reversed."""
+    import random
+
+    rng = random.Random(seed)
+    ids = iter(rng.sample(range(10_000), 2_000))
+    edges = []
+    for _ in range(8):
+        chain = [next(ids) for _ in range(rng.randint(2, 12))]
+        edges += list(zip(chain, chain[1:]))
+    for _ in range(6):
+        hub = next(ids)
+        edges += [(hub, next(ids)) for _ in range(rng.randint(2, 8))]
+    for _ in range(6):
+        ring = [next(ids) for _ in range(rng.randint(3, 9))]
+        edges += list(zip(ring, ring[1:] + ring[:1]))
+    edges += [(next(ids), next(ids)) for _ in range(10)]
+    edges += [(b, a) for a, b in rng.sample(edges, 15)]
+    edges += rng.sample(edges, 10)
+    rng.shuffle(edges)
+    return edges
+
+
+def test_connected_components_local_finish_matches_loop(spark, conf_set):
+    """Both paths of connected_components (the driver-side union-find
+    under the broadcast threshold, the Spark loop above it) return the
+    BFS reference labels: on a seeded mix of shapes, on string ids and
+    on an empty pair set. The local result is a LocalRelation; a
+    threshold of a few hundred bytes sends the same input through the
+    loop, while a graph of three pairs still fits under it."""
+    from duckdb_robust_predicate_transfer_spark.operators.cluster import (
+        connected_components)
+
+    def plan_node(df):
+        return (df._jdf.queryExecution().analyzed().getClass()
+                .getSimpleName())
+
+    mix = _graph_mix(7)
+    graphs = [
+        (spark.createDataFrame(mix, "id_a bigint, id_b bigint"), mix),
+        (spark.createDataFrame([(f"d{a:05d}", f"d{b:05d}")
+                                for a, b in mix[:60]],
+                               "id_a string, id_b string"),
+         [(f"d{a:05d}", f"d{b:05d}") for a, b in mix[:60]]),
+        (spark.createDataFrame([], "id_a bigint, id_b bigint"), []),
+    ]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    for pairs, edges in graphs:
+        want = _bfs_labels(edges)
+        local = connected_components(pairs)
+        assert plan_node(local) == "LocalRelation"
+        assert dict(map(tuple, local.collect())) == want
+        assert local.schema["node"].dataType \
+            == pairs.schema["id_a"].dataType
+        for threshold in ("-1", "300b"):
+            with conf_set(key, threshold):
+                loop = connected_components(pairs)
+                if edges:
+                    assert plan_node(loop) != "LocalRelation", threshold
+                assert dict(map(tuple, loop.collect())) == want, threshold
+    # 3 pairs = 6 directed edges x 24 bytes fit under 300 bytes
+    small = spark.createDataFrame([(5, 4), (4, 3), (9, 8)],
+                                  "id_a bigint, id_b bigint")
+    with conf_set(key, "300b"):
+        got = connected_components(small)
+        assert plan_node(got) == "LocalRelation"
+        assert sorted(map(tuple, got.collect())) == [
+            (3, 3), (4, 3), (5, 3), (8, 8), (9, 8)]
+    # a null endpoint joins nothing on either path
+    nulls = spark.createDataFrame([(1, 2), (3, None)],
+                                  "id_a bigint, id_b bigint")
+    local = sorted(map(tuple, connected_components(nulls).collect()),
+                   key=str)
+    with conf_set(key, "-1"):
+        loop = sorted(map(tuple, connected_components(nulls).collect()),
+                      key=str)
+    assert local == loop == [(1, 1), (2, 1), (3, 3), (None, None)]
+
+
+def test_dedup_clusters_matches_duckdb_on_both_paths(spark, sf_dir,
+                                                     conf_set):
+    """q_dedup_clusters against its DuckDB oracle (recursive-CTE
+    components), once through the local finish and once through the
+    Spark loop."""
+    import duckdb
+
+    from duckdb_robust_predicate_transfer_spark.workload import (ORACLE,
+                                                                  QUERIES)
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS "
+            f"SELECT * FROM '{sf_dir}/documents.parquet'")
+    want = sorted(r[0] for r in con.sql(ORACLE["q_dedup_clusters"])
+                  .fetchall())
+    n_docs = con.sql("SELECT count(*) FROM documents").fetchone()[0]
+    assert len(want) < n_docs  # some cluster actually collapses
+    got = sorted(r[0] for r in
+                 QUERIES["q_dedup_clusters"](spark, sf_dir).collect())
+    assert got == want
+    with conf_set("spark.sql.autoBroadcastJoinThreshold", "-1"):
+        got = sorted(r[0] for r in
+                     QUERIES["q_dedup_clusters"](spark, sf_dir).collect())
+    assert got == want
 
 
 def test_bitmap_escalation_requires_string_keys(spark):

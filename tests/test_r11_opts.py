@@ -91,25 +91,26 @@ def test_bucketed_asof_equals_per_user(spark, sf_dir, tmp_path):
         assert rows == expect, f"n_buckets={nb} diverged"
 
 
-def test_cc_double_jump_same_fixpoint_fewer_rounds(spark):
+def test_cc_double_jump_same_fixpoint_fewer_rounds(spark, conf_set):
     from duckdb_robust_predicate_transfer_spark.operators.cluster import (
         connected_components)
 
     # 64-node chain: worst-case diameter for its size. One propagation
     # step + two in-round contractions must contract it within 4 label-
-    # changing rounds (the single-contraction variant needed 6).
+    # changing rounds (the single-contraction variant needed 6). Run on
+    # the Spark loop (broadcasts off), not the local finish.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long")
-    capped = sorted(map(tuple, connected_components(
-        pairs, max_iters=4).collect()))
-    assert capped == [(i, 0) for i in range(64)]
-
     # star + triangle + singleton-pair mix: correctness of min labels
     mix = spark.createDataFrame(
         [(100, i) for i in (101, 102, 103)]
         + [(200, 201), (201, 202), (202, 200), (300, 301)],
         "id_a long, id_b long")
-    got = dict(connected_components(mix).collect())
+    with conf_set("spark.sql.autoBroadcastJoinThreshold", "-1"):
+        capped = sorted(map(tuple, connected_components(
+            pairs, max_iters=4).collect()))
+        got = dict(connected_components(mix).collect())
+    assert capped == [(i, 0) for i in range(64)]
     assert {n: got[n] for n in (100, 101, 102, 103)} == {
         n: 100 for n in (100, 101, 102, 103)}
     assert {got[200], got[201], got[202]} == {200}
@@ -227,37 +228,69 @@ def test_footer_ts_range_plain_int64_falls_back(tmp_path):
 
 
 def test_observation_delivered_on_parquet_write(spark, tmp_path):
-    """The stream prep (workload/pipeline.q_stream_sessionize) reads
-    its user count from an ``observe()`` riding the b0 parquet write.
-    Pin that Spark delivers observed metrics for a file write:
-    ``obs.get`` must return the row count (read on a side thread, so a
-    missing delivery fails here instead of blocking the suite)."""
+    """The stream preps (workload/pipeline.q_stream_sessionize and
+    q_stream_asof) read their user count from an ``observe()`` riding a
+    parquet write, and connected_components (operators/cluster.py) its
+    edge count from one riding ``localCheckpoint(eager=True)``. Pin
+    that Spark delivers observed metrics for both actions: ``obs.get``
+    must return the row count (read on a side thread, so a missing
+    delivery fails here instead of blocking the suite)."""
     import threading
 
     from pyspark.sql import Observation
 
-    obs = Observation()
-    df = spark.range(1234).observe(obs, F.count(F.lit(1)).alias("n"))
-    df.write.mode("overwrite").parquet(str(tmp_path / "obs"))
-    got: list = []
-    t = threading.Thread(target=lambda: got.append(obs.get), daemon=True)
-    t.start()
-    t.join(60)
-    assert got, "observed metrics were not delivered by the write"
-    assert got[0]["n"] == 1234
+    actions = {
+        "parquet write": lambda df: df.write.mode("overwrite").parquet(
+            str(tmp_path / "obs")),
+        "localCheckpoint": lambda df: df.localCheckpoint(eager=True),
+    }
+    for name, action in actions.items():
+        obs = Observation()
+        action(spark.range(1234).observe(obs, F.count(F.lit(1)).alias("n")))
+        got: list = []
+        t = threading.Thread(target=lambda: got.append(obs.get),
+                             daemon=True)
+        t.start()
+        t.join(60)
+        assert got, f"observed metrics were not delivered by the {name}"
+        assert got[0]["n"] == 1234, name
 
 
-def test_cc_pairs_canonical_same_labels(spark):
+def test_observed_returns_none_within_bound(spark):
+    """session.observed never blocks past its bound: an observation no
+    action delivered (and one never attached) reads None, a delivered
+    one reads its row."""
+    import time
+
+    from pyspark.sql import Observation
+
+    from duckdb_robust_predicate_transfer_spark.session import observed
+
+    pending = Observation()
+    spark.range(3).observe(pending, F.count(F.lit(1)).alias("n"))
+    t0 = time.perf_counter()
+    assert observed(pending, timeout_s=0.5) is None
+    assert time.perf_counter() - t0 < 10
+    assert observed(Observation()) is None
+
+    done = Observation()
+    spark.range(7).observe(done, F.count(F.lit(1)).alias("n")).collect()
+    assert observed(done) == {"n": 7}
+
+
+def test_cc_pairs_canonical_same_labels(spark, conf_set):
     """4. pairs_canonical skips the edge-dedup exchange; labels must be
-    identical to the default path on canonical (distinct, a<b) input."""
+    identical to the default path on canonical (distinct, a<b) input.
+    Run on the Spark loop (broadcasts off), not the local finish."""
     from duckdb_robust_predicate_transfer_spark.operators.cluster import (
         connected_components)
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (10, 11), (10, 12)],
         "id_a long, id_b long")
-    base = sorted(map(tuple, connected_components(pairs).collect()))
-    fast = sorted(map(tuple, connected_components(
-        pairs, pairs_canonical=True).collect()))
+    with conf_set("spark.sql.autoBroadcastJoinThreshold", "-1"):
+        base = sorted(map(tuple, connected_components(pairs).collect()))
+        fast = sorted(map(tuple, connected_components(
+            pairs, pairs_canonical=True).collect()))
     assert fast == base == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5),
                             (10, 10), (11, 10), (12, 10)]
