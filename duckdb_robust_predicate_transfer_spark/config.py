@@ -49,51 +49,29 @@ class RPTConfig:
     #: build sides where a distinct key-set shuffle would be costly)
     use_sketch: bool = False
     sketch_threshold_rows: int = 4_000_000
-    #: auto-escalate to the sketch tier when the exact key set is too big
-    #: to broadcast (est > broadcast_key_rows), replacing the shuffled
-    #: semi join with a bitmap fused into the probe scan. Default OFF,
-    #: measured clean-room at x300 (warm session, interleaved
-    #: min-of-3, exclusive machine): sketch turns Q7's 1.30x win into a
-    #: 0.90x loss and costs Q5 1.61->1.46 and Q9 0.97->0.93, tying only
-    #: Q10 — the bitmap build's explode(3x) + per-word partial-agg
-    #: shuffle approaches the exact tier's distinct shuffle once the
-    #: build lineage is tens of millions of rows, and the EAGER build
-    #: job forfeits AQE's integrated replanning of the lazy semi join.
-    #: The near-boundary observation gate (observe_est_factor) and the
-    #: degree-1 redundancy gate (skip_redundant_shuffle_semi) cover the
-    #: loser shapes without this trade. Keep for forced configs;
-    #: revisit with a cost model that prices the bitmap-build shuffle
-    #: (partitions x m/64 words) against the probe shuffle saved.
-    #: r6 regime evidence (SKETCH_REGIME_r06, x1000, leak-free A/B):
-    #: the designed win EXISTS — Q5's 9M-key orders build (gate 2b3
-    #: skips its shuffled semi) as a scan-local bitmap runs 11.5 s vs
-    #: off 30.2 s (2.6x) and beats exact rpt — but the same shape LOSES
-    #: on Q7 (14.4 vs rpt 5.5: the broadcast cascade already covers its
-    #: lineitem reduction and the eager bitmap build is pure add-on).
-    #: Stays default-off until escalation is priced by expected probe
-    #: reduction, not build size alone.
-    sketch_auto: bool = False
     #: probe-side tier choice (r8): when the probe has at least this
     #: many estimated rows, a key-set op ships as a scan-fused Bloom
-    #: BITMAP even though the build is broadcast-tier — the bitmap's
-    #: k bit-tests cost ~4-5x less per probe row than a broadcast-hash
-    #: semi's hash-relation lookup (measured on a 50M-row string-key
-    #: fact: bloom 0.8-1.5 s vs left_semi 4.2-5.0 s for the SAME
-    #: reduction), and on a huge scan the per-row term is the whole
-    #: cost. This is exactly why Spark's native InjectRuntimeFilter
-    #: ships a bloom rather than a semi, and the reference's filter IS
-    #: a bloom (bloom_filter.cpp:27-78) — the exact-key semi remains
-    #: the right tool for smaller probes, where its zero false
-    #: positives feed cleaner statistics downstream and the build cost
-    #: difference dominates. FP rows (~1%) are dropped by the final
-    #: exact join, so results are identical. 0 disables (exact semis
-    #: everywhere, the pre-r8 behavior). DSv2 probes keep the exact
-    #: key set (it feeds in-scan row-group pruning + the adaptive row
-    #: filter, strictly better than any row predicate). STRING/BINARY
-    #: probe keys only: integer keys probe a broadcast hash relation as
-    #: cheaply as a bit-test and the lazy semi keeps AQE replanning —
-    #: the unconditioned escalation reproduced the r5/r6 sketch A/Bs'
-    #: Q7 loss at x1000 (6.3->19.0 s; in-round r8 regression, fixed).
+    #: filter even though the build is broadcast-tier — the filter's
+    #: might_contain test costs ~4-5x less per probe row than a
+    #: broadcast-hash semi's hash-relation lookup (measured with the
+    #: earlier hand-built bitmap on a 50M-row string-key fact: bloom
+    #: 0.8-1.5 s vs left_semi 4.2-5.0 s for the SAME reduction), and on
+    #: a huge scan the per-row term is the whole cost. This is exactly
+    #: why Spark's native InjectRuntimeFilter ships a bloom rather than
+    #: a semi, and the reference's filter IS a bloom
+    #: (bloom_filter.cpp:27-78) — the exact-key semi remains the right
+    #: tool for smaller probes, where its zero false positives feed
+    #: cleaner statistics downstream and the build cost difference
+    #: dominates. FP rows (~0.3% at full load, bloom.py) are dropped by
+    #: the final exact join, so results are identical. 0 disables
+    #: (exact semis everywhere, the pre-r8 behavior). DSv2 probes keep
+    #: the exact key set (it feeds in-scan row-group pruning + the
+    #: adaptive row filter, strictly better than any row predicate).
+    #: STRING/BINARY probe keys only: integer keys probe a broadcast
+    #: hash relation as cheaply as a bloom test and the lazy semi keeps
+    #: AQE replanning — the unconditioned escalation reproduced the
+    #: r5/r6 sketch A/Bs' Q7 loss at x1000 (6.3->19.0 s; in-round r8
+    #: regression, fixed).
     bloom_probe_min_rows: int = 8_000_000
     #: skip the whole transfer when every relation except the largest is
     #: small enough to broadcast (estimated rows after local filters): the

@@ -34,6 +34,7 @@ from .plans.graph import (JoinGraph, execution_order_dag, join_order_dag,
                           largest_root_tree)
 from .plans.ir import JoinEdge, TableNode
 from .plans.schedule import plan_schedule
+from .session import bind, clone_session
 
 #: default guess for the selectivity of a local filter, used only to rank
 #: tables for root choice / level ordering (the reference leans on host
@@ -122,8 +123,8 @@ _CEDE_CACHE: dict = {}
 CEDE_EXTRA_PROBE_FRAC = 0.15
 
 
-#: guards every write to the module memos above and the session clone
-#: (Engine.sql may run on several threads over one SparkSession)
+#: guards every write to the module memos above (Engine.sql may run on
+#: several threads over one SparkSession)
 _LOCK = threading.Lock()
 
 #: memo-lookup sentinel: a cached value may itself be None
@@ -139,33 +140,6 @@ def _memo_put(cache: dict, key, value, cap: int = 256):
             cache.pop(next(iter(cache)))
         cache[key] = value
     return value
-
-
-def _clone_session(spark: SparkSession) -> SparkSession:
-    """A new session with a copy of ``spark``'s SQL conf and temp views
-    (``cloneSession``; ``newSession`` would drop the runtime confs).
-    Conf writes and view shadows in the clone never reach ``spark``.
-    PySpark's constructor re-points ``RDD.toDF`` at the newest session;
-    it is put back so the clone stays private."""
-    from pyspark import RDD
-
-    with _LOCK:
-        to_df = RDD.toDF
-        clone = SparkSession(spark.sparkContext,
-                             spark._jsparkSession.cloneSession())
-        RDD.toDF = to_df
-    return clone
-
-
-def _bind(df: DataFrame, s: SparkSession) -> DataFrame:
-    """``df``'s analyzed plan as a fresh DataFrame of session ``s``:
-    planning and jobs on it run under ``s``'s conf, and planning it
-    leaves ``df``'s own plan unfixed. Not ``s.table(name)``: replacing
-    a temp view uncaches every cached plan that reads it by name, so
-    shadowing ``name`` would drop the transfer's persisted builds."""
-    jds = s._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        s._jsparkSession, df._jdf.queryExecution().analyzed())
-    return DataFrame(jds, s)
 
 
 #: the planner confs that decide where Spark plants runtime blooms; the
@@ -264,7 +238,7 @@ class Engine:
         identical — the reference's core invariant (README.md:21).
 
         Each rewrite-enabled statement runs in its own clone of the
-        caller's session (_clone_session), as the reference rewrites
+        caller's session (session.clone_session), as the reference rewrites
         each plan inside one optimizer pass that only reads its
         settings: the shadows, the eager transfer jobs and the
         runtime-bloom arbitration's one conf write live in the clone,
@@ -289,7 +263,7 @@ class Engine:
         self.last_cede = False
         if not auto_rpt or not cfg.enabled or self.catalog is None:
             return self.spark.sql(query)
-        s = _clone_session(self.spark)
+        s = clone_session(self.spark)
         # one filtering mechanism per edge (config.suppress_native_rf).
         # With the caller's injection on, the statement plans and runs
         # its eager jobs (observe counts, min/max aggs, key-set builds,
@@ -401,7 +375,7 @@ class Engine:
         its own conf and views."""
         from .plans.catalyst_order import native_bloom_edges
 
-        probe = _clone_session(s)
+        probe = clone_session(s)
         probe.conf.set(_RF_ENABLED, "true")
         table_paths = {t: self.catalog.path(t)
                        for t in self.catalog.known_tables()}
@@ -669,7 +643,7 @@ class Engine:
                 # one virtual node per subquery occurrence; one edge per
                 # outer instance it correlates with
                 valias = f"__sub{vi}_{gi}_{t}"
-                virt_rels[valias] = Rel(t, df=_bind(self.table(t), s))
+                virt_rels[valias] = Rel(t, df=bind(self.table(t), s))
                 by_outer: dict = {}
                 for inner_col, oalias, ocol in group:
                     by_outer.setdefault(oalias, []).append(
@@ -702,7 +676,7 @@ class Engine:
         # the eager jobs built on them run under the statement's conf
         rels: dict = {}
         for alias, inst in ext.instances.items():
-            d = _bind(self.table(inst.table), s).alias(alias)
+            d = bind(self.table(inst.table), s).alias(alias)
             if inst.table in shared_tables:
                 # a local filter baked into a shared-subquery table's
                 # shadow would leak into the subquery's own scan and
@@ -751,7 +725,7 @@ class Engine:
                 # value, and a bail returns ``df``
                 host_pre = _memo_put(
                     _PREFILTER_CACHE, pk,
-                    scan_prefilter_pairs(_bind(df, s), alias_paths))
+                    scan_prefilter_pairs(bind(df, s), alias_paths))
             if host_pre:
                 excl = ({v[0] for v in virt_edges}
                         | set(virt_rels)

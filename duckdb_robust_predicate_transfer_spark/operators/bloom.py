@@ -1,205 +1,150 @@
-"""Bloom-filter sketch transfer tier — fully JVM-side.
+"""Bloom-filter sketch transfer tier, built from Spark's own filter.
 
 Plays the role of the reference's PTBloomFilter (bloom_filter.cpp:
-27-78 — a DataChunk wrapper over a blocked Bloom filter living in its
-DuckDB fork): when a build side's key set is too large to ship as an
-exact key DataFrame, transfer a fixed-size bitmap sketch instead.
+27-78), which is a thin wrapper over its host engine's blocked Bloom
+filter: when a build side's key set is too large to ship as an exact
+key DataFrame, transfer a fixed-size filter instead. Here the host
+engine is Spark, so both halves are Catalyst's runtime-filter
+expressions, the ones ``InjectRuntimeFilter`` plants:
 
-Not a port: the reference uses an Arrow-Acero blocked filter with
-cache-line blocks and a 1024-entry mask table (README.md:25-32). The
-first Spark formulation here used per-partition numpy bitmaps +
-``treeAggregate`` and a pandas-UDF probe — correct, but every probe
-row crossed the JVM->Arrow->Python boundary, and at bench scale the
-sketch leg ran ~2x SLOWER than no transfer at all. This version keeps
-both sides inside whole-stage codegen:
+- **Build**: ONE aggregate job over the build lineage,
+  ``bloom_filter_agg(xxhash64(keys), items, bits)``
+  (``BloomFilterAggregate``). The same one-row result carries
+  ``count(1)`` and the min/max of ``stat_cols``, so the observed
+  cardinality and the CreateBF min/max piggyback
+  (physical_create_bf.cpp:201-242, 331-345) cost no extra scan.
+- **Probe**: ``might_contain(<scalar subquery>, xxhash64(keys))``
+  (``BloomFilterMightContain``), a codegen filter inside the probe
+  scan's stage: no join, no UDF, no shuffle. The subquery reads a
+  one-row ``LocalRelation`` holding the filter bytes. A binary
+  literal would work too, but it prints the whole filter as hex in
+  every plan string.
 
-- **Build**: ``xxhash64`` -> k=3 bit positions per key (classic
-  Kirsch-Mitzenmatter double hashing, in SQL arithmetic) ->
-  ``explode`` -> ``groupBy(word).agg(bit_or(bit))``. The map-side
-  partial aggregate collapses each partition to at most m/64 words
-  before the shuffle, so shuffle volume is bounded by
-  partitions x m/64 regardless of build row count — the same bound a
-  treeAggregate gives, with zero Python. The driver receives the
-  SPARSE word list once (<= m/8 bytes total), never a bitmap per
-  partition.
-- **Probe**: the dense bitmap ships back as ONE broadcast row holding
-  an ``array<long>``; the membership test is k ``element_at`` +
-  bit-shift SQL expressions fused into the probe scan's codegen stage
-  (PhysicalUseBF's LookupSel -> selection vector,
-  physical_use_bf.cpp:128-190). No join, no UDF, no shuffle.
+What is kept from the reference is the *sizing rule*: bits =
+NextPowerOfTwo(max(512, est_rows * 12)), with a one-shot rebuild at
+the observed cardinality when the estimate was too low
+(physical_create_bf.cpp:385-406). Spark picks the hash count for
+m / 12 items (k = 8), which gives about 0.3% false positives at full
+load; they pass the probe and the later exact join drops them.
 
-What we keep from the reference is the *sizing rule*: bits =
-NextPowerOfTwo(max(512, est_rows * 12)), ~8+ bits/key after rounding
-up, with a one-shot rebuild at the observed cardinality when the
-estimate was too low (physical_create_bf.cpp:385-406).
+Spark caps every filter at ``runtime.bloomFilter.maxNumBits`` (64M
+bits) and ``maxNumItems`` (4M), which would silently shrink a large
+sketch and raise its false-positive rate. The build therefore runs in
+a clone of its DataFrame's session with both caps set from the sizing
+rule; the caller's conf is never written.
 
-Scale note: the bitmap transits the driver (m/8 bytes, ~4.5 MB for a
-3M-key build) and is broadcast once. Beyond ~100M distinct keys
-(~150 MB bitmap) broadcasting stops paying and the exact key-set
-semi-join tier is the right tool — callers gate on
-``sketch_threshold_rows`` for the lower bound and should prefer exact
-transfer above ``broadcast_key_rows``-scale builds.
+The trade: the filter travels to the driver once (m/8 bytes, 4 MB for
+a 3M-key build) and then inside the probe stage's task binary, as
+Spark's own runtime filters do, so every probe task deserializes it.
+Measured on a 4-core host with a 32 MB filter (20M string keys)
+probing 30M generated rows: the build took 13 s, and the probe 5.1-5.5
+s in 8 tasks but 8.4-9.1 s in 64, about 60 ms of wall time per added
+task. Very large filters therefore favour fewer probe tasks. Callers
+gate on ``sketch_threshold_rows`` below and on ``SKETCH_MAX_KEYS``
+above.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, functions as F
 
-# k=3 probes: at the 12-bits/key sizing below the false-positive rate is
-# (1 - e^(-3/12))^3 ~ 1% — ample for a pre-filter whose survivors still
-# pass through the exact join — and the probe predicate (the per-row cost
-# on the BIG side) is 40% cheaper than the classic k=5.
-N_HASHES = 3
+from ..session import bind, clone_session
+
+#: the sizing rule's bits per expected key, and the build's overflow
+#: bound: a filter of m bits is sized for m / 12 keys
+BITS_PER_KEY = 12
+
+_CAPS = "spark.sql.optimizer.runtime.bloomFilter."
+_CATALYST = "org.apache.spark.sql.catalyst.expressions."
+_AGG = _CATALYST + "aggregate.BloomFilterAggregate"
+_MIGHT_CONTAIN = _CATALYST + "BloomFilterMightContain"
 
 
 def _size_bits(est_rows: float) -> int:
-    bits = max(512, int(est_rows) * 12)
+    bits = max(512, int(est_rows) * BITS_PER_KEY)
     return 1 << (bits - 1).bit_length()
 
 
-def _pos_sql(h: str, i: int, m_bits: int) -> str:
-    """SQL for bit position i of 64-bit hash column ``h`` via double
-    hashing: pos_i = (h1 + i * h2) mod m with h1 = low 32 bits,
-    h2 = high 32 bits | 1 (odd => full-period stepping). All terms stay
-    below 5 * 2^32, no signed overflow."""
-    h1 = f"({h} & 4294967295)"
-    h2 = f"(shiftrightunsigned({h}, 32) | 1)"
-    return f"pmod({h1} + {i} * {h2}, {m_bits})"
+def _catalyst(spark, cls: str, *args: Column,
+              aggregate: bool = False) -> Column:
+    """A Column over a new Catalyst ``cls`` of ``args``: the only place
+    this module builds Spark's filter expressions."""
+    utils = spark._jvm.org.apache.spark.sql.classic.ExpressionUtils
+    try:
+        e = reduce(getattr, cls.split("."), spark._jvm)(
+            *[utils.expression(a._jc) for a in args])
+        if aggregate:
+            e = e.toAggregateExpression()
+    except Exception as exc:
+        raise RuntimeError(f"cannot build Spark's {cls}: {exc}") from exc
+    return Column(utils.column(e))
 
 
 class BloomSketch:
-    """Driver-side handle: dense bitmap as int64 words + sizing info.
+    """Driver-side handle: Spark's serialized filter (None for an empty
+    build) plus the observed row count. ``len(sketch)`` is the filter's
+    bit array in bytes (the reference exposes the same through its
+    filter allocation, bloom_filter.hpp:22-57). ``ranges`` carries
+    per-``stat_cols`` (min, max) folded into the build pass."""
 
-    ``len(sketch)`` is the bitmap size in bytes (the reference exposes
-    the same through its filter allocation, bloom_filter.hpp:22-57).
-    ``ranges`` carries per-build-column (min, max) when the build pass
-    was asked to fold them in (stat_cols) — the CreateBF min/max
-    piggyback, physical_create_bf.cpp:331-345.
-    """
-
-    def __init__(self, words: list, m_bits: int, n_rows: int,
+    def __init__(self, data: "bytes | None", m_bits: int, n_rows: int,
                  ranges: dict | None = None):
-        self.words = words
-        self.m_bits = m_bits
+        self.data = data
         self.n_rows = n_rows
         self.ranges = ranges or {}
+        self.m_bits = m_bits
+        if data is not None:
+            # serialized header: version, hash count, [v2: seed], words
+            off = 8 if int.from_bytes(data[:4], "big") == 1 else 12
+            self.m_bits = 64 * int.from_bytes(data[off:off + 4], "big")
 
     def __len__(self) -> int:
         return self.m_bits // 8
-
-
-def _build_once(hashes: DataFrame, m_bits: int, stat_cols=()) -> tuple:
-    """One distributed JVM build pass -> (dense int64 word list,
-    observed build row count, {stat_col: (min, max)}). The per-word
-    position count rides along in the same aggregation: its total is
-    exactly n_rows * k, so the observed cardinality costs no extra job
-    (the reference counts rows in its sink for the same purpose,
-    physical_create_bf.cpp:201-242). min/max of ``stat_cols`` ride the
-    same per-word partials and fold to global extrema on the driver —
-    the explode's x3 row duplication cannot change a min or a max, and
-    the per-word shuffle rows only grow by a few columns, so the whole
-    min/max+count+bitmap bundle costs ONE scan of the build lineage.
-    """
-    pos_arr = ", ".join(_pos_sql("__h", i, m_bits) for i in range(N_HASHES))
-    carry = [c for c in stat_cols]
-    stat_aggs = [a for c in carry
-                 for a in (F.min(c).alias(f"__min_{c}"),
-                           F.max(c).alias(f"__max_{c}"))]
-    # Arrow-batched driver transfer (toPandas): the word-partial result
-    # is m/64 rows and the row-at-a-time py4j collect() was measured as
-    # the dominant cost of the whole build job (~1 s at 131k words where
-    # the distributed agg itself took ~0.5 s)
-    pdf = (hashes
-           .selectExpr(f"explode(array({pos_arr})) AS pos",
-                       *[f"`{c}`" for c in carry])
-           .selectExpr("shiftright(pos, 6) AS word",
-                       "shiftleft(1L, cast(pos % 64 AS int)) AS bit",
-                       *[f"`{c}`" for c in carry])
-           .groupBy("word")
-           .agg(F.bit_or("bit").alias("bits"),
-                F.count(F.lit(1)).alias("cnt"), *stat_aggs)
-           .toPandas())
-    n_rows = int(pdf["cnt"].sum()) // N_HASHES
-    ranges = {}
-    for c in carry:
-        col = pdf[f"__min_{c}"].dropna()
-        if len(col):
-            lo, hi = col.min(), pdf[f"__max_{c}"].dropna().max()
-            # numpy scalars -> plain Python so F.lit() gets exact types
-            lo = lo.item() if hasattr(lo, "item") else lo
-            hi = hi.item() if hasattr(hi, "item") else hi
-            ranges[c] = (lo, hi)
-    dense = np.zeros(m_bits // 64, dtype=np.int64)
-    if len(pdf):
-        dense[pdf["word"].to_numpy(dtype=np.int64)] = \
-            pdf["bits"].to_numpy(dtype=np.int64)
-    # keep the ndarray: at sketch_max_keys the bitmap is ~12M words, and
-    # materializing a Python int list on every build is pure waste when
-    # only the non-Arrow probe handoff needs plain ints — that branch
-    # converts at probe time (ADVICE r5; the r4 numpy-rejection
-    # regression is still covered by test_bloom_probe_without_arrow)
-    return dense, n_rows, ranges
 
 
 def build_bloom(df: DataFrame, cols, est_rows: float,
                 stat_cols=()) -> BloomSketch:
     """Distributed Bloom build with the reference's resize rule: if the
     observed build cardinality overflows the allocated bits (more than
-    ~m/12 keys for our 12-bits/key sizing), rebuild once at the
-    observed size — the analogue of PhysicalCreateBF rehashing into a
-    bigger filter on underestimate (physical_create_bf.cpp:385-406).
-    Estimates from parquet footers are upper bounds (builds only
-    shrink), so the second pass fires only when the caller guessed.
-    ``stat_cols`` (a subset of df's columns) fold min/max into the same
-    build pass; results land on the returned sketch's ``ranges``."""
-    hashes = df.select(F.xxhash64(*cols).alias("__h"), *stat_cols)
+    m/12 keys), rebuild once at the observed size, the analogue of
+    PhysicalCreateBF rehashing into a bigger filter on underestimate
+    (physical_create_bf.cpp:385-406). Estimates from parquet footers
+    are upper bounds (builds only shrink), so the second pass fires
+    only when the caller guessed. ``stat_cols`` (a subset of df's
+    columns) fold min/max into the same build pass; results land on
+    the returned sketch's ``ranges``."""
+    spark = clone_session(df.sparkSession)
+    build = bind(df, spark)
+    stats = [a for c in stat_cols for a in (F.min(c), F.max(c))]
     est = est_rows
     for attempt in range(2):
         m_bits = _size_bits(est)
-        words, n_rows, ranges = _build_once(hashes, m_bits, stat_cols)
-        if n_rows * 12 <= m_bits or attempt == 1:
+        items = m_bits // BITS_PER_KEY
+        spark.conf.set(_CAPS + "maxNumBits", str(m_bits))
+        spark.conf.set(_CAPS + "maxNumItems", str(items))
+        bf = _catalyst(spark, _AGG, F.xxhash64(*cols), F.expr(f"{items}L"),
+                       F.expr(f"{m_bits}L"), aggregate=True)
+        row = build.agg(bf, F.count(F.lit(1)), *stats).first()
+        n_rows = row[1]
+        if n_rows * BITS_PER_KEY <= m_bits or attempt == 1:
             break
         est = n_rows
-    return BloomSketch(words, m_bits, n_rows, ranges)
+    ranges = {c: (row[2 + 2 * i], row[3 + 2 * i])
+              for i, c in enumerate(stat_cols) if row[2 + 2 * i] is not None}
+    return BloomSketch(row[0], m_bits, n_rows, ranges)
 
 
 def probe_bloom(df: DataFrame, cols, sketch: BloomSketch) -> DataFrame:
-    """Filter df to rows whose key hash might be in the filter. The
-    bitmap rides in as one broadcast row; the k bit tests are plain SQL
-    expressions inside the probe scan's codegen stage — false positives
-    pass (later exact joins drop them), true matches never fail."""
+    """Filter df to rows whose key hash might be in the filter: false
+    positives pass (later exact joins drop them), true matches never
+    fail. An empty build keeps no rows."""
+    if sketch.data is None:
+        return df.where(F.lit(False))
     spark = df.sparkSession
-    # bitmap handoff, session-adaptive (r4 regression + its fix):
-    # - Arrow ON: one-row pandas frame rides the Arrow path — the fast
-    #   lane that closed the sketch tier to ~1.1x of exact keys (the
-    #   py4j transfer dominated the build job before r4).
-    # - Arrow OFF (the DRIVER's harness session): plain Python ints —
-    #   the non-Arrow row verifier rejects numpy scalars
-    #   (FIELD_DATA_TYPE_UNACCEPTABLE numpy.int64, the r4 red row).
-    # Locked by test_bloom_probe_without_arrow.
-    arrow_on = "true" == str(spark.conf.get(
-        "spark.sql.execution.arrow.pyspark.enabled", "false")).lower()
-    if arrow_on:
-        import pandas as pd
-
-        words = np.asarray(sketch.words, dtype=np.int64)
-        arr_df = spark.createDataFrame(pd.DataFrame({"__bm": [words]}),
-                                       schema="__bm array<bigint>")
-    else:
-        words = [int(w) for w in sketch.words]
-        arr_df = spark.createDataFrame([(words,)],
-                                       schema="__bm array<bigint>")
-    out = (df.withColumn("__h", F.xxhash64(*cols))
-           .crossJoin(F.broadcast(arr_df)))
-    conds = []
-    for i in range(N_HASHES):
-        p = _pos_sql("__h", i, sketch.m_bits)
-        conds.append(F.expr(
-            f"(shiftright(element_at(__bm, cast(shiftright({p}, 6) AS int)"
-            f" + 1), cast({p} % 64 AS int)) & 1) = 1"))
-    pred = conds[0]
-    for c in conds[1:]:
-        pred = pred & c
-    return out.filter(pred).drop("__bm", "__h")
+    # a pyarrow Table always takes the Arrow path to a LocalRelation,
+    # whatever spark.sql.execution.arrow.pyspark.enabled says
+    bf = spark.createDataFrame(pa.table({"bf": [sketch.data]})).scalar()
+    return df.where(_catalyst(spark, _MIGHT_CONTAIN, bf, F.xxhash64(*cols)))

@@ -56,10 +56,10 @@ _MINMAX_TYPES = (
 REDUCTION_DECAY = 0.2
 
 #: the sketch tier ships builds of at most this many estimated keys: the
-#: bitmap is m = NextPow2(12 bits/key), so 64M keys -> 128 MB broadcast —
-#: about the ceiling where shipping it to every executor still beats a
-#: probe-wide shuffle. Beyond, the exact shuffle-tier semi join remains
-#: the right tool (bloom.py module docstring).
+#: filter is m = NextPow2(12 bits/key), so 64M keys -> a 128 MB filter
+#: in every probe task — about the ceiling where shipping it still
+#: beats a probe-wide shuffle. Beyond, the exact shuffle-tier semi join
+#: remains the right tool (bloom.py module docstring).
 SKETCH_MAX_KEYS = 64_000_000
 
 #: gate 1 skips transfer from build sides estimated larger than this
@@ -366,22 +366,12 @@ def _string_keys(df: DataFrame, cols) -> bool:
 
 
 def _sketch_tier(cfg, est: float) -> bool:
-    """Does this build ship as a Bloom bitmap instead of exact keys?
-
-    Two routes: the explicit opt-in (``use_sketch`` above
-    ``sketch_threshold_rows``, the q_sketch_transfer surface) and the
-    default auto-escalation (``sketch_auto``) for builds whose exact key
-    set is too big to broadcast — there the alternative is a shuffled
-    semi join that re-shuffles the whole probe, the measured
-    TPCH_SCALE_X1000 Q3/Q8/Q9 downside, while the bitmap's membership
-    test fuses into the probe scan (the reference's PTBloomFilter never
-    shuffles the probe, physical_use_bf.cpp:128-190). Capped at
-    ``SKETCH_MAX_KEYS``: an unknown (inf) or huge estimate keeps the
-    exact tier."""
-    if cfg.use_sketch and est > cfg.sketch_threshold_rows:
-        return True
-    return (cfg.sketch_auto and cfg.broadcast_key_rows < est
-            and est <= SKETCH_MAX_KEYS)
+    """Does this build ship as a Bloom filter instead of exact keys?
+    Only by explicit opt-in: ``use_sketch`` above
+    ``sketch_threshold_rows`` (the q_sketch_transfer surface). The
+    gates route other builds to the sketch tier themselves (gate 2f's
+    rescue, the probe-side ``bloom_probe_min_rows`` choice)."""
+    return cfg.use_sketch and est > cfg.sketch_threshold_rows
 
 
 class TransferState:
@@ -624,7 +614,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
             # subtree (the jq10/jq11/jq13 gap vs native's
             # subtree-built blooms, JOB_REGIME_r07). Re-express it
             # scan-locally when the guards hold; never replace a
-            # live shuffled semi (the r6 sketch_auto mistake).
+            # live shuffled semi (the r6 sketch-escalation mistake).
             # both passes are eligible: a backward hop whose
             # observed build turns out broadcast-tier (jq15's
             # 234-key movie_keyword after its kw semi) passes gate
@@ -657,13 +647,13 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
             if not ok:
                 return drop("gate2b3", est, bkr)
             if op.phase == "forward" and op.build not in s.observed:
-                # forward rescue goes straight to the bitmap: the
-                # bloom build's word-count totals the observed
-                # cardinality for free (_build_once), so a separate
-                # count scan would only duplicate it; weakness/
-                # overflow are re-checked post-build and the probe
-                # withheld then (Decision.rescue). The apply step
-                # persists the build first.
+                # forward rescue goes straight to the filter: the
+                # bloom build's one job also returns count(1)
+                # (build_bloom), so a separate count scan would only
+                # duplicate it; weakness/overflow are re-checked
+                # post-build and the probe withheld then
+                # (Decision.rescue). The apply step persists the
+                # build first.
                 force_sketch = rescue = True
             else:
                 # backward hops must PROVE broadcast-tier — gate 3a
@@ -1064,13 +1054,13 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                 landed = "minmax"
 
         if d.tier == "sketch":
-            # sketch tier: ship a fixed-size bitmap instead of the key
-            # set — for build sides whose distinct-key shuffle would
+            # sketch tier: ship a fixed-size Bloom filter instead of the
+            # key set — for build sides whose distinct-key shuffle would
             # dominate (PTBloomFilter's role, bloom_filter.cpp:27-78).
-            # count + min/max + bitmap all ride ONE scan of the build
-            # lineage (bloom._build_once's per-word partials): r3
-            # measured the old separate eager min/max job as the entire
-            # 1.37x sketch-vs-exact residual on the cascade.
+            # count + min/max + filter all ride ONE aggregate over the
+            # build lineage (build_bloom): r3 measured the old separate
+            # eager min/max job as the entire 1.37x sketch-vs-exact
+            # residual on the cascade.
             from .bloom import build_bloom, probe_bloom
 
             t0 = time.perf_counter()

@@ -10,8 +10,9 @@ else is scale-independent.
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "drpt-spark", master: str | None = None,
@@ -79,6 +80,38 @@ def get_spark(app_name: str = "drpt-spark", master: str | None = None,
                 os.environ.get("DRPT_LOCAL_DIR", "/tmp/drpt-spark-local"))
     )
     return b.getOrCreate()
+
+
+#: guards the ``RDD.toDF`` swap in ``clone_session`` (sessions may be
+#: cloned on several threads at once)
+_LOCK = threading.Lock()
+
+
+def clone_session(spark: SparkSession) -> SparkSession:
+    """A new session with a copy of ``spark``'s SQL conf and temp views
+    (``cloneSession``; ``newSession`` would drop the runtime confs).
+    Conf writes and view shadows in the clone never reach ``spark``.
+    PySpark's constructor re-points ``RDD.toDF`` at the newest session;
+    it is put back so the clone stays private."""
+    from pyspark import RDD
+
+    with _LOCK:
+        to_df = RDD.toDF
+        clone = SparkSession(spark.sparkContext,
+                             spark._jsparkSession.cloneSession())
+        RDD.toDF = to_df
+    return clone
+
+
+def bind(df: DataFrame, s: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a fresh DataFrame of session ``s``:
+    planning and jobs on it run under ``s``'s conf, and planning it
+    leaves ``df``'s own plan unfixed. Not ``s.table(name)``: replacing
+    a temp view uncaches every cached plan that reads it by name, so
+    shadowing ``name`` would drop the transfer's persisted builds."""
+    jds = s._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        s._jsparkSession, df._jdf.queryExecution().analyzed())
+    return DataFrame(jds, s)
 
 
 #: How long ``observed`` waits for an observation's metrics. Delivery

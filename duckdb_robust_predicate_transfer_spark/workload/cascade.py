@@ -104,30 +104,26 @@ def ensure_fixture(spark: SparkSession, base_dir: str = DEFAULT_DIR) -> str:
 #: and would each cost a key-set job. minmax stays gated by probe size.
 CASCADE_CONFIG = RPTConfig(pass_mode="forward_only")
 
-#: same schedule but the mid -> fact hop ships a Bloom bitmap instead of
+#: same schedule but the mid -> fact hop ships a Bloom filter instead of
 #: the exact key set (the reduced mid's ~600k estimated keys exceed the
 #: threshold): the tier for build sides whose distinct-key broadcast
 #: would not fit — at 100 TB the common case, and the reference's only
 #: mechanism (PTBloomFilter). dim -> mid stays exact (60k est keys).
-#: r3 measured this leg at ~1.4-1.5x the exact leg; r4 closed the gap to
-#: ~1.1x by (a) folding count+min/max+bitmap into ONE scan of the build
-#: lineage (bloom._build_once's per-word partials — the separate eager
-#: min/max job was the structural residual) and (b) moving the word
-#: collect and the bitmap broadcast onto the Arrow path (the py4j
-#: row-at-a-time transfer dominated the build job). The remaining ~10%
-#: is the bitmap's driver round-trip, which is why the default config
-#: still prefers the exact tier until the key set cannot broadcast
-#: (sketch_threshold_rows) — here it is forced purely to keep the tier
-#: exercised and measured.
+#: The build is one aggregate job (Spark's bloom_filter_agg plus the
+#: count and min/max, operators/bloom.py) and the probe a might_contain
+#: filter in the fact scan. The default config still prefers the exact
+#: tier until the key set cannot broadcast (sketch_threshold_rows):
+#: here the sketch is forced purely to keep the tier exercised and
+#: measured.
 CASCADE_SKETCH_CONFIG = CASCADE_CONFIG.with_(
     use_sketch=True, sketch_threshold_rows=500_000)
 
 
 #: the cascade leg set, leg name -> (config, native_rf): no transfer,
-#: the exact-key cascade, the bitmap mid -> fact hop, and Spark's native
-#: one-hop blooms (set_native_rf lowers the 10GB application-side scan
-#: gate so InjectRuntimeFilter fires at fixture sizes). Config None is
-#: the query's own default.
+#: the exact-key cascade, the Bloom-filter mid -> fact hop, and Spark's
+#: native one-hop blooms (set_native_rf lowers the 10GB
+#: application-side scan gate so InjectRuntimeFilter fires at fixture
+#: sizes). Config None is the query's own default.
 LEGS = {"off": (BASELINE, False), "rpt": (None, False),
         "rpt_sketch": (CASCADE_SKETCH_CONFIG, False),
         "native_rf": (BASELINE, True)}

@@ -150,10 +150,13 @@ def rotated_min(runs: int, items, legs, time_leg, after_run=None) -> dict:
 
 
 def count_native_blooms(df) -> int:
-    """Number of native runtime bloom probes (might_contain) in the
-    optimized logical plan — plan-shape evidence for bench artifacts."""
+    """Number of native runtime blooms in the optimized logical plan —
+    plan-shape evidence for bench artifacts. Counts the blooms' build
+    subqueries (``bloom_filter_agg``), not ``might_contain``: the
+    sketch tier's own probes use might_contain over a prebuilt filter
+    (operators/bloom.py) and are not Spark-planted."""
     return df._jdf.queryExecution().optimizedPlan().toString().count(
-        "might_contain")
+        "bloom_filter_agg(")
 
 
 REVENUE = "l_extendedprice * (1 - l_discount)"

@@ -127,7 +127,7 @@ def q_star_join_forced(spark, sf_dir):
 @query("q_sketch_transfer", oracle=FLAGSHIP_ORACLE)
 def q_sketch_transfer(spark, sf_dir):
     """Flagship through the Bloom-SKETCH tier: every transfer ships a
-    fixed-size bitmap instead of an exact key set (PTBloomFilter's
+    fixed-size Bloom filter instead of an exact key set (PTBloomFilter's
     role, bloom_filter.cpp:27-78) — the scale path for build sides
     whose distinct-key shuffle would dominate. False positives only
     ever ADD probe rows the final join drops, so the oracle (the same

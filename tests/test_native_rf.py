@@ -208,6 +208,30 @@ def test_native_bloom_edges_extraction(spark):
         spark.conf.unset(_CREATE)
 
 
+def test_native_detectors_skip_sketch_probes(spark):
+    """The sketch tier probes with might_contain over a prebuilt filter
+    (operators/bloom.py); that is not a Spark-planted bloom.
+    count_native_blooms must not count it, and native_bloom_edges must
+    give it no resolved build (an unresolved build counts as covered),
+    so composed runs never mistake a sketch op for a native bloom."""
+    from duckdb_robust_predicate_transfer_spark.operators.bloom import (
+        build_bloom, probe_bloom)
+    from duckdb_robust_predicate_transfer_spark.plans.catalyst_order import (
+        native_bloom_edges)
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    od = spark.read.parquet(f"{SF}/orders.parquet").filter(
+        F.col("o_orderpriority") == "1-URGENT")
+    probed = probe_bloom(li, ["l_orderkey"],
+                         build_bloom(od, ["o_orderkey"], est_rows=5000))
+    assert count_native_blooms(probed) == 0
+    edges = native_bloom_edges(
+        probed, {"lineitem": f"{SF}/lineitem.parquet",
+                 "orders": f"{SF}/orders.parquet"})
+    assert edges is not None
+    assert all(e["build_table"] is None for e in edges)
+
+
 def test_composed_dual_arbitration_by_bloom_coverage(spark):
     """Engine._uncovered_rf_evidence: an ENGAGED query keeps injection
     suppressed when every native bloom's edge is covered by an applied

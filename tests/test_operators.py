@@ -52,10 +52,8 @@ def test_bloom_resize_on_underestimate(spark, sf_dir):
 
 def test_bloom_probe_without_arrow(spark, sf_dir):
     """Driver-parity regression (r4 red row): the harness session does
-    NOT enable spark.sql.execution.arrow.pyspark.enabled, so the bitmap
-    handoff must survive the non-Arrow createDataFrame row verifier,
-    which rejects numpy scalars. Locks bloom.py shipping plain Python
-    ints on both the build return and the probe broadcast row."""
+    NOT enable spark.sql.execution.arrow.pyspark.enabled, so the filter
+    handoff must build and probe with Arrow off as well."""
     from duckdb_robust_predicate_transfer_spark.operators.bloom import (
         build_bloom, probe_bloom)
 
@@ -66,11 +64,6 @@ def test_bloom_probe_without_arrow(spark, sf_dir):
     spark.conf.set(key, "false")
     try:
         bloom = build_bloom(orders, ["o_orderkey"], est_rows=5000)
-        # the sketch keeps its ndarray (no driver-side int list at build
-        # time); the plain-int conversion happens in probe_bloom's
-        # non-Arrow branch, which the probe below exercises
-        import numpy as _np
-        assert isinstance(bloom.words, _np.ndarray)
         li = cat.table("lineitem")
         n_bloom = probe_bloom(li, ["l_orderkey"], bloom).count()
     finally:
@@ -79,6 +72,62 @@ def test_bloom_probe_without_arrow(spark, sf_dir):
         orders.select(F.col("o_orderkey").alias("l_orderkey")),
         "l_orderkey", "left_semi").count()
     assert n_exact <= n_bloom < li.count()
+
+
+def test_bloom_empty_build(spark, sf_dir):
+    """Spark's bloom_filter_agg returns NULL on empty input: the sketch
+    reports zero rows and its probe keeps none, without ever reading
+    filter bytes."""
+    from duckdb_robust_predicate_transfer_spark.operators.bloom import (
+        build_bloom, probe_bloom)
+
+    cat = get_catalog(spark, sf_dir)
+    empty = cat.table("orders").filter(F.col("o_orderkey") < 0)
+    bloom = build_bloom(empty, ["o_orderkey"], est_rows=5000,
+                        stat_cols=["o_orderkey"])
+    assert bloom.n_rows == 0 and bloom.data is None
+    assert bloom.ranges == {}
+    assert probe_bloom(cat.table("lineitem"), ["l_orderkey"],
+                       bloom).count() == 0
+
+
+def test_bloom_missing_catalyst_class_is_named(spark):
+    """bloom.py builds Spark's filter expressions in one place; if a
+    Spark upgrade moves a class, the error names it."""
+    from duckdb_robust_predicate_transfer_spark.operators.bloom import (
+        _catalyst)
+
+    missing = "org.apache.spark.sql.catalyst.expressions.NoSuchBloomFilter"
+    with pytest.raises(RuntimeError, match=missing):
+        _catalyst(spark, missing, F.lit(1))
+
+
+def test_bloom_build_leaves_caller_caps(spark, sf_dir, conf_set):
+    """Spark caps every filter at runtime.bloomFilter.maxNumBits and
+    maxNumItems. The build lifts both in a clone of the session, so a
+    caller capped at 4096 bits still gets the sizing rule's filter,
+    with the same accuracy as test_bloom_no_false_negatives, and
+    reads its own caps back unchanged."""
+    from duckdb_robust_predicate_transfer_spark.operators.bloom import (
+        _size_bits, build_bloom, probe_bloom)
+
+    bits = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    items = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
+    cat = get_catalog(spark, sf_dir)
+    orders = cat.table("orders").filter(F.col("o_orderstatus") == "F")
+    li = cat.table("lineitem")
+    with conf_set(bits, "4096"):
+        prev_items = spark.conf.get(items)
+        sk = build_bloom(orders, ["o_orderkey"], est_rows=5000)
+        assert len(sk) * 8 == _size_bits(5000)
+        n_bloom = probe_bloom(li, ["l_orderkey"], sk).count()
+        assert spark.conf.get(bits) == "4096"
+        assert spark.conf.get(items) == prev_items
+    n_exact = li.join(orders.select(F.col("o_orderkey").alias("l_orderkey")),
+                      "l_orderkey", "left_semi").count()
+    n_all = li.count()
+    assert n_exact <= n_bloom < n_all
+    assert n_bloom - n_exact < max(50, 0.02 * n_all)
 
 
 def test_bloom_sketch_transfer_config(spark, sf_dir):
@@ -102,22 +151,13 @@ def test_bloom_sketch_transfer_config(spark, sf_dir):
     assert a == b
 
 
-def test_sketch_auto_escalation(spark, sf_dir):
-    """A build too big to broadcast auto-takes the bitmap tier instead of
-    a shuffled semi join (TPCH_SCALE_X1000 Q3/Q8/Q9 fix): results match
-    off, and the probe plan carries the bit-test predicate, not a
-    LeftSemi join against the key set."""
+def test_forced_sketch_tier_replaces_semi_join(spark, sf_dir):
+    """A build forced onto the sketch tier (``use_sketch`` at threshold
+    0, every build over the broadcast ceiling) lands Spark's
+    might_contain filter instead of a shuffled key-set semi join, and
+    results match off."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine, Rel
-    from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
-        SKETCH_MAX_KEYS, _sketch_tier)
-
-    cfg = RPTConfig(sketch_auto=True)
-    assert not _sketch_tier(cfg, cfg.broadcast_key_rows)         # exact
-    assert _sketch_tier(cfg, cfg.broadcast_key_rows + 1)         # bitmap
-    assert not _sketch_tier(cfg, SKETCH_MAX_KEYS + 1)        # shuffle
-    assert not _sketch_tier(cfg, float("inf"))                   # unknown
-    assert not _sketch_tier(RPTConfig(), cfg.broadcast_key_rows + 1)
 
     rels = {"l": "lineitem",
             "o": Rel("orders", "o_orderstatus = 'F'"),
@@ -127,17 +167,18 @@ def test_sketch_auto_escalation(spark, sf_dir):
     cols = ["l_orderkey", "l_linenumber"]
     off = Engine(spark, sf_dir, RPTConfig(enabled=False))
     # broadcast_key_rows=1 forces every build over the broadcast ceiling
-    auto = Engine(spark, sf_dir, RPTConfig(
-        sketch_auto=True, broadcast_key_rows=1, filter_type="bf_only",
-        min_probe_rows=0, require_selective_build=False,
-        all_broadcast_bail_rows=0, max_build_keep_frac=1.0))
+    sketch = Engine(spark, sf_dir, RPTConfig(
+        use_sketch=True, sketch_threshold_rows=0, broadcast_key_rows=1,
+        filter_type="bf_only", min_probe_rows=0,
+        require_selective_build=False, all_broadcast_bail_rows=0,
+        max_build_keep_frac=1.0))
     a = sorted(tuple(r)
                for r in off.reduce_and_join(rels, edges).select(*cols).collect())
-    joined = auto.reduce_and_join(rels, edges)
+    joined = sketch.reduce_and_join(rels, edges)
     b = sorted(tuple(r) for r in joined.select(*cols).collect())
     assert a == b
     plan = joined._jdf.queryExecution().optimizedPlan().toString()
-    assert "shiftright" in plan          # the fused bit test reached the scan
+    assert "might_contain" in plan       # the filter reached the scan
     assert "LeftSemi" not in plan        # no shuffled key-set semi join
 
 

@@ -261,9 +261,11 @@ def test_minmax_skips_non_narrowing_predicates(spark, sf_dir, tmp_path):
 
 
 def test_bloom_probe_stays_in_codegen(spark, sf_dir):
-    """The sketch probe must be SQL bit tests fused into the probe
-    side, never a Python eval node (the regression that made the
-    sketch bench leg slower than no transfer at all)."""
+    """The sketch probe must be Spark's might_contain over a scalar
+    subquery, fused into the probe side: never a Python eval node (the
+    regression that made the sketch bench leg slower than no transfer
+    at all) and no nested-loop join. The filter bytes stay in the
+    subquery's relation, never inlined as a literal into the plan."""
     import pyspark.sql.functions as F
 
     from duckdb_robust_predicate_transfer_spark.catalog import get_catalog
@@ -273,9 +275,13 @@ def test_bloom_probe_stays_in_codegen(spark, sf_dir):
     cat = get_catalog(spark, sf_dir)
     orders = cat.table("orders").filter(F.col("o_orderstatus") == "F")
     sk = build_bloom(orders, ["o_orderkey"], est_rows=5000)
-    plan = physical(probe_bloom(cat.table("lineitem"), ["l_orderkey"], sk))
+    probed = probe_bloom(cat.table("lineitem"), ["l_orderkey"], sk)
+    probed.collect()
+    plan = physical(probed)
+    assert "might_contain(Subquery" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert len(plan) < len(sk.data)
 
 
 def test_host_broadcast_feedback(spark, sf_dir):

@@ -14,7 +14,7 @@ persist flatters later legs, see workload/cascade.py / memory notes):
   off        — no transfer: full-width fact sort-merge shuffle
   rpt        — exact-key cascade: dim keys -> mid, reduced-mid keys ->
                fact (semi joins at the scans)
-  rpt_sketch — same schedule, mid->fact hop ships the Bloom bitmap
+  rpt_sketch — same schedule, mid->fact hop ships a Bloom filter
   native_rf  — Spark's own InjectRuntimeFilter (one-hop only)
 
 Run:  python -u tools/cascade_big.py [--json OUT] [--runs N]

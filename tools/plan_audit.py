@@ -54,10 +54,6 @@ NLJ_OK = {
     "q_cosine_topk": "broadcast of ONE query vector row",
     "q_cosine_topk_batch": "broadcast of the fixed query set (50 rows)",
     "q_values_join": "literal VALUES relation",
-    "q_sketch_transfer": "broadcast of the 1-row Bloom bitmap",
-    # fires two rescued bitmaps since the string-cast re-point (r9) —
-    # the same bounded single-row bitmap handoff as q_sketch_transfer
-    "q_subtree_rescue": "broadcast of the 1-row Bloom bitmaps (gate 2f)",
     "q_events_funnel": "final crossJoin of two 1-row scalar aggregates",
     "q_embed_neardup_exact": "explicit vec_id<1000 ground-truth sample; "
                              "the scale path is the LSH variant",
