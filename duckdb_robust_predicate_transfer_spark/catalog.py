@@ -1,23 +1,77 @@
 """Table registry: name -> DataFrame + statistics.
 
 The analogue of the reference's ``TableManager`` (table_manager.cpp:
-36-92), which assigns every base table an id and captures
-``estimated_cardinality`` at registration time. Here statistics come
-free from Parquet footers (no Spark job, no full scan) — the same
-numbers a catalog/ANALYZE would provide on a cluster.
+36-92), which registers every base table from catalog metadata and
+captures ``estimated_cardinality`` at registration time, without a
+scan. Here both the schema and the statistics come from Parquet
+footers read on the driver, so registering a table launches no Spark
+job — the same metadata a catalog/ANALYZE would provide on a cluster.
+
+The schema is converted by Spark's own footer code
+(``ParquetFileFormat.readSchemaFromFooter`` with a
+``ParquetToSparkSchemaConverter`` built from the session conf), the
+function Spark's schema-inference job runs per file. A hand-written
+mapping from pyarrow types could drift from Spark's reading of the
+same footer (timestamp units and UTC adjustment, INT96, binary as
+string, the stored Spark schema in the key-value metadata); this one
+cannot. A directory table takes its schema from the first of its
+sorted ``*.parquet`` members (``parquet_files``), which is Spark's own
+one-file inference with ``mergeSchema`` off, its default.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 from dataclasses import dataclass
 
+from pyspark.errors.exceptions.captured import convert_exception
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+
+def parquet_files(path: str) -> list:
+    """The Parquet files behind a catalog path: the path itself, or a
+    directory's ``*.parquet`` members in sorted order. Every footer
+    reader in this module takes its files from here."""
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
+def open_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    The schema is read from the footer of ``parquet_files(path)[0]`` on
+    the driver and converted under the session's current conf (so a
+    conf such as ``nanosAsLong`` must be set before the call), then the
+    table is opened with that schema. A missing path raises Spark's
+    ``[PATH_NOT_FOUND]``; a directory without ``*.parquet`` members
+    raises ``[UNABLE_TO_INFER_SCHEMA]`` rather than opening empty."""
+    jvm, js = spark._jvm, spark._jsparkSession
+    errors = jvm.org.apache.spark.sql.errors.QueryCompilationErrors
+    if not os.path.exists(path):
+        raise convert_exception(errors.dataPathNotExistError(path))
+    files = parquet_files(path)
+    if not files:
+        raise convert_exception(errors.dataSchemaNotSpecifiedError("Parquet"))
+    state = js.sessionState()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    first = jvm.org.apache.hadoop.fs.Path(files[0])
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            first, state.newHadoopConf()),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(first, meta),
+        pq.ParquetToSparkSchemaConverter(state.conf()))
+    return DataFrame(js.read().schema(schema).parquet(path), spark)
 
 
 def parquet_row_count(path: str) -> int:
@@ -37,13 +91,8 @@ def parquet_col_range(path: str, column: str):
     transfer predicate can prune anything at all."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        import glob as _glob
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    else:
-        files = [path]
     lo = hi = None
-    for f in files:
+    for f in parquet_files(path):
         md = pq.ParquetFile(f).metadata
         try:
             idx = md.schema.names.index(column)
@@ -95,9 +144,6 @@ def _stat_span(lo, hi):
             return None
 
 
-import functools
-
-
 def _path_stamp(path: str) -> tuple:
     """Cheap content fingerprint for footer-derived caches: (mtime_ns,
     size) of the file, or of every *.parquet member for a directory.
@@ -106,10 +152,9 @@ def _path_stamp(path: str) -> tuple:
     life of the process (ADVICE r5)."""
     try:
         if os.path.isdir(path):
-            import glob as _glob
             return tuple(
                 (os.path.basename(f), s.st_mtime_ns, s.st_size)
-                for f in sorted(_glob.glob(os.path.join(path, "*.parquet")))
+                for f in parquet_files(path)
                 for s in (os.stat(f),))
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)
@@ -136,14 +181,9 @@ def _col_clustering_cached(path: str, column: str, _stamp: tuple):
     (measured at TPCH_SCALE x100: 0.2-0.8s per op)."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        import glob as _glob
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    else:
-        files = [path]
     lo = hi = None
     spans = []
-    for f in files:
+    for f in parquet_files(path):
         md = pq.ParquetFile(f).metadata
         try:
             idx = md.schema.names.index(column)
@@ -178,13 +218,10 @@ def parquet_ts_unit(path: str, column: str = "ts") -> str:
     TIMESTAMP(NANOS) needs the nanosAsLong workaround."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        import glob as _glob
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if not files:
-            return ""
-        path = files[0]
-    pf = pq.ParquetFile(path)
+    files = parquet_files(path)
+    if not files:
+        return ""
+    pf = pq.ParquetFile(files[0])
     sch = pf.schema
     for i in range(len(sch)):
         col = sch.column(i)
@@ -207,23 +244,31 @@ class TableInfo:
 
 
 class Catalog:
-    """Lazy loader over a scale-factor directory of Parquet tables."""
+    """Lazy loader over a scale-factor directory of Parquet tables.
+
+    ``table`` opens each table once with ``open_parquet``: the schema
+    comes from the footer on the driver, so no table costs a Spark job
+    to open. ``info`` takes row counts from the footers too (pyarrow
+    metadata, no scan). A table is ``<name>.parquet``, a file or a
+    directory; a directory's schema comes from its first sorted
+    ``*.parquet`` member (``parquet_files``)."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
         self._dfs: dict[str, DataFrame] = {}
         self._info: dict[str, TableInfo] = {}
+        #: view name -> the session catalog's stored view (a Scala
+        #: ``Option[TemporaryViewRelation]``) as ``register_views`` left it
+        self._views: dict = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.sf_dir, f"{name}.parquet")
 
     def table(self, name: str) -> DataFrame:
         if name not in self._dfs:
-            if name == "events":
-                self._dfs[name] = self._read_events()
-            else:
-                self._dfs[name] = self.spark.read.parquet(self.path(name))
+            self._dfs[name] = (self._read_events() if name == "events"
+                               else open_parquet(self.spark, self.path(name)))
         return self._dfs[name]
 
     def _read_events(self) -> DataFrame:
@@ -251,11 +296,11 @@ class Catalog:
             # action would re-trigger [PARQUET_TYPE_ILLEGAL].
             self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong",
                                 "true")
-            df = self.spark.read.parquet(self.path("events"))
+            df = open_parquet(self.spark, self.path("events"))
             df = df.withColumn("ts",
                                F.timestamp_micros(F.expr("ts div 1000")))
         else:
-            df = self.spark.read.parquet(self.path("events"))
+            df = open_parquet(self.spark, self.path("events"))
         if not isinstance(df.schema["ts"].dataType, TimestampType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
@@ -276,17 +321,29 @@ class Catalog:
         (table_manager.cpp:41-62) — it is not limited to a benchmark
         schema — so the SQL auto-transfer path must likewise see
         fixture-local tables (e.g. the JOB-regime workload's dims)."""
-        import glob as _glob
-
         found = {os.path.basename(p)[:-len(".parquet")]
-                 for p in _glob.glob(os.path.join(self.sf_dir, "*.parquet"))}
+                 for p in glob.glob(os.path.join(self.sf_dir, "*.parquet"))}
         return set(TABLES) | found
 
     def register_views(self, names=None) -> None:
+        """Register each table as a temp view of its own name.
+
+        ``Engine.sql`` calls this before every statement, and extraction
+        maps plan leaves to tables by view name, so a name the caller
+        has since replaced or dropped is registered again. A name whose
+        stored view still equals the one this catalog left there is
+        skipped: two py4j calls instead of a ``createOrReplaceTempView``
+        (an analysis of the table plus a catalog write)."""
+        views = self.spark._jsparkSession.sessionState().catalog()
         for n in (names if names is not None
                   else sorted(self.known_tables())):
-            if os.path.exists(self.path(n)):
-                self.table(n).createOrReplaceTempView(n)
+            if not os.path.exists(self.path(n)):
+                continue
+            mine = self._views.get(n)
+            if mine is not None and views.getRawTempView(n).equals(mine):
+                continue
+            self.table(n).createOrReplaceTempView(n)
+            self._views[n] = views.getRawTempView(n)
 
 
 _CATALOGS: dict[tuple[int, str], Catalog] = {}

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..catalog import get_catalog
 from .common import (REVENUE, Rel, davg, dsum, eng, revenue_col, sql_davg,
                      sql_dsum)
 from .registry import query
@@ -1325,7 +1326,7 @@ def q_csv_source(spark, sf_dir):
     against DuckDB reading the original Parquet.  Doubles survive via
     Spark's shortest-round-trip repr; quoting covers embedded commas."""
     from ..sources import io
-    pq = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    pq = get_catalog(spark, sf_dir).table("customer")
     path = _scratch(sf_dir, "customer_csv")
     io.write_csv(pq, path)
     return io.read_csv(spark, path, schema=pq.schema).select(
@@ -1343,7 +1344,7 @@ def q_json_source(spark, sf_dir):
     """JSON-lines sink + source round-trip on the supplier table,
     schema-first read, graded against the Parquet original."""
     from ..sources import io
-    pq = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    pq = get_catalog(spark, sf_dir).table("supplier")
     path = _scratch(sf_dir, "supplier_json")
     io.write_json(pq, path)
     return io.read_json(spark, path, schema=pq.schema).select(
@@ -1369,7 +1370,7 @@ def q_partitioned_sink(spark, sf_dir):
     read-back filter resolves as a PartitionFilter, touching 1 of 3
     directories, which is what directory layout buys at 100 TB."""
     from ..sources import io
-    pq = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    pq = get_catalog(spark, sf_dir).table("orders")
     path = _scratch(sf_dir, "orders_by_status")
     io.write_parquet(pq, path, partition_by=["o_orderstatus"])
     return (spark.read.parquet(path)
