@@ -315,67 +315,36 @@ class RPTConfig:
     #: (CASCADE_BIG/BUCKETED) come from the forward pass and survive the
     #: default.
     backward_broadcast_only: bool = True
-    #: one filtering mechanism per query (the reference's --no-jfp
+    #: one filtering mechanism per edge (the reference's --no-jfp
     #: ablation discipline, test_job_queries.sh:123-138): when the
     #: auto-SQL transfer actually applies ops, Spark's own runtime
     #: bloom injection on the SAME joins is pure double-filtering —
     #: its creation jobs re-derive key sets our semi joins already
     #: shipped (measured at TPCH_SCALE x100: composed Q7 4.21s vs rpt
-    #: alone 2.54s). With this on, Engine.sql runs a query the rewrite
-    #: engaged on with native bloom injection off, set in that
-    #: statement's own cloned session; the caller's session keeps its
-    #: value.
+    #: alone 2.54s). With this on and the caller's injection on,
+    #: Engine.sql applies one rule, in the statement's own cloned
+    #: session (the caller's keeps its value): the statement plans and
+    #: runs its eager jobs with injection off, an engaged statement
+    #: keeps it off for its final run, and every bail runs with the
+    #: caller's value. A bail includes the cession
+    #: (Engine._cede_verdict): before any eager job, when the ORIGINAL
+    #: plan's native blooms cover every candidate op edge, the query
+    #: disengages and rides native.
     #: CERTIFIED CLUSTER DEFAULT (r6): run COMPOSED — leave Spark's
     #: runtime bloom filters enabled alongside the engine and let this
-    #: per-edge suppression arbitrate. Composed beats transfer-alone on
-    #: geomean at every certified scale: x300 1.098 vs 1.028
-    #: (TPCH_SCALE_X300_r05), x1000 1.139 vs 1.124
-    #: (TPCH_SCALE_X1000_r06), JOB-regime 1.203 vs ~1.0
+    #: rule arbitrate. Composed beats transfer-alone on geomean at every
+    #: certified scale: x300 1.098 vs 1.028 (TPCH_SCALE_X300_r05), x1000
+    #: 1.139 vs 1.124 (TPCH_SCALE_X1000_r06), JOB-regime 1.203 vs ~1.0
     #: (JOB_REGIME_r06) — native blooms reach shapes the gates skip
-    #: (Q21's self-join, jq3's deep fanout) while suppression keeps
-    #: engaged edges single-mechanism. At true cluster scale Spark
-    #: enables runtime blooms by itself once scans clear the 10 GB
-    #: gate, so composed is what production looks like anyway; the r6
-    #: early-suppression fix (Engine.sql) removed its one interaction
-    #: loss (Q22: eager build jobs used to run with injection live;
-    #: EAGER_AB_r10 re-checked it at the 100M JOB regime: suppressed
-    #: eager jobs 1.043x faster than with injection live). An engaged
-    #: query whose rewritten plan carries a native bloom on an edge no
-    #: applied op covers gets injection back for its final run (the
-    #: per-query dual, Engine._uncovered_rf_evidence).
+    #: (Q21's self-join, jq3's deep fanout) while engaged edges stay
+    #: single-mechanism. At true cluster scale Spark enables runtime
+    #: blooms by itself once scans clear the 10 GB gate, so composed is
+    #: what production looks like anyway. Suppressed eager jobs removed
+    #: composed's one interaction loss (Q22; EAGER_AB_r10 re-checked it
+    #: at the 100M JOB regime: 1.043x faster than with injection live).
+    #: Off: the no-suppression ablation (injection stays as the caller
+    #: set it throughout, and nothing cedes).
     suppress_native_rf: bool = True
-    #: per-query NATIVE CESSION (r10) — the mirror image of the
-    #: per-query uncovered-edge dual. That arbitration can
-    #: only ADD native blooms on edges no op covers; it cannot hand a
-    #: covered-but-weaker edge to the host, which is exactly how the
-    #: composed default lost to plain native on the v3 JOB regime
-    #: (VERDICT r9: composed 0.893x of native; jq3 0.37, jq25 0.43,
-    #: jq18/jq20 0.50). Mechanism: BEFORE any eager job, plan the
-    #: ORIGINAL statement once under injection (pure planning, cached)
-    #: and dry-run the gate stack (rewrite.dry_run). When every
-    #: candidate op's (probe, cols, build) edge is covered by a native
-    #: bloom — i.e. the host expresses the same per-edge filtering with
-    #: LAZY, AQE-integrated bloom subqueries while our expression costs
-    #: serialized eager jobs — and the reach we would uniquely add
-    #: beyond the host's blooms is small (engine.CEDE_EXTRA_PROBE_FRAC),
-    #: DISENGAGE and ride native for this query. Queries whose ops
-    #: reach tables native cannot (multi-hop transfer into unfiltered
-    #: arms — jq15's movie_info, jq5's castinfo, every TPC-H cascade
-    #: fact) keep the engaged path untouched. This is the reference's
-    #: --no-jfp discipline completed in both directions: one mechanism
-    #: per edge, whichever is cheaper (test_job_queries.sh:123-138).
-    cede_covered_edges: bool = True
-    #: query-level engagement floor (VERDICT r9 #3): when ceding, ride
-    #: OFF (keep native suppressed too) instead of native if every
-    #: candidate probe's predicate-shape-prior row estimate is at most
-    #: this — the off plan's pushed filters already leave so little
-    #: that even the host's lazy blooms cost more than they cut (JOB
-    #: jq1: off 0.89 s, native 1.64 s — its fact arm keeps ~5% via a
-    #: pushed LIKE). Shape priors (engine._pred_prior) distinguish a
-    #: selective '%(presents)%' from an anti-selective NOT LIKE where
-    #: the flat 0.2 guess cannot. 0 disables the floor (always ride
-    #: native when ceding).
-    cede_suppress_max_probe_rows: int = 8_000_000
     #: persist reduced tables that both feed a key-set and the final join
     persist_reduced: bool = True
     #: ...but only when the reduced build side is big enough that

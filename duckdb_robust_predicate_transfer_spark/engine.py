@@ -78,9 +78,9 @@ def _norm_cols(c) -> tuple:
 #: per call by the workload layer; the graph is engine-independent)
 _EXT_CACHE: dict = {}
 
-#: (statement cache key, config repr) -> True when reduce() gated every
-#: op away for that statement+data+config: repeats skip the planning
-#: path entirely (see _auto_transfer_sql). Only BAILS are cached — an
+#: (statement cache key, config repr, rf_live) -> "cede" or True when
+#: reduce() ceded or gated every op away for that statement+data+config:
+#: repeats skip the planning path entirely (see _auto_transfer_sql). Only BAILS are cached — an
 #: engaged statement re-plans each run because its eager builds are the
 #: mechanism itself.
 _BAIL_CACHE: dict = {}
@@ -90,28 +90,21 @@ _BAIL_CACHE: dict = {}
 #: because it costs a physical planning pass per statement
 _PREFILTER_CACHE: dict = {}
 
-#: (statement cache key, rf-threshold confs, config) -> bool: whether
-#: the REWRITTEN plan carries a native bloom on an edge no applied op
-#: covers (the per-query dual's evidence) — one planning pass each
-_DUAL_RF_CACHE: dict = {}
-
 #: (statement cache key, rf-threshold confs) -> frozenset of lowercased
 #: (probe_table, probe_col, build_table) native bloom edges of the
-#: ORIGINAL (un-rewritten) statement — the cession arbitration's
-#: coverage evidence (config.cede_covered_edges); one planning pass per
-#: novel statement
+#: ORIGINAL (un-rewritten) statement — the cession's coverage evidence;
+#: one planning pass per novel statement
 _ORIG_RF_CACHE: dict = {}
 
 #: (statement cache key, rf-threshold confs, footer-row stats, filtered
-#: aliases, cede config knobs) -> (cede, ride_off): the arbitration
-#: VERDICT itself. The job-free dry run of the gate stack
-#: (rewrite.dry_run) is pure Python but still cost 20-40 ms per call on
-#: the widest flagship queries (r11 pricing: 15-19% of their
-#: construction), and its inputs are all deterministic functions of the
-#: key — the footer row estimates join the key so a fixture change
-#: invalidates the entry (same rationale as the catalog's
-#: path+mtime+size-keyed footer cache: metadata keying, not result
-#: caching).
+#: aliases, config) -> bool: the cession VERDICT itself. The job-free
+#: dry run of the gate stack (rewrite.dry_run) is pure Python but still
+#: cost 20-40 ms per call on the widest flagship queries (r11 pricing:
+#: 15-19% of their construction), and its inputs are all deterministic
+#: functions of the key — the footer row estimates join the key so a
+#: fixture change invalidates the entry (same rationale as the
+#: catalog's path+mtime+size-keyed footer cache: metadata keying, not
+#: result caching).
 _CEDE_CACHE: dict = {}
 
 #: the cession's "uniquely added reach is small" bound: cede only when
@@ -150,43 +143,6 @@ _RF_CONF_KEYS = (
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
     "spark.sql.autoBroadcastJoinThreshold")
 _RF_ENABLED = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-
-
-import re as _re
-
-_LIKE_PAT = _re.compile(r"LIKE\s+'([^']*)'", _re.IGNORECASE)
-
-
-def _pred_prior(conjunct: str) -> float:
-    """Predicate-shape selectivity prior for ONE WHERE conjunct (SQL
-    text, plans/extract.py LeafInstance.filters). Selinger-style
-    constants, used ONLY by the cession floor (cede_suppress_max_probe_
-    rows) — never by the transfer gates, which keep the certified flat
-    0.2 guess plus observation. The flat guess cannot tell
-    mc_note LIKE '%(presents)%' (selective — JOB jq1's off plan is
-    already minimal) from mc_note NOT LIKE '...' (anti-selective —
-    jq6's fact arm stays full-size and blooms pay); the shapes can."""
-    s = f" {conjunct.upper()} "
-    if " NOT LIKE " in s:
-        return 0.85
-    if " LIKE " in s:
-        m = _LIKE_PAT.search(conjunct)
-        if m and not m.group(1).startswith("%"):
-            return 0.1  # prefix pattern: range-like
-        return 0.2
-    if " NOT IN " in s or " IS NOT NULL " in s:
-        return 0.9
-    if " BETWEEN " in s:
-        return 0.3
-    if " IN " in s or " IN(" in s:
-        return 0.25
-    if "!=" in s or "<>" in s:
-        return 0.9
-    if any(o in s for o in (">=", "<=", ">", "<")):
-        return 0.4
-    if "=" in s:
-        return 0.1
-    return 0.2
 
 
 def normalize_edges(edges: list) -> list:
@@ -241,15 +197,22 @@ class Engine:
         caller's session (session.clone_session), as the reference rewrites
         each plan inside one optimizer pass that only reads its
         settings: the shadows, the eager transfer jobs and the
-        runtime-bloom arbitration's one conf write live in the clone,
-        and the returned DataFrame is bound to it. The caller's session
-        is never changed, and a DataFrame planned now executes under its
-        own arbitration whatever later statements decide.
+        runtime-bloom setting live in the clone, and the returned
+        DataFrame is bound to it. The caller's session is never
+        changed, and a DataFrame planned now executes under its own
+        setting whatever later statements decide.
+
+        Native runtime blooms follow one rule (config.suppress_native_rf):
+        with the caller's injection on, the statement plans and runs its
+        eager jobs with it off; an engaged statement keeps it off for
+        its final run, and every bail (a cession, gated away, or a shape
+        bail) runs with the caller's value.
 
         Any extraction bail-out (unsupported construct, <=2 edges after
         gating, no instance actually reduced) returns the plain result.
         """
-        self.catalog.register_views()
+        if self.catalog is not None:
+            self.catalog.register_views()
         cfg = (config or self.config).validate()
         #: True when the last sql() call actually applied the transfer
         #: rewrite (extraction succeeded AND the planner's gates kept at
@@ -257,105 +220,30 @@ class Engine:
         #: reference's "rules_applied" profiling counter
         #: (rpt_profiling.hpp:40-55). Read by tools/breadth_check.py.
         self.last_sql_rewritten = False
-        #: set by reduce() when the cession arbitration disengaged the
-        #: query to hand its covered edges to native runtime blooms
-        #: (config.cede_covered_edges)
+        #: set by reduce() when the cession disengaged the query to hand
+        #: its covered edges to native runtime blooms (_cede_verdict)
         self.last_cede = False
         if not auto_rpt or not cfg.enabled or self.catalog is None:
             return self.spark.sql(query)
         s = clone_session(self.spark)
-        # one filtering mechanism per edge (config.suppress_native_rf).
-        # With the caller's injection on, the statement plans and runs
-        # its eager jobs (observe counts, min/max aggs, key-set builds,
-        # persists) with it off: with injection live Spark plants bloom
-        # filters inside THEM — pure planning-job overhead that showed
-        # up as a composed-only Q22 loss at x1000 (8.2 s vs rpt 5.1 s
-        # with ZERO blooms in the final plan, TPCH_SCALE_X1000_r06).
-        # The arbitration then decides the final run's value once.
+        # one filtering mechanism per edge (config.suppress_native_rf):
+        # with injection live Spark plants bloom filters inside the
+        # eager jobs (observe counts, min/max aggs, key-set builds,
+        # persists) too — pure planning-job overhead that showed up as
+        # a composed-only Q22 loss at x1000 (8.2 s vs rpt 5.1 s with
+        # ZERO blooms in the final plan, TPCH_SCALE_X1000_r06)
         rf_live = (cfg.suppress_native_rf
                    and self.spark.conf.get(_RF_ENABLED, "false") == "true")
         if rf_live:
             s.conf.set(_RF_ENABLED, "false")
         df = s.sql(query)
-        out, rf_off = self._auto_transfer_sql(query, s, df, cfg, rf_live)
+        out = self._auto_transfer_sql(query, s, df, cfg, rf_live)
         self.last_sql_rewritten = out is not None
-        if rf_live and not rf_off:
+        if out is not None:
+            return out
+        if rf_live:
             s.conf.set(_RF_ENABLED, "true")
-        return out if out is not None else df
-
-    def _uncovered_rf_evidence(self, s: SparkSession, query: str,
-                               cfg: RPTConfig) -> bool:
-        """True when the REWRITTEN plan (``s``'s views shadowed by their
-        reduced DataFrames — call only from _auto_transfer_sql once it
-        has shadowed them) would carry at least one native bloom on a
-        (probe_table, probe_col, build_table) edge no applied op covers.
-
-        This is the per-query dual, the exception to
-        config.suppress_native_rf: native carries selectivity the
-        transfer left on the table. Spark only ever builds a native
-        bloom from a bare selective-filter-over-scan
-        (InjectRuntimeFilter's extractSelectiveFilterOverScan), so every
-        injected bloom is an edge directly comparable to a transfer op's
-        edge. An uncovered one is typically a hop the gates refused
-        because the exact-key build would shuffle a 100M-key
-        intermediate the reference reduces for free in shared memory
-        (rpt_optimizer.cpp:884-937). The engine then turns injection
-        back on for the final run only; planning's eager jobs still run
-        suppressed. Measured at the 100M JOB fixture: jq2's rewritten
-        plan blooms keyword->movie_keyword (the refused hop; dual leg
-        6.25->2.37 s), jq3/jq5/jq10 bloom person->castinfo (20.5->10.0,
-        12.8->4.2, 11.2->4.8); fully-covered bloom sets (jq1's star,
-        where native's blooms duplicate the transfer's own semis: dual
-        2.20 vs composed 1.54; jq13/jq18 likewise) keep suppression.
-        Plan-shape evidence only, never timing.
-
-        Why the rewritten plan, not the original: InjectRuntimeFilter
-        re-evaluates against the reduced sizes and fires on exactly the
-        arms the transfer could not serve (measured at the 100M JOB
-        fixture: jq2's rewritten plan blooms keyword->movie_keyword —
-        the hop whose exact-key build the gates refused — while its
-        un-rewritten plan only blooms the company edge the ops already
-        cover). Planning runs in a throwaway clone of ``s``
-        (_native_blooms), so neither ``s`` nor the returned DataFrame
-        is ever planned with injection on.
-
-        Costs one planning pass (~0.2-0.5 s), cached per
-        statement+data+config like the gate-2e prefilter evidence.
-        Only meaningful when the caller had injection on — otherwise
-        there is nothing to hand back. Unresolvable bloom edges count
-        as covered: suppression is the certified default and flipping
-        to dual needs positive evidence."""
-        ek = (getattr(self, "_stmt_ck", None) or query,
-              self._rf_confs(), repr(cfg))
-        hit = _DUAL_RF_CACHE.get(ek, _MISS)
-        if hit is not _MISS:
-            return hit
-        dual = False
-        try:
-            blooms = self._native_blooms(s, query)
-            covered = set()
-            alias_t = getattr(self, "_last_alias_tables", {})
-            if self.last_result is not None:
-                for op in self.last_result.applied:
-                    pt = alias_t.get(op.probe, op.probe)
-                    bt = alias_t.get(op.build, op.build)
-                    for pc in op.probe_cols:
-                        # case-insensitive like _string_keys: a
-                        # mixed-case identifier must not fabricate an
-                        # "uncovered" verdict (ADVICE r8)
-                        covered.add((str(pt).lower(), pc.lower(),
-                                     str(bt).lower()))
-            for b in blooms:
-                if None in (b["probe_table"], b["probe_col"],
-                            b["build_table"]):
-                    continue
-                if (b["probe_table"].lower(), b["probe_col"].lower(),
-                        b["build_table"].lower()) not in covered:
-                    dual = True
-                    break
-        except Exception:
-            dual = False
-        return _memo_put(_DUAL_RF_CACHE, ek, dual)
+        return df
 
     def _rf_confs(self) -> tuple:
         """Current values of the runtime-filter planner confs
@@ -368,54 +256,50 @@ class Engine:
                 out.append("")
         return tuple(out)
 
-    def _native_blooms(self, s: SparkSession, query: str) -> list:
-        """The native runtime bloom edges Spark plants in ``query``
-        (native_bloom_edges dicts), planned in a throwaway clone of
-        ``s`` with bloom injection on: pure planning, and ``s`` keeps
-        its own conf and views."""
-        from .plans.catalyst_order import native_bloom_edges
-
-        probe = clone_session(s)
-        probe.conf.set(_RF_ENABLED, "true")
-        table_paths = {t: self.catalog.path(t)
-                       for t in self.catalog.known_tables()}
-        return list(native_bloom_edges(probe.sql(query), table_paths,
-                                       self._table_cols()) or ())
-
-    def _orig_bloom_edges(self, s: SparkSession, query: str) -> frozenset:
+    def _orig_bloom_edges(self, s: SparkSession, query: str,
+                          ck) -> frozenset:
         """Lowercased (probe_table, probe_col, build_table) edges of the
         native runtime blooms Spark would plant in the ORIGINAL
-        statement — the cession arbitration's coverage evidence.
+        statement ``query`` (statement cache key ``ck``) — the cession's
+        coverage evidence.
 
         Must be called BEFORE the views are shadowed (the evidence is
         what the host does when the transfer stands down entirely, i.e.
-        the plain native leg's plan). Edges with an unresolvable side
-        are omitted: a candidate op can then never count as covered by
-        them, which refuses cession — the safe direction, since
-        suppression+engagement is the certified default. One planning
-        pass (~0.2-0.5 s) per novel statement, cached like the
-        gate-2e/dual evidence."""
-        ek = (getattr(self, "_stmt_ck", None) or query, self._rf_confs())
+        the plain native leg's plan). Planned in a throwaway clone of
+        ``s`` with injection on, so ``s`` keeps its own conf and views.
+        Edges with an unresolvable side are omitted: a candidate op can
+        then never count as covered by them, which refuses cession —
+        the safe direction. One planning pass (~0.2-0.5 s) per novel
+        statement, cached like the gate-2e evidence."""
+        from .plans.catalyst_order import native_bloom_edges
+
+        ek = (ck, self._rf_confs())
         hit = _ORIG_RF_CACHE.get(ek, _MISS)
         if hit is not _MISS:
             return hit
         try:
+            probe = clone_session(s)
+            probe.conf.set(_RF_ENABLED, "true")
+            table_paths = {t: self.catalog.path(t)
+                           for t in self.catalog.known_tables()}
             edges = frozenset(
                 (b["probe_table"].lower(), b["probe_col"].lower(),
                  b["build_table"].lower())
-                for b in self._native_blooms(s, query)
+                for b in native_bloom_edges(probe.sql(query), table_paths,
+                                            self._table_cols()) or ()
                 if None not in (b["probe_table"], b["probe_col"],
                                 b["build_table"]))
         except Exception:
             edges = frozenset()
         return _memo_put(_ORIG_RF_CACHE, ek, edges)
 
-    def _cede_verdict(self, s: SparkSession, query: str, cfg: RPTConfig,
-                      plan, dfs: dict, rows_est: dict, filtered: set,
-                      evidence: dict) -> "str | None":
+    def _cede_verdict(self, s: SparkSession, query: str, ck,
+                      alias_t: dict, cfg: RPTConfig, plan, dfs: dict,
+                      rows_est: dict, filtered: set,
+                      evidence: dict) -> bool:
         """Should this query DISENGAGE and hand its edges to native
-        runtime blooms (config.cede_covered_edges)? None = no; else the
-        final run's mode, "native" or "off".
+        runtime blooms? ``ck`` is the statement cache key and
+        ``alias_t`` its alias -> base table map.
 
         Runs inside reduce() after scheduling but BEFORE any eager job
         — the whole point is not to sink the jobs the cession avoids.
@@ -426,51 +310,45 @@ class Engine:
         or the uncovered candidates' probe mass is within
         CEDE_EXTRA_PROBE_FRAC of the query's largest relation — the
         host then expresses (almost) everything our eager ops would,
-        lazily. "off" keeps native suppressed too when the shape-prior
-        probe mass is under cede_suppress_max_probe_rows (the jq1 floor:
-        the off plan's pushed filters already leave nothing worth
-        blooming)."""
+        lazily, and the statement rides native."""
         # verdict cache (_CEDE_CACHE): every input below is a
         # deterministic function of (statement, planner confs, footer
         # stats, config) — skip the per-call dry run on repeats
         rows_base = evidence.get("rows_base") or {}
         try:
             # repr(cfg) (the _BAIL_CACHE convention) keys the WHOLE
-            # config: the dry run reads the full gate stack, not just
-            # the cede knobs
-            vk = (getattr(self, "_stmt_ck", None) or query,
-                  self._rf_confs(), frozenset(rows_base.items()),
+            # config: the dry run reads the full gate stack
+            vk = (ck, self._rf_confs(), frozenset(rows_base.items()),
                   frozenset(filtered or ()), repr(cfg))
             hit = _CEDE_CACHE.get(vk, _MISS)
             if hit is not _MISS:
                 return hit
         except TypeError:
             vk = None  # unhashable component: fall through uncached
-        res = self._cede_verdict_uncached(s, query, cfg, plan, dfs,
-                                          rows_est, filtered, evidence)
+        res = self._cede_verdict_uncached(s, query, ck, alias_t, cfg, plan,
+                                          dfs, rows_est, filtered, evidence)
         return res if vk is None else _memo_put(_CEDE_CACHE, vk, res)
 
-    def _cede_verdict_uncached(self, s, query, cfg, plan, dfs, rows_est,
-                               filtered, evidence):
+    def _cede_verdict_uncached(self, s, query, ck, alias_t, cfg, plan, dfs,
+                               rows_est, filtered, evidence) -> bool:
         cand = [d.op for d in dry_run(dfs, rows_est, filtered, plan, cfg,
                                       **evidence)
                 if d.tier in KEY_TIERS]
         if not cand:
-            return None
-        rows_base = evidence.get("rows_base") or {}
-        alias_t = getattr(self, "_last_alias_tables", {})
+            return False
         # correlated-subquery virtual nodes: their reduction reaches
         # subquery occurrences through the shadowed view — value no
         # host bloom can express (TPC-H Q17's 2.5x); never cede
         if any(str(a).startswith("__sub")
                for op in cand for a in (op.build, op.probe)):
-            return None
-        covered = self._orig_bloom_edges(s, query)
+            return False
+        covered = self._orig_bloom_edges(s, query, ck)
         if not covered:
-            return None
+            return False
+        rows_base = evidence.get("rows_base") or {}
         maxrows = max((r for r in rows_base.values() if r), default=0.0)
         if maxrows <= 0:
-            return None
+            return False
         extra = 0.0
         for op in cand:
             pt = str(alias_t.get(op.probe, op.probe)).lower()
@@ -480,33 +358,17 @@ class Engine:
                 continue
             pr = rows_base.get(op.probe) or float("inf")
             extra = max(extra, pr)
-        if extra > CEDE_EXTRA_PROBE_FRAC * maxrows:
-            return None
-        ride_off = False
-        if cfg.cede_suppress_max_probe_rows > 0:
-            alias_filters = getattr(self, "_last_alias_filters", {})
-            mass = 0.0
-            for op in cand:
-                base = rows_base.get(op.probe, 0.0) or 0.0
-                pri = 1.0
-                for f in alias_filters.get(op.probe, ()):
-                    try:
-                        pri *= _pred_prior(str(f))
-                    except Exception:
-                        pri *= 0.2
-                mass = max(mass, base * max(pri, 0.02))
-            ride_off = mass <= cfg.cede_suppress_max_probe_rows
-        return "off" if ride_off else "native"
+        return extra <= CEDE_EXTRA_PROBE_FRAC * maxrows
 
     def _table_cols(self) -> dict:
         """table -> lowercase column-name set for every known table,
         used by native_bloom_edges to resolve a bloom side whose
         lineage spans several leaves (a shadowed reduced view). Cached
         on the Catalog, keyed by the table-name set — a table
-        registered after the first arbitration re-enters the map
+        registered after the first cession check re-enters the map
         instead of being skipped for the life of the session
         (ADVICE r9); schema reads are parquet-footer-only and the
-        arbitration runs once per novel statement."""
+        cession check runs once per novel statement."""
         import os
 
         names = frozenset(self.catalog.known_tables())
@@ -519,7 +381,7 @@ class Engine:
             # dir may materialize only a subset (the JOB dir has no
             # part.parquet). A missing one is skipped without a Spark
             # read: each such read fails with a logged stack trace, and
-            # one escaping here would disable the arbitration for every
+            # one escaping here would disable the cession for every
             # query on that fixture.
             if not os.path.exists(self.catalog.path(t)):
                 continue
@@ -533,14 +395,11 @@ class Engine:
 
     def _auto_transfer_sql(self, query: str, s: SparkSession,
                            df: DataFrame, cfg: RPTConfig, rf_live: bool
-                           ) -> "tuple[DataFrame | None, bool]":
-        """(rewritten DataFrame or None for a bail, rf_off) for ``query``
-        in its statement session ``s`` (``df`` = ``s.sql(query)``).
-        ``rf_off``: the final run keeps native bloom injection off —
-        an engaged query whose rewritten plan leaves no native bloom
-        uncovered, a duplication bail, a cession riding off. Only read
-        when ``rf_live`` (suppression on and the caller's injection
-        on)."""
+                           ) -> "DataFrame | None":
+        """The rewritten DataFrame for ``query`` in its statement
+        session ``s`` (``df`` = ``s.sql(query)``), or None for a bail.
+        ``rf_live`` (suppression on and the caller's injection on)
+        enables the cession check."""
         import os
 
         from .plans.extract import extract_join_graph
@@ -572,25 +431,13 @@ class Engine:
                     _path_stamp(self.catalog.path(t)))
                    for t in sorted(known))
         ck = (query, fp)
-        #: read by _uncovered_rf_evidence — the dual-arbitration cache
-        #: keys on the same statement+data fingerprint so a
-        #: re-registered fixture cannot replay stale bloom evidence
-        self._stmt_ck = ck
         ext = _EXT_CACHE.get(ck, _MISS)
         if ext is _MISS:
             ext = extract_join_graph(df, known)
             if ext is not TRANSIENT_BAIL:
                 _memo_put(_EXT_CACHE, ck, ext)
         if ext is None or ext is TRANSIENT_BAIL:
-            return None, False
-        #: alias -> base table name, read by _uncovered_rf_evidence to
-        #: compare native bloom edges with the applied ops' edges
-        self._last_alias_tables = {a: i.table
-                                   for a, i in ext.instances.items()}
-        #: alias -> local-filter conjunct texts, read by the cession
-        #: floor's shape priors (_pred_prior)
-        self._last_alias_filters = {a: list(i.filters)
-                                    for a, i in ext.instances.items()}
+            return None
         # gate-bail cache: when this exact statement on this exact data
         # already went through reduce() under this config and EVERY op
         # was gated away, re-running the whole planning path (catalog
@@ -599,20 +446,18 @@ class Engine:
         # dominant cost of repeated small JOB-regime queries after gate
         # 2d disengages them. Data changes invalidate via the mtime/size
         # fingerprints in ck; the config repr keys gate-relevant knobs.
-        # The key also carries rf_live: the cession arbitration's bail
-        # depends on it, and one cfg serves both the rpt leg (injection
-        # off — must engage) and the composed leg (injection on — may
-        # cede); sharing their entries would replay one leg's verdict
-        # into the other.
+        # The key also carries rf_live: the cession's bail depends on
+        # it, and one cfg serves both the rpt leg (injection off — must
+        # engage) and the composed leg (injection on — may cede);
+        # sharing their entries would replay one leg's verdict into the
+        # other.
         bk = (ck, repr(cfg), rf_live)
 
         def bail(verdict):
-            """The bail return for ``verdict``: True (plain), "dup"
-            (duplication economics) or a cession mode ("native" /
-            "off", replayed into the observability fields)."""
-            if verdict in ("native", "off"):
-                self.last_cede = True
-            return None, verdict in ("dup", "off")
+            """The bail return for a cached ``verdict``: "cede" (a
+            cession, replayed into last_cede) or True (plain)."""
+            self.last_cede = verdict == "cede"
+            return None
 
         cached = _BAIL_CACHE.get(bk)
         if cached:
@@ -664,13 +509,13 @@ class Engine:
                          tuple(p[0] for p in pairs),
                          "left"))
         if len(ext.edges) + len(virt_edges) <= 1:
-            return None, False
+            return None
         # at least one relation must be substitutable (single-occurrence
         # table) for the rewrite to have any effect — e.g. a pure
         # self-join offers nothing to shadow
         if not any(ext.occurrences(i.table) == 1 and not i.protected
                    for i in ext.instances.values()):
-            return None, False
+            return None
 
         # relations bound to ``s`` (here and for the virtual nodes), so
         # the eager jobs built on them run under the statement's conf
@@ -736,26 +581,20 @@ class Engine:
         # reduce() releases the previous query's persists at entry; nulling
         # last_result here instead would leak them for the life of the
         # session (CacheManager plan pollution — see reduce()'s docstring)
-        ceded: list = []
+        alias_t = {a: i.table for a, i in ext.instances.items()}
 
         def _cede(plan, dfs_, rows_est_, filtered_, evidence):
-            ceded.append(self._cede_verdict(s, query, cfg, plan, dfs_,
-                                            rows_est_, filtered_,
-                                            evidence))
-            return ceded[-1] is not None
+            return self._cede_verdict(s, query, ck, alias_t, cfg, plan,
+                                      dfs_, rows_est_, filtered_, evidence)
 
         red = self.reduce(rels, list(ext.edges) + virt_edges, cfg,
                           opaque=getattr(ext, "opaque", None),
                           host_prefiltered=host_pre,
-                          cede_check=(_cede if rf_live
-                                      and cfg.cede_covered_edges
-                                      else None))
+                          cede_check=_cede if rf_live else None)
         if self.last_cede:
-            # cession (config.cede_covered_edges): the host's lazy
-            # blooms cover everything the ops would do — disengage,
-            # riding native unless the floor said the off plan is
-            # already minimal (ride off)
-            return bail(_memo_put(_BAIL_CACHE, bk, ceded[-1], 512))
+            # cession: the host's lazy blooms cover everything the ops
+            # would do — disengage and ride native
+            return bail(_memo_put(_BAIL_CACHE, bk, "cede", 512))
         if self.last_result is None:
             # planner bailed (gates / <=1 edge)
             return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
@@ -819,39 +658,9 @@ class Engine:
         if not shadowed:
             # all ops gated away (e.g. gate 2d on an all-broadcast
             # probe): deterministic for this statement+data+config, so
-            # repeats skip the planning path entirely. When the ONLY
-            # forward candidates lost died to the duplication gates
-            # (2d/2e — the host's broadcast joins already do the
-            # filtering), native runtime blooms would duplicate the
-            # same joins too: the composed arbitration keeps injection
-            # suppressed for this query ("dup"; JOB jq1: native 1.65 s
-            # vs off 0.95 s on exactly this shape, JOB_REGIME_r07).
-            # Shuffle-economics drops
-            # (gates 2/2b/2b3, incl. a refused sketch rescue) instead
-            # mean a shape we could NOT serve scan-locally — there
-            # native's subtree blooms stay welcome.
-            lr = self.last_result
-            dup_bail = (lr is not None and not lr.applied
-                        and lr.drops.get("dup", 0) > 0
-                        and not any(k in ("gate2", "gate2b", "gate2b3",
-                                          "gate2c", "noop")
-                                    for k in lr.drops))
-            return bail(_memo_put(_BAIL_CACHE, bk,
-                                  "dup" if dup_bail else True, 512))
-        # per-query dual (_uncovered_rf_evidence): the REWRITTEN plan
-        # would carry >=1 native bloom on an edge the applied ops do
-        # NOT cover — selectivity the rewrite leaves on the table — so
-        # the final run gets the caller's injection back; the eager
-        # jobs above already ran suppressed. Evidence is read from the
-        # shadowed views (see _uncovered_rf_evidence). An empty-build
-        # cascade skips the pass outright: the short-circuit leaves
-        # ~nothing for native to filter, and the ~0.3 s planning pass
-        # was the whole composed overhead on JOB jq24 (0.91 s vs rpt
-        # 0.33 s)
-        dual = (rf_live
-                and "empty" not in self.last_result.applied_tiers
-                and self._uncovered_rf_evidence(s, query, cfg))
-        return s.sql(query), not dual
+            # repeats skip the planning path entirely
+            return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
+        return s.sql(query)
 
     # -- the rewrite ---------------------------------------------------
 
@@ -862,8 +671,8 @@ class Engine:
                cede_check=None) -> dict:
         """Apply robust predicate transfer; returns alias -> reduced DF.
 
-        ``cede_check`` (the SQL path's cession arbitration closure,
-        config.cede_covered_edges) is invoked after scheduling but
+        ``cede_check`` (the SQL path's cession closure,
+        Engine._cede_verdict) is invoked after scheduling but
         before ANY eager job as ``cede_check(plan, dfs, rows_est,
         filtered, evidence)``, ``evidence`` being the keyword arguments
         apply_transfer gets; returning True makes reduce

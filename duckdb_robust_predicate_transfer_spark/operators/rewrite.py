@@ -167,11 +167,7 @@ class TransferResult:
     def drops(self) -> dict:
         """gate-name -> count of scheduled ops that gate dropped. "dup" =
         duplication economics (gates 2d/2e: the host plan performs the
-        same filtering itself); Engine.sql's composed arbitration reads
-        it — a query whose ONLY lost candidates were dup-drops is an
-        all-BHJ shape where native runtime blooms duplicate the same
-        joins too, so injection stays suppressed for it (JOB jq1/jq4/jq6
-        measured native 0.6-1.3x of off on exactly these)."""
+        same filtering itself)."""
         out: dict = {}
         for d in self.decisions:
             if d.gate:

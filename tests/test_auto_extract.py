@@ -591,3 +591,14 @@ def test_left_join_is_null_filter_never_baked(spark, sf_dir):
     off = Engine(spark, sf_dir, RPTConfig(enabled=False)).sql(
         sql, auto_rpt=False).collect()
     assert sorted(map(tuple, on)) == sorted(map(tuple, off))
+
+
+def test_sql_without_catalog_runs_plain(spark):
+    """An Engine built without ``sf_dir`` has no catalog to register or
+    rewrite against: ``sql`` runs the statement as plain ``spark.sql``
+    whatever ``auto_rpt`` says."""
+    eng = Engine(spark)
+    for auto_rpt in (True, False):
+        rows = eng.sql("select 1 as a", auto_rpt=auto_rpt).collect()
+        assert [r.a for r in rows] == [1], auto_rpt
+        assert not eng.last_sql_rewritten

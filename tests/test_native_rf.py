@@ -15,10 +15,14 @@ baseline plan — zero ``might_contain`` anywhere. These tests pin:
    emulation in set_native_rf should be revisited);
 3. ``set_native_rf`` round-trips the session confs (benchmark legs must
    not leak lowered gates into later legs);
-4. the engine's per-query arbitration lands on the DataFrame it
-   returns (bound to the statement's cloned session) and never on the
-   caller's session.
+4. the engine's one native-bloom rule (config.suppress_native_rf):
+   with the caller's injection live, an engaged statement runs with it
+   off and every bail (a cession included) with the caller's value.
+   The value lands on the DataFrame the engine returns (bound to the
+   statement's cloned session) and never on the caller's session.
 """
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,6 +38,38 @@ _APP = ("spark.sql.optimizer.runtime.bloomFilter."
 _CREATE = "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"
 
 
+@contextmanager
+def _injection_live(spark):
+    """Broadcast joins off and Spark's bloom injection on with its size
+    gates lowered, so InjectRuntimeFilter fires at sf0.001/sf0.01; the
+    caller's values come back afterwards."""
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(_ENABLED, "true")
+    spark.conf.set(_APP, "1")
+    spark.conf.set(_CREATE, "8GB")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        spark.conf.set(_ENABLED, "false")
+        spark.conf.unset(_APP)
+        spark.conf.unset(_CREATE)
+
+
+#: a three-table chain whose customer filter native blooms can carry to
+#: orders, while orders itself is unfiltered: no native bloom can exist
+#: on the orders->lineitem edge, yet the transfer's reduced-orders op
+#: applies there — reach native lacks, so the cession refuses
+REACH_SQL = """
+    SELECT COUNT(*) AS n
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    WHERE c_mktsegment = 'BUILDING'
+"""
+
+
 def _shuffle_join(spark):
     """lineitem |><| filtered orders, forced to shuffle (broadcast off):
     the shape InjectRuntimeFilter targets."""
@@ -45,18 +81,8 @@ def _shuffle_join(spark):
 
 
 def test_bloom_injects_when_gates_open(spark):
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(_ENABLED, "true")
-    spark.conf.set(_APP, "1")
-    spark.conf.set(_CREATE, "8GB")
-    try:
+    with _injection_live(spark):
         assert count_native_blooms(_shuffle_join(spark)) >= 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(_ENABLED, "false")
-        spark.conf.unset(_APP)
-        spark.conf.unset(_CREATE)
 
 
 def test_no_bloom_at_default_thresholds(spark):
@@ -83,16 +109,13 @@ def test_set_native_rf_roundtrip(spark):
     assert spark.conf.get(_APP) == default_app
 
 
-def test_composed_arbitration_dup_bail_keeps_suppression(spark):
-    """Composed-mode per-query arbitration: a query whose only lost
-    transfer candidates died to the duplication gates (2d/2e) is an
-    all-broadcast-join shape where native runtime blooms duplicate the
-    same joins — Engine.sql must keep injection suppressed for it even
-    though the rewrite did not engage (JOB jq1/jq4/jq6). A query that
-    bails for any other reason runs with the caller's value (Q21's
-    self-join class, where native blooms reach shapes we skip). The
-    verdict is read off each returned DataFrame's session; the
-    caller's conf never changes."""
+def test_composed_arbitration_dup_bail_runs_with_caller_setting(spark):
+    """A query whose only lost transfer candidates died to the
+    duplication gates (2d/2e) bails like any other: it runs with the
+    caller's injection, on the first pass and on the bail-cache pass
+    alike. A query that bails for any other reason does too. The value
+    is read off each returned DataFrame's session; the caller's conf
+    never changes."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -116,7 +139,7 @@ def test_composed_arbitration_dup_bail_keeps_suppression(spark):
             e = Engine(spark, sf, cfg)
             df = e.sql(dup_sql)
             assert not e.last_sql_rewritten
-            assert df.sparkSession.conf.get(_ENABLED) == "false", attempt
+            assert df.sparkSession.conf.get(_ENABLED) == "true", attempt
             assert spark.conf.get(_ENABLED) == "true", attempt
             assert e.last_result is None or (
                 not e.last_result.applied
@@ -187,12 +210,7 @@ def test_native_bloom_edges_extraction(spark):
     from duckdb_robust_predicate_transfer_spark.plans.catalyst_order import (
         native_bloom_edges)
 
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(_ENABLED, "true")
-    spark.conf.set(_APP, "1")
-    spark.conf.set(_CREATE, "8GB")
-    try:
+    with _injection_live(spark):
         edges = native_bloom_edges(
             _shuffle_join(spark),
             {"lineitem": f"{SF}/lineitem.parquet",
@@ -201,11 +219,6 @@ def test_native_bloom_edges_extraction(spark):
         assert {"probe_table": "lineitem", "probe_col": "l_orderkey",
                 "build_table": "orders", "build_col": "o_orderkey"
                 } in edges
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(_ENABLED, "false")
-        spark.conf.unset(_APP)
-        spark.conf.unset(_CREATE)
 
 
 def test_native_detectors_skip_sketch_probes(spark):
@@ -232,13 +245,13 @@ def test_native_detectors_skip_sketch_probes(spark):
     assert all(e["build_table"] is None for e in edges)
 
 
-def test_composed_dual_arbitration_by_bloom_coverage(spark):
-    """Engine._uncovered_rf_evidence: an ENGAGED query keeps injection
-    suppressed when every native bloom's edge is covered by an applied
-    op (single mechanism per edge), but restores injection for the
-    final run when the host would plant a bloom on an edge the transfer
-    left on the table (per-query dual — JOB_REGIME_r08: jq2
-    6.25->2.37 s)."""
+def test_engaged_statement_runs_without_native_blooms(spark, monkeypatch):
+    """The one rule's engaged half: with the caller's injection live, an
+    ENGAGED statement runs its final plan with injection off, whether
+    or not its rewritten plan would carry a native bloom on an edge no
+    applied op covers. The suppression must hold through EXECUTION,
+    not just the conf: a bloom-laden plan running under nominal
+    suppression would defeat the rule."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -250,79 +263,66 @@ def test_composed_dual_arbitration_by_bloom_coverage(spark):
         JOIN customer ON o_custkey = c_custkey
         WHERE o_orderpriority = '1-URGENT' AND c_mktsegment = 'BUILDING'
     """
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(_ENABLED, "true")
-    spark.conf.set(_APP, "1")
-    spark.conf.set(_CREATE, "8GB")
     base = dict(all_broadcast_bail_rows=0, skip_no_exchange_probe=False,
                 skip_host_prefiltered_semi=False,
-                require_selective_build=False,
-                # this test pins the ENGAGED path's per-edge dual; the
-                # r10 cession would (correctly) disengage the fully-
-                # covered scenario first — tested separately in
-                # test_cession_arbitration
-                cede_covered_edges=False)
-    try:
-        # covered: ops land on BOTH filtered edges -> blooms are pure
-        # duplication -> suppression holds through the final run
-        e = Engine(spark, sf, RPTConfig(min_probe_rows=0, **base))
+                require_selective_build=False, min_probe_rows=0)
+    # the cession would (correctly) disengage these shapes first: its
+    # dry run has no observed key counts, so it sees both filtered
+    # edges as covered candidates. It is tested in
+    # test_cession_arbitration and refused here to pin the engaged path
+    monkeypatch.setattr(Engine, "_cede_verdict", lambda *a, **k: False)
+    with _injection_live(spark):
+        # covered: ops land on BOTH filtered edges
+        e = Engine(spark, sf, RPTConfig(**base))
         covered_df = e.sql(chain_sql)
         assert e.last_sql_rewritten
         ops = {(o.build, o.probe) for o in e.last_result.applied}
         assert ("customer", "orders") in ops, ops
         assert covered_df.sparkSession.conf.get(_ENABLED) == "false"
         assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
-        # the suppression must hold through EXECUTION, not just the
-        # conf: a bloom-laden cached plan running under nominal
-        # suppression would silently defeat the arbitration
         covered_df.collect()
         assert count_native_blooms(covered_df) == 0, \
-            "covered leg executed with native blooms under suppression"
+            "covered statement executed with native blooms"
 
         # uncovered: gate 2c (bf_benefit_probe_ratio) suppresses the
         # orders->lineitem key set (orders' ~700 filtered keys sit above
         # bf_cheap_keys=100, probe under ratio x pre, probe too small
         # for both the bitmap escalation and the minmax tier) while
-        # customer->orders keeps its op (~30 keys = cheap-exempt) ->
-        # the orders->lineitem bloom is selectivity the transfer left
-        # on the table -> injection restored for the final run
+        # customer->orders keeps its op (~30 keys = cheap-exempt). The
+        # host would bloom orders->lineitem in the rewritten plan; the
+        # statement still runs without it.
         # (host_broadcast_rows=0: a broadcast-hinted reduced orders
         # would make the final join a BHJ, where InjectRuntimeFilter
-        # correctly injects nothing and suppression correctly holds)
+        # injects nothing and the check below would hold vacuously)
         unc = dict(base, bf_cheap_keys=100, bf_benefit_probe_ratio=100,
                    host_broadcast_rows=0)
-        e2 = Engine(spark, sf, RPTConfig(min_probe_rows=0, **unc))
-        dual_df = e2.sql(chain_sql)
+        e2 = Engine(spark, sf, RPTConfig(**unc))
+        unc_df = e2.sql(chain_sql)
         assert e2.last_sql_rewritten
         ops2 = {(o.build, o.probe) for o in e2.last_result.applied}
         assert ("orders", "lineitem") not in ops2, ops2
         assert ("customer", "orders") in ops2, ops2
-        assert dual_df.sparkSession.conf.get(_ENABLED) == "true", \
-            "uncovered native bloom must flip the engaged query to dual"
-        # ...and the restored injection must reach the EXECUTED plan
-        # (the optimized-plan-caching failure mode the engine docstring
-        # warns about: a plan cached under suppression would execute
-        # bloom-less while the conf reads true)
-        dual_df.collect()
-        assert count_native_blooms(dual_df) > 0, \
-            "dual leg executed without native blooms despite the flip"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(_ENABLED, "false")
-        spark.conf.unset(_APP)
-        spark.conf.unset(_CREATE)
+        assert unc_df.sparkSession.conf.get(_ENABLED) == "false"
+        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
+        unc_df.collect()
+        assert count_native_blooms(unc_df) == 0, \
+            "engaged statement executed with native blooms"
+        # premise: the same rewritten shape does carry an uncovered
+        # bloom once injection is back on in its session
+        unc_df.sparkSession.conf.set(_ENABLED, "true")
+        assert count_native_blooms(
+            unc_df.sparkSession.sql(chain_sql)) > 0, \
+            "premise: the rewritten plan would carry a native bloom"
 
 
 def test_cession_arbitration(spark):
-    """r10 cession (config.cede_covered_edges): when the ORIGINAL
-    plan's native blooms cover every candidate op edge, the engine
-    disengages BEFORE any eager job and hands the query to the host —
-    riding native when the shape-prior probe mass is real, riding OFF
-    (suppression kept) when the off plan's pushed filters already
-    leave nothing worth blooming (the jq1 floor). A query whose
-    candidates reach beyond the blooms stays engaged. The ride mode is
-    read off the returned DataFrame's session."""
+    """The cession: when the ORIGINAL plan's native blooms cover every
+    candidate op edge, the engine disengages BEFORE any eager job and
+    hands the query to the host, which runs it with the caller's
+    injection — native — on the first pass and on the bail-cache pass.
+    A query whose candidates reach beyond the blooms stays engaged and
+    runs with injection off. Read off the returned DataFrame's
+    session."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -334,81 +334,65 @@ def test_cession_arbitration(spark):
         JOIN customer ON o_custkey = c_custkey
         WHERE o_orderstatus = 'F' AND c_mktsegment = 'BUILDING'
     """
-    # orders carries no local filter -> no native bloom can exist on
-    # the orders->lineitem edge, but the reduced-orders op still
-    # applies (transfer reach native cannot express) -> no cession
-    reach_sql = """
-        SELECT COUNT(*) AS n
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE c_mktsegment = 'BUILDING'
-    """
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(_ENABLED, "true")
-    spark.conf.set(_APP, "1")
-    spark.conf.set(_CREATE, "8GB")
-    base = dict(min_probe_rows=0, all_broadcast_bail_rows=0,
-                skip_no_exchange_probe=False,
-                skip_host_prefiltered_semi=False)
-    try:
-        # floor: sf0.001 probe masses are tiny -> cede AND ride off
-        e = Engine(spark, sf, RPTConfig(**base))
-        df = e.sql(covered_sql)
-        assert e.last_cede
-        assert not e.last_sql_rewritten
-        assert df.sparkSession.conf.get(_ENABLED) == "false", \
-            "floor must ride off"
-        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
-
-        # floor disabled -> cede and ride native (injection restored);
-        # exercise the bail-cache replay on the second pass
+    cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
+                    skip_no_exchange_probe=False,
+                    skip_host_prefiltered_semi=False)
+    with _injection_live(spark):
         for attempt in ("first", "cached"):
-            e2 = Engine(spark, sf, RPTConfig(
-                **base, cede_suppress_max_probe_rows=0))
-            df2 = e2.sql(covered_sql)
-            assert e2.last_cede, attempt
-            assert not e2.last_sql_rewritten, attempt
-            assert df2.sparkSession.conf.get(_ENABLED) == "true", \
+            e = Engine(spark, sf, cfg)
+            df = e.sql(covered_sql)
+            assert e.last_cede, attempt
+            assert not e.last_sql_rewritten, attempt
+            assert df.sparkSession.conf.get(_ENABLED) == "true", \
                 f"cession must ride native ({attempt})"
+            assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
 
-        # master switch off -> engaged as before
-        e3 = Engine(spark, sf, RPTConfig(**base, cede_covered_edges=False))
-        e3.sql(covered_sql)
-        assert not e3.last_cede and e3.last_sql_rewritten
-
-        # uncovered reach -> no cession, engaged
-        e4 = Engine(spark, sf, RPTConfig(**base))
-        e4.sql(reach_sql)
-        assert not e4.last_cede, "reach beyond blooms must refuse cession"
-        assert e4.last_sql_rewritten
-        ops = {(o.build, o.probe) for o in e4.last_result.applied}
+        # uncovered reach -> no cession, engaged, injection off
+        e2 = Engine(spark, sf, cfg)
+        df2 = e2.sql(REACH_SQL)
+        assert not e2.last_cede, "reach beyond blooms must refuse cession"
+        assert e2.last_sql_rewritten
+        ops = {(o.build, o.probe) for o in e2.last_result.applied}
         assert ("orders", "lineitem") in ops, ops
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(_ENABLED, "false")
-        spark.conf.unset(_APP)
-        spark.conf.unset(_CREATE)
+        assert df2.sparkSession.conf.get(_ENABLED) == "false"
+
+
+def test_engaged_statement_plans_native_blooms_once(spark, sf_dir,
+                                                    monkeypatch):
+    """An engaged statement under live injection pays one native-bloom
+    planning pass — the cession's look at the ORIGINAL plan — and no
+    second pass over its rewritten plan. The statement text is used by
+    no other test, so the module memos miss."""
+    from duckdb_robust_predicate_transfer_spark.config import RPTConfig
+    from duckdb_robust_predicate_transfer_spark.engine import Engine
+    from duckdb_robust_predicate_transfer_spark.plans import catalyst_order
+
+    calls = []
+    real = catalyst_order.native_bloom_edges
+    monkeypatch.setattr(catalyst_order, "native_bloom_edges",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
+                    skip_no_exchange_probe=False,
+                    skip_host_prefiltered_semi=False)
+    sql = REACH_SQL.replace("'BUILDING'", "'AUTOMOBILE'")
+    with _injection_live(spark):
+        e = Engine(spark, sf_dir, cfg)
+        df = e.sql(sql)
+        assert e.last_sql_rewritten and not e.last_cede
+        assert df.sparkSession.conf.get(_ENABLED) == "false"
+    assert len(calls) == 1, calls
 
 
 def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
-    """Per-query scope: plan A (engaged, injection suppressed for its
-    final run), then plan B (a bail, which runs with the caller's
-    injection), then execute A. A must execute bloom-free exactly as
-    when it runs alone: B's verdict must not reach A's plan. After
-    every statement the caller's conf and views are as they were."""
+    """Per-query scope: plan A (engaged, injection off for its final
+    run), then plan B (a bail, which runs with the caller's injection),
+    then execute A. A must execute bloom-free exactly as when it runs
+    alone: B's setting must not reach A's plan. After every statement
+    the caller's conf and views are as they were."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
     sf = sf_dir
-    chain_sql = """
-        SELECT COUNT(*) AS n
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE o_orderpriority = '1-URGENT' AND c_mktsegment = 'BUILDING'
-    """
     one_edge_sql = """
         SELECT COUNT(*) AS n
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -417,27 +401,21 @@ def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
                     skip_no_exchange_probe=False,
                     skip_host_prefiltered_semi=False,
-                    require_selective_build=False,
-                    cede_covered_edges=False)
+                    require_selective_build=False)
     orders_rows = spark.read.parquet(f"{sf}/orders.parquet").count()
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(_ENABLED, "true")
-    spark.conf.set(_APP, "1")
-    spark.conf.set(_CREATE, "8GB")
 
     def caller_untouched():
         assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
         assert spark.table("orders").count() == orders_rows, \
             "caller's orders view left shadowed"
 
-    try:
-        alone = Engine(spark, sf, cfg).sql(chain_sql)
+    with _injection_live(spark):
+        alone = Engine(spark, sf, cfg).sql(REACH_SQL)
         want = alone.collect()
         assert count_native_blooms(alone) == 0, "premise: A suppressed"
 
         ea = Engine(spark, sf, cfg)
-        a_df = ea.sql(chain_sql)  # planned, not collected
+        a_df = ea.sql(REACH_SQL)  # planned, not collected
         assert ea.last_sql_rewritten
         caller_untouched()
         eb = Engine(spark, sf, cfg)
@@ -448,12 +426,7 @@ def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
 
         assert a_df.collect() == want
         assert count_native_blooms(a_df) == 0, \
-            "a later statement's verdict reached A's plan"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(_ENABLED, "false")
-        spark.conf.unset(_APP)
-        spark.conf.unset(_CREATE)
+            "a later statement's setting reached A's plan"
 
 
 def test_table_cols_skips_missing_tables(spark, tmp_path, monkeypatch):

@@ -19,10 +19,13 @@ an IMDB-shaped schema with ALL join keys as strings:
 Queries are JOB-style SQL texts (MIN aggregates over many-way joins
 with LIKE / IN / BETWEEN dim predicates), run through ``Engine.sql()``
 auto-extraction — the same entry the reference's optimizer hook rewrites
-— in four legs: off / rpt (transfer only) / native (Spark's runtime
+— in five legs: off / rpt (transfer only) / native (Spark's runtime
 blooms, thresholds lowered so they genuinely fire below the 10GB gate)
-/ composed. Every query is oracle-checked against DuckDB ON THE SAME
-PARQUET at full scale before any timing.
+/ composed (both, under the engine's one native-bloom rule: an engaged
+query runs with injection off, every bail — a cession included — with
+it on) / dual (both, with ``suppress_native_rf=False``: the
+no-suppression ablation). Every query is oracle-checked against DuckDB
+ON THE SAME PARQUET at full scale before any timing.
 
 Run:  python -u tools/job_regime.py [--json OUT] [--runs N]
 Env:  DRPT_JOB_DIR  (default /tmp/drpt_job)
@@ -46,7 +49,6 @@ NC = max(200, FACT // 200)      # companies
 NK = max(100, FACT // 700)      # keywords
 NP = max(500, FACT // 100)      # persons
 SHUFFLE = int(os.environ.get("DRPT_SHUFFLE_PARTITIONS", "64"))
-RF_ENABLED = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
 os.environ.setdefault("DRPT_DRIVER_MEM", "16g")
 
@@ -443,8 +445,8 @@ QUERIES = {
         AND t_kind = 'kind_2'
     """,
     # integer mid-hop: keyword's reduction reaches title only across an
-    # INTEGER edge — the rescue must refuse it (conditioning) and the
-    # dual arbitration may hand that hop to a native bloom
+    # INTEGER edge — the rescue must refuse it (conditioning); native
+    # blooms may serve that hop in the native and dual legs
     "jq27": """
       SELECT MIN(t_title) AS min_title, COUNT(*) AS n
       FROM title, movie_keyword, keyword
@@ -717,9 +719,8 @@ QUERIES = {
         AND t_kind IN ('kind_2', 'kind_9')
         AND mi_info LIKE 'rating:%'
     """,
-    # jq1's floor class at a different note predicate: every relation
-    # selectively filtered, off plan already minimal — the cession
-    # floor should ride off, not native
+    # jq1's class at a different note predicate: every relation
+    # selectively filtered, off plan already minimal
     "jq54": """
       SELECT MIN(t_title) AS min_title, COUNT(*) AS n
       FROM title, movie_company, company
@@ -811,7 +812,6 @@ def main() -> int:
     oracle_ok: dict = {}
     engaged: dict = {}
     ops_inv: dict = {}
-    arb_suppressed: dict = {}
     for name, sql in QUERIES.items():
         e = Engine(spark, OUT_DIR)
         df = e.sql(sql)
@@ -821,11 +821,6 @@ def main() -> int:
         ops_inv[name] = ([f"{op.phase[0]}:{op.build}->{op.probe}[{t}]"
                           for op, t in zip(lr.applied, lr.applied_tiers)]
                          if lr is not None else [])
-        # composed arbitration verdict for UN-engaged queries: True =
-        # the bail kept native injection suppressed (dup evidence or a
-        # cession riding off), read off the returned DataFrame's session
-        arb_suppressed[name] = (not engaged[name] and df.sparkSession.conf
-                                .get(RF_ENABLED) == "false")
         want = _canon(con.sql(sql).fetchall())
         oracle_ok[name] = (got == want)
         print(f"# oracle {name}: match={oracle_ok[name]} "
@@ -834,20 +829,13 @@ def main() -> int:
 
     # -- timing: off / rpt / native / composed / dual, rotated min-of-N.
     #    "dual" = engine on WITH native injection live and suppression
-    #    off — the A/B for composed's per-edge-impossible fallback (the
-    #    session-wide suppression while engaged): if dual ever beat
-    #    composed on an engaged query, suppression would be costing a
-    #    bloom the transfer doesn't cover.
+    #    off — the no-suppression ablation: if dual ever beat composed
+    #    on an engaged query, suppression would be costing a bloom the
+    #    transfer doesn't cover.
     MODES = ("off", "rpt", "native", "composed", "dual")
 
-    #: per-query composed verdict: True = the engaged query's rewritten
-    #: plan carried an uncovered native bloom edge, so the engine
-    #: restored injection for the final run (per-query dual,
-    #: Engine._uncovered_rf_evidence)
-    composed_dual: dict = {}
-    #: per-query r10 cession verdict: "native" = disengaged and handed
-    #: to the host's blooms, "off" = disengaged with suppression kept
-    #: (the jq1 floor), None = no cession (engaged or ordinary bail)
+    #: per-query cession verdict: "native" = disengaged and handed to
+    #: the host's blooms, None = no cession (engaged or ordinary bail)
     composed_cede: dict = {}
 
     def leg(name: str, mode: str) -> float:
@@ -860,15 +848,9 @@ def main() -> int:
 
         def run() -> None:
             e = Engine(spark, OUT_DIR, cfg)
-            df = e.sql(QUERIES[name], auto_rpt=cfg.enabled)
-            df.collect()
+            e.sql(QUERIES[name], auto_rpt=cfg.enabled).collect()
             if mode == "composed":
-                # the final run's injection, off the returned
-                # DataFrame's session (the leg asserted it on)
-                rf_on = df.sparkSession.conf.get(RF_ENABLED) == "true"
-                composed_dual[name] = e.last_sql_rewritten and rf_on
-                composed_cede[name] = (("native" if rf_on else "off")
-                                       if e.last_cede else None)
+                composed_cede[name] = "native" if e.last_cede else None
 
         return timed_leg(spark, run,
                          native_rf=mode in ("native", "composed", "dual"))
@@ -911,8 +893,6 @@ def main() -> int:
         "oracle_ok": oracle_ok,
         "rpt_engaged": engaged,
         "rpt_ops": ops_inv,
-        "composed_arbitration_suppressed": arb_suppressed,
-        "composed_dual_rf": composed_dual,
         "composed_cede": composed_cede,
         "native_blooms_injected": blooms,
         "geomean_sec": {m: geo(m) for m in MODES},

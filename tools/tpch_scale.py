@@ -21,8 +21,10 @@ lineitem shuffle stops being trivially memory-resident:
      its 10GB-scan default gate it injects nothing below cluster
      scale; see workload.common.set_native_rf) / COMPOSED = transfer
      + native blooms together, the production default at cluster
-     scale. Per-query native-bloom injection counts are recorded in
-     the artifact as plan-shape evidence.
+     scale, under the engine's one native-bloom rule (an engaged query
+     runs with injection off, every bail — a cession included — with
+     it on). Per-query native-bloom injection counts and cessions are
+     recorded in the artifact as plan-shape evidence.
 
 Run:  python -u tools/tpch_scale.py [--json OUT] [--runs N] [--skip-oracle]
 Env:  DRPT_TPCH_SCALE_DIR (default /tmp/drpt_tpch_x10)
@@ -211,14 +213,12 @@ def main() -> int:
                          None if mode in ("rpt", "composed") else off_cfg,
                          rf and EMULATE_RF)
 
-    def verdict(df) -> tuple:
-        """(engaged, cession mode) of the statement that built ``df``,
-        off the query function's Engine and ``df``'s session."""
+    def verdict() -> tuple:
+        """(engaged, "native" for a cession else None) of the last
+        statement, off the query function's Engine."""
         e = common.last_engine
         engaged = bool(e.last_result is not None and e.last_result.applied)
-        rf_on = df.sparkSession.conf.get(RF_ENABLED) == "true"
-        return engaged, (("native" if rf_on else "off")
-                         if e.last_cede else None)
+        return engaged, "native" if e.last_cede else None
 
     def leg(name: str, mode: str) -> float:
         # emergency valve: a leg mid-query can still spill big; never
@@ -241,7 +241,7 @@ def main() -> int:
                 # engaged-only geomeans) — works under
                 # DRPT_TPCH_SCALE_BLOOMS_FROM reuse too, where the
                 # blooms pass never runs
-                engaged[name], c = verdict(df)
+                engaged[name], c = verdict()
                 if c is not None or name not in cede:
                     cede[name] = c
 
@@ -278,7 +278,7 @@ def main() -> int:
                     df = QUERIES[q](spark, OUT_DIR)
                     blooms[q][mode] = count_native_blooms(df)
                     if mode == "composed":
-                        engaged[q], cede[q] = verdict(df)
+                        engaged[q], cede[q] = verdict()
 
                 try:
                     mode_leg(mode, count)
