@@ -64,9 +64,7 @@ class RPTConfig:
     #: cleaner statistics downstream and the build cost difference
     #: dominates. FP rows (~0.3% at full load, bloom.py) are dropped by
     #: the final exact join, so results are identical. 0 disables
-    #: (exact semis everywhere, the pre-r8 behavior). DSv2 probes keep
-    #: the exact key set (it feeds in-scan row-group pruning + the
-    #: adaptive row filter, strictly better than any row predicate).
+    #: (exact semis everywhere, the pre-r8 behavior).
     #: STRING/BINARY probe keys only: integer keys probe a broadcast
     #: hash relation as cheaply as a bloom test and the lazy semi keeps
     #: AQE replanning — the unconditioned escalation reproduced the
@@ -239,9 +237,8 @@ class RPTConfig:
     #: any too-big neighbor (its shuffle join IS the exchange the
     #: reduction shrinks — Q5/Q7/Q17/Q22 at x1000, the cascade
     #: fixtures), opaque probes (anti/full-outer joins the edge graph
-    #: cannot see — Extraction.opaque), DSv2 probes (reduction lands in
-    #: the scan as row-group pruning, no exchange needed), and the
-    #: min/max tier (prunes the scan, separately payoff-checked).
+    #: cannot see — Extraction.opaque), and the min/max tier (prunes
+    #: the scan, separately payoff-checked).
     #: host_broadcast_rows=0 disables (forced/test configs).
     skip_no_exchange_probe: bool = True
     #: gate 2e — gate 2d's duplication economics with the exchange

@@ -19,10 +19,10 @@ physical_use_bf.cpp):
 - empty build side => always-false filter (physical_create_bf.cpp:
   290-297) -> here: ``probe.where(lit(False))`` short-circuit.
 - the BF-as-table-filter push itself (rpt_optimizer.cpp:1401-1501,
-  the probe SCAN dropping excluded data) has no pure-PySpark hook;
-  the optional jvm/rpt-dsv2.jar closes it with a DSv2 scan whose
-  SupportsRuntimeV2Filtering.filter() drops whole row groups against
-  the runtime IN-set (certified in DSV2_RF_r04.json).
+  the probe SCAN dropping excluded data) -> here: the sketch tier's
+  ``might_contain`` test, which fuses into the probe's scan stage the
+  way Spark's own InjectRuntimeFilter does, plus the min/max BETWEENs
+  above reaching the Parquet scan as PushedFilters.
 
 Ordering dependencies (the reference's cross-pipeline scheduling,
 physical_create_bf.cpp:559-613) are free: a key-set is just a
@@ -385,7 +385,6 @@ class TransferState:
                  neighbor_edges: dict | None = None,
                  opaque_rels: set | None = None,
                  host_prefiltered: "set | None" = None):
-        self.inputs = dfs
         self.dfs = dict(dfs)
         self.rows_est = rows_est
         self.filtered = filtered
@@ -448,22 +447,6 @@ class TransferState:
         #: and bloom caches so a further-reduced build is never served a
         #: stale filter
         self.epochs: dict = {}
-        self._dsv2: dict = {}
-
-    def is_dsv2(self, alias: str) -> bool:
-        """Is the alias's input scan the DSv2 rptparquet source (read off
-        the un-reduced input, once per alias)? A broadcast semi into a
-        key-prunable scan pays AT THE SCAN (runtime row-group pruning,
-        cold IO) with no downstream exchange needed, so the tier gates
-        exempt it. Unknown counts as DSv2: do not suppress."""
-        if alias not in self._dsv2:
-            try:
-                self._dsv2[alias] = "rptparquet" in (
-                    self.inputs[alias]._jdf.queryExecution().analyzed()
-                    .toString())
-            except Exception:
-                self._dsv2[alias] = True
-        return self._dsv2[alias]
 
     def note(self, alias: str, n: float, weak: bool = False) -> float:
         """Record an observed row count for ``alias``; returns it."""
@@ -730,7 +713,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
         pre = s.rows_pre.get(op.build, est)
         if (pre > cfg.bf_cheap_keys
                 and probe_rows < cfg.bf_benefit_probe_ratio * pre):
-            if probe_big and not s.is_dsv2(op.probe):
+            if probe_big:
                 # the bitmap ships no driver hash relation — gate
                 # 2c's fixed cost vanishes, so escalate the tier
                 # instead of losing the op
@@ -755,8 +738,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #     an exchange: keep the semi if ANY other neighbor is too
     #     big to broadcast (a shuffle join of the probe exists), if
     #     the probe holds plan edges the graph cannot see
-    #     (anti/full outer -> opaque), or if the probe scan is
-    #     key-prunable (DSv2: the reduction lands IN the scan).
+    #     (anti/full outer -> opaque).
     #     The min/max tier is exempt as in gate 2c — it prunes the
     #     scan itself and is separately payoff-checked.
     #     CASCADE GUARD: never suppress an op whose probe is the
@@ -796,8 +778,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
         # host to REALLY pre-filter this pair below the probe's
         # first exchange — the same certainty bar as gate 2e.
         if (widest <= cfg.host_broadcast_rows
-                and (hp is None or host_filters())
-                and not s.is_dsv2(op.probe)):
+                and (hp is None or host_filters())):
             supp = ("dup", widest, cfg.host_broadcast_rows)
     # 2e. host-prefiltered duplication: the un-rewritten host plan
     #     already inner-BHJ-joins this build into the probe's scan
@@ -815,17 +796,15 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #     suppression); probe huge enough (10x broadcast_key_rows)
     #     that any backward op building from it stays shuffle-tier,
     #     which gate 3a (backward_broadcast_only) already skips —
-    #     so no transitive reduction is lost; DSv2 probes keep the
-    #     op (scan-local reduction is strictly cheaper than the
-    #     host join). The engine excludes shared-subquery/virtual
-    #     probes before handing over the pairs (config docstring).
+    #     so no transitive reduction is lost. The engine excludes
+    #     shared-subquery/virtual probes before handing over the
+    #     pairs (config docstring).
     if (supp is None and cfg.skip_host_prefiltered_semi and hp
             and host_filters() and exact_bc
             and op.build not in s.reduced
             and op.probe not in s.forward_builds
             and cfg.backward_broadcast_only
-            and s.rows_est.get(op.probe, 0.0) > 10 * bkr
-            and not s.is_dsv2(op.probe)):
+            and s.rows_est.get(op.probe, 0.0) > 10 * bkr):
         supp = ("dup", s.rows_est.get(op.probe, 0.0), 10 * bkr)
     if supp and cfg.filter_type == "bf_only":
         return drop(*supp)  # no minmax tier to fall back to
@@ -893,8 +872,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
         return Decision(op, tier="minmax", value=value,
                         threshold=threshold, observed=seen, minmax=True,
                         suppressed=supp[0] if supp else None, rescue=rescue)
-    if (_sketch_tier(cfg, est) or force_sketch
-            or (probe_big and not s.is_dsv2(op.probe))):
+    if _sketch_tier(cfg, est) or force_sketch or probe_big:
         tier = "sketch"
     else:
         tier = "exact_shuffle" if est > bkr else "exact_broadcast"

@@ -87,44 +87,3 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list,
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
 
-
-def read_rpt_parquet(spark: SparkSession, path: str,
-                     filter_columns: tuple | list = (),
-                     log_file: str = "",
-                     row_filter: bool = True,
-                     row_filter_disable_at: float = 0.75,
-                     fallback: bool = True) -> DataFrame:
-    """Runtime-filtered parquet scan via the optional ``jvm/rpt-dsv2.jar``
-    DataSource V2 source (the reference's BF-into-scan table filter,
-    rpt_optimizer.cpp:1401-1501, re-expressed as Spark's
-    SupportsRuntimeV2Filtering — see jvm/README.md).
-
-    ``filter_columns`` declares the join-key columns whose runtime
-    IN-sets may drop whole row groups. When the jar is not on the
-    session's classpath the native parquet reader is returned instead
-    (``fallback=False`` raises) — the source is opt-in by design: it
-    wins on cold/remote storage where skipped row groups are skipped
-    IO, while a warm local page-cache scan makes the saved bytes free.
-
-    ``row_filter`` additionally probes each surviving row against the
-    runtime key set inside the scan and drops misses before they reach
-    the first exchange, self-disabling per task when the observed pass
-    rate exceeds ``row_filter_disable_at`` — the reference's
-    SelectivityOptionalFilter (physical_create_bf.cpp:324-329).
-    """
-    try:
-        reader = spark.read.format("rptparquet")
-        if filter_columns:
-            reader = reader.option("filterColumns", ",".join(filter_columns))
-        if log_file:
-            reader = reader.option("logFile", log_file)
-        if not row_filter:
-            reader = reader.option("rowFilter", "false")
-        if row_filter_disable_at != 0.75:
-            reader = reader.option("rowFilterDisableAt",
-                                   str(row_filter_disable_at))
-        return reader.load(path)
-    except Exception:
-        if not fallback:
-            raise
-        return spark.read.parquet(path)

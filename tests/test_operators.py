@@ -402,7 +402,8 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     gate, plus evidence — for every op decided before an observation
     lands. Run over this module's gate fixtures through Engine.reduce
     (the cession hook sees exactly apply_transfer's inputs), then over
-    hand-set estimates that fire each estimate-only gate."""
+    hand-set estimates that fire each estimate-only gate and take each
+    probe-big sketch route."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine, Rel
     from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
@@ -537,6 +538,30 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     assert dry.tier == "sketch" and not dry.observed, dry
     assert real.tier == "exact_broadcast" and real.observed, real
     assert real.value == 150  # sf0.001 customer rows, counted
+
+    # probe-big sketch routes (config.bloom_probe_min_rows): a string-key
+    # probe at or above the bar takes the bloom tier, both where gate 2c
+    # would drop a mid-size build (pre-decay build above bf_cheap_keys,
+    # probe under bf_benefit_probe_ratio x build) and for a small
+    # broadcast-tier build; without the escalation the same ops drop at
+    # 2c / land exact
+    fwd = TransferPlan(root="o", ops=[
+        TransferOp("c", "o", ("c_key_s",), ("o_key_s",), fw)])
+
+    def both(rows, cfg):
+        (dry,) = dry_run(sk, rows, {"c"}, fwd, cfg)
+        (real,) = apply_transfer(sk, dict(rows), {"c"}, fwd,
+                                 cfg).decisions
+        return dry, real
+
+    for rows, unescalated in (({"c": 1.5e6, "o": 1e7}, "gate2c"),
+                              ({"c": 10, "o": 1e7}, "exact_broadcast")):
+        cfg = RPTConfig(**base)
+        assert rows["o"] >= cfg.bloom_probe_min_rows
+        dry, real = both(rows, cfg)
+        assert dry.tier == real.tier == "sketch", (dry, real)
+        dry, real = both(rows, RPTConfig(**base, bloom_probe_min_rows=0))
+        assert dry == real and (dry.gate or dry.tier) == unescalated, dry
 
 
 def test_dry_run_keeps_reach_past_minmax_only_landing(spark, sf_dir):

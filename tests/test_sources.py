@@ -129,15 +129,3 @@ def test_graded_sink_query_prunes(spark, sf_dir):
     assert "PartitionFilters: [isnotnull(o_orderstatus" in plan, plan
     assert 0 < df.count() <= 5
 
-
-def test_read_rpt_parquet_falls_back_without_jar(spark, sf_dir):
-    """The opt-in DSv2 reader degrades to the native parquet source when
-    jvm/rpt-dsv2.jar is not on the session classpath (the shared test
-    session never loads it), and raises when fallback is disabled."""
-    import pytest
-
-    path = os.path.join(sf_dir, "nation.parquet")
-    df = src.read_rpt_parquet(spark, path, filter_columns=("n_nationkey",))
-    assert df.count() == spark.read.parquet(path).count()
-    with pytest.raises(Exception):
-        src.read_rpt_parquet(spark, path, fallback=False)

@@ -24,7 +24,8 @@ lineitem shuffle stops being trivially memory-resident:
      scale, under the engine's one native-bloom rule (an engaged query
      runs with injection off, every bail — a cession included — with
      it on). Per-query native-bloom injection counts and cessions are
-     recorded in the artifact as plan-shape evidence.
+     recorded in the artifact as plan-shape evidence, and each
+     transfer leg's own engagement as ``rpt_engaged_by_leg``.
 
 Run:  python -u tools/tpch_scale.py [--json OUT] [--runs N] [--skip-oracle]
 Env:  DRPT_TPCH_SCALE_DIR (default /tmp/drpt_tpch_x10)
@@ -236,6 +237,11 @@ def main() -> int:
         def run() -> None:
             df = QUERIES[name](spark, OUT_DIR)
             df.collect()
+            if mode in engaged_by_leg:
+                # each transfer leg's own engagement, off its timed
+                # statement: a leg can only be read against off for a
+                # query it actually engaged on
+                engaged_by_leg[mode][name] = verdict()[0]
             if mode == "composed":
                 # free engagement/cession capture (feeds the
                 # engaged-only geomeans) — works under
@@ -257,6 +263,7 @@ def main() -> int:
     # executed" comment was wrong for that mode)
     blooms: dict = {}
     engaged: dict = {}
+    engaged_by_leg: dict = {"rpt": {}, "composed": {}}
     cede: dict = {}
     blooms_from = os.environ.get("DRPT_TPCH_SCALE_BLOOMS_FROM", "")
     if blooms_from:
@@ -362,6 +369,7 @@ def main() -> int:
         # plan-identical to off); the engaged-only geomean isolates
         # what the engine actually does from that noise floor
         "rpt_engaged": engaged,
+        "rpt_engaged_by_leg": engaged_by_leg,
         "composed_cede": cede,
         "geomean_engaged_only_sec": {
             m: geo(m, [q for q in ok_qs if engaged.get(q)])
