@@ -107,7 +107,7 @@ class RPTConfig:
     #: (table_manager.cpp:64-69). 0 disables.
     observe_est_factor: float = 8.0
     #: gate 2g — WEAK-BUILD OBSERVATION: a build carrying only a LOCAL
-    #: filter has unproven selectivity — the fixed 0.2 decay guess
+    #: filter has unknown selectivity — the fixed 0.2 decay guess
     #: cannot tell co_name LIKE '%Pictures%' (keeps 100% of the JOB
     #: fixture's companies) from 'Universal %' (1%), and a key set
     #: spanning its whole domain removes nothing while its eager
@@ -320,13 +320,12 @@ class RPTConfig:
     #: shipped (measured at TPCH_SCALE x100: composed Q7 4.21s vs rpt
     #: alone 2.54s). With this on and the caller's injection on,
     #: Engine.sql applies one rule, in the statement's own cloned
-    #: session (the caller's keeps its value): the statement plans and
-    #: runs its eager jobs with injection off, an engaged statement
-    #: keeps it off for its final run, and every bail runs with the
-    #: caller's value. A bail includes the cession
-    #: (Engine._cede_verdict): before any eager job, when the ORIGINAL
-    #: plan's native blooms cover every candidate op edge, the query
-    #: disengages and rides native.
+    #: session (the caller's keeps its value): the statement runs with
+    #: the caller's injection and only its eager transfer jobs run with
+    #: it off, while an op whose edge a native bloom of the original
+    #: plan covers drops at gate "native" (operators/rewrite.decide) —
+    #: covered edges ride native, the rest ride the transfer, and a
+    #: statement whose every op drops is a plain bail (the cession).
     #: CERTIFIED CLUSTER DEFAULT (r6): run COMPOSED — leave Spark's
     #: runtime bloom filters enabled alongside the engine and let this
     #: rule arbitrate. Composed beats transfer-alone on geomean at every
@@ -340,7 +339,8 @@ class RPTConfig:
     #: composed's one interaction loss (Q22; EAGER_AB_r10 re-checked it
     #: at the 100M JOB regime: 1.043x faster than with injection live).
     #: Off: the no-suppression ablation (injection stays as the caller
-    #: set it throughout, and nothing cedes).
+    #: set it throughout, eager jobs included, and no gate "native"
+    #: runs).
     suppress_native_rf: bool = True
     #: persist reduced tables that both feed a key-set and the final join
     persist_reduced: bool = True

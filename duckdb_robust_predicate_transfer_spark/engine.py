@@ -28,8 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from .catalog import Catalog, get_catalog
 from .config import DEFAULT, RPTConfig
-from .operators.rewrite import (KEY_TIERS, TransferResult, apply_transfer,
-                                 dry_run)
+from .operators.rewrite import TransferResult, apply_transfer
 from .plans.graph import (JoinGraph, execution_order_dag, join_order_dag,
                           largest_root_tree)
 from .plans.ir import JoinEdge, TableNode
@@ -79,41 +78,18 @@ def _norm_cols(c) -> tuple:
 _EXT_CACHE: dict = {}
 
 #: (statement cache key, config repr, rf_live) -> "cede" or True when
-#: reduce() ceded or gated every op away for that statement+data+config:
-#: repeats skip the planning path entirely (see _auto_transfer_sql). Only BAILS are cached — an
+#: reduce() gated every op away for that statement+data+config ("cede"
+#: when at least one op dropped at gate "native"): repeats skip the
+#: planning path entirely (see _auto_transfer_sql). Only BAILS are cached — an
 #: engaged statement re-plans each run because its eager builds are the
 #: mechanism itself.
 _BAIL_CACHE: dict = {}
 
-#: (statement cache key, broadcast threshold) -> scan_prefilter_pairs
-#: result (possibly None): the gate-2d/2e host-plan evidence, cached
-#: because it costs a physical planning pass per statement
-_PREFILTER_CACHE: dict = {}
-
-#: (statement cache key, rf-threshold confs) -> frozenset of lowercased
-#: (probe_table, probe_col, build_table) native bloom edges of the
-#: ORIGINAL (un-rewritten) statement — the cession's coverage evidence;
-#: one planning pass per novel statement
-_ORIG_RF_CACHE: dict = {}
-
-#: (statement cache key, rf-threshold confs, footer-row stats, filtered
-#: aliases, config) -> bool: the cession VERDICT itself. The job-free
-#: dry run of the gate stack (rewrite.dry_run) is pure Python but still
-#: cost 20-40 ms per call on the widest flagship queries (r11 pricing:
-#: 15-19% of their construction), and its inputs are all deterministic
-#: functions of the key — the footer row estimates join the key so a
-#: fixture change invalidates the entry (same rationale as the
-#: catalog's path+mtime+size-keyed footer cache: metadata keying, not
-#: result caching).
-_CEDE_CACHE: dict = {}
-
-#: the cession's "uniquely added reach is small" bound: cede only when
-#: the largest footer-row probe among UNCOVERED candidate ops is at most
-#: this fraction of the query's largest relation. 0.15 separates
-#: title-only extra reach (2.5M / 100M fact at the JOB regime) from
-#: genuine unique value (jq15's movie_info 20M / 33M = 0.6, TPC-H's
-#: lineitem cascades = 1.0). Relative, so it scales with fixture size.
-CEDE_EXTRA_PROBE_FRAC = 0.15
+#: (statement cache key, rf-threshold confs, injection value) ->
+#: (scan_prefilter_pairs result, native bloom edges) of the ORIGINAL
+#: statement: the host-plan evidence of gates 2d/2e and "native", read
+#: from one physical planning pass per novel statement
+_EVIDENCE_CACHE: dict = {}
 
 
 #: guards every write to the module memos above (Engine.sql may run on
@@ -143,6 +119,17 @@ _RF_CONF_KEYS = (
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
     "spark.sql.autoBroadcastJoinThreshold")
 _RF_ENABLED = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+
+
+def _edge_set(edges) -> frozenset:
+    """native_bloom_edges output -> lowercased (probe_table, probe_col,
+    build_table) triples, without the edges that have an unresolved
+    side."""
+    return frozenset(
+        (b["probe_table"].lower(), b["probe_col"].lower(),
+         b["build_table"].lower())
+        for b in edges or ()
+        if None not in (b["probe_table"], b["probe_col"], b["build_table"]))
 
 
 def normalize_edges(edges: list) -> list:
@@ -203,10 +190,11 @@ class Engine:
         setting whatever later statements decide.
 
         Native runtime blooms follow one rule (config.suppress_native_rf):
-        with the caller's injection on, the statement plans and runs its
-        eager jobs with it off; an engaged statement keeps it off for
-        its final run, and every bail (a cession, gated away, or a shape
-        bail) runs with the caller's value.
+        the statement runs with the caller's injection setting and only
+        its eager transfer jobs run with injection off, while an op whose
+        edge a native bloom of the original plan already covers drops at
+        gate "native" — covered edges ride native, the rest ride the
+        transfer, and a statement whose every op drops is a plain bail.
 
         Any extraction bail-out (unsupported construct, <=2 edges after
         gating, no instance actually reduced) returns the plain result.
@@ -220,30 +208,19 @@ class Engine:
         #: reference's "rules_applied" profiling counter
         #: (rpt_profiling.hpp:40-55). Read by tools/breadth_check.py.
         self.last_sql_rewritten = False
-        #: set by reduce() when the cession disengaged the query to hand
-        #: its covered edges to native runtime blooms (_cede_verdict)
+        #: True when the statement bailed with at least one op dropped at
+        #: gate "native": its covered edges were handed to Spark's own
+        #: runtime blooms (read by perfbench and the regime tools)
         self.last_cede = False
         if not auto_rpt or not cfg.enabled or self.catalog is None:
             return self.spark.sql(query)
         s = clone_session(self.spark)
-        # one filtering mechanism per edge (config.suppress_native_rf):
-        # with injection live Spark plants bloom filters inside the
-        # eager jobs (observe counts, min/max aggs, key-set builds,
-        # persists) too — pure planning-job overhead that showed up as
-        # a composed-only Q22 loss at x1000 (8.2 s vs rpt 5.1 s with
-        # ZERO blooms in the final plan, TPCH_SCALE_X1000_r06)
         rf_live = (cfg.suppress_native_rf
                    and self.spark.conf.get(_RF_ENABLED, "false") == "true")
-        if rf_live:
-            s.conf.set(_RF_ENABLED, "false")
         df = s.sql(query)
         out = self._auto_transfer_sql(query, s, df, cfg, rf_live)
         self.last_sql_rewritten = out is not None
-        if out is not None:
-            return out
-        if rf_live:
-            s.conf.set(_RF_ENABLED, "true")
-        return df
+        return df if out is None else out
 
     def _rf_confs(self) -> tuple:
         """Current values of the runtime-filter planner confs
@@ -256,119 +233,49 @@ class Engine:
                 out.append("")
         return tuple(out)
 
-    def _orig_bloom_edges(self, s: SparkSession, query: str,
-                          ck) -> frozenset:
-        """Lowercased (probe_table, probe_col, build_table) edges of the
-        native runtime blooms Spark would plant in the ORIGINAL
-        statement ``query`` (statement cache key ``ck``) — the cession's
-        coverage evidence.
+    def _table_paths(self) -> dict:
+        return {t: self.catalog.path(t) for t in self.catalog.known_tables()}
 
-        Must be called BEFORE the views are shadowed (the evidence is
-        what the host does when the transfer stands down entirely, i.e.
-        the plain native leg's plan). Planned in a throwaway clone of
-        ``s`` with injection on, so ``s`` keeps its own conf and views.
-        Edges with an unresolvable side are omitted: a candidate op can
-        then never count as covered by them, which refuses cession —
-        the safe direction. One planning pass (~0.2-0.5 s) per novel
-        statement, cached like the gate-2e evidence."""
+    def native_edges(self, df: DataFrame) -> frozenset:
+        """Lowercased (probe_table, probe_col, build_table) edges of the
+        native runtime blooms in ``df``'s optimized plan
+        (plans/catalyst_order.native_bloom_edges). Edges with an
+        unresolvable side are left out: an op can then never count as
+        covered by them, which keeps it with the transfer — the safe
+        direction."""
         from .plans.catalyst_order import native_bloom_edges
 
-        ek = (ck, self._rf_confs())
-        hit = _ORIG_RF_CACHE.get(ek, _MISS)
+        return _edge_set(native_bloom_edges(df, self._table_paths(),
+                                            self._table_cols()))
+
+    def _plan_evidence(self, df: DataFrame, ck, alias_paths: dict
+                       ) -> tuple:
+        """(host-prefiltered pairs, native bloom edges) of the original
+        statement ``df`` (statement cache key ``ck``), both read from
+        its one QueryExecution as planned with the caller's injection
+        setting (plans/catalyst_order.statement_evidence). Memoized in
+        _EVIDENCE_CACHE: the physical planning pass costs 0.2-0.5 s on
+        a novel statement."""
+        from .plans.catalyst_order import statement_evidence
+
+        key = (ck, self._rf_confs(),
+               self.spark.conf.get(_RF_ENABLED, "false"))
+        hit = _EVIDENCE_CACHE.get(key, _MISS)
         if hit is not _MISS:
             return hit
-        try:
-            probe = clone_session(s)
-            probe.conf.set(_RF_ENABLED, "true")
-            table_paths = {t: self.catalog.path(t)
-                           for t in self.catalog.known_tables()}
-            edges = frozenset(
-                (b["probe_table"].lower(), b["probe_col"].lower(),
-                 b["build_table"].lower())
-                for b in native_bloom_edges(probe.sql(query), table_paths,
-                                            self._table_cols()) or ()
-                if None not in (b["probe_table"], b["probe_col"],
-                                b["build_table"]))
-        except Exception:
-            edges = frozenset()
-        return _memo_put(_ORIG_RF_CACHE, ek, edges)
-
-    def _cede_verdict(self, s: SparkSession, query: str, ck,
-                      alias_t: dict, cfg: RPTConfig, plan, dfs: dict,
-                      rows_est: dict, filtered: set,
-                      evidence: dict) -> bool:
-        """Should this query DISENGAGE and hand its edges to native
-        runtime blooms? ``ck`` is the statement cache key and
-        ``alias_t`` its alias -> base table map.
-
-        Runs inside reduce() after scheduling but BEFORE any eager job
-        — the whole point is not to sink the jobs the cession avoids.
-        Candidates are the key-tier landings of the job-free dry run of
-        the gate stack (rewrite.dry_run, fed the same ``evidence``
-        apply_transfer gets); coverage from the ORIGINAL plan's
-        native bloom edges. Cede when every candidate edge is covered
-        or the uncovered candidates' probe mass is within
-        CEDE_EXTRA_PROBE_FRAC of the query's largest relation — the
-        host then expresses (almost) everything our eager ops would,
-        lazily, and the statement rides native."""
-        # verdict cache (_CEDE_CACHE): every input below is a
-        # deterministic function of (statement, planner confs, footer
-        # stats, config) — skip the per-call dry run on repeats
-        rows_base = evidence.get("rows_base") or {}
-        try:
-            # repr(cfg) (the _BAIL_CACHE convention) keys the WHOLE
-            # config: the dry run reads the full gate stack
-            vk = (ck, self._rf_confs(), frozenset(rows_base.items()),
-                  frozenset(filtered or ()), repr(cfg))
-            hit = _CEDE_CACHE.get(vk, _MISS)
-            if hit is not _MISS:
-                return hit
-        except TypeError:
-            vk = None  # unhashable component: fall through uncached
-        res = self._cede_verdict_uncached(s, query, ck, alias_t, cfg, plan,
-                                          dfs, rows_est, filtered, evidence)
-        return res if vk is None else _memo_put(_CEDE_CACHE, vk, res)
-
-    def _cede_verdict_uncached(self, s, query, ck, alias_t, cfg, plan, dfs,
-                               rows_est, filtered, evidence) -> bool:
-        cand = [d.op for d in dry_run(dfs, rows_est, filtered, plan, cfg,
-                                      **evidence)
-                if d.tier in KEY_TIERS]
-        if not cand:
-            return False
-        # correlated-subquery virtual nodes: their reduction reaches
-        # subquery occurrences through the shadowed view — value no
-        # host bloom can express (TPC-H Q17's 2.5x); never cede
-        if any(str(a).startswith("__sub")
-               for op in cand for a in (op.build, op.probe)):
-            return False
-        covered = self._orig_bloom_edges(s, query, ck)
-        if not covered:
-            return False
-        rows_base = evidence.get("rows_base") or {}
-        maxrows = max((r for r in rows_base.values() if r), default=0.0)
-        if maxrows <= 0:
-            return False
-        extra = 0.0
-        for op in cand:
-            pt = str(alias_t.get(op.probe, op.probe)).lower()
-            bt = str(alias_t.get(op.build, op.build)).lower()
-            if all((pt, str(pc).lower(), bt) in covered
-                   for pc in op.probe_cols):
-                continue
-            pr = rows_base.get(op.probe) or float("inf")
-            extra = max(extra, pr)
-        return extra <= CEDE_EXTRA_PROBE_FRAC * maxrows
+        pairs, edges = statement_evidence(df, alias_paths,
+                                          self._table_paths(),
+                                          self._table_cols())
+        return _memo_put(_EVIDENCE_CACHE, key, (pairs, _edge_set(edges)))
 
     def _table_cols(self) -> dict:
         """table -> lowercase column-name set for every known table,
         used by native_bloom_edges to resolve a bloom side whose
         lineage spans several leaves (a shadowed reduced view). Cached
         on the Catalog, keyed by the table-name set — a table
-        registered after the first cession check re-enters the map
+        registered after the first evidence read re-enters the map
         instead of being skipped for the life of the session
-        (ADVICE r9); schema reads are parquet-footer-only and the
-        cession check runs once per novel statement."""
+        (ADVICE r9); schema reads are parquet-footer-only."""
         import os
 
         names = frozenset(self.catalog.known_tables())
@@ -381,7 +288,7 @@ class Engine:
             # dir may materialize only a subset (the JOB dir has no
             # part.parquet). A missing one is skipped without a Spark
             # read: each such read fails with a logged stack trace, and
-            # one escaping here would disable the cession for every
+            # one escaping here would disable gate "native" for every
             # query on that fixture.
             if not os.path.exists(self.catalog.path(t)):
                 continue
@@ -397,9 +304,10 @@ class Engine:
                            df: DataFrame, cfg: RPTConfig, rf_live: bool
                            ) -> "DataFrame | None":
         """The rewritten DataFrame for ``query`` in its statement
-        session ``s`` (``df`` = ``s.sql(query)``), or None for a bail.
-        ``rf_live`` (suppression on and the caller's injection on)
-        enables the cession check."""
+        session ``s`` (``df`` = ``s.sql(query)``, planned with the
+        caller's injection setting), or None for a bail. ``rf_live``
+        (suppression on and the caller's injection on) enables gate
+        "native" and runs the eager jobs with injection off."""
         import os
 
         from .plans.extract import extract_join_graph
@@ -446,7 +354,7 @@ class Engine:
         # dominant cost of repeated small JOB-regime queries after gate
         # 2d disengages them. Data changes invalidate via the mtime/size
         # fingerprints in ck; the config repr keys gate-relevant knobs.
-        # The key also carries rf_live: the cession's bail depends on
+        # The key also carries rf_live: gate "native" runs only under
         # it, and one cfg serves both the rpt leg (injection off — must
         # engage) and the composed leg (injection on — may cede);
         # sharing their entries would replay one leg's verdict into the
@@ -454,8 +362,9 @@ class Engine:
         bk = (ck, repr(cfg), rf_live)
 
         def bail(verdict):
-            """The bail return for a cached ``verdict``: "cede" (a
-            cession, replayed into last_cede) or True (plain)."""
+            """The bail return for a cached ``verdict``: "cede" (ops
+            dropped at gate "native", replayed into last_cede) or True
+            (plain)."""
             self.last_cede = verdict == "cede"
             return None
 
@@ -533,68 +442,64 @@ class Engine:
             rels[alias] = Rel(inst.table, df=d,
                               prefiltered=bool(inst.filters))
         rels.update(virt_rels)
-        # gate 2e input: which (probe, build) pairs does the HOST plan
-        # already filter below the probe's first exchange? Read from the
-        # un-rewritten physical plan (pure planning, no jobs). Probes
-        # carrying shared-subquery/virtual edges are excluded: their
-        # semi's reduction reaches the SUBQUERY occurrence through the
-        # shadowed view — value the host's own join cannot deliver
+        # host-plan evidence, both read from the original statement's
+        # one plan (``df``, planned with the caller's injection): which
+        # (probe, build) pairs the host already filters below the
+        # probe's first exchange (gates 2d/2e), and which edges its
+        # native runtime blooms cover (gate "native", under rf_live
+        # only). Probes carrying shared-subquery/virtual edges are
+        # excluded: their semi's reduction reaches the SUBQUERY
+        # occurrence through the shadowed view — value neither the
+        # host's own join nor a bloom on the outer scan can deliver
         # (TPC-H Q17's 2.5x win is exactly that op).
         host_pre: "set | None" = None
-        if cfg.skip_host_prefiltered_semi or cfg.skip_no_exchange_probe:
-            from .plans.catalyst_order import scan_prefilter_pairs
-
+        native: "set | None" = None
+        if (rf_live or cfg.skip_host_prefiltered_semi
+                or cfg.skip_no_exchange_probe):
             alias_paths = {}
             for alias, inst in ext.instances.items():
                 try:
                     alias_paths[alias] = self.catalog.path(inst.table)
                 except Exception:
                     pass
-            # statement-level cache (the _EXT_CACHE rationale): the
-            # pair evidence is a pure function of the query, the table
-            # schemas/sizes and the planner confs — and computing it
-            # forces a physical planning pass (~0.2-0.5 s) that
-            # dominated repeated 1-2 s JOB queries. The broadcast
-            # threshold joins the key because it decides which BHJs
-            # exist at all.
-            try:
-                thresh = self.spark.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold")
-            except Exception:
-                thresh = ""
-            pk = (ck, thresh)
-            host_pre = _PREFILTER_CACHE.get(pk, _MISS)
-            if host_pre is _MISS:
-                # planned through a rebound frame: fixing ``df``'s own
-                # plan now would pin it to the planning-time injection
-                # value, and a bail returns ``df``
-                host_pre = _memo_put(
-                    _PREFILTER_CACHE, pk,
-                    scan_prefilter_pairs(bind(df, s), alias_paths))
+            host_pre, edges = self._plan_evidence(df, ck, alias_paths)
+            excl = ({v[0] for v in virt_edges}
+                    | set(virt_rels)
+                    | {a for a, i in ext.instances.items()
+                       if i.table in shared_tables})
             if host_pre:
-                excl = ({v[0] for v in virt_edges}
-                        | set(virt_rels)
-                        | {a for a, i in ext.instances.items()
-                           if i.table in shared_tables})
                 host_pre = {(p, b, k) for p, b, k in host_pre
                             if p not in excl}
-        # reduce() releases the previous query's persists at entry; nulling
-        # last_result here instead would leak them for the life of the
-        # session (CacheManager plan pollution — see reduce()'s docstring)
-        alias_t = {a: i.table for a, i in ext.instances.items()}
-
-        def _cede(plan, dfs_, rows_est_, filtered_, evidence):
-            return self._cede_verdict(s, query, ck, alias_t, cfg, plan,
-                                      dfs_, rows_est_, filtered_, evidence)
-
-        red = self.reduce(rels, list(ext.edges) + virt_edges, cfg,
-                          opaque=getattr(ext, "opaque", None),
-                          host_prefiltered=host_pre,
-                          cede_check=_cede if rf_live else None)
-        if self.last_cede:
-            # cession: the host's lazy blooms cover everything the ops
-            # would do — disengage and ride native
-            return bail(_memo_put(_BAIL_CACHE, bk, "cede", 512))
+            if rf_live:
+                # table -> its one alias (None: a self-joined table,
+                # whose blooms cannot be told apart, covers nothing)
+                one: dict = {}
+                for a, i in ext.instances.items():
+                    t = i.table.lower()
+                    one[t] = None if t in one else a
+                native = {(one[pt], c, one[bt]) for pt, c, bt in edges
+                          if one.get(pt) and one.get(bt)
+                          and one[pt] not in excl}
+        # only the eager transfer jobs run with injection off: with it
+        # live Spark plants bloom filters inside the observe counts,
+        # min/max aggs, key-set builds and persists too — pure
+        # planning-job overhead that showed up as a composed-only Q22
+        # loss at x1000 (8.2 s vs rpt 5.1 s with ZERO blooms in the
+        # final plan, TPCH_SCALE_X1000_r06). The final statement and
+        # every bail run with the caller's value. reduce() releases the
+        # previous query's persists at entry; nulling last_result here
+        # instead would leak them for the life of the session
+        # (CacheManager plan pollution — see reduce()'s docstring)
+        if rf_live:
+            s.conf.set(_RF_ENABLED, "false")
+        try:
+            red = self.reduce(rels, list(ext.edges) + virt_edges, cfg,
+                              opaque=getattr(ext, "opaque", None),
+                              host_prefiltered=host_pre,
+                              native_edges=native)
+        finally:
+            if rf_live:
+                s.conf.set(_RF_ENABLED, "true")
         if self.last_result is None:
             # planner bailed (gates / <=1 edge)
             return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
@@ -658,8 +563,13 @@ class Engine:
         if not shadowed:
             # all ops gated away (e.g. gate 2d on an all-broadcast
             # probe): deterministic for this statement+data+config, so
-            # repeats skip the planning path entirely
-            return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
+            # repeats skip the planning path entirely. With any op
+            # dropped at gate "native" this is the cession: the covered
+            # edges ride the host's blooms.
+            ceded = any(d.gate == "native"
+                        for d in self.last_result.decisions)
+            return bail(_memo_put(_BAIL_CACHE, bk,
+                                  "cede" if ceded else True, 512))
         return s.sql(query)
 
     # -- the rewrite ---------------------------------------------------
@@ -668,15 +578,12 @@ class Engine:
                config: RPTConfig | None = None,
                opaque: set | None = None,
                host_prefiltered: "set | None" = None,
-               cede_check=None) -> dict:
+               native_edges: "set | None" = None) -> dict:
         """Apply robust predicate transfer; returns alias -> reduced DF.
 
-        ``cede_check`` (the SQL path's cession closure,
-        Engine._cede_verdict) is invoked after scheduling but
-        before ANY eager job as ``cede_check(plan, dfs, rows_est,
-        filtered, evidence)``, ``evidence`` being the keyword arguments
-        apply_transfer gets; returning True makes reduce
-        disengage — inputs returned untouched, ``self.last_cede`` set.
+        ``host_prefiltered`` and ``native_edges`` are the SQL path's
+        host-plan evidence for gates 2d/2e and "native"
+        (apply_transfer).
 
         Persisted build sides from the PREVIOUS reduce are released
         here: Spark's CacheManager substitutes any matching subplan
@@ -686,7 +593,6 @@ class Engine:
         persists live exactly until the next query plans.
         """
         cfg = (config or self.config).validate()
-        self.last_cede = False
         if self.last_result is not None:
             self.last_result.release()
             self.last_result = None
@@ -710,11 +616,13 @@ class Engine:
         rows_base: dict = {}
         paths: dict = {}
         colocated: dict = {}
+        tables: dict = {}
         for alias, spec in rels.items():
             if isinstance(spec, str):
                 spec = Rel(spec)
             elif isinstance(spec, DataFrame):
                 spec = Rel(alias, df=spec)
+            tables[alias] = spec.name
             df = spec.df if spec.df is not None else self.table(spec.name)
             base_rows = 0.0
             if self.catalog is not None:
@@ -827,20 +735,15 @@ class Engine:
                 (e.right, tuple(e.left_cols)))
             neighbor_edges.setdefault(e.right, []).append(
                 (e.left, tuple(e.right_cols)))
-        evidence = dict(probe_paths=paths, colocated=colocated,
-                        rows_base=rows_base, neighbor_edges=neighbor_edges,
-                        opaque_rels=opaque or set(),
-                        host_prefiltered=host_prefiltered)
-
-        if cede_check is not None and cede_check(
-                plan, dfs, rows_est, filtered, evidence):
-            # cession: hand the query to the host's native blooms —
-            # nothing eager has run yet, nothing to release
-            self.last_cede = True
-            return dfs
-
-        res = apply_transfer(dfs, rows_est, filtered, plan, cfg, **evidence)
+        res = apply_transfer(dfs, rows_est, filtered, plan, cfg,
+                             probe_paths=paths, colocated=colocated,
+                             rows_base=rows_base,
+                             neighbor_edges=neighbor_edges,
+                             opaque_rels=opaque or set(),
+                             host_prefiltered=host_prefiltered,
+                             native_edges=native_edges)
         res.planning_ms = planning_ms
+        res.tables = tables
         if cfg.profiling:
             # the reference prints its per-op summary at QueryEnd when
             # rpt_profiling is set (rpt_profiling.hpp:114-216)

@@ -105,11 +105,6 @@ class StepStat:
     probe_ms: float = 0.0
 
 
-#: tiers that ship build keys (exact set or bitmap): the reach the
-#: cession arbitration weighs. A min/max-only landing is not counted.
-KEY_TIERS = ("exact_broadcast", "exact_shuffle", "sketch")
-
-
 @dataclass(frozen=True)
 class Decision:
     """The gate stack's verdict on one scheduled op: the tier it lands
@@ -121,14 +116,14 @@ class Decision:
     #: "exact_broadcast" | "exact_shuffle" | "sketch" | "minmax" (only
     #: the min/max tier can land) | "empty"; None when dropped
     tier: str | None = None
-    #: "info" | "gate1" | "gate2g" | "gate2" | "gate2b" | "gate2b3" |
-    #: "gate2c" | "dup" | "gate3" | "gate3a" | "gate3b" | "gate4" |
-    #: "noop"; None when the op lands
+    #: "info" | "native" | "gate1" | "gate2g" | "gate2" | "gate2b" |
+    #: "gate2b3" | "gate2c" | "dup" | "gate3" | "gate3a" | "gate3b" |
+    #: "gate4" | "noop"; None when the op lands
     gate: str | None = None
     value: float | None = None
     threshold: float | None = None
     #: an eager job measured a count while this op was decided or
-    #: applied; from here on the real pass may depart from a dry run
+    #: applied
     observed: bool = False
     #: the min/max tier lands too (eager agg, or bitmap stat columns)
     minmax: bool = False
@@ -162,6 +157,8 @@ class TransferResult:
     #: one Decision per scheduled op, in schedule order, as the apply
     #: step settled it (a landing tier, or the dropping gate)
     decisions: list = field(default_factory=list)
+    #: alias -> base table name of each relation (set by Engine.reduce)
+    tables: dict = field(default_factory=dict)
 
     @property
     def drops(self) -> dict:
@@ -370,12 +367,30 @@ def _sketch_tier(cfg, est: float) -> bool:
     return cfg.use_sketch and est > cfg.sketch_threshold_rows
 
 
+def _native_ops(ops: list, covered) -> set:
+    """The ops gate "native" may drop: ``covered(op)`` — a native
+    runtime bloom of the original plan covers the op's edge — and no
+    later forward op that stays with the transfer builds from the op's
+    probe. Such a later op carries the probe's reduction onward, which
+    a one-hop bloom from the bare build cannot (REACH_SQL in
+    tests/test_native_rf.py)."""
+    may_drop: set = set()
+    #: builds of the later forward ops that stay with the transfer
+    stay: set = set()
+    for op in reversed(ops):
+        if op.probe not in stay and covered(op):
+            may_drop.add(op)
+        elif op.phase == "forward":
+            stay.add(op.build)
+    return may_drop
+
+
 class TransferState:
     """What the gate stack reads, and the planner state it carries from
     op to op: estimates (overwritten by observed counts), which
     relations were reduced, and what each one knows. ``rows_est`` is
-    used in place — the real pass's observed counts reach the caller
-    (Engine.last_rows_est); a dry run hands in a copy."""
+    used in place — observed counts reach the caller
+    (Engine.last_rows_est)."""
 
     def __init__(self, dfs: dict, rows_est: dict, filtered: set,
                  plan: TransferPlan, cfg: RPTConfig,
@@ -384,7 +399,8 @@ class TransferState:
                  rows_base: dict | None = None,
                  neighbor_edges: dict | None = None,
                  opaque_rels: set | None = None,
-                 host_prefiltered: "set | None" = None):
+                 host_prefiltered: "set | None" = None,
+                 native_edges: "set | None" = None):
         self.dfs = dict(dfs)
         self.rows_est = rows_est
         self.filtered = filtered
@@ -399,6 +415,11 @@ class TransferState:
         #: transitive, so the duplication gates 2d/2e never fire on them
         self.forward_builds = {o.build for o in plan.ops
                                if o.phase == "forward"}
+        #: (probe alias, lowercased probe col, build alias) edges a
+        #: native runtime bloom of the original plan covers
+        self.native_edges = native_edges or set()
+        #: the ops gate "native" may drop (_native_ops)
+        self.native_ops = _native_ops(plan.ops, self.covered)
         #: pre-decay estimates: local-filter selectivity only, updated
         #: by OBSERVED counts (min/max agg, bloom build) but never by the
         #: fixed semi-reduction decay guess — the conservative key-count
@@ -448,6 +469,13 @@ class TransferState:
         #: stale filter
         self.epochs: dict = {}
 
+    def covered(self, op: TransferOp) -> bool:
+        """A native bloom covers every probe column of ``op`` from its
+        build."""
+        return bool(self.native_edges) and all(
+            (op.probe, str(c).lower(), op.build) in self.native_edges
+            for c in op.probe_cols)
+
     def note(self, alias: str, n: float, weak: bool = False) -> float:
         """Record an observed row count for ``alias``; returns it."""
         self.observed.add(alias)
@@ -457,11 +485,10 @@ class TransferState:
         return n
 
     def land(self, op: TransferOp, tier: str) -> None:
-        """Commit a predicate landing on ``op.probe`` (the dry run
-        commits every landing decision). A provable no-op — a minmax
-        range that prunes nothing, with no key tier — must not be
-        committed: marking the probe reduced would let the information
-        gate skip ops that could still prune (ADVICE r4)."""
+        """Commit a predicate landing on ``op.probe``. A provable no-op
+        — a minmax range that prunes nothing, with no key tier — must
+        not be committed: marking the probe reduced would let the
+        information gate skip ops that could still prune (ADVICE r4)."""
         self.reduced.add(op.probe)
         self.info[op.probe] |= self.info[op.build]
         self.epochs[op.probe] = self.epochs.get(op.probe, 0) + 1
@@ -472,15 +499,14 @@ class TransferState:
 
 
 def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
-           observe=None) -> Decision:
+           observe) -> Decision:
     """Run every transfer gate on ``op``, in order, once.
 
     ``observe(alias, persist=False) -> float`` is how a gate obtains an
     observed row count (gates 0b and 2g, and the backward branch of the
-    2f rescue); the real pass passes a callback that (optionally
-    persists and) counts the build. A dry run passes None: those gates
-    keep the estimate. Observations are recorded in ``s``; landing is
-    the caller's (``TransferState.land``)."""
+    2f rescue): a callback that (optionally persists and) counts the
+    build. Observations are recorded in ``s``; landing is the caller's
+    (``TransferState.land``)."""
     inf = float("inf")
     bkr = cfg.broadcast_key_rows
     est = s.rows_est.get(op.build, inf)
@@ -495,6 +521,19 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     if not (s.info[op.build] - s.info[op.probe] - {op.probe}):
         return drop("info")
 
+    # native. one filter per edge (the reference's --no-jfp discipline,
+    # test_job_queries.sh:123-138): a native runtime bloom of the
+    # original plan already filters this edge, and the statement runs
+    # with the caller's injection, so the op would only double it.
+    # Sits before the first observe() so an all-covered statement runs
+    # no eager job. Kept when the build was reduced: the op then ships
+    # already-reduced keys a bloom from the bare build cannot (gate
+    # 2e's guard), and when the probe feeds a later forward op that
+    # stays with the transfer (_native_ops) — until that reach turns
+    # out unused (settled at the end of apply_transfer).
+    if op in s.native_ops and op.build not in s.reduced:
+        return drop("native")
+
     # 0b. near-boundary tier observation (config.observe_est_factor):
     # a guessed estimate just above the broadcast ceiling may hide a
     # genuinely broadcastable key set (x300 Q10: guess 9M, actual
@@ -503,8 +542,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     # UNREDUCED filtered builds only (a reduced build's lineage is a
     # real join; its ops already run on observed/decayed figures),
     # then let every gate below see the exact number.
-    if (observe is not None and cfg.observe_est_factor > 0
-            and op.build not in s.reduced
+    if (cfg.observe_est_factor > 0 and op.build not in s.reduced
             and op.build in s.filtered and op.build not in s.observed
             and bkr < est <= cfg.observe_est_factor * bkr):
         est, seen = s.note(op.build, observe(op.build)), True
@@ -520,17 +558,17 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
         return drop("gate1", est, 0.0 if cfg.require_selective_build
                     else MAX_UNFILTERED_BUILD_ROWS)
     # 2g. weak-build observation (config.weak_observe_max_base):
-    #     a local filter's true selectivity is unproven — LIKE
+    #     a local filter's true selectivity is unknown — LIKE
     #     '%Pictures%' keeps 100% where the decay guess says 20% —
     #     so for dim-sized bases pay one scan+filter count and
     #     apply gate 2b's keep-frac rule to EVERY tier: a build
     #     still holding most of its domain removes almost nothing
     #     while its eager key-set jobs are real (JOB jq17/jq23).
-    #     Dropping here (not "dup") leaves native runtime blooms
-    #     welcome on the edge: the composed arbitration hands weak
-    #     arms to the host's lazy AQE-planned blooms.
-    if (observe is not None and cfg.weak_observe_max_base > 0
-            and s.rows_base is not None
+    #     Dropping here hands the weak arm to the host's lazy
+    #     AQE-planned blooms: the statement runs with the caller's
+    #     injection, so Spark may plant one on the edge, and its build
+    #     costs nothing before the final plan runs.
+    if (cfg.weak_observe_max_base > 0 and s.rows_base is not None
             and op.build not in s.reduced and op.build in s.filtered
             and op.build not in s.observed
             and cfg.weak_observe_min_base <= base
@@ -579,7 +617,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #      30.3/15.1/14.3/14.2) — their downstream joins are all
     #      broadcast dims, so the "reduction feeds the probe's other
     #      joins" rationale priced at zero exchanges saved.
-    force_sketch = rescue = unproven = False
+    force_sketch = rescue = False
     if (cfg.skip_redundant_shuffle_semi and s.neighbor_edges is not None
             and est > bkr and not _sketch_tier(cfg, est)):
         saves_exchange = any(
@@ -645,15 +683,8 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
                 # jq13: 3 extra 12.5M-row movie_company scans behind
                 # a 124k-row reduction).
                 if op.build not in s.observed:
-                    if observe is None:
-                        # dry run: the proof is unavailable; assume
-                        # the bitmap lands so reach is never under-
-                        # listed
-                        unproven = True
-                    else:
-                        est = s.note(op.build,
-                                     observe(op.build, persist=True))
-                        seen = True
+                    est = s.note(op.build, observe(op.build, persist=True))
+                    seen = True
                 # re-check size and selectivity on the OBSERVED
                 # count: a weak build (keeps >= max_build_keep_frac
                 # of its base) cuts too little to repay the eager
@@ -815,7 +846,7 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
             return drop("gate3", probe_rows, cfg.backward_min_probe_rows)
         # 3a. shuffle-tier backward hops are opt-in (see config
         #     docstring)
-        if cfg.backward_broadcast_only and est > bkr and not unproven:
+        if cfg.backward_broadcast_only and est > bkr:
             return drop("gate3a", est, bkr)
         # 3b. benefit gate: a probe whose reduced size already fits the
         #     host broadcast hint will be BROADCAST in the final join —
@@ -880,29 +911,6 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
                     minmax=minmax, rescue=rescue)
 
 
-def dry_run(dfs: dict, rows_est: dict, filtered: set, plan: TransferPlan,
-            cfg: RPTConfig, **evidence) -> list:
-    """Job-free run of the gate stack: ``decide`` without ``observe``
-    over a copy of the estimates, committing every landing decision as
-    the real pass commits a landed predicate (a "minmax" one included).
-    No counts, bloom builds, min/max aggs or persists.
-
-    Feeds the cession arbitration (engine._cede_verdict): the decision
-    whether to disengage and hand a query to native runtime blooms must
-    come BEFORE any eager job runs, or the jobs it exists to avoid are
-    already sunk. It departs from ``apply_transfer`` only where an
-    observed count would have replaced an estimate. Returns one
-    Decision per scheduled op."""
-    s = TransferState(dfs, dict(rows_est), filtered, plan, cfg, **evidence)
-    out = []
-    for op in plan.ops:
-        d = decide(op, s, cfg)
-        if d.tier is not None:
-            s.land(op, d.tier)
-        out.append(d)
-    return out
-
-
 def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                    plan: TransferPlan, cfg: RPTConfig,
                    probe_paths: dict | None = None,
@@ -910,7 +918,8 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                    rows_base: dict | None = None,
                    neighbor_edges: dict | None = None,
                    opaque_rels: set | None = None,
-                   host_prefiltered: "set | None" = None) -> TransferResult:
+                   host_prefiltered: "set | None" = None,
+                   native_edges: "set | None" = None) -> TransferResult:
     """Execute the schedule over ``dfs`` (alias -> DataFrame), mutating a
     copy; returns reduced DataFrames plus optional per-step stats.
     ``probe_paths`` (alias -> parquet path) enables footer-range-aware
@@ -926,6 +935,9 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
     transfer into them. ``host_prefiltered`` ((probe, build) pairs the
     host plan already filters below the probe's first exchange,
     plans/catalyst_order.scan_prefilter_pairs) feeds gate 2e.
+    ``native_edges`` ((probe, lowercased probe col, build) edges a
+    native runtime bloom of the original plan covers,
+    plans/catalyst_order.native_bloom_edges) feeds gate "native".
 
     Each op is decided (``decide``, with an ``observe`` callback that
     counts the build) and then applied: the key-set, bloom and min/max
@@ -936,7 +948,8 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                       probe_paths=probe_paths, colocated=colocated,
                       rows_base=rows_base, neighbor_edges=neighbor_edges,
                       opaque_rels=opaque_rels,
-                      host_prefiltered=host_prefiltered)
+                      host_prefiltered=host_prefiltered,
+                      native_edges=native_edges)
     res = TransferResult(dfs=s.dfs, plan=plan)
     inf = float("inf")
     #: (build alias, build_cols, reduction epoch) -> keys DataFrame; when
@@ -974,11 +987,16 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
         return float((persisted(alias) if persist
                       else s.dfs[alias]).count())
 
+    #: landed ops a native bloom covers, kept only to carry their
+    #: probe's reduction into a later op (gate "native")
+    for_reach: set = set()
     for op in plan.ops:
         d = decide(op, s, cfg, observe)
         if d.tier is None:
             res.decisions.append(d)
             continue
+        if s.covered(op) and op.build not in s.reduced:
+            for_reach.add(op)
         build, probe = s.dfs[op.build], s.dfs[op.probe]
         est = s.rows_est.get(op.build, inf)
         st = StepStat(op=op)
@@ -1119,4 +1137,26 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
             st.probe_ms = (time.perf_counter() - t0) * 1e3
         res.stats.append(st)
 
+    # gate "native", settled: an op kept for reach that no later landing
+    # built from only doubles the native bloom on its edge. It drops
+    # after all, and a probe that only such ops reduced goes back to its
+    # input, so a statement left with nothing else bails to the host —
+    # the cession (their eager jobs have already run; a repeat of the
+    # statement hits the engine's bail cache)
+    idle = {op for i, op in enumerate(res.applied) if op in for_reach
+            and not any(o.build == op.probe for o in res.applied[i + 1:])}
+    back = {op.probe for op in idle
+            if all(o in idle for o in res.applied if o.probe == op.probe)}
+    if back:
+        for p in back:
+            s.dfs[p] = dfs[p]
+            s.rows_est[p] = s.rows_pre[p]
+        gone = {op for op in idle if op.probe in back}
+        kept = [(o, t) for o, t in zip(res.applied, res.applied_tiers)
+                if o not in gone]
+        res.applied = [o for o, _ in kept]
+        res.applied_tiers = [t for _, t in kept]
+        res.decisions = [
+            replace(d, tier=None, gate="native", minmax=False)
+            if d.op in gone else d for d in res.decisions]
     return res

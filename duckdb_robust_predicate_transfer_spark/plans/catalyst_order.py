@@ -264,6 +264,11 @@ def native_bloom_edges(fresh: DataFrame, table_paths: dict,
     suppression is the certified default).
     """
     try:
+        plan = fresh._jdf.queryExecution().optimizedPlan()
+        # one py4j string read settles the common no-bloom plan; the
+        # walk below costs several round trips per node
+        if "bloom_filter_agg(" not in plan.toString():
+            return []
         path_to_table = {_norm_path(p): t for t, p in table_paths.items()}
         owners: dict = {}
         if table_cols:
@@ -307,7 +312,7 @@ def native_bloom_edges(fresh: DataFrame, table_paths: dict,
             return t if t is not None and (not tabs or t in tabs) else None
 
         edges: list = []
-        stack = [fresh._jdf.queryExecution().optimizedPlan()]
+        stack = [plan]
         while stack:
             node = stack.pop()
             stack.extend(_jseq(node.children()))
@@ -347,6 +352,19 @@ def native_bloom_edges(fresh: DataFrame, table_paths: dict,
         return edges
     except Exception:
         return None
+
+
+def statement_evidence(df: DataFrame, alias_paths: dict, table_paths: dict,
+                       table_cols: "dict | None" = None) -> tuple:
+    """(scan_prefilter_pairs, native_bloom_edges) of one statement, both
+    read from ``df``'s one QueryExecution: the executed plan gives the
+    host-prefiltered pairs, the optimized plan it was planned from gives
+    the native bloom edges. ``df`` is planned under whatever injection
+    setting its session holds, so the blooms are the ones it will run
+    with; the pairs do not depend on it (Spark injects blooms as Filters
+    that move no join and no exchange)."""
+    return (scan_prefilter_pairs(df, alias_paths),
+            native_bloom_edges(df, table_paths, table_cols))
 
 
 def physical_alias_order(joined: DataFrame, alias_dfs: dict) -> "list | None":

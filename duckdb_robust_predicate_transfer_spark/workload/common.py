@@ -159,6 +159,27 @@ def count_native_blooms(df) -> int:
         "bloom_filter_agg(")
 
 
+def native_counts(engine, df) -> tuple:
+    """(ops the last statement of ``engine`` dropped at gate "native",
+    applied ops whose edge also carries a native bloom in ``df``'s
+    optimized plan, i.e. double-filtered edges) — the per-edge
+    native-bloom evidence of composed legs. (0, 0) when the statement
+    bailed before the gate stack ran."""
+    res = engine.last_result
+    if res is None:
+        return 0, 0
+    drops = sum(d.gate == "native" for d in res.decisions)
+    final = engine.native_edges(df) if res.applied else frozenset()
+
+    def table(alias) -> str:
+        return str(res.tables.get(alias, alias)).lower()
+
+    double = sum(all((table(op.probe), c.lower(), table(op.build)) in final
+                     for c in op.probe_cols)
+                 for op in res.applied)
+    return drops, double
+
+
 REVENUE = "l_extendedprice * (1 - l_discount)"
 
 

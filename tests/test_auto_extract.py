@@ -483,13 +483,12 @@ def test_delim_virtual_edge_never_reduces_outer(spark, sf_dir):
 
 
 def test_engaged_rewrite_suppresses_native_blooms(eng, spark, sf_dir):
-    """config.suppress_native_rf: one mechanism per edge — an engaged
-    rewrite turns Spark's own bloom injection off for that query (in
-    the returned DataFrame's session); the next un-rewritten query runs
-    with the caller's value, which the engine never changes."""
-    from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms)
-
+    """config.suppress_native_rf: one filter per edge. An engaged
+    rewrite keeps the caller's injection value in the returned
+    DataFrame's session (only its eager jobs ran with it off), and every
+    op it dropped at gate "native" still has its bloom in the plan the
+    statement runs; the next un-rewritten query runs with the caller's
+    value too, which the engine never changes."""
     key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
     prev = spark.conf.get(key, "false")
     spark.conf.set(key, "true")
@@ -497,9 +496,14 @@ def test_engaged_rewrite_suppresses_native_blooms(eng, spark, sf_dir):
         forced = Engine(spark, sf_dir, FORCE)
         df = forced.sql(FLAGSHIP_SQL)
         assert forced.last_sql_rewritten
-        assert df.sparkSession.conf.get(key) == "false"
+        assert df.sparkSession.conf.get(key) == "true"
         assert spark.conf.get(key) == "true"
-        assert count_native_blooms(df) == 0
+        df.collect()
+        final = forced.native_edges(df)
+        for d in forced.last_result.decisions:
+            if d.gate == "native":
+                assert all((d.op.probe, c.lower(), d.op.build) in final
+                           for c in d.op.probe_cols), (d, final)
         plain = forced.sql("SELECT COUNT(*) AS c FROM nation")
         assert not forced.last_sql_rewritten
         assert plain.sparkSession.conf.get(key) == "true"

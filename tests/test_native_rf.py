@@ -16,10 +16,13 @@ baseline plan — zero ``might_contain`` anywhere. These tests pin:
 3. ``set_native_rf`` round-trips the session confs (benchmark legs must
    not leak lowered gates into later legs);
 4. the engine's one native-bloom rule (config.suppress_native_rf):
-   with the caller's injection live, an engaged statement runs with it
-   off and every bail (a cession included) with the caller's value.
-   The value lands on the DataFrame the engine returns (bound to the
-   statement's cloned session) and never on the caller's session.
+   the statement runs with the caller's injection setting and only its
+   eager transfer jobs run with injection off, while an op whose edge a
+   native bloom of the original plan covers drops at gate "native" —
+   covered edges ride native, the rest ride the transfer, and a
+   statement whose every op drops is a plain bail. The value lands on
+   the DataFrame the engine returns (bound to the statement's cloned
+   session) and never on the caller's session.
 """
 
 from contextlib import contextmanager
@@ -57,10 +60,22 @@ def _injection_live(spark):
         spark.conf.unset(_CREATE)
 
 
+#: both chain edges filtered: the original plan's native blooms cover
+#: customer->orders and orders->lineitem, so every op drops at gate
+#: "native" and the statement bails to the host (the cession)
+COVERED_SQL = """
+    SELECT COUNT(*) AS n
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    WHERE o_orderstatus = 'F' AND c_mktsegment = 'BUILDING'
+"""
+
 #: a three-table chain whose customer filter native blooms can carry to
 #: orders, while orders itself is unfiltered: no native bloom can exist
 #: on the orders->lineitem edge, yet the transfer's reduced-orders op
-#: applies there — reach native lacks, so the cession refuses
+#: applies there — reach native lacks, so the covered customer->orders
+#: op stays with the transfer too and the statement engages
 REACH_SQL = """
     SELECT COUNT(*) AS n
     FROM lineitem
@@ -180,13 +195,13 @@ def test_leg_assertion_clears_stale_suppression_stash(spark):
         SELECT COUNT(*) AS n
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     """
-    # composed leg: injection on; the engaged query runs suppressed
+    # composed leg: injection on; the engaged query runs with it
     set_native_rf(spark, True)
     try:
         e = Engine(spark, sf, cfg)
         star_df = e.sql(star_sql)
         assert e.last_sql_rewritten, "engagement premise broken"
-        assert star_df.sparkSession.conf.get(_ENABLED) == "false"
+        assert star_df.sparkSession.conf.get(_ENABLED) == "true"
         assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
         # rpt leg: the harness asserts injection OFF (owns the conf)
         set_native_rf(spark, False)
@@ -245,132 +260,159 @@ def test_native_detectors_skip_sketch_probes(spark):
     assert all(e["build_table"] is None for e in edges)
 
 
-def test_engaged_statement_runs_without_native_blooms(spark, monkeypatch):
+def _native_drops_keep_blooms(e, df):
+    """Every op of ``e``'s last statement that dropped at gate "native"
+    has its bloom in the plan ``df`` runs: no edge loses both filters.
+    Returns the number of such ops."""
+    drops = [d.op for d in e.last_result.decisions if d.gate == "native"]
+    final = e.native_edges(df)
+    for op in drops:
+        for c in op.probe_cols:
+            assert (op.probe, c.lower(), op.build) in final, (op, final)
+    return len(drops)
+
+
+def test_engaged_statement_runs_without_native_blooms(spark):
     """The one rule's engaged half: with the caller's injection live, an
-    ENGAGED statement runs its final plan with injection off, whether
-    or not its rewritten plan would carry a native bloom on an edge no
-    applied op covers. The suppression must hold through EXECUTION,
-    not just the conf: a bloom-laden plan running under nominal
-    suppression would defeat the rule."""
+    engaged statement runs with the caller's value (only its eager jobs
+    ran with injection off). Per edge: part->lineitem is covered by a
+    native bloom of the original plan and drops at gate "native", while
+    customer->orders and orders->lineitem stay with the transfer —
+    orders is unfiltered, so no bloom covers its edge, and
+    customer->orders feeds it. The dropped edge keeps its native bloom
+    in the plan the statement runs, through execution."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
     sf = "/root/testdata/sf0.001"
-    chain_sql = """
+    mixed_sql = """
         SELECT COUNT(*) AS n
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
-        WHERE o_orderpriority = '1-URGENT' AND c_mktsegment = 'BUILDING'
+        JOIN part ON l_partkey = p_partkey
+        WHERE c_mktsegment = 'BUILDING' AND p_size < 10
     """
-    base = dict(all_broadcast_bail_rows=0, skip_no_exchange_probe=False,
-                skip_host_prefiltered_semi=False,
-                require_selective_build=False, min_probe_rows=0)
-    # the cession would (correctly) disengage these shapes first: its
-    # dry run has no observed key counts, so it sees both filtered
-    # edges as covered candidates. It is tested in
-    # test_cession_arbitration and refused here to pin the engaged path
-    monkeypatch.setattr(Engine, "_cede_verdict", lambda *a, **k: False)
+    cfg = RPTConfig(all_broadcast_bail_rows=0, skip_no_exchange_probe=False,
+                    skip_host_prefiltered_semi=False,
+                    require_selective_build=False, min_probe_rows=0)
     with _injection_live(spark):
-        # covered: ops land on BOTH filtered edges
-        e = Engine(spark, sf, RPTConfig(**base))
-        covered_df = e.sql(chain_sql)
-        assert e.last_sql_rewritten
+        e = Engine(spark, sf, cfg)
+        df = e.sql(mixed_sql)
+        assert e.last_sql_rewritten and not e.last_cede
         ops = {(o.build, o.probe) for o in e.last_result.applied}
-        assert ("customer", "orders") in ops, ops
-        assert covered_df.sparkSession.conf.get(_ENABLED) == "false"
+        assert ops == {("customer", "orders"), ("orders", "lineitem")}, ops
+        assert df.sparkSession.conf.get(_ENABLED) == "true"
         assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
-        covered_df.collect()
-        assert count_native_blooms(covered_df) == 0, \
-            "covered statement executed with native blooms"
-
-        # uncovered: gate 2c (bf_benefit_probe_ratio) suppresses the
-        # orders->lineitem key set (orders' ~700 filtered keys sit above
-        # bf_cheap_keys=100, probe under ratio x pre, probe too small
-        # for both the bitmap escalation and the minmax tier) while
-        # customer->orders keeps its op (~30 keys = cheap-exempt). The
-        # host would bloom orders->lineitem in the rewritten plan; the
-        # statement still runs without it.
-        # (host_broadcast_rows=0: a broadcast-hinted reduced orders
-        # would make the final join a BHJ, where InjectRuntimeFilter
-        # injects nothing and the check below would hold vacuously)
-        unc = dict(base, bf_cheap_keys=100, bf_benefit_probe_ratio=100,
-                   host_broadcast_rows=0)
-        e2 = Engine(spark, sf, RPTConfig(**unc))
-        unc_df = e2.sql(chain_sql)
-        assert e2.last_sql_rewritten
-        ops2 = {(o.build, o.probe) for o in e2.last_result.applied}
-        assert ("orders", "lineitem") not in ops2, ops2
-        assert ("customer", "orders") in ops2, ops2
-        assert unc_df.sparkSession.conf.get(_ENABLED) == "false"
-        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
-        unc_df.collect()
-        assert count_native_blooms(unc_df) == 0, \
-            "engaged statement executed with native blooms"
-        # premise: the same rewritten shape does carry an uncovered
-        # bloom once injection is back on in its session
-        unc_df.sparkSession.conf.set(_ENABLED, "true")
-        assert count_native_blooms(
-            unc_df.sparkSession.sql(chain_sql)) > 0, \
-            "premise: the rewritten plan would carry a native bloom"
+        rows = df.collect()
+        assert _native_drops_keep_blooms(e, df) == 1
+    off = Engine(spark, sf, RPTConfig(enabled=False)).sql(mixed_sql)
+    assert rows == off.collect()
 
 
 def test_cession_arbitration(spark):
-    """The cession: when the ORIGINAL plan's native blooms cover every
-    candidate op edge, the engine disengages BEFORE any eager job and
-    hands the query to the host, which runs it with the caller's
-    injection — native — on the first pass and on the bail-cache pass.
-    A query whose candidates reach beyond the blooms stays engaged and
-    runs with injection off. Read off the returned DataFrame's
-    session."""
+    """The cession is the all-covered case of gate "native": when the
+    original plan's native blooms cover every op edge, every op drops
+    before any eager job and the statement bails to the host, which
+    runs it with the caller's injection — native — on the first pass
+    and on the bail-cache pass. A statement with reach beyond the
+    blooms engages, and runs with the caller's injection as well. Read
+    off the returned DataFrame's session."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
     sf = "/root/testdata/sf0.001"
-    covered_sql = """
-        SELECT COUNT(*) AS n
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        WHERE o_orderstatus = 'F' AND c_mktsegment = 'BUILDING'
-    """
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
                     skip_no_exchange_probe=False,
                     skip_host_prefiltered_semi=False)
     with _injection_live(spark):
         for attempt in ("first", "cached"):
             e = Engine(spark, sf, cfg)
-            df = e.sql(covered_sql)
+            df = e.sql(COVERED_SQL)
             assert e.last_cede, attempt
             assert not e.last_sql_rewritten, attempt
             assert df.sparkSession.conf.get(_ENABLED) == "true", \
                 f"cession must ride native ({attempt})"
             assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
+            if attempt == "first":
+                assert e.last_result.drops.get("native") == 2, \
+                    e.last_result.decisions
+                assert _native_drops_keep_blooms(e, df) == 2
 
-        # uncovered reach -> no cession, engaged, injection off
+        # uncovered reach -> engaged, caller's injection
         e2 = Engine(spark, sf, cfg)
         df2 = e2.sql(REACH_SQL)
-        assert not e2.last_cede, "reach beyond blooms must refuse cession"
+        assert not e2.last_cede, "reach beyond blooms must engage"
         assert e2.last_sql_rewritten
         ops = {(o.build, o.probe) for o in e2.last_result.applied}
-        assert ("orders", "lineitem") in ops, ops
-        assert df2.sparkSession.conf.get(_ENABLED) == "false"
+        assert {("customer", "orders"), ("orders", "lineitem")} <= ops, ops
+        assert df2.sparkSession.conf.get(_ENABLED) == "true"
+
+
+def test_host_pairs_do_not_depend_on_injection(spark):
+    """The one planning pass reads gate 2e's host-prefiltered pairs off
+    the original statement as planned with the caller's injection. That
+    is sound only if injected blooms move no join and no exchange:
+    scan_prefilter_pairs must give the same pairs with injection on and
+    off, on plans where the blooms are really there. The gate-2e shape
+    runs with a broadcast threshold that lets the filtered supplier
+    broadcast into the lineitem scan while customer shuffles and gets a
+    bloom."""
+    from duckdb_robust_predicate_transfer_spark.engine import Engine
+    from duckdb_robust_predicate_transfer_spark.plans.catalyst_order import (
+        scan_prefilter_pairs)
+
+    e = Engine(spark, "/root/testdata/sf0.001")
+    e.catalog.register_views()
+    chain = {a: e.catalog.path(a) for a in ("lineitem", "orders",
+                                             "customer")}
+    host_pre_sql = """
+        SELECT COUNT(*) AS n
+        FROM lineitem l
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        WHERE s.s_nationkey = 1 AND c.c_mktsegment = 'BUILDING'
+    """
+    shapes = [(REACH_SQL, chain, "-1"), (COVERED_SQL, chain, "-1"),
+              (host_pre_sql,
+               {a: e.catalog.path(t) for a, t in (
+                   ("l", "lineitem"), ("s", "supplier"), ("o", "orders"),
+                   ("c", "customer"))}, "3000")]
+    with _injection_live(spark):
+        for sql, alias_paths, thresh in shapes:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+            spark.conf.set(_ENABLED, "true")
+            on = spark.sql(sql)
+            assert count_native_blooms(on) > 0, "premise: blooms planted"
+            spark.conf.set(_ENABLED, "false")
+            off = spark.sql(sql)
+            pairs = scan_prefilter_pairs(on, alias_paths)
+            assert pairs is not None
+            assert pairs == scan_prefilter_pairs(off, alias_paths), sql
+            if thresh != "-1":
+                assert ("l", "s", frozenset({"l_suppkey"})) in pairs, pairs
 
 
 def test_engaged_statement_plans_native_blooms_once(spark, sf_dir,
                                                     monkeypatch):
-    """An engaged statement under live injection pays one native-bloom
-    planning pass — the cession's look at the ORIGINAL plan — and no
-    second pass over its rewritten plan. The statement text is used by
-    no other test, so the module memos miss."""
+    """An engaged statement under live injection pays one planning pass
+    over the original statement: both the gate-2e pairs and the native
+    bloom edges are read from the one DataFrame the statement would run
+    as a bail, and its rewritten plan is never read. The statement text
+    is used by no other test, so the module memos miss."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.plans import catalyst_order
 
-    calls = []
-    real = catalyst_order.native_bloom_edges
-    monkeypatch.setattr(catalyst_order, "native_bloom_edges",
-                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    seen = {"statement_evidence": [], "scan_prefilter_pairs": [],
+            "native_bloom_edges": []}
+    for name, calls in seen.items():
+        real = getattr(catalyst_order, name)
+        monkeypatch.setattr(
+            catalyst_order, name,
+            lambda df, *a, _real=real, _calls=calls, **k:
+            _calls.append(df) or _real(df, *a, **k))
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
                     skip_no_exchange_probe=False,
                     skip_host_prefiltered_semi=False)
@@ -379,16 +421,20 @@ def test_engaged_statement_plans_native_blooms_once(spark, sf_dir,
         e = Engine(spark, sf_dir, cfg)
         df = e.sql(sql)
         assert e.last_sql_rewritten and not e.last_cede
-        assert df.sparkSession.conf.get(_ENABLED) == "false"
-    assert len(calls) == 1, calls
+        assert df.sparkSession.conf.get(_ENABLED) == "true"
+    (planned,) = seen["statement_evidence"]
+    assert all(d is planned for d in seen["scan_prefilter_pairs"]
+               + seen["native_bloom_edges"]), seen
+    assert planned is not df
 
 
 def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
-    """Per-query scope: plan A (engaged, injection off for its final
-    run), then plan B (a bail, which runs with the caller's injection),
-    then execute A. A must execute bloom-free exactly as when it runs
-    alone: B's setting must not reach A's plan. After every statement
-    the caller's conf and views are as they were."""
+    """Per-query scope: plan A (engaged, runs with the caller's
+    injection on), then turn the caller's injection off and plan B (a
+    bail, which runs with it off), then execute A. A must execute with
+    the native blooms it carries when it runs alone: B's setting must
+    not reach A's plan. After every statement the caller's views are as
+    they were, and its conf is the one it set."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
@@ -404,28 +450,30 @@ def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
                     require_selective_build=False)
     orders_rows = spark.read.parquet(f"{sf}/orders.parquet").count()
 
-    def caller_untouched():
-        assert spark.conf.get(_ENABLED) == "true", "caller conf changed"
+    def caller_untouched(rf):
+        assert spark.conf.get(_ENABLED) == rf, "caller conf changed"
         assert spark.table("orders").count() == orders_rows, \
             "caller's orders view left shadowed"
 
     with _injection_live(spark):
         alone = Engine(spark, sf, cfg).sql(REACH_SQL)
         want = alone.collect()
-        assert count_native_blooms(alone) == 0, "premise: A suppressed"
+        blooms = count_native_blooms(alone)
+        assert blooms > 0, "premise: A carries native blooms"
 
         ea = Engine(spark, sf, cfg)
         a_df = ea.sql(REACH_SQL)  # planned, not collected
         assert ea.last_sql_rewritten
-        caller_untouched()
+        caller_untouched("true")
+        spark.conf.set(_ENABLED, "false")
         eb = Engine(spark, sf, cfg)
         b_df = eb.sql(one_edge_sql)
         assert not eb.last_sql_rewritten
-        assert b_df.sparkSession.conf.get(_ENABLED) == "true"
-        caller_untouched()
+        assert b_df.sparkSession.conf.get(_ENABLED) == "false"
+        caller_untouched("false")
 
         assert a_df.collect() == want
-        assert count_native_blooms(a_df) == 0, \
+        assert count_native_blooms(a_df) == blooms, \
             "a later statement's setting reached A's plan"
 
 

@@ -383,74 +383,23 @@ def test_weak_build_observation_gate2g(spark, sf_dir):
 
 #: every gate a decision can reach on estimates alone (gate2g and noop
 #: need an observed count)
-ESTIMATE_GATES = {"info", "gate1", "gate2", "gate2b", "gate2b3", "gate2c",
-                  "dup", "gate3", "gate3a", "gate3b", "gate4"}
-
-
-def _same_until_observed(dry, real):
-    """The dry run and the real pass must agree on every op decided
-    before the real pass's first observed count; returns that prefix."""
-    k = next((i for i, d in enumerate(real) if d.observed), len(real))
-    assert len(dry) == len(real)
-    assert dry[:k] == real[:k], (dry[:k], real[:k])
-    return real[:k]
+ESTIMATE_GATES = {"info", "native", "gate1", "gate2", "gate2b", "gate2b3",
+                  "gate2c", "dup", "gate3", "gate3a", "gate3b", "gate4"}
 
 
 def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
-    """One gate stack: the cession dry run (decide() without observe)
-    and apply_transfer make identical Decisions — tier or dropping
-    gate, plus evidence — for every op decided before an observation
-    lands. Run over this module's gate fixtures through Engine.reduce
-    (the cession hook sees exactly apply_transfer's inputs), then over
-    hand-set estimates that fire each estimate-only gate and take each
-    probe-big sketch route."""
+    """One gate stack, one table: hand-set estimates that fire each
+    estimate-only gate of decide() through apply_transfer, the real
+    pass, and take each probe-big sketch route. Each row names the
+    landing tier or the dropping gate of every scheduled op."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
-    from duckdb_robust_predicate_transfer_spark.engine import Engine, Rel
+    from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
-        apply_transfer, dry_run)
+        apply_transfer)
     from duckdb_robust_predicate_transfer_spark.plans.ir import (
         TransferOp, TransferPlan)
 
     fired = set()
-
-    def via_engine(rels, edges, **kw):
-        cfg = RPTConfig(**kw)
-        dry = []
-
-        def capture(plan, dfs, rows_est, filtered, evidence):
-            dry.extend(dry_run(dfs, rows_est, filtered, plan, cfg,
-                               **evidence))
-            return False
-
-        e = Engine(spark, sf_dir, cfg)
-        e.reduce(rels, edges, cfg, cede_check=capture)
-        real = e.last_result.decisions if e.last_result else []
-        fired.update(d.gate for d in _same_until_observed(dry, real))
-
-    chain = [("l", "o", "l_orderkey", "o_orderkey"),
-             ("o", "c", "o_custkey", "c_custkey")]
-    shuffle = dict(broadcast_key_rows=1, filter_type="bf_only",
-                   min_probe_rows=0, require_selective_build=False,
-                   all_broadcast_bail_rows=0, max_build_keep_frac=1.0,
-                   observe_est_factor=0.0, sketch_rescue=False)
-    rels = {"l": "lineitem", "o": Rel("orders", "o_orderstatus = 'F'"),
-            "c": Rel("customer", "c_custkey % 2 = 0")}
-    for hb in (0, 1_000_000):
-        via_engine(rels, chain, **shuffle, host_broadcast_rows=hb)
-    via_engine(rels, chain, **{**shuffle, "skip_redundant_shuffle_semi":
-                               False}, host_broadcast_rows=0)
-    # gate 2g's fixture, without and with its weak-build count (the
-    # count is the first observation: nothing after it is compared)
-    for filt in ("c_custkey % 10 < 8", "c_custkey % 50 = 0"):
-        for weak in (dict(weak_observe_max_base=0),
-                     dict(weak_observe_min_base=0)):
-            via_engine({"l": "lineitem", "o": "orders",
-                        "c": Rel("customer", filt)}, chain,
-                       min_probe_rows=0, all_broadcast_bail_rows=0,
-                       host_broadcast_rows=0, **weak)
-
-    # hand-set estimates: no eager job runs (bf_only, no observation
-    # gates), so the whole schedule must agree
     e = Engine(spark, sf_dir, RPTConfig(enabled=False))
     dfs = {"rg": e.table("region").filter("r_name = 'ASIA'"),
            "n": e.table("nation"), "c": e.table("customer"),
@@ -467,11 +416,9 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
         plan = TransferPlan(root=ops[-1][1], ops=[
             TransferOp(b, p, (cols[b, p][0],), (cols[b, p][1],), ph)
             for b, p, ph in ops])
-        cfg = RPTConfig(**base, **(cfg or {}))
-        dry = dry_run(dfs, rows_est, filtered, plan, cfg, **evidence)
+        cfg = RPTConfig(**{**base, **(cfg or {})})
         real = apply_transfer(dfs, dict(rows_est), filtered, plan, cfg,
                               **evidence).decisions
-        assert dry == real, (dry, real)
         assert [d.gate or d.tier for d in real] == expect, real
         fired.update(d.gate for d in real)
         return real
@@ -481,6 +428,32 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     case([("rg", "n", fw), ("n", "c", fw), ("n", "rg", bw)],
          {"rg": 1, "n": 25, "c": 150}, {"rg"},
          ["exact_broadcast", "exact_broadcast", "info"])
+    # a native bloom of the original plan covers the edge: the op drops
+    # before any gate that could observe a count
+    case([("c", "o", fw)], {"c": 10, "o": 1e8}, {"c"}, ["native"],
+         native_edges={("o", "o_custkey", "c")})
+    # ...but lands when its build is already reduced: it ships reduced
+    # keys a bloom from the bare nation scan cannot
+    case([("rg", "n", fw), ("n", "c", fw)], {"rg": 1, "n": 25, "c": 150},
+         {"rg"}, ["exact_broadcast", "exact_broadcast"],
+         native_edges={("c", "c_nationkey", "n")})
+    # ...and when its probe feeds a later forward op no bloom covers;
+    # with that op covered too (nation filtered, so it carries
+    # information of its own), the whole cascade drops: the cession
+    case([("rg", "n", fw), ("n", "c", fw)], {"rg": 1, "n": 25, "c": 150},
+         {"rg"}, ["exact_broadcast", "exact_broadcast"],
+         native_edges={("n", "n_regionkey", "rg")})
+    # ...and when that later op then drops anyway (bucketed edge), the
+    # reach was never carried: the covered op drops after all
+    case([("rg", "n", fw), ("n", "c", fw)], {"rg": 1, "n": 25, "c": 150},
+         {"rg"}, ["native", "gate4"],
+         native_edges={("n", "n_regionkey", "rg")},
+         colocated={"n": frozenset({"n_nationkey"}),
+                    "c": frozenset({"c_nationkey"})})
+    case([("rg", "n", fw), ("n", "c", fw)], {"rg": 1, "n": 25, "c": 150},
+         {"rg", "n"}, ["native", "native"],
+         native_edges={("n", "n_regionkey", "rg"),
+                       ("c", "c_nationkey", "n")})
     # an unfiltered, unreduced build only removes FK orphans: allowed
     # up to MAX_UNFILTERED_BUILD_ROWS
     case([("o", "l", fw)], {"o": 6e7, "l": 1e9}, set(), ["gate1"],
@@ -520,9 +493,8 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
 
     assert ESTIMATE_GATES <= fired, ESTIMATE_GATES - fired
 
-    # backward rescue (gate 2f): the real pass counts the build and
-    # re-tiers on the count; the dry run cannot, and assumes the bitmap
-    # lands so it never under-lists reach
+    # backward rescue (gate 2f): the pass counts the build and re-tiers
+    # on the count
     sk = {a: dfs[a].withColumn(f"{a}_key_s", F.col(k).cast("string"))
           for a, k in (("c", "c_custkey"), ("o", "o_custkey"))}
     plan = TransferPlan(root="o", ops=[
@@ -532,10 +504,8 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     rows = {"c": 3e6, "o": 1e8}
     # no 2d/3b, no probe-side bitmap escalation
     cfg = RPTConfig(**base, host_broadcast_rows=0, bloom_probe_min_rows=0)
-    (dry,) = dry_run(sk, rows, {"c"}, plan, cfg, **ev)
     (real,) = apply_transfer(sk, dict(rows), {"c"}, plan, cfg,
                              **ev).decisions
-    assert dry.tier == "sketch" and not dry.observed, dry
     assert real.tier == "exact_broadcast" and real.observed, real
     assert real.value == 150  # sf0.001 customer rows, counted
 
@@ -548,32 +518,29 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     fwd = TransferPlan(root="o", ops=[
         TransferOp("c", "o", ("c_key_s",), ("o_key_s",), fw)])
 
-    def both(rows, cfg):
-        (dry,) = dry_run(sk, rows, {"c"}, fwd, cfg)
+    def decided(rows, cfg):
         (real,) = apply_transfer(sk, dict(rows), {"c"}, fwd,
                                  cfg).decisions
-        return dry, real
+        return real.gate or real.tier
 
     for rows, unescalated in (({"c": 1.5e6, "o": 1e7}, "gate2c"),
                               ({"c": 10, "o": 1e7}, "exact_broadcast")):
         cfg = RPTConfig(**base)
         assert rows["o"] >= cfg.bloom_probe_min_rows
-        dry, real = both(rows, cfg)
-        assert dry.tier == real.tier == "sketch", (dry, real)
-        dry, real = both(rows, RPTConfig(**base, bloom_probe_min_rows=0))
-        assert dry == real and (dry.gate or dry.tier) == unescalated, dry
+        assert decided(rows, cfg) == "sketch"
+        assert decided(rows, RPTConfig(**base, bloom_probe_min_rows=0)) \
+            == unescalated
 
 
 def test_dry_run_keeps_reach_past_minmax_only_landing(spark, sf_dir):
     """A hop whose key tier gate 2c suppresses still lands its min/max
-    range in the real pass, which marks the probe reduced and merges
-    what it knows — so a later hop built from that probe survives the
-    information gate. The dry run must commit the same landing, or it
-    under-lists reach and can cede a query the transfer would help."""
+    range, which marks the probe reduced and merges what it knows — so
+    the later hop built from that probe survives the information gate
+    and the pass reaches the root."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
-        KEY_TIERS, apply_transfer, dry_run)
+        apply_transfer)
     from duckdb_robust_predicate_transfer_spark.plans.ir import (
         TransferOp, TransferPlan)
 
@@ -588,13 +555,11 @@ def test_dry_run_keeps_reach_past_minmax_only_landing(spark, sf_dir):
                     weak_observe_max_base=0)
     rows_est = {"rg": 1.0, "n": 25.0, "c": 1e6}
 
-    dry = dry_run(dfs, rows_est, {"rg"}, plan, cfg)
-    assert [d.tier for d in dry] == ["minmax", "exact_broadcast"], dry
-    assert dry[0].suppressed == "gate2c"
-    assert [d.op.probe for d in dry if d.tier in KEY_TIERS] == ["c"]
-
     res = apply_transfer(dfs, dict(rows_est), {"rg"}, plan, cfg)
     assert res.applied_tiers == ["minmax", "exact_broadcast"], res.decisions
+    assert res.decisions[0].suppressed == "gate2c", res.decisions
+    assert [(d.op.probe, d.tier) for d in res.decisions] == [
+        ("n", "minmax"), ("c", "exact_broadcast")], res.decisions
 
 
 def test_exact_dedup_keeps_one_per_hash(spark, sf_dir):

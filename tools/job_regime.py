@@ -21,9 +21,10 @@ with LIKE / IN / BETWEEN dim predicates), run through ``Engine.sql()``
 auto-extraction — the same entry the reference's optimizer hook rewrites
 — in five legs: off / rpt (transfer only) / native (Spark's runtime
 blooms, thresholds lowered so they genuinely fire below the 10GB gate)
-/ composed (both, under the engine's one native-bloom rule: an engaged
-query runs with injection off, every bail — a cession included — with
-it on) / dual (both, with ``suppress_native_rf=False``: the
+/ composed (both, under the engine's one native-bloom rule: the
+statement runs with injection on, only its eager jobs with it off, and
+an op a native bloom of the original plan covers drops at gate
+"native") / dual (both, with ``suppress_native_rf=False``: the
 no-suppression ablation). Every query is oracle-checked against DuckDB
 ON THE SAME PARQUET at full scale before any timing.
 
@@ -795,7 +796,8 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms, rotated_min, set_native_rf, timed_leg)
+        count_native_blooms, native_counts, rotated_min, set_native_rf,
+        timed_leg)
 
     spark = get_spark(app_name="drpt-job-regime",
                       shuffle_partitions=SHUFFLE)
@@ -837,6 +839,11 @@ def main() -> int:
     #: per-query cession verdict: "native" = disengaged and handed to
     #: the host's blooms, None = no cession (engaged or ordinary bail)
     composed_cede: dict = {}
+    #: per query, off the composed leg: ops dropped at gate "native",
+    #: and applied ops whose edge also carries a native bloom in the
+    #: plan the statement ran (double-filtered edges)
+    native_drops: dict = {}
+    double_filtered: dict = {}
 
     def leg(name: str, mode: str) -> float:
         if mode in ("rpt", "composed"):
@@ -846,14 +853,24 @@ def main() -> int:
         else:
             cfg = RPTConfig(enabled=False)
 
+        held: list = []
+
         def run() -> None:
             e = Engine(spark, OUT_DIR, cfg)
-            e.sql(QUERIES[name], auto_rpt=cfg.enabled).collect()
+            df = e.sql(QUERIES[name], auto_rpt=cfg.enabled)
+            df.collect()
             if mode == "composed":
                 composed_cede[name] = "native" if e.last_cede else None
+                held[:] = [e, df]
 
-        return timed_leg(spark, run,
-                         native_rf=mode in ("native", "composed", "dual"))
+        t = timed_leg(spark, run,
+                      native_rf=mode in ("native", "composed", "dual"))
+        # counted off the timed leg; a bail-cache hit runs no gate stack
+        # and leaves the first run's counts standing
+        if held and (held[0].last_result is not None
+                     or name not in native_drops):
+            native_drops[name], double_filtered[name] = native_counts(*held)
+        return t
 
     blooms = {}
     for name in QUERIES:
@@ -894,6 +911,8 @@ def main() -> int:
         "rpt_engaged": engaged,
         "rpt_ops": ops_inv,
         "composed_cede": composed_cede,
+        "composed_native_drops": native_drops,
+        "composed_double_filtered": double_filtered,
         "native_blooms_injected": blooms,
         "geomean_sec": {m: geo(m) for m in MODES},
         "rpt_vs_off_geomean": _ratio(geo("off"), geo("rpt")),

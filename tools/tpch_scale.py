@@ -21,10 +21,12 @@ lineitem shuffle stops being trivially memory-resident:
      its 10GB-scan default gate it injects nothing below cluster
      scale; see workload.common.set_native_rf) / COMPOSED = transfer
      + native blooms together, the production default at cluster
-     scale, under the engine's one native-bloom rule (an engaged query
-     runs with injection off, every bail — a cession included — with
-     it on). Per-query native-bloom injection counts and cessions are
-     recorded in the artifact as plan-shape evidence, and each
+     scale, under the engine's one native-bloom rule (the statement
+     runs with injection on, only its eager jobs with it off, and an
+     op a native bloom of the original plan covers drops at gate
+     "native"). Per-query native-bloom injection counts, cessions,
+     gate-"native" drops and double-filtered edges are recorded in
+     the artifact as plan-shape evidence, and each
      transfer leg's own engagement as ``rpt_engaged_by_leg``.
 
 Run:  python -u tools/tpch_scale.py [--json OUT] [--runs N] [--skip-oracle]
@@ -166,7 +168,7 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.workload import common
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms, rotated_min, timed_leg)
+        count_native_blooms, native_counts, rotated_min, timed_leg)
 
     spark = get_spark(app_name="drpt-tpch-scale",
                       shuffle_partitions=SHUFFLE)
@@ -265,6 +267,10 @@ def main() -> int:
     engaged: dict = {}
     engaged_by_leg: dict = {"rpt": {}, "composed": {}}
     cede: dict = {}
+    #: per query, off the composed pass: ops dropped at gate "native",
+    #: and applied ops whose edge also carries a native bloom
+    native_drops: dict = {}
+    double_filtered: dict = {}
     blooms_from = os.environ.get("DRPT_TPCH_SCALE_BLOOMS_FROM", "")
     if blooms_from:
         # plan evidence is timing-independent; a re-timing run (e.g.
@@ -276,6 +282,8 @@ def main() -> int:
         blooms = prior.get("native_blooms_injected", {})
         engaged = prior.get("rpt_engaged", {})
         cede = prior.get("composed_cede", {})
+        native_drops = prior.get("composed_native_drops", {})
+        double_filtered = prior.get("composed_double_filtered", {})
     else:
         for q in TPCH:
             blooms[q] = {}
@@ -286,6 +294,8 @@ def main() -> int:
                     blooms[q][mode] = count_native_blooms(df)
                     if mode == "composed":
                         engaged[q], cede[q] = verdict()
+                        native_drops[q], double_filtered[q] = (
+                            native_counts(common.last_engine, df))
 
                 try:
                     mode_leg(mode, count)
@@ -324,7 +334,7 @@ def main() -> int:
         if REP >= 300:
             restart_spark()
         done = [q for q, v in best.items() if v["rpt"] < math.inf]
-        print(f"# run {r_i + 1}/{runs}: {len(done)}/22 rpt legs ok",
+        print(f"# run {r_i + 1}/{runs}: {len(done)}/{len(TPCH)} rpt legs ok",
               file=sys.stderr, flush=True)
 
     leg(TPCH[0], "off")  # untimed warmup: page cache + codegen
@@ -371,6 +381,8 @@ def main() -> int:
         "rpt_engaged": engaged,
         "rpt_engaged_by_leg": engaged_by_leg,
         "composed_cede": cede,
+        "composed_native_drops": native_drops,
+        "composed_double_filtered": double_filtered,
         "geomean_engaged_only_sec": {
             m: geo(m, [q for q in ok_qs if engaged.get(q)])
             for m in MODES},
