@@ -17,6 +17,12 @@ string, the stored Spark schema in the key-value metadata); this one
 cannot. A directory table takes its schema from the first of its
 sorted ``*.parquet`` members (``parquet_files``), which is Spark's own
 one-file inference with ``mergeSchema`` off, its default.
+
+``Catalog.register_views`` opens and registers the tables concurrently,
+one thread per table up to the host's cores; ``events`` opens first,
+because a nanos fixture sets a session conf its schema conversion
+reads. The JVM classes and statics ``open_parquet`` calls are resolved
+once per py4j gateway (``session.jvm_handle``), not walked per table.
 """
 
 from __future__ import annotations
@@ -24,10 +30,13 @@ from __future__ import annotations
 import functools
 import glob
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.errors.exceptions.captured import convert_exception
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import jvm_handle
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -44,6 +53,10 @@ def parquet_files(path: str) -> list:
     return [path]
 
 
+_ERRORS = "org.apache.spark.sql.errors.QueryCompilationErrors."
+_PQ = "org.apache.spark.sql.execution.datasources.parquet."
+
+
 def open_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job.
 
@@ -53,24 +66,24 @@ def open_parquet(spark: SparkSession, path: str) -> DataFrame:
     table is opened with that schema. A missing path raises Spark's
     ``[PATH_NOT_FOUND]``; a directory without ``*.parquet`` members
     raises ``[UNABLE_TO_INFER_SCHEMA]`` rather than opening empty."""
-    jvm, js = spark._jvm, spark._jsparkSession
-    errors = jvm.org.apache.spark.sql.errors.QueryCompilationErrors
+    jvm = functools.partial(jvm_handle, spark._jvm)
     if not os.path.exists(path):
-        raise convert_exception(errors.dataPathNotExistError(path))
+        raise convert_exception(jvm(_ERRORS + "dataPathNotExistError")(path))
     files = parquet_files(path)
     if not files:
-        raise convert_exception(errors.dataSchemaNotSpecifiedError("Parquet"))
+        raise convert_exception(
+            jvm(_ERRORS + "dataSchemaNotSpecifiedError")("Parquet"))
+    js = spark._jsparkSession
     state = js.sessionState()
-    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
-    first = jvm.org.apache.hadoop.fs.Path(files[0])
-    meta = pq.ParquetFooterReader.readFooter(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+    first = jvm("org.apache.hadoop.fs.Path")(files[0])
+    meta = jvm(_PQ + "ParquetFooterReader.readFooter")(
+        jvm("org.apache.parquet.hadoop.util.HadoopInputFile.fromPath")(
             first, state.newHadoopConf()),
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
-        .SKIP_ROW_GROUPS)
-    schema = pq.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(first, meta),
-        pq.ParquetToSparkSchemaConverter(state.conf()))
+        jvm("org.apache.parquet.format.converter.ParquetMetadataConverter"
+            ".SKIP_ROW_GROUPS"))
+    schema = jvm(_PQ + "ParquetFileFormat.readSchemaFromFooter")(
+        jvm("org.apache.parquet.hadoop.Footer")(first, meta),
+        jvm(_PQ + "ParquetToSparkSchemaConverter")(state.conf()))
     return DataFrame(js.read().schema(schema).parquet(path), spark)
 
 
@@ -333,8 +346,12 @@ class Catalog:
         has since replaced or dropped is registered again. A name whose
         stored view still equals the one this catalog left there is
         skipped: two py4j calls instead of a ``createOrReplaceTempView``
-        (an analysis of the table plus a catalog write)."""
+        (an analysis of the table plus a catalog write), and no thread
+        starts when every name is skipped. The rest open and register
+        concurrently (see the module docstring); the first that fails
+        raises once every thread has ended."""
         views = self.spark._jsparkSession.sessionState().catalog()
+        todo = []
         for n in (names if names is not None
                   else sorted(self.known_tables())):
             if not os.path.exists(self.path(n)):
@@ -342,8 +359,18 @@ class Catalog:
             mine = self._views.get(n)
             if mine is not None and views.getRawTempView(n).equals(mine):
                 continue
+            todo.append(n)
+        if not todo:
+            return
+        if "events" in todo:
+            self.table("events")
+
+        def register(n):
             self.table(n).createOrReplaceTempView(n)
-            self._views[n] = views.getRawTempView(n)
+            return views.getRawTempView(n)
+
+        with ThreadPoolExecutor(min(len(todo), os.cpu_count() or 1)) as pool:
+            self._views.update(zip(todo, pool.map(register, todo)))
 
 
 _CATALOGS: dict[tuple[int, str], Catalog] = {}

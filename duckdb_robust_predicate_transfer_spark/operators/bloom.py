@@ -46,12 +46,10 @@ above.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..session import bind, clone_session
+from ..session import bind, clone_session, jvm_handle
 
 #: the sizing rule's bits per expected key, and the build's overflow
 #: bound: a filter of m bits is sized for m / 12 keys
@@ -72,15 +70,15 @@ def _catalyst(spark, cls: str, *args: Column,
               aggregate: bool = False) -> Column:
     """A Column over a new Catalyst ``cls`` of ``args``: the only place
     this module builds Spark's filter expressions."""
-    utils = spark._jvm.org.apache.spark.sql.classic.ExpressionUtils
+    utils = "org.apache.spark.sql.classic.ExpressionUtils."
+    expression = jvm_handle(spark._jvm, utils + "expression")
     try:
-        e = reduce(getattr, cls.split("."), spark._jvm)(
-            *[utils.expression(a._jc) for a in args])
+        e = jvm_handle(spark._jvm, cls)(*[expression(a._jc) for a in args])
         if aggregate:
             e = e.toAggregateExpression()
     except Exception as exc:
         raise RuntimeError(f"cannot build Spark's {cls}: {exc}") from exc
-    return Column(utils.column(e))
+    return Column(jvm_handle(spark._jvm, utils + "column")(e))
 
 
 class BloomSketch:

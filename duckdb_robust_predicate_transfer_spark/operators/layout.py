@@ -31,6 +31,8 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
+from ..session import jvm_handle
+
 
 def _max_partition_bytes(spark) -> int:
     v = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
@@ -39,8 +41,9 @@ def _max_partition_bytes(spark) -> int:
     except ValueError:
         pass
     try:
-        return int(spark._jvm.org.apache.spark.network.util.JavaUtils
-                   .byteStringAsBytes(v))
+        return int(jvm_handle(
+            spark._jvm,
+            "org.apache.spark.network.util.JavaUtils.byteStringAsBytes")(v))
     except Exception:
         return 128 << 20
 

@@ -9,8 +9,10 @@ else is scale-independent.
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -82,6 +84,28 @@ def get_spark(app_name: str = "drpt-spark", master: str | None = None,
     return b.getOrCreate()
 
 
+#: py4j gateway client -> {dotted JVM path: its resolved handle}
+_HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def jvm_handle(view, path: str):
+    """The JVM class, static method or static field at the dotted
+    ``path`` (``"org.apache.hadoop.fs.Path"``,
+    ``"scala.concurrent.Await.ready"``), resolved once per py4j gateway.
+    ``view`` is a py4j ``JVMView`` such as ``spark._jvm``.
+
+    Walking ``view.org.apache...`` costs one reflection round trip per
+    dotted segment, and a static member one more, on every use. The
+    handles hold no session state, so they outlive a stopped
+    ``SparkContext`` as the gateway does, and any thread may share them.
+    This is the one place the package walks a JVM package path."""
+    handles = _HANDLES.setdefault(view._gateway_client, {})
+    h = handles.get(path)
+    if h is None:
+        h = handles[path] = functools.reduce(getattr, path.split("."), view)
+    return h
+
+
 #: guards the ``RDD.toDF`` swap in ``clone_session`` (sessions may be
 #: cloned on several threads at once)
 _LOCK = threading.Lock()
@@ -109,7 +133,7 @@ def bind(df: DataFrame, s: SparkSession) -> DataFrame:
     leaves ``df``'s own plan unfixed. Not ``s.table(name)``: replacing
     a temp view uncaches every cached plan that reads it by name, so
     shadowing ``name`` would drop the transfer's persisted builds."""
-    jds = s._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+    jds = jvm_handle(s._jvm, "org.apache.spark.sql.classic.Dataset.ofRows")(
         s._jsparkSession, df._jdf.queryExecution().analyzed())
     return DataFrame(jds, s)
 
@@ -133,10 +157,10 @@ def observed(obs, timeout_s: float = OBSERVE_WAIT_S) -> "dict | None":
     jo, jvm = getattr(obs, "_jo", None), getattr(obs, "_jvm", None)
     if jo is None or jvm is None:
         return None
-    wait = jvm.scala.concurrent.duration.Duration.create(
+    wait = jvm_handle(jvm, "scala.concurrent.duration.Duration.create")(
         max(1, int(timeout_s * 1000)), "ms")
     try:
-        jvm.scala.concurrent.Await.ready(jo.future(), wait)
+        jvm_handle(jvm, "scala.concurrent.Await.ready")(jo.future(), wait)
         return obs.get
     except Py4JJavaError:  # timed out, or the observed action failed
         return None

@@ -133,15 +133,15 @@ def timed_leg(spark: SparkSession, run, config: RPTConfig | None = None,
 def rotated_min(runs: int, items, legs, time_leg, after_run=None) -> dict:
     """Interleaved min-of-N, the reference's baseline-vs-rpt protocol: in
     each run, for each item, time every leg once as ``time_leg(item,
-    leg)``, starting the leg order at position ``run % len(legs)`` so no
-    leg always pays the first-leg warmup (codegen, page cache). Returns
-    {item: {leg: minimum seconds}}; ``after_run(run, best)`` follows
-    each run."""
+    leg)``, starting item ``i``'s leg order at position ``(run + i) %
+    len(legs)`` so no leg always pays the first-leg warmup (codegen, page
+    cache), not even in a single run. Returns {item: {leg: minimum
+    seconds}}; ``after_run(run, best)`` follows each run."""
     legs = list(legs)
     best = {item: dict.fromkeys(legs, math.inf) for item in items}
     for r in range(runs):
-        rot = r % len(legs)
-        for item in items:
+        for i, item in enumerate(items):
+            rot = (r + i) % len(legs)
             for leg in legs[rot:] + legs[:rot]:
                 best[item][leg] = min(best[item][leg], time_leg(item, leg))
         if after_run is not None:

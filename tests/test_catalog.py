@@ -1,22 +1,27 @@
 """Catalog registration: tables open from their footers without a Spark
-job, exactly as ``spark.read.parquet`` would open them, and
-``register_views`` only re-registers a view the caller has changed.
+job, exactly as ``spark.read.parquet`` would open them, ``register_views``
+registers them concurrently exactly as one at a time, and it only
+re-registers a view the caller has changed.
 """
 
 import glob
 import os
 import re
+import sys
+import threading
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql.types import TimestampType
 
 from duckdb_robust_predicate_transfer_spark.catalog import (
     Catalog, open_parquet)
 from duckdb_robust_predicate_transfer_spark.config import RPTConfig
 from duckdb_robust_predicate_transfer_spark.engine import Engine
+from duckdb_robust_predicate_transfer_spark.session import clone_session
 
 FLAGSHIP_SQL = """
     SELECT n_name, COUNT(*) AS cnt
@@ -63,6 +68,23 @@ def _jobs(spark):
     return sc.statusStore().jobsList(None).size()
 
 
+def _analyzed(df):
+    """Analyzed plan text with expression ids blanked out."""
+    return re.sub(r"#\d+L?", "#",
+                  df._jdf.queryExecution().analyzed().toString())
+
+
+def _write_events(path, unit):
+    base_us = 1_700_000_000_000_000
+    mult = {"us": 1, "ns": 1000}[unit]
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2, 3], pa.int64()),
+        "ts": pa.array([(base_us + i * 60_000_000) * mult for i in range(3)],
+                       pa.timestamp(unit)),
+    }), path)
+    return [base_us + i * 60_000_000 for i in range(3)]
+
+
 def test_fixture_tables_match_spark_read(spark, sf_dir):
     paths = sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
     assert paths
@@ -73,13 +95,7 @@ def test_fixture_tables_match_spark_read(spark, sf_dir):
 @pytest.mark.parametrize("unit", ["us", "ns"])
 def test_events_flavors_match_spark_read(spark, tmp_path, conf_set, unit):
     path = str(tmp_path / "events.parquet")
-    base_us = 1_700_000_000_000_000
-    mult = {"us": 1, "ns": 1000}[unit]
-    pq.write_table(pa.table({
-        "event_id": pa.array([1, 2, 3], pa.int64()),
-        "ts": pa.array([(base_us + i * 60_000_000) * mult for i in range(3)],
-                       pa.timestamp(unit)),
-    }), path)
+    _write_events(path, unit)
     # the conf Catalog._read_events sets for a nanos footer
     with conf_set("spark.sql.legacy.parquet.nanosAsLong",
                   "true" if unit == "ns" else "false"):
@@ -114,6 +130,56 @@ def test_register_views_runs_no_job(spark, sf_dir):
     assert _jobs(spark) == before
 
 
+def test_concurrent_registration_matches_sequential(spark, sf_dir):
+    names = sorted(n for n in Catalog(spark, sf_dir).known_tables()
+                   if os.path.exists(os.path.join(sf_dir, f"{n}.parquet")))
+    assert "events" in names and len(names) > 2
+    ours, theirs = clone_session(spark), clone_session(spark)
+    threads = threading.active_count()
+    Catalog(ours, sf_dir).register_views()
+    assert threading.active_count() == threads
+    ref = Catalog(theirs, sf_dir)
+    for n in names:
+        ref.table(n).createOrReplaceTempView(n)
+    for n in names:
+        a, b = ours.table(n), theirs.table(n)
+        assert a.schema == b.schema, n
+        assert _analyzed(a) == _analyzed(b), n
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_events_flavors_register_concurrently(spark, tmp_path, unit):
+    micros = _write_events(str(tmp_path / "events.parquet"), unit)
+    cat = Catalog(clone_session(spark), str(tmp_path))  # conf stays private
+    for name in ("region", "nation"):  # so the pool runs several tables
+        pq.write_table(pa.table({"k": [1, 2]}), cat.path(name))
+    cat.register_views()
+    s = cat.spark
+    ev = s.table("events")
+    assert isinstance(ev.schema["ts"].dataType, TimestampType)
+    assert sorted(r[0] for r in ev.selectExpr("unix_micros(ts)").collect()) \
+        == micros
+    assert s.table("nation").count() == 2
+
+
+def test_concurrent_registration_keeps_every_table_apart(spark, tmp_path):
+    """Many tables under a short switch interval: each view is its own
+    table, and the catalog keeps every frame and stored view."""
+    names = [f"t{i:02d}" for i in range(12)]
+    cat = Catalog(clone_session(spark), str(tmp_path))
+    for n in names:
+        pq.write_table(pa.table({n: [len(n)]}), cat.path(n))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        cat.register_views(names)
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(cat._dfs) == sorted(cat._views) == names
+    for n in names:
+        assert cat.spark.table(n).columns == [n]
+
+
 def test_missing_and_empty_tables_raise(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
@@ -123,6 +189,12 @@ def test_missing_and_empty_tables_raise(spark, tmp_path):
     open(os.path.join(cat.path("empty"), "_SUCCESS"), "w").close()
     with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
         cat.table("empty")
+    # and from the concurrent pass, beside a table that opens
+    pq.write_table(pa.table({"k": [1]}), cat.path("region"))
+    threads = threading.active_count()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        Catalog(clone_session(spark), str(tmp_path)).register_views()
+    assert threading.active_count() == threads
 
 
 @pytest.fixture

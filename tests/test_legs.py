@@ -33,10 +33,11 @@ def test_rotated_min_rotation_order_and_minima():
     assert [(r, i) for r, i, _ in calls] == [
         (r, i) for r in range(len(legs)) for i in items for _ in legs]
     # every leg takes every position exactly once over len(legs) runs
-    for item in items:
+    for k, item in enumerate(items):
         orders = [[leg for r2, i, leg in calls if r2 == r and i == item]
                   for r in range(len(legs))]
-        assert orders[0] == list(legs)
+        # item k starts run 0 at leg k, so one run already rotates
+        assert orders[0] == list(legs[k:] + legs[:k])
         for pos in range(len(legs)):
             assert sorted(o[pos] for o in orders) == sorted(legs)
     # per-leg minima
