@@ -224,44 +224,43 @@ class RPTConfig:
     #: value is movie_info (20M), while still refusing hops whose whole
     #: downstream is under half the build's own scan.
     sketch_rescue_probe_factor: float = 0.5
-    #: gate 2d — the same exchange-benefit test for the BROADCAST tier:
-    #: suppress the key-set semi into a probe whose every OTHER graph
-    #: neighbor is itself broadcastable (rows_est <= host_broadcast_rows)
-    #: — the final plan then joins the probe with broadcast-hash joins
-    #: only, which drop misses at the same per-row hash cost the semi
-    #: pays, so the transfer duplicates the joins row for row and adds
-    #: its eager build jobs on top. Measured on the JOB-regime fixture
-    #: (string keys, all-small dims after LIKE filters): jq1 0.63x,
-    #: jq4 0.57x at 100M fact rows — pure fixed-cost losses on 1-2 s
-    #: queries. Exemptions that keep every certified win: a probe with
-    #: any too-big neighbor (its shuffle join IS the exchange the
-    #: reduction shrinks — Q5/Q7/Q17/Q22 at x1000, the cascade
-    #: fixtures), opaque probes (anti/full-outer joins the edge graph
-    #: cannot see — Extraction.opaque), and the min/max tier (prunes
-    #: the scan, separately payoff-checked).
-    #: host_broadcast_rows=0 disables (forced/test configs).
+    #: gate "dup" — the same exchange-benefit test for the BROADCAST
+    #: tier: suppress a key-set semi that only duplicates a host
+    #: broadcast-hash join, row for row, and adds its eager build jobs
+    #: on top. Two kinds of evidence, either one suppresses:
+    #: - the edge graph: every OTHER graph neighbor of the probe is
+    #:   itself broadcastable (rows_est <= host_broadcast_rows), so the
+    #:   final plan joins the probe with broadcast-hash joins only,
+    #:   which drop misses at the same per-row hash cost the semi pays.
+    #:   Measured on the JOB-regime fixture (string keys, all-small
+    #:   dims after LIKE filters): jq1 0.63x, jq4 0.57x at 100M fact
+    #:   rows — pure fixed-cost losses on 1-2 s queries. On the SQL
+    #:   path the host plan must also really pre-filter the pair
+    #:   (below). host_broadcast_rows=0 turns this branch off.
+    #: - the HOST PLAN: the un-rewritten physical plan already
+    #:   inner-broadcast-hash-joins this build into the probe's scan
+    #:   pipeline BELOW the probe's first shuffle
+    #:   (plans/catalyst_order.scan_prefilter_pairs), so the host drops
+    #:   the same rows at the same pre-exchange position even though
+    #:   the probe crosses an exchange later. Measured: TPC-H Q9 at
+    #:   x1000, whose only op (part->lineitem broadcast semi, 87%
+    #:   removal) sat under the host's own part BHJ directly above the
+    #:   lineitem scan and cost 8% (GATE2E_AB_r08: with this branch
+    #:   off, Q9 lands part->lineitem). Extra guards: SQL path only,
+    #:   an unreduced build, and a huge probe (> 10x
+    #:   broadcast_key_rows) so any backward op building from it is
+    #:   shuffle-tier and already skipped by gate 3a.
+    #: Exemptions that keep every certified win: a probe with any
+    #: too-big neighbor (its shuffle join IS the exchange the reduction
+    #: shrinks — Q5/Q7/Q17/Q22 at x1000, the cascade fixtures), a probe
+    #: a later forward op builds from (the cascade), opaque probes
+    #: (anti/full-outer joins the edge graph cannot see —
+    #: Extraction.opaque), probes carrying shared-subquery/virtual
+    #: edges (the engine withholds their host-plan pairs: their semi
+    #: reaches subquery occurrences the host join cannot — Q17's 2.5x),
+    #: and the min/max tier (prunes the scan, separately
+    #: payoff-checked).
     skip_no_exchange_probe: bool = True
-    #: gate 2e — gate 2d's duplication economics with the exchange
-    #: evidence read from the HOST PLAN instead of the edge graph: the
-    #: un-rewritten physical plan already inner-broadcast-hash-joins
-    #: this build into the probe's scan pipeline BELOW the probe's
-    #: first shuffle (plans/catalyst_order.scan_prefilter_pairs), so
-    #: the host drops the same rows at the same per-row hash cost at
-    #: the same pre-exchange position even though the probe DOES cross
-    #: an exchange later — the semi is pure duplication. Measured:
-    #: TPC-H Q9 at x1000, whose only op (part->lineitem broadcast semi,
-    #: 87% removal) sat under the host's own part BHJ directly above
-    #: the lineitem scan and cost 8% (r5/r6 artifacts' one unexplained
-    #: residual). Guards that keep every certified win: SQL-path only
-    #: (the pair evidence needs the host plan), probes with
-    #: shared-subquery/virtual edges excluded by the engine (their
-    #: semi reaches subquery occurrences the host join cannot — Q17's
-    #: 2.5x), forward-cascade guard as in 2d, and the probe must be
-    #: huge (> 10x broadcast_key_rows) so any BACKWARD op building
-    #: from it is guaranteed shuffle-tier and already skipped by gate
-    #: 3a (backward_broadcast_only) — reduction through the probe
-    #: cannot be lost because none was applicable.
-    skip_host_prefiltered_semi: bool = True
     #: shuffle-tier ops (build keys too big to broadcast) only run when
     #: the build side is genuinely selective: estimated/observed build
     #: rows below this fraction of the build's raw footer rows. A build
@@ -281,7 +280,12 @@ class RPTConfig:
     #: measured as the whole off-leg gap in BUCKETED_r04); the transfer's
     #: min/max+bloom jobs measure those relations exactly, which is the
     #: analogue of the reference's host replanning on reduced cardinality
-    #: estimates (table_manager.cpp:64-69). 0 disables.
+    #: estimates (table_manager.cpp:64-69). It is also gate 3's
+    #: backward floor: a backward op drops when its probe is at or
+    #: below this many rows, since the host then broadcasts the probe
+    #: and reducing it saves no exchange (operators/rewrite.decide).
+    #: 0 disables the hints, the floor and gate "dup"'s edge-graph
+    #: branch.
     host_broadcast_rows: int = 1_000_000
     #: min/max scan-pushdown transfer only pays when the probe scan is big:
     #: each min/max is an eager driver-side agg job (fixed ~0.1-0.3 s of
@@ -295,11 +299,6 @@ class RPTConfig:
     #: _minmax_filter), so only the agg job itself remains as overhead —
     #: filter_type='bf_only' removes that too for known-uniform keys
     minmax_min_probe_rows: int = 5_000_000
-    #: backward-pass ops only into probes at least this big: reducing a
-    #: small table can't help (the final join already handles it cheaply);
-    #: reducing a big one avoids a large shuffle/hash build. The forward
-    #: cascade is exempt — it feeds reductions upward and is lazy/cheap.
-    backward_min_probe_rows: int = 1_000_000
     #: backward-pass ops only with broadcast-tier builds (keys ride the
     #: probe's scan for free). A shuffle-tier backward hop re-derives the
     #: root's multi-million-row reduced lineage (persist + distinct-key

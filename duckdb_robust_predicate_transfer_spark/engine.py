@@ -87,7 +87,7 @@ _BAIL_CACHE: dict = {}
 
 #: (statement cache key, rf-threshold confs, injection value) ->
 #: (scan_prefilter_pairs result, native bloom edges) of the ORIGINAL
-#: statement: the host-plan evidence of gates 2d/2e and "native", read
+#: statement: the host-plan evidence of gates "dup" and "native", read
 #: from one physical planning pass per novel statement
 _EVIDENCE_CACHE: dict = {}
 
@@ -130,6 +130,17 @@ def _edge_set(edges) -> frozenset:
          b["build_table"].lower())
         for b in edges or ()
         if None not in (b["probe_table"], b["probe_col"], b["build_table"]))
+
+
+def _all_broadcast(rows, cfg: RPTConfig) -> bool:
+    """The all-broadcast bail over estimated relation ``rows`` (footer
+    rows, local filters discounted by FILTER_SELECTIVITY): when every
+    relation but the largest fits a broadcast, Catalyst's plan is
+    already one fact pass with no shuffle and any transfer op is pure
+    overhead. ``all_broadcast_bail_rows`` = 0 disables it."""
+    rows = sorted(rows)
+    return (cfg.all_broadcast_bail_rows > 0 and len(rows) >= 2
+            and rows[-2] <= cfg.all_broadcast_bail_rows)
 
 
 def normalize_edges(edges: list) -> list:
@@ -352,7 +363,7 @@ class Engine:
         # row counts, graph, schedule, gate evaluation) is pure driver
         # latency on a query the engine will not touch — ~0.3 s, the
         # dominant cost of repeated small JOB-regime queries after gate
-        # 2d disengages them. Data changes invalidate via the mtime/size
+        # "dup" disengages them. Data changes invalidate via the mtime/size
         # fingerprints in ck; the config repr keys gate-relevant knobs.
         # The key also carries rf_live: gate "native" runs only under
         # it, and one cfg serves both the rpt leg (injection off — must
@@ -370,14 +381,9 @@ class Engine:
 
         cached = _BAIL_CACHE.get(bk)
         if cached:
-            # a bail-cache hit returns before reduce() runs, so the
-            # PREVIOUS engaged query's persists (stashed on the session)
-            # must be released here too, or repeated cached-bail
-            # statements reintroduce the cross-query persist leak
-            prev = getattr(self.spark, "_drpt_prev_result", None)
-            if prev is not None:
-                prev.release()
-                self.spark._drpt_prev_result = None
+            # a bail-cache hit returns before reduce() runs, so it
+            # releases the previous query's persists itself
+            self._release_previous()
             return bail(cached)
         # correlated-scalar-subquery (DELIM) edges: the reference walks
         # LOGICAL_DELIM_JOIN as an edge source (rpt_optimizer.cpp:49-50)
@@ -391,13 +397,14 @@ class Engine:
                                 and ext.occurrences(t) == 1
                                 for i in ext.instances.values())}
         virt_edges: list = []
-        virt_rels: dict = {}
+        #: virtual alias -> its table
+        virt: dict = {}
         for vi, (t, groups) in enumerate(sorted(shared_tables.items())):
             for gi, group in enumerate(groups):
                 # one virtual node per subquery occurrence; one edge per
                 # outer instance it correlates with
                 valias = f"__sub{vi}_{gi}_{t}"
-                virt_rels[valias] = Rel(t, df=bind(self.table(t), s))
+                virt[valias] = t
                 by_outer: dict = {}
                 for inner_col, oalias, ocol in group:
                     by_outer.setdefault(oalias, []).append(
@@ -426,6 +433,25 @@ class Engine:
                    for i in ext.instances.values()):
             return None
 
+        # the all-broadcast bail, decided from footer counts before the
+        # evidence pass and the binds below, with the rows reduce()
+        # would estimate: a shared-subquery table and a virtual node
+        # carry no local filter there
+        def rows(table: str, filtered: bool) -> float:
+            try:
+                n = float(self.catalog.row_count(table))
+            except Exception:
+                n = 0.0
+            return n * FILTER_SELECTIVITY if filtered else n
+
+        if _all_broadcast(
+                [rows(i.table, bool(i.filters)
+                      and i.table not in shared_tables)
+                 for i in ext.instances.values()]
+                + [rows(t, False) for t in virt.values()], cfg):
+            self._release_previous()
+            return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
+
         # relations bound to ``s`` (here and for the virtual nodes), so
         # the eager jobs built on them run under the statement's conf
         rels: dict = {}
@@ -441,11 +467,13 @@ class Engine:
                 d = d.filter(f)
             rels[alias] = Rel(inst.table, df=d,
                               prefiltered=bool(inst.filters))
+        virt_rels = {v: Rel(t, df=bind(self.table(t), s))
+                     for v, t in virt.items()}
         rels.update(virt_rels)
         # host-plan evidence, both read from the original statement's
         # one plan (``df``, planned with the caller's injection): which
         # (probe, build) pairs the host already filters below the
-        # probe's first exchange (gates 2d/2e), and which edges its
+        # probe's first exchange (gate "dup"), and which edges its
         # native runtime blooms cover (gate "native", under rf_live
         # only). Probes carrying shared-subquery/virtual edges are
         # excluded: their semi's reduction reaches the SUBQUERY
@@ -454,8 +482,7 @@ class Engine:
         # (TPC-H Q17's 2.5x win is exactly that op).
         host_pre: "set | None" = None
         native: "set | None" = None
-        if (rf_live or cfg.skip_host_prefiltered_semi
-                or cfg.skip_no_exchange_probe):
+        if rf_live or cfg.skip_no_exchange_probe:
             alias_paths = {}
             for alias, inst in ext.instances.items():
                 try:
@@ -561,7 +588,7 @@ class Engine:
                 shadow.createOrReplaceTempView(inst.table)
                 shadowed = True
         if not shadowed:
-            # all ops gated away (e.g. gate 2d on an all-broadcast
+            # all ops gated away (e.g. gate "dup" on an all-broadcast
             # probe): deterministic for this statement+data+config, so
             # repeats skip the planning path entirely. With any op
             # dropped at gate "native" this is the cession: the covered
@@ -574,6 +601,23 @@ class Engine:
 
     # -- the rewrite ---------------------------------------------------
 
+    def _release_previous(self) -> None:
+        """Release the previous query's persists, this engine's and the
+        one stashed on the caller's session. The workload layer builds
+        a fresh Engine per query, so the previous persists can belong
+        to an Engine this instance never saw (ADVICE r5). Without it a
+        long-lived session accumulates one query's persisted builds per
+        execution, and CacheManager substitution plus storage-memory
+        pressure make repeat timings bimodal (Q5 at x1000 measured 13 s
+        with per-leg clearCache vs 32 s without)."""
+        if self.last_result is not None:
+            self.last_result.release()
+            self.last_result = None
+        prev = getattr(self.spark, "_drpt_prev_result", None)
+        if prev is not None:
+            prev.release()
+        self.spark._drpt_prev_result = None
+
     def reduce(self, rels: dict, edges: list,
                config: RPTConfig | None = None,
                opaque: set | None = None,
@@ -582,7 +626,7 @@ class Engine:
         """Apply robust predicate transfer; returns alias -> reduced DF.
 
         ``host_prefiltered`` and ``native_edges`` are the SQL path's
-        host-plan evidence for gates 2d/2e and "native"
+        host-plan evidence for gates "dup" and "native"
         (apply_transfer).
 
         Persisted build sides from the PREVIOUS reduce are released
@@ -593,21 +637,7 @@ class Engine:
         persists live exactly until the next query plans.
         """
         cfg = (config or self.config).validate()
-        if self.last_result is not None:
-            self.last_result.release()
-            self.last_result = None
-        # cross-instance release: the workload layer builds a fresh
-        # Engine per query, so the PREVIOUS query's persists can belong
-        # to an Engine this instance never saw — stashed on the caller's
-        # session (ADVICE r5). Without it a long-lived
-        # session accumulates one query's persisted builds per
-        # execution, and CacheManager substitution plus storage-memory
-        # pressure make repeat timings bimodal (Q5 at x1000 measured
-        # 13 s with per-leg clearCache vs 32 s without).
-        prev = getattr(self.spark, "_drpt_prev_result", None)
-        if prev is not None:
-            prev.release()
-        self.spark._drpt_prev_result = None
+        self._release_previous()
 
         dfs: dict = {}
         nodes: list = []
@@ -668,13 +698,8 @@ class Engine:
         # (rpt_optimizer.cpp:1592-1595)
         if not cfg.enabled or graph.n_edges() <= 1:
             return dfs
-        # all-broadcast bail-out: when every relation but the largest fits
-        # a broadcast, Catalyst's plan is already optimal (one fact pass,
-        # no shuffle) and any transfer op is pure overhead
-        if cfg.all_broadcast_bail_rows > 0 and len(rows_est) >= 2:
-            ordered = sorted(rows_est.values())
-            if ordered[-2] <= cfg.all_broadcast_bail_rows:
-                return dfs
+        if _all_broadcast(rows_est.values(), cfg):
+            return dfs
 
         import time as _time
         t_plan = _time.perf_counter()

@@ -62,11 +62,6 @@ REDUCTION_DECAY = 0.2
 #: remains the right tool (bloom.py module docstring).
 SKETCH_MAX_KEYS = 64_000_000
 
-#: gate 1 skips transfer from build sides estimated larger than this
-#: unless they carry a filter (bounded-downside gate; the Robust paper's
-#: point)
-MAX_UNFILTERED_BUILD_ROWS = 50_000_000
-
 #: the min/max tier only builds from builds whose BASE table (raw footer
 #: rows) is at most this big: the eager agg re-derives the build's whole
 #: reduction lineage, so its cost scales with the base scan, not with
@@ -116,9 +111,9 @@ class Decision:
     #: "exact_broadcast" | "exact_shuffle" | "sketch" | "minmax" (only
     #: the min/max tier can land) | "empty"; None when dropped
     tier: str | None = None
-    #: "info" | "native" | "gate1" | "gate2g" | "gate2" | "gate2b" |
-    #: "gate2b3" | "gate2c" | "dup" | "gate3" | "gate3a" | "gate3b" |
-    #: "gate4" | "noop"; None when the op lands
+    #: "info" | "native" | "gate2g" | "gate2" | "gate2b" | "gate3" |
+    #: "gate2b3" | "gate2c" | "dup" | "gate3a" | "gate4" | "noop"; None
+    #: when the op lands
     gate: str | None = None
     value: float | None = None
     threshold: float | None = None
@@ -162,9 +157,12 @@ class TransferResult:
 
     @property
     def drops(self) -> dict:
-        """gate-name -> count of scheduled ops that gate dropped. "dup" =
-        duplication economics (gates 2d/2e: the host plan performs the
-        same filtering itself)."""
+        """gate-name -> count of scheduled ops that gate dropped, one
+        name per drop site of ``decide`` plus "noop" (a landing that
+        pruned nothing). "dup" = duplication economics: the host plan
+        performs the same filtering itself, by the edge graph (every
+        other neighbor of the probe broadcasts) or by the host plan's
+        own broadcast join below the probe's first exchange."""
         out: dict = {}
         for d in self.decisions:
             if d.gate:
@@ -412,7 +410,7 @@ class TransferState:
         self.opaque_rels = opaque_rels or set()
         self.host_prefiltered = host_prefiltered
         #: aliases some forward op builds from: reducing them is
-        #: transitive, so the duplication gates 2d/2e never fire on them
+        #: transitive, so gate "dup" never fires on them
         self.forward_builds = {o.build for o in plan.ops
                                if o.phase == "forward"}
         #: (probe alias, lowercased probe col, build alias) edges a
@@ -437,11 +435,11 @@ class TransferState:
         #: over the fact's lineage (measured 0.00% removed for ~10 s at
         #: TPCH_SCALE 100x). The reference schedules such ops too, but
         #: its in-process filters are ~free; Spark's cost real jobs, so
-        #: provable no-ops must die. (Pure FK-orphan removal is not
-        #: modeled as information — that is gate 1's
-        #: require_selective_build.) Identity counts as information only
-        #: when FK-orphan-removal ops are enabled
-        #: (require_selective_build=False, the reference's
+        #: provable no-ops must die. Pure FK-orphan removal is not
+        #: modeled as information: an unfiltered, never-reduced build
+        #: starts with an empty set, so its ops drop here. Identity
+        #: counts as information only when FK-orphan-removal ops are
+        #: enabled (require_selective_build=False, the reference's
         #: always-transfer mode): an unfiltered build can then still
         #: remove probe rows with no matching build row at all.
         self.info: dict = {a: ({a} if (a in filtered
@@ -527,10 +525,11 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     # with the caller's injection, so the op would only double it.
     # Sits before the first observe() so an all-covered statement runs
     # no eager job. Kept when the build was reduced: the op then ships
-    # already-reduced keys a bloom from the bare build cannot (gate
-    # 2e's guard), and when the probe feeds a later forward op that
-    # stays with the transfer (_native_ops) — until that reach turns
-    # out unused (settled at the end of apply_transfer).
+    # already-reduced keys a bloom from the bare build cannot (as gate
+    # "dup" guards its host-plan branch), and when the probe feeds a
+    # later forward op that stays with the transfer (_native_ops) —
+    # until that reach turns out unused (settled at the end of
+    # apply_transfer).
     if op in s.native_ops and op.build not in s.reduced:
         return drop("native")
 
@@ -549,14 +548,9 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
 
     # bounded-downside gates — the robustness margin the reference
     # lacks (it always applies when >1 edge; its in-process filters
-    # are ~free, ours cost real Spark exchanges):
-    # 1. an unfiltered, never-reduced build side only removes
-    #    FK-orphan probe rows — skip unless allowed
-    if (op.build not in s.filtered and op.build not in s.reduced
-            and (cfg.require_selective_build
-                 or est > MAX_UNFILTERED_BUILD_ROWS)):
-        return drop("gate1", est, 0.0 if cfg.require_selective_build
-                    else MAX_UNFILTERED_BUILD_ROWS)
+    # are ~free, ours cost real Spark exchanges). An unfiltered,
+    # never-reduced build only removes FK-orphan probe rows; the info
+    # gate above already drops it (TransferState.info).
     # 2g. weak-build observation (config.weak_observe_max_base):
     #     a local filter's true selectivity is unknown — LIKE
     #     '%Pictures%' keeps 100% where the decay guess says 20% —
@@ -583,8 +577,8 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #    semi join rides the probe's own scan stage as a broadcast
     #    hash join, exactly like the reference's free in-process
     #    filters. Skipping those breaks the CASCADE: an unreduced
-    #    tiny dim (supplier, customer) then fails gate 1 as a build
-    #    side and its parent's selective filter (the nation gate in
+    #    tiny dim (supplier, customer) then fails the info gate as a
+    #    build side and its parent's selective filter (the nation gate in
     #    TPC-H Q5/Q7/Q8/Q9) never reaches the fact tables — measured
     #    at TPCH_SCALE 100x as the whole rpt-leg regression.
     probe_rows = s.rows_est.get(op.probe, inf)
@@ -598,6 +592,25 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #     exempt (free), as is any build with no footer baseline.
     if est > bkr and base > 0 and est >= cfg.max_build_keep_frac * base:
         return drop("gate2b", est, cfg.max_build_keep_frac * base)
+    # 3. the backward floor: the forward pass already reduced the root,
+    #    so a backward op pays only into a probe too big for the host
+    #    to broadcast in the final join. A probe that fits the
+    #    broadcast hint (host_broadcast_rows) is joined through a hash
+    #    table the host builds once — reducing it further converts no
+    #    row savings into shuffle savings, while the backward key set
+    #    re-derives the root's reduced lineage: a full extra pass over
+    #    the biggest table. The forward cascade is exempt — its
+    #    reductions feed the NEXT hop's build regardless of how the
+    #    final join consumes the probe. Scale-adaptive through the
+    #    observed counts (rows_est is the measured figure once a
+    #    relation was observed): at cluster scale a still-huge probe
+    #    clears the floor and the backward pass engages. Measured at
+    #    TPCH_SCALE 100x: Q7 rpt 10.6s -> 4.2s with the backward legs'
+    #    broadcastable probes skipped, no cascade-fixture regression
+    #    (the cascade's backward ops target facts). Sits before gate
+    #    2f so a doomed backward hop never pays the rescue's count.
+    if op.phase == "backward" and probe_rows <= cfg.host_broadcast_rows:
+        return drop("gate3", probe_rows, cfg.host_broadcast_rows)
     # 2b2/2b3. a shuffled semi never SAVES an exchange of the probe:
     #      it shuffles the probe's full current rows by the op keys —
     #      the same exchange the final probe<->build join pays — and
@@ -653,10 +666,6 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
                   # into 0.89x via 15-31 s eager builds; the JOB
                   # wins jq10/jq11/jq13 are all string-key)
                   and _string_keys(s.dfs[op.probe], op.probe_cols)
-                  # gate 3's observation-independent backward check,
-                  # hoisted so a doomed hop never pays the count
-                  and (op.phase == "forward"
-                       or probe_rows >= cfg.backward_min_probe_rows)
                   and s.scan_local.get(op.build, True)
                   and _downstream_weight(
                       op.probe, s.plan.ops, s.rows_base or s.rows_est)
@@ -752,24 +761,26 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
             else:
                 supp = ("gate2c", probe_rows,
                         cfg.bf_benefit_probe_ratio * pre)
-    hp = s.host_prefiltered
-
-    def host_filters() -> bool:
-        return any(p == op.probe and b == op.build
-                   and (k is None or set(op.probe_cols) <= k)
-                   for p, b, k in hp)
-    # 2d. exchange-benefit gate for the BROADCAST tier (gate 2b3's
-    #     insight one tier down): when every other neighbor of the
-    #     probe is itself broadcastable, the final plan joins the
-    #     probe with broadcast-hash joins only — which drop misses
-    #     at the same per-row hash cost our semi pays — so the semi
-    #     duplicates work row for row and adds its build jobs on
-    #     top (JOB-regime jq1/jq4: 0.6-0.7x on 1-2 s queries whose
-    #     dims all broadcast). Reduction pays only when it crosses
-    #     an exchange: keep the semi if ANY other neighbor is too
-    #     big to broadcast (a shuffle join of the probe exists), if
-    #     the probe holds plan edges the graph cannot see
-    #     (anti/full outer -> opaque).
+    # dup. duplication economics for the BROADCAST tier (gate 2b3's
+    #     insight one tier down): the semi would drop the same rows at
+    #     the same per-row hash cost as a host broadcast-hash join the
+    #     final plan already has, and add its build jobs on top. Two
+    #     kinds of evidence, either one suppresses:
+    #     - the edge graph (2d): every other neighbor of the probe is
+    #       itself broadcastable, so the final plan joins the probe
+    #       with broadcast-hash joins only (JOB-regime jq1/jq4:
+    #       0.6-0.7x on 1-2 s queries whose dims all broadcast).
+    #       Reduction pays only when it crosses an exchange: keep the
+    #       semi if ANY other neighbor is too big to broadcast (a
+    #       shuffle join of the probe exists), or if the probe holds
+    #       plan edges the graph cannot see (anti/full outer ->
+    #       opaque);
+    #     - the host plan (2e): the un-rewritten plan already
+    #       inner-BHJ-joins this build into the probe's scan pipeline
+    #       below the probe's first shuffle, so the semi duplicates it
+    #       even though the probe crosses an exchange later (Q9's
+    #       part->lineitem at x1000: the one residual the graph-only
+    #       evidence could not see).
     #     The min/max tier is exempt as in gate 2c — it prunes the
     #     scan itself and is separately payoff-checked.
     #     CASCADE GUARD: never suppress an op whose probe is the
@@ -781,91 +792,64 @@ def decide(op: TransferOp, s: TransferState, cfg: RPTConfig,
     #     probe no forward op ever builds from (a terminal fact:
     #     jq1's movie_company, a star fact) has no transitive value
     #     — only there can local all-broadcast duplication hold.
-    if (supp is None and cfg.skip_no_exchange_probe
-            and cfg.host_broadcast_rows > 0
-            and op.probe not in s.forward_builds
-            and exact_bc
-            # the build itself may be broadcast-SEMI-able for us yet
-            # too big for the HOST to broadcast in the final join —
-            # that join is then a shuffle of the probe, and the semi's
-            # reduction lands before it: a crossed exchange, keep
-            and est <= cfg.host_broadcast_rows
-            and op.probe not in s.opaque_rels
-            and op.probe in (s.neighbor_edges or {})):
-        widest = max((s.rows_est.get(n, inf)
-                      for n, _cols in s.neighbor_edges[op.probe]
-                      if n != op.build), default=0.0)
-        # SQL-path refinement (r8): gate 2d's graph estimates model
-        # the plan join_all would build (size-hinted BHJs), but the
-        # REPLAYED host plan broadcasts by Catalyst's STATIC
-        # sizeInBytes, which ignores filter selectivity — a
-        # year-filtered 60MB title stays SMJ, the probe fact pays
-        # its full shuffle map-write, and the suppressed semi was
-        # the only thing that could have landed the reduction
-        # before it (JOB jq13: castinfo's 50M-row exchange behind a
-        # suppressed title->castinfo hop; native's subtree bloom
-        # wins exactly by filtering that write). When host-plan
-        # evidence exists, suppression additionally requires the
-        # host to REALLY pre-filter this pair below the probe's
-        # first exchange — the same certainty bar as gate 2e.
-        if (widest <= cfg.host_broadcast_rows
-                and (hp is None or host_filters())):
-            supp = ("dup", widest, cfg.host_broadcast_rows)
-    # 2e. host-prefiltered duplication: the un-rewritten host plan
-    #     already inner-BHJ-joins this build into the probe's scan
-    #     pipeline below the probe's first shuffle — same rows
-    #     dropped, same per-row hash cost, same pre-exchange
-    #     position — so the semi duplicates it even though the
-    #     probe crosses an exchange later (Q9's part->lineitem at
-    #     x1000: the one residual gate 2d's graph-only evidence
-    #     could not see). Guards: forward-cascade as in 2d; the
-    #     BUILD must not itself carry transfer reductions (a
-    #     cascade INTO the build means the semi filters on
-    #     already-reduced keys the host's bare-table BHJ cannot
-    #     express — ADVICE r7); the host join's probe-side keys
-    #     must cover the op's probe columns (unknown keys = no
-    #     suppression); probe huge enough (10x broadcast_key_rows)
-    #     that any backward op building from it stays shuffle-tier,
-    #     which gate 3a (backward_broadcast_only) already skips —
-    #     so no transitive reduction is lost. The engine excludes
-    #     shared-subquery/virtual probes before handing over the
-    #     pairs (config docstring).
-    if (supp is None and cfg.skip_host_prefiltered_semi and hp
-            and host_filters() and exact_bc
-            and op.build not in s.reduced
-            and op.probe not in s.forward_builds
-            and cfg.backward_broadcast_only
-            and s.rows_est.get(op.probe, 0.0) > 10 * bkr):
-        supp = ("dup", s.rows_est.get(op.probe, 0.0), 10 * bkr)
+    if (supp is None and cfg.skip_no_exchange_probe and exact_bc
+            and op.probe not in s.forward_builds):
+        hp = s.host_prefiltered
+
+        def host_filters() -> bool:
+            return any(p == op.probe and b == op.build
+                       and (k is None or set(op.probe_cols) <= k)
+                       for p, b, k in hp)
+        if (cfg.host_broadcast_rows > 0
+                # the build itself may be broadcast-SEMI-able for us
+                # yet too big for the HOST to broadcast in the final
+                # join — that join is then a shuffle of the probe, and
+                # the semi's reduction lands before it: a crossed
+                # exchange, keep
+                and est <= cfg.host_broadcast_rows
+                and op.probe not in s.opaque_rels
+                and op.probe in (s.neighbor_edges or {})):
+            widest = max((s.rows_est.get(n, inf)
+                          for n, _cols in s.neighbor_edges[op.probe]
+                          if n != op.build), default=0.0)
+            # SQL-path refinement (r8): the graph estimates model the
+            # plan join_all would build (size-hinted BHJs), but the
+            # REPLAYED host plan broadcasts by Catalyst's STATIC
+            # sizeInBytes, which ignores filter selectivity — a
+            # year-filtered 60MB title stays SMJ, the probe fact pays
+            # its full shuffle map-write, and the suppressed semi was
+            # the only thing that could have landed the reduction
+            # before it (JOB jq13: castinfo's 50M-row exchange behind
+            # a suppressed title->castinfo hop; native's subtree bloom
+            # wins exactly by filtering that write). When host-plan
+            # evidence exists, suppression additionally requires the
+            # host to REALLY pre-filter this pair below the probe's
+            # first exchange.
+            if (widest <= cfg.host_broadcast_rows
+                    and (hp is None or host_filters())):
+                supp = ("dup", widest, cfg.host_broadcast_rows)
+        # host-plan evidence alone. Guards: the BUILD must not itself
+        # carry transfer reductions (a cascade INTO the build means
+        # the semi filters on already-reduced keys the host's
+        # bare-table BHJ cannot express — ADVICE r7); the host join's
+        # probe-side keys must cover the op's probe columns (unknown
+        # keys = no suppression); the probe must be huge enough (10x
+        # broadcast_key_rows) that any backward op building from it
+        # stays shuffle-tier, which gate 3a (backward_broadcast_only)
+        # already skips — so no transitive reduction is lost. The
+        # engine excludes shared-subquery/virtual probes before
+        # handing over the pairs (their semi reaches subquery
+        # occurrences the host join cannot — Q17's 2.5x).
+        if (supp is None and hp and host_filters()
+                and op.build not in s.reduced
+                and cfg.backward_broadcast_only
+                and s.rows_est.get(op.probe, 0.0) > 10 * bkr):
+            supp = ("dup", s.rows_est.get(op.probe, 0.0), 10 * bkr)
     if supp and cfg.filter_type == "bf_only":
         return drop(*supp)  # no minmax tier to fall back to
-    if op.phase == "backward":
-        # 3. backward ops need an even bigger probe: the forward pass
-        #    already reduced the root, so the marginal win is smaller
-        if probe_rows < cfg.backward_min_probe_rows:
-            return drop("gate3", probe_rows, cfg.backward_min_probe_rows)
-        # 3a. shuffle-tier backward hops are opt-in (see config
-        #     docstring)
-        if cfg.backward_broadcast_only and est > bkr:
-            return drop("gate3a", est, bkr)
-        # 3b. benefit gate: a probe whose reduced size already fits the
-        #     host broadcast hint will be BROADCAST in the final join —
-        #     reducing it further cannot convert row savings into
-        #     shuffle savings (it only trims a hash table the host
-        #     builds once), while the backward key-set re-derives the
-        #     root's reduced lineage: a full extra pass over the
-        #     biggest table. The forward cascade is exempt — its
-        #     reductions feed the NEXT hop's build regardless of how
-        #     the final join consumes the probe. Scale-adaptive via the
-        #     min/max jobs' observed-rows feedback (rows_est is the
-        #     measured count once a relation has served as a build
-        #     side): at cluster scale a still-huge probe stays above
-        #     the bar and the backward pass engages. Measured at
-        #     TPCH_SCALE 100x: Q7 rpt 10.6s -> 4.2s with the backward
-        #     legs' broadcastable probes skipped, no cascade-fixture
-        #     regression (the cascade's backward ops target facts).
-        if cfg.host_broadcast_rows and probe_rows <= cfg.host_broadcast_rows:
-            return drop("gate3b", probe_rows, cfg.host_broadcast_rows)
+    # 3a. shuffle-tier backward hops are opt-in (see config docstring)
+    if op.phase == "backward" and cfg.backward_broadcast_only and est > bkr:
+        return drop("gate3a", est, bkr)
     # 4. both endpoints declared bucketed on this edge's keys: the
     #    join is already exchange-free, and transfer along it only
     #    adds probe work (measured: BUCKETED_r03.json)
@@ -929,12 +913,12 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
     is skipped (Rel.colocated_on). ``rows_base`` (alias -> raw footer
     rows, no filter guesses) feeds the shuffle-tier selectivity gate.
     ``neighbor_edges`` (alias -> list of (neighbor alias, key cols on
-    this alias)) feeds the exchange-saving gates 2b3 and 2d.
+    this alias)) feeds the exchange-saving gates 2b3 and "dup".
     ``opaque_rels`` marks aliases whose final plan holds joins the edge
-    graph cannot see (anti / full outer) — gate 2d never suppresses
+    graph cannot see (anti / full outer) — gate "dup" never suppresses
     transfer into them. ``host_prefiltered`` ((probe, build) pairs the
     host plan already filters below the probe's first exchange,
-    plans/catalyst_order.scan_prefilter_pairs) feeds gate 2e.
+    plans/catalyst_order.scan_prefilter_pairs) feeds gate "dup".
     ``native_edges`` ((probe, lowercased probe col, build) edges a
     native runtime bloom of the original plan covers,
     plans/catalyst_order.native_bloom_edges) feeds gate "native".

@@ -113,13 +113,13 @@ def scan_prefilter_pairs(joined: DataFrame, alias_paths: dict
     rows missing from the build at the same per-row hash cost a
     transfer semi pays — and it does so before any exchange, i.e. at
     the exact point our broadcast-tier semi would land. A semi
-    duplicating one of these joins is pure per-row overhead (gate 2e;
+    duplicating one of these joins is pure per-row overhead (gate "dup";
     measured: TPC-H Q9 at x1000, where the host broadcast-joins
     filtered part directly above the lineitem scan and the
     part->lineitem semi cost 8% of the query).
 
     ``probe_key_names`` is the frozenset of probe-side join-key column
-    names (None when a key is a computed expression): gate 2e must only
+    names (None when a key is a computed expression): gate "dup" must only
     suppress a semi whose probe columns the host join actually filters
     on (ADVICE r7 — today Catalyst folds all equi-keys of a pair into
     one BHJ, so a mismatch is theoretical, but suppression fires only
@@ -201,7 +201,8 @@ def scan_prefilter_pairs(joined: DataFrame, alias_paths: dict
 
             warnings.warn(
                 "scan_prefilter_pairs: no leaf scan matched any alias "
-                "path — gate 2e evidence is inert for this plan shape")
+                "path — gate 'dup' host-plan evidence is inert for "
+                "this plan shape")
         return pairs
     except Exception:
         return None

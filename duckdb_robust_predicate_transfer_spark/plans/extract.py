@@ -95,7 +95,7 @@ class Extraction:
     #: aliases that feed a join the graph carries NO edge for (anti /
     #: full outer): those joins are real — usually shuffled — exchanges
     #: of both inputs in the final plan, so the exchange-benefit gate
-    #: (rewrite.py gate 2d) must never judge these relations
+    #: (rewrite.py gate "dup") must never judge these relations
     #: "exchange-free" from their graph neighborhood alone
     opaque: set = field(default_factory=set)
 
@@ -429,7 +429,7 @@ class _Walker:
             # scalar): replayed, never harvested — but the optimizer
             # turns it into a real semi/anti JOIN of the outer
             # relations it references, an exchange the edge graph does
-            # not carry. Mark those relations opaque so gate 2d cannot
+            # not carry. Mark those relations opaque so gate "dup" cannot
             # judge them exchange-free (TPC-H Q22: customer's only
             # non-subquery join is the anti join itself).
             hit = {self.id_map[i][0] for i in ids if i in self.id_map}
@@ -483,13 +483,13 @@ class _Walker:
         ``(n1.a=X AND n2.a=Y) OR (n1.a=Y AND n2.a=X)`` (TPC-H Q7/Q19
         shape) constrains NEITHER table as a single-owner conjunct, so
         without this the dims stay unfiltered, the transfer cascade has
-        no selective source, and gate 1 skips everything (measured at
-        TPCH_SCALE 100x: the whole Q7 rpt regression). For each alias
-        that every disjunct constrains, the OR of its per-disjunct atoms
-        is a LOGICALLY IMPLIED local filter: a row failing it fails
-        every disjunct, hence the original predicate — which the replay
-        re-applies verbatim anyway, so adding the implication to the
-        shadow view is sound by construction."""
+        no selective source, and the info gate skips everything
+        (measured at TPCH_SCALE 100x: the whole Q7 rpt regression). For
+        each alias that every disjunct constrains, the OR of its
+        per-disjunct atoms is a LOGICALLY IMPLIED local filter: a row
+        failing it fails every disjunct, hence the original predicate —
+        which the replay re-applies verbatim anyway, so adding the
+        implication to the shadow view is sound by construction."""
         if not conjunct.deterministic():
             return
         per: list = []        # per-disjunct: alias -> [atom SQL]
@@ -576,7 +576,7 @@ class _Walker:
             if how is None:
                 # anti/full joins carry no transfer edges, but they ARE
                 # exchanges of both inputs in the final plan — mark the
-                # relations opaque so gate 2d cannot call them
+                # relations opaque so gate "dup" cannot call them
                 # exchange-free from the edge graph alone
                 self.opaque |= left_set | right_set
             for conj in conjs:

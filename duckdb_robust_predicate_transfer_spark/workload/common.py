@@ -180,6 +180,18 @@ def native_counts(engine, df) -> tuple:
     return drops, double
 
 
+def ops_and_drops(res) -> tuple:
+    """(applied ops as ``"f:build->probe[tier]"``, ``TransferResult.drops``)
+    of a statement's transfer result ``res`` — the per-leg engagement
+    record of the regime tools; ([], {}) when the statement bailed
+    before the gate stack ran."""
+    if res is None:
+        return [], {}
+    return ([f"{op.phase[0]}:{op.build}->{op.probe}[{t}]"
+             for op, t in zip(res.applied, res.applied_tiers)],
+            res.drops)
+
+
 REVENUE = "l_extendedprice * (1 - l_discount)"
 
 

@@ -121,7 +121,7 @@ def q_star_join_forced(spark, sf_dir):
     from ..config import RPTConfig
 
     cfg = RPTConfig(min_probe_rows=0, require_selective_build=False,
-                    backward_min_probe_rows=0, all_broadcast_bail_rows=0)
+                    all_broadcast_bail_rows=0)
     return q_star_join_rpt(spark, sf_dir, config=cfg)
 
 
@@ -137,8 +137,7 @@ def q_sketch_transfer(spark, sf_dir):
 
     cfg = RPTConfig(use_sketch=True, sketch_threshold_rows=0,
                     filter_type="bf_only", min_probe_rows=0,
-                    require_selective_build=False,
-                    backward_min_probe_rows=0, all_broadcast_bail_rows=0)
+                    require_selective_build=False, all_broadcast_bail_rows=0)
     return q_star_join_rpt(spark, sf_dir, config=cfg)
 
 
@@ -174,8 +173,7 @@ def q_subtree_rescue(spark, sf_dir):
 
     cfg = RPTConfig(broadcast_key_rows=8, filter_type="bf_only",
                     min_probe_rows=0, all_broadcast_bail_rows=0,
-                    backward_min_probe_rows=10**9,
-                    host_broadcast_rows=10**9)
+                    pass_mode="forward_only", host_broadcast_rows=10**9)
     e = eng(spark, sf_dir, cfg)
     l = e.table("lineitem").withColumn(
         "l_okey_s", F.col("l_orderkey").cast("string"))

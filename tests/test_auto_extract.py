@@ -32,7 +32,7 @@ FLAGSHIP_SQL = """
 
 #: zeroed gates => the cascade actually runs at sf0.001 scale
 FORCE = RPTConfig(min_probe_rows=0, require_selective_build=False,
-                  backward_min_probe_rows=0, persist_min_rows=0,
+                  persist_min_rows=0,
                   all_broadcast_bail_rows=0,
                   backward_broadcast_only=False, max_build_keep_frac=1.0,
                   host_broadcast_rows=0)
@@ -533,6 +533,38 @@ def test_native_rf_restore_across_engine_instances(spark, sf_dir):
         assert plain.sparkSession.conf.get(key) == "true"
     finally:
         spark.conf.set(key, prev)
+
+
+def test_all_broadcast_bail_skips_evidence(spark, sf_dir, monkeypatch):
+    """A statement whose relations all but the largest fit a broadcast
+    bails right after extraction, from footer counts: it runs no
+    host-plan evidence pass, returns the plain rows, and releases the
+    previous statement's persists as any later statement's planning
+    does. The statement text is used by no other test, so the module
+    memos miss."""
+    from duckdb_robust_predicate_transfer_spark.plans import catalyst_order
+
+    e1 = Engine(spark, sf_dir, FORCE)
+    e1.sql(FLAGSHIP_SQL)
+    assert e1.last_result is not None and e1.last_result.persisted
+    held = list(e1.last_result.persisted)
+    calls: list = []
+    real = catalyst_order.statement_evidence
+    monkeypatch.setattr(catalyst_order, "statement_evidence",
+                        lambda *a, **k: calls.append(a) or real(*a, **k))
+    sql = FLAGSHIP_SQL.replace("'ASIA'", "'AFRICA'").replace(
+        "1996-01-01", "1995-03-01")
+    # the default config: every sf0.001 table is under the 400k-row bail
+    e2 = Engine(spark, sf_dir)
+    got = e2.sql(sql).collect()
+    assert not e2.last_sql_rewritten and e2.last_result is None
+    assert calls == [], "the all-broadcast bail paid the evidence pass"
+    want = Engine(spark, sf_dir, RPTConfig(enabled=False)).sql(
+        sql, auto_rpt=False).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert not e1.last_result.persisted, "previous persists not released"
+    for df in held:
+        assert not df.storageLevel.useMemory
 
 
 def test_persist_release_across_engine_instances(spark, sf_dir):

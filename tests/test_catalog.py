@@ -37,7 +37,7 @@ FLAGSHIP_SQL = """
 
 #: zeroed gates => the rewrite engages at sf0.001 scale
 FORCE = RPTConfig(min_probe_rows=0, require_selective_build=False,
-                  backward_min_probe_rows=0, persist_min_rows=0,
+                  persist_min_rows=0,
                   all_broadcast_bail_rows=0,
                   backward_broadcast_only=False, max_build_keep_frac=1.0,
                   host_broadcast_rows=0)

@@ -28,7 +28,7 @@ STAR_EDGES = [
 #: zeroed cost gates => reference-faithful "always transfer" behavior,
 #: so the full cascade is exercised even on sf0.001's tiny tables
 FORCE = dict(min_probe_rows=0, require_selective_build=False,
-             backward_min_probe_rows=0, minmax_min_probe_rows=0,
+             minmax_min_probe_rows=0,
              persist_min_rows=0, all_broadcast_bail_rows=0,
              backward_broadcast_only=False, max_build_keep_frac=1.0,
              host_broadcast_rows=0)
@@ -255,8 +255,7 @@ def test_provable_noop_ops_skipped(spark, sf_dir):
     cost 2x the whole rewrite-off query while removing 0 rows. The
     forward cascade must still run, and results must equal the off
     leg."""
-    gates_off = dict(min_probe_rows=0, backward_min_probe_rows=0,
-                     minmax_min_probe_rows=0, persist_min_rows=0,
+    gates_off = dict(min_probe_rows=0, minmax_min_probe_rows=0, persist_min_rows=0,
                      all_broadcast_bail_rows=0,
                      backward_broadcast_only=False,
                      max_build_keep_frac=1.0, host_broadcast_rows=0)

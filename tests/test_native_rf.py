@@ -126,7 +126,7 @@ def test_set_native_rf_roundtrip(spark):
 
 def test_composed_arbitration_dup_bail_runs_with_caller_setting(spark):
     """A query whose only lost transfer candidates died to the
-    duplication gates (2d/2e) bails like any other: it runs with the
+    duplication gate ("dup") bails like any other: it runs with the
     caller's injection, on the first pass and on the bail-cache pass
     alike. A query that bails for any other reason does too. The value
     is read off each returned DataFrame's session; the caller's conf
@@ -182,8 +182,7 @@ def test_leg_assertion_clears_stale_suppression_stash(spark):
     sf = "/root/testdata/sf0.001"
     # force engagement: no duplication gates, everything transferable
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
-                    skip_no_exchange_probe=False,
-                    skip_host_prefiltered_semi=False)
+                    skip_no_exchange_probe=False)
     star_sql = """
         SELECT COUNT(*) AS n
         FROM lineitem
@@ -294,7 +293,6 @@ def test_engaged_statement_runs_without_native_blooms(spark):
         WHERE c_mktsegment = 'BUILDING' AND p_size < 10
     """
     cfg = RPTConfig(all_broadcast_bail_rows=0, skip_no_exchange_probe=False,
-                    skip_host_prefiltered_semi=False,
                     require_selective_build=False, min_probe_rows=0)
     with _injection_live(spark):
         e = Engine(spark, sf, cfg)
@@ -323,8 +321,7 @@ def test_cession_arbitration(spark):
 
     sf = "/root/testdata/sf0.001"
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
-                    skip_no_exchange_probe=False,
-                    skip_host_prefiltered_semi=False)
+                    skip_no_exchange_probe=False)
     with _injection_live(spark):
         for attempt in ("first", "cached"):
             e = Engine(spark, sf, cfg)
@@ -350,7 +347,7 @@ def test_cession_arbitration(spark):
 
 
 def test_host_pairs_do_not_depend_on_injection(spark):
-    """The one planning pass reads gate 2e's host-prefiltered pairs off
+    """The one planning pass reads gate "dup"'s host-prefiltered pairs off
     the original statement as planned with the caller's injection. That
     is sound only if injected blooms move no join and no exchange:
     scan_prefilter_pairs must give the same pairs with injection on and
@@ -414,8 +411,7 @@ def test_engaged_statement_plans_native_blooms_once(spark, sf_dir,
             lambda df, *a, _real=real, _calls=calls, **k:
             _calls.append(df) or _real(df, *a, **k))
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
-                    skip_no_exchange_probe=False,
-                    skip_host_prefiltered_semi=False)
+                    skip_no_exchange_probe=False)
     sql = REACH_SQL.replace("'BUILDING'", "'AUTOMOBILE'")
     with _injection_live(spark):
         e = Engine(spark, sf_dir, cfg)
@@ -446,7 +442,6 @@ def test_interleaved_statements_keep_their_arbitration(spark, sf_dir):
     """
     cfg = RPTConfig(min_probe_rows=0, all_broadcast_bail_rows=0,
                     skip_no_exchange_probe=False,
-                    skip_host_prefiltered_semi=False,
                     require_selective_build=False)
     orders_rows = spark.read.parquet(f"{sf}/orders.parquet").count()
 

@@ -271,7 +271,7 @@ def test_sketch_rescue_subtree_hop(spark, sf_dir):
     rels, edges = rels_edges(spark)
     base = dict(broadcast_key_rows=8, filter_type="bf_only",
                 min_probe_rows=0, require_selective_build=True,
-                all_broadcast_bail_rows=0, backward_min_probe_rows=10**9,
+                all_broadcast_bail_rows=0, pass_mode="forward_only",
                 host_broadcast_rows=0)
 
     def run(cfg, rl=None, ed=None):
@@ -383,8 +383,8 @@ def test_weak_build_observation_gate2g(spark, sf_dir):
 
 #: every gate a decision can reach on estimates alone (gate2g and noop
 #: need an observed count)
-ESTIMATE_GATES = {"info", "native", "gate1", "gate2", "gate2b", "gate2b3",
-                  "gate2c", "dup", "gate3", "gate3a", "gate3b", "gate4"}
+ESTIMATE_GATES = {"info", "native", "gate2", "gate2b", "gate3", "gate2b3",
+                  "gate2c", "dup", "gate3a", "gate4"}
 
 
 def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
@@ -392,7 +392,8 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     estimate-only gate of decide() through apply_transfer, the real
     pass, and take each probe-big sketch route. Each row names the
     landing tier or the dropping gate of every scheduled op."""
-    from duckdb_robust_predicate_transfer_spark.config import RPTConfig
+    from duckdb_robust_predicate_transfer_spark.config import (
+        DEFAULT, RPTConfig)
     from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
         apply_transfer)
@@ -454,10 +455,14 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
          {"rg", "n"}, ["native", "native"],
          native_edges={("n", "n_regionkey", "rg"),
                        ("c", "c_nationkey", "n")})
-    # an unfiltered, unreduced build only removes FK orphans: allowed
-    # up to MAX_UNFILTERED_BUILD_ROWS
-    case([("o", "l", fw)], {"o": 6e7, "l": 1e9}, set(), ["gate1"],
-         cfg={"require_selective_build": False})
+    # an unfiltered, never-reduced build only removes FK orphans: under
+    # DEFAULT its information set is empty, so the info gate drops it
+    # before any size gate is read
+    plan = TransferPlan(root="l", ops=[
+        TransferOp("o", "l", ("o_orderkey",), ("l_orderkey",), fw)])
+    (d,) = apply_transfer(dfs, {"o": 6e7, "l": 1e9}, set(), plan,
+                          DEFAULT).decisions
+    assert d.gate == "info", d
     # shuffle-tier build into a small probe / into a probe it cannot
     # shrink much
     case([("c", "o", fw)], {"c": 3e6, "o": 10}, {"c"}, ["gate2"])
@@ -475,17 +480,21 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     # mid-size broadcast key set into a probe that does not dwarf it
     r = case([("c", "o", fw)], {"c": 1e6, "o": 1e6}, {"c"}, ["gate2c"])
     assert (r[0].value, r[0].threshold) == (1e6, 8e6)
-    # 2d: every other neighbor broadcasts; 2e: the host pre-filters
+    # dup, by the edge graph (every other neighbor broadcasts) and by
+    # the host plan (the host pre-filters the pair)
     case([("c", "o", fw)], {"c": 10, "o": 1e5, "l": 100}, {"c"}, ["dup"],
          neighbor_edges={"o": [("c", ("o_custkey",)),
                                ("l", ("o_orderkey",))]})
     case([("c", "o", fw)], {"c": 10, "o": 3e7}, {"c"}, ["dup"],
          host_prefiltered={("o", "c", None)})
-    # backward hops: probe too small, shuffle-tier build, probe the
-    # host broadcasts anyway
+    # backward hops: a probe at or below the host broadcast floor drops,
+    # one just above it lands; a shuffle-tier build drops at 3a
     case([("c", "o", bw)], {"c": 10, "o": 100}, {"c"}, ["gate3"])
+    r = case([("c", "o", bw)], {"c": 10, "o": 1e6}, {"c"}, ["gate3"])
+    assert (r[0].value, r[0].threshold) == (1e6, 1e6)
+    case([("c", "o", bw)], {"c": 10, "o": 1e6 + 1}, {"c"},
+         ["exact_broadcast"])
     case([("c", "o", bw)], {"c": 3e6, "o": 1e8}, {"c"}, ["gate3a"])
-    case([("c", "o", bw)], {"c": 10, "o": 1e6}, {"c"}, ["gate3b"])
     # both endpoints bucketed on the edge's keys
     case([("c", "o", fw)], {"c": 10, "o": 1e8}, {"c"}, ["gate4"],
          colocated={"c": frozenset({"c_custkey"}),
@@ -502,7 +511,8 @@ def test_dry_run_matches_real_pass_on_gate_fixtures(spark, sf_dir):
     ev = dict(rows_base={"c": 1e7, "o": 1e8},
               neighbor_edges={"o": [("c", ("o_key_s",))]})
     rows = {"c": 3e6, "o": 1e8}
-    # no 2d/3b, no probe-side bitmap escalation
+    # no backward floor or edge-graph dup, no probe-side bitmap
+    # escalation
     cfg = RPTConfig(**base, host_broadcast_rows=0, bloom_probe_min_rows=0)
     (real,) = apply_transfer(sk, dict(rows), {"c"}, plan, cfg,
                              **ev).decisions

@@ -322,10 +322,10 @@ def test_host_broadcast_feedback_sql_path(spark, sf_dir):
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
     force = RPTConfig(min_probe_rows=0, require_selective_build=False,
-                      backward_min_probe_rows=0, minmax_min_probe_rows=0,
+                      minmax_min_probe_rows=0,
                       persist_min_rows=0, all_broadcast_bail_rows=0,
                       # keep host_broadcast_rows (the hint under test
-                      # reads it), so gate 2d must be opted out instead
+                      # reads it), so gate "dup" must be opted out instead
                       skip_no_exchange_probe=False)
     sql = """
         SELECT o.o_orderpriority, COUNT(*) AS n
@@ -363,10 +363,9 @@ def test_bf_benefit_gate_prices_midsize_broadcasts(spark, sf_dir):
     edges = [("l", "o", "l_orderkey", "o_orderkey"),
              ("o", "c", "o_custkey", "c_custkey")]
     base = dict(min_probe_rows=0, require_selective_build=False,
-                backward_min_probe_rows=0, all_broadcast_bail_rows=0,
-                filter_type="bf_only",
+                all_broadcast_bail_rows=0, filter_type="bf_only",
                 # isolate gate 2c: at sf0.001 every neighbor is
-                # broadcastable, so gate 2d would suppress all ops first
+                # broadcastable, so gate "dup" would suppress all ops first
                 skip_no_exchange_probe=False)
 
     def applied_probes(cfg):
@@ -404,8 +403,8 @@ def test_exchange_benefit_gate_2d(spark, sf_dir):
     edges = [("l", "o", "l_orderkey", "o_orderkey"),
              ("o", "c", "o_custkey", "c_custkey")]
     base = dict(min_probe_rows=0, require_selective_build=False,
-                backward_min_probe_rows=0, all_broadcast_bail_rows=0,
-                filter_type="bf_only", bf_benefit_probe_ratio=0.0)
+                all_broadcast_bail_rows=0, filter_type="bf_only",
+                bf_benefit_probe_ratio=0.0)
 
     def applied_probes(cfg):
         e = Engine(spark, sf_dir, cfg)
@@ -496,20 +495,22 @@ def test_minmax_clustering_gate(spark, tmp_path):
 
 
 def test_host_prefiltered_gate_2e(spark, sf_dir):
-    """Gate 2e (r7): when the HOST's un-rewritten physical plan already
-    inner-broadcast-hash-joins the build into the probe's scan pipeline
-    below the probe's first shuffle, a broadcast-tier semi on the same
-    pair duplicates that join row for row (TPC-H Q9's part->lineitem at
-    x1000) and is suppressed — even though the probe does cross an
-    exchange later, which is why gate 2d's graph-only evidence keeps
-    it. SQL-path only: the pair evidence is read from the host plan."""
+    """Gate "dup", host-plan branch (r7): when the HOST's un-rewritten
+    physical plan already inner-broadcast-hash-joins the build into the
+    probe's scan pipeline below the probe's first shuffle, a
+    broadcast-tier semi on the same pair duplicates that join row for
+    row (TPC-H Q9's part->lineitem at x1000) and is suppressed — even
+    though the probe does cross an exchange later, which is why the
+    edge-graph branch keeps it. SQL-path only: the pair evidence is
+    read from the host plan."""
     from duckdb_robust_predicate_transfer_spark.config import RPTConfig
     from duckdb_robust_predicate_transfer_spark.engine import Engine
 
     # supplier (filtered, tiny) joins lineitem directly: the host plans
     # an inner BHJ right above the lineitem scan. orders is forced
-    # "too big to broadcast" via host_broadcast_rows so gate 2d sees a
-    # crossed exchange and keeps the op — isolating 2e's suppression.
+    # "too big to broadcast" via host_broadcast_rows so the edge-graph
+    # branch sees a crossed exchange and keeps the op — isolating the
+    # host-plan branch's suppression.
     sql = """
         SELECT COUNT(*) AS n
         FROM lineitem l
@@ -518,9 +519,9 @@ def test_host_prefiltered_gate_2e(spark, sf_dir):
         WHERE s.s_nationkey = 1
     """
     base = dict(min_probe_rows=0, require_selective_build=False,
-                backward_min_probe_rows=0, all_broadcast_bail_rows=0,
-                filter_type="bf_only", bf_benefit_probe_ratio=0.0,
-                broadcast_key_rows=500, host_broadcast_rows=10,
+                all_broadcast_bail_rows=0, filter_type="bf_only",
+                bf_benefit_probe_ratio=0.0, broadcast_key_rows=500,
+                host_broadcast_rows=10,
                 max_build_keep_frac=1.0)
 
     def run(cfg):
@@ -532,10 +533,10 @@ def test_host_prefiltered_gate_2e(spark, sf_dir):
 
     rows_on, probes_on = run(RPTConfig(**base))
     rows_off, probes_off = run(
-        RPTConfig(**base, skip_host_prefiltered_semi=False))
-    assert "l" in probes_off, "without 2e the broadcast semi applies"
+        RPTConfig(**base, skip_no_exchange_probe=False))
+    assert "l" in probes_off, "without gate dup the broadcast semi applies"
     assert "l" not in probes_on, (
-        "host-prefiltered pair must be suppressed by gate 2e")
+        "host-prefiltered pair must be suppressed by gate dup")
     assert rows_on == rows_off
 
     # the pair evidence itself: supplier joins lineitem below its first
@@ -554,6 +555,6 @@ def test_host_prefiltered_gate_2e(spark, sf_dir):
     ls = [(p, b, k) for p, b, k in pairs if (p, b) == ("l", "s")]
     assert ls, pairs
     # the host BHJ's probe-side key names must cover the edge column
-    # (ADVICE r7: gate 2e only suppresses when the host join provably
+    # (ADVICE r7: gate "dup" only suppresses when the host join provably
     # filters on the semi's own keys)
     assert all(k is None or "l_suppkey" in k for _, _, k in ls), ls

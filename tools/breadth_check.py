@@ -222,7 +222,6 @@ def main():
     # would (correctly) bail on small inputs. Mirrors
     # tests/test_differential.py FORCE.
     force_cfg = RPTConfig(min_probe_rows=0, require_selective_build=False,
-                          backward_min_probe_rows=0,
                           minmax_min_probe_rows=0, persist_min_rows=0,
                           all_broadcast_bail_rows=0,
                           backward_broadcast_only=False,

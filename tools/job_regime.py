@@ -796,8 +796,8 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.engine import Engine
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms, native_counts, rotated_min, set_native_rf,
-        timed_leg)
+        count_native_blooms, native_counts, ops_and_drops, rotated_min,
+        set_native_rf, timed_leg)
 
     spark = get_spark(app_name="drpt-job-regime",
                       shuffle_partitions=SHUFFLE)
@@ -814,15 +814,13 @@ def main() -> int:
     oracle_ok: dict = {}
     engaged: dict = {}
     ops_inv: dict = {}
+    drops_inv: dict = {}
     for name, sql in QUERIES.items():
         e = Engine(spark, OUT_DIR)
         df = e.sql(sql)
         got = _canon(tuple(r) for r in df.collect())
         engaged[name] = bool(e.last_sql_rewritten)
-        lr = e.last_result
-        ops_inv[name] = ([f"{op.phase[0]}:{op.build}->{op.probe}[{t}]"
-                          for op, t in zip(lr.applied, lr.applied_tiers)]
-                         if lr is not None else [])
+        ops_inv[name], drops_inv[name] = ops_and_drops(e.last_result)
         want = _canon(con.sql(sql).fetchall())
         oracle_ok[name] = (got == want)
         print(f"# oracle {name}: match={oracle_ok[name]} "
@@ -844,6 +842,8 @@ def main() -> int:
     #: plan the statement ran (double-filtered edges)
     native_drops: dict = {}
     double_filtered: dict = {}
+    #: per query, TransferResult.drops of the composed leg
+    composed_drops: dict = {}
 
     def leg(name: str, mode: str) -> float:
         if mode in ("rpt", "composed"):
@@ -870,6 +870,7 @@ def main() -> int:
         if held and (held[0].last_result is not None
                      or name not in native_drops):
             native_drops[name], double_filtered[name] = native_counts(*held)
+            composed_drops[name] = ops_and_drops(held[0].last_result)[1]
         return t
 
     blooms = {}
@@ -910,6 +911,8 @@ def main() -> int:
         "oracle_ok": oracle_ok,
         "rpt_engaged": engaged,
         "rpt_ops": ops_inv,
+        "rpt_drops": drops_inv,
+        "composed_drops": composed_drops,
         "composed_cede": composed_cede,
         "composed_native_drops": native_drops,
         "composed_double_filtered": double_filtered,
@@ -931,7 +934,7 @@ def main() -> int:
             json.dump(summary, f, indent=1)
     spark.stop()
     # engagement is GATE-DRIVEN by design: all-broadcast shapes (jq1,
-    # jq4, jq8...) must disengage via gates 2d/2e — requiring all()
+    # jq4, jq8...) must disengage via gate "dup" — requiring all()
     # would fail exactly when the bounded-downside machinery works.
     # Require every oracle match plus genuine engagement somewhere.
     return 0 if (all(oracle_ok.values()) and any(engaged.values())) else 1

@@ -120,8 +120,8 @@ def run() -> int:
     # shuffle semi join is the right plan under memory pressure anyway
     # (and what AQE would pick with a realistic per-executor heap).
     cfg = RPTConfig(pass_mode="forward_only", persist_min_rows=1,
-                    min_probe_rows=0, backward_min_probe_rows=0,
-                    all_broadcast_bail_rows=0, broadcast_key_rows=0)
+                    min_probe_rows=0, all_broadcast_bail_rows=0,
+                    broadcast_key_rows=0)
     e = Engine(spark, BASE_DIR, cfg)
     t0 = time.time()
     j = e.reduce_and_join(

@@ -26,8 +26,9 @@ lineitem shuffle stops being trivially memory-resident:
      op a native bloom of the original plan covers drops at gate
      "native"). Per-query native-bloom injection counts, cessions,
      gate-"native" drops and double-filtered edges are recorded in
-     the artifact as plan-shape evidence, and each
-     transfer leg's own engagement as ``rpt_engaged_by_leg``.
+     the artifact as plan-shape evidence, and each transfer leg's own
+     engagement as ``rpt_engaged_by_leg``, its applied ops and tiers
+     as ``rpt_ops`` and its drops per gate as ``rpt_drops``.
 
 Run:  python -u tools/tpch_scale.py [--json OUT] [--runs N] [--skip-oracle]
 Env:  DRPT_TPCH_SCALE_DIR (default /tmp/drpt_tpch_x10)
@@ -168,7 +169,8 @@ def main() -> int:
     from duckdb_robust_predicate_transfer_spark.workload import common
     from duckdb_robust_predicate_transfer_spark.session import get_spark
     from duckdb_robust_predicate_transfer_spark.workload.common import (
-        count_native_blooms, native_counts, rotated_min, timed_leg)
+        count_native_blooms, native_counts, ops_and_drops, rotated_min,
+        timed_leg)
 
     spark = get_spark(app_name="drpt-tpch-scale",
                       shuffle_partitions=SHUFFLE)
@@ -244,6 +246,8 @@ def main() -> int:
                 # statement: a leg can only be read against off for a
                 # query it actually engaged on
                 engaged_by_leg[mode][name] = verdict()[0]
+                ops_by_leg[mode][name], drops_by_leg[mode][name] = (
+                    ops_and_drops(common.last_engine.last_result))
             if mode == "composed":
                 # free engagement/cession capture (feeds the
                 # engaged-only geomeans) — works under
@@ -266,6 +270,10 @@ def main() -> int:
     blooms: dict = {}
     engaged: dict = {}
     engaged_by_leg: dict = {"rpt": {}, "composed": {}}
+    #: per transfer leg and query: applied ops with their tiers, and
+    #: TransferResult.drops (dropping gate -> ops)
+    ops_by_leg: dict = {"rpt": {}, "composed": {}}
+    drops_by_leg: dict = {"rpt": {}, "composed": {}}
     cede: dict = {}
     #: per query, off the composed pass: ops dropped at gate "native",
     #: and applied ops whose edge also carries a native bloom
@@ -380,6 +388,8 @@ def main() -> int:
         # what the engine actually does from that noise floor
         "rpt_engaged": engaged,
         "rpt_engaged_by_leg": engaged_by_leg,
+        "rpt_ops": ops_by_leg,
+        "rpt_drops": drops_by_leg,
         "composed_cede": cede,
         "composed_native_drops": native_drops,
         "composed_double_filtered": double_filtered,
