@@ -146,7 +146,7 @@ class JobAdhoc(Regime):
         from duckdb_robust_predicate_transfer_spark.session import get_spark
 
         return get_spark(app_name="ablate",
-                         master=f"local[{os.cpu_count()}]")
+                         master=f"local[{len(os.sched_getaffinity(0))}]")
 
     def text(self, stmt):
         return self.texts[stmt]
@@ -297,11 +297,21 @@ def main() -> int:
         regime.legs = tuple(args.legs.split(","))
     spark = regime.spark()
     spark.sparkContext.setLogLevel("ERROR")
+
+    def save(out: dict) -> None:
+        # rewritten after the census and after each site, so a run cut
+        # short keeps every leg it finished (a 10M-fact site takes
+        # 20-30 min on a 4-core host)
+        if args.json:
+            with open(args.json, "w") as fh:
+                fh.write(json.dumps(out, indent=1))
+
     try:
-        out = {"regime": args.regime, "census": census(regime, spark)}
+        out = {"regime": args.regime, "census": census(regime, spark),
+               "ablation": {}}
+        save(out)
         sites = (list(SITES) if args.ablate == "all"
                  else [s for s in args.ablate.split(",") if s])
-        out["ablation"] = {}
         for site in sites:
             # the first census leg is the one the ablation legs run in
             where = out["census"][regime.legs[0]]["sites"].get(site, [])
@@ -310,18 +320,15 @@ def main() -> int:
                 continue
             out["ablation"][site] = ablate(regime, spark, site, where,
                                            args.runs)
+            save(out)
             print(f"# ablate {site}: "
                   f"{out['ablation'][site]['site_off_over_default']} "
                   f"(off spread {out['ablation'][site]['off_spread_median']})",
                   file=sys.stderr, flush=True)
     finally:
         spark.stop()
-    text = json.dumps(out, indent=1)
-    if args.json:
-        with open(args.json, "w") as fh:
-            fh.write(text)
-    else:
-        print(text)
+    if not args.json:
+        print(json.dumps(out, indent=1))
     return 0
 
 
