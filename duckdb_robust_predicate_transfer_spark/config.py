@@ -38,12 +38,6 @@ class RPTConfig:
     filter_type: str = "all"
     #: reference: rpt_flip_roots (join_order heuristic only)
     flip_roots: bool = True
-    #: backward-pass equivalence-class broadcast (join_order heuristic
-    #: only, like the reference's DAG schedule): build ONE key filter per
-    #: column-equivalence class at its highest ancestor and re-use it for
-    #: every descendant in the class (rpt_optimizer.cpp:1070-1158) —
-    #: fewer distinct key-set jobs, identical reduction strength
-    class_broadcast: bool = True
     #: use a serialized Bloom-filter sketch instead of exact key sets when
     #: the build side exceeds sketch_threshold_rows (scale path for huge
     #: build sides where a distinct key-set shuffle would be costly)
@@ -341,10 +335,10 @@ class RPTConfig:
     #: set it throughout, eager jobs included, and no gate "native"
     #: runs).
     suppress_native_rf: bool = True
-    #: persist reduced tables that both feed a key-set and the final join
-    persist_reduced: bool = True
-    #: ...but only when the reduced build side is big enough that
-    #: recomputing it would cost more than materializing it
+    #: persist a reduced build side that feeds both a key set and the
+    #: final join when it is big enough that recomputing it would cost
+    #: more than materializing it. A persist lives exactly as long as
+    #: its statement's DataFrame (Engine.reduce)
     persist_min_rows: int = 5_000_000
     #: collect per-step rows-in/rows-out (reference: rpt_profiling)
     profiling: bool = False

@@ -22,13 +22,14 @@ way (README.md:21).
 from __future__ import annotations
 
 import threading
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from .catalog import Catalog, get_catalog
 from .config import DEFAULT, RPTConfig
-from .operators.rewrite import TransferResult, apply_transfer
+from .operators.rewrite import TransferResult, apply_transfer, unpersist
 from .plans.graph import (JoinGraph, execution_order_dag, join_order_dag,
                           largest_root_tree)
 from .plans.ir import JoinEdge, TableNode
@@ -163,6 +164,9 @@ class Engine:
         self.catalog: Catalog | None = (
             get_catalog(spark, sf_dir) if sf_dir else None
         )
+        #: the last statement's transfer result, None when it did not
+        #: transfer. It holds no DataFrame of the statement, so it never
+        #: keeps the statement's persists alive (see reduce())
         self.last_result: TransferResult | None = None
         #: alias -> rows as of the last reduce(): local-filter-discounted
         #: footer estimates, overwritten in place with OBSERVED counts by
@@ -198,7 +202,10 @@ class Engine:
         runtime-bloom setting live in the clone, and the returned
         DataFrame is bound to it. The caller's session is never
         changed, and a DataFrame planned now executes under its own
-        setting whatever later statements decide.
+        setting whatever later statements decide. The clone also owns
+        the statement's persisted builds: they are released when the
+        returned DataFrame, and every DataFrame derived from it, is
+        gone (see reduce()), never by another statement.
 
         Native runtime blooms follow one rule (config.suppress_native_rf):
         the statement runs with the caller's injection setting and only
@@ -225,6 +232,7 @@ class Engine:
         self.last_cede = False
         if not auto_rpt or not cfg.enabled or self.catalog is None:
             return self.spark.sql(query)
+        self.last_result = None
         s = clone_session(self.spark)
         rf_live = (cfg.suppress_native_rf
                    and self.spark.conf.get(_RF_ENABLED, "false") == "true")
@@ -381,9 +389,6 @@ class Engine:
 
         cached = _BAIL_CACHE.get(bk)
         if cached:
-            # a bail-cache hit returns before reduce() runs, so it
-            # releases the previous query's persists itself
-            self._release_previous()
             return bail(cached)
         # correlated-scalar-subquery (DELIM) edges: the reference walks
         # LOGICAL_DELIM_JOIN as an edge source (rpt_optimizer.cpp:49-50)
@@ -449,7 +454,6 @@ class Engine:
                       and i.table not in shared_tables)
                  for i in ext.instances.values()]
                 + [rows(t, False) for t in virt.values()], cfg):
-            self._release_previous()
             return bail(_memo_put(_BAIL_CACHE, bk, True, 512))
 
         # relations bound to ``s`` (here and for the virtual nodes), so
@@ -513,17 +517,14 @@ class Engine:
         # planning-job overhead that showed up as a composed-only Q22
         # loss at x1000 (8.2 s vs rpt 5.1 s with ZERO blooms in the
         # final plan, TPCH_SCALE_X1000_r06). The final statement and
-        # every bail run with the caller's value. reduce() releases the
-        # previous query's persists at entry; nulling last_result here
-        # instead would leak them for the life of the session
-        # (CacheManager plan pollution — see reduce()'s docstring)
+        # every bail run with the caller's value
         if rf_live:
             s.conf.set(_RF_ENABLED, "false")
         try:
             red = self.reduce(rels, list(ext.edges) + virt_edges, cfg,
                               opaque=getattr(ext, "opaque", None),
                               host_prefiltered=host_pre,
-                              native_edges=native)
+                              native_edges=native, session=s)
         finally:
             if rf_live:
                 s.conf.set(_RF_ENABLED, "true")
@@ -601,43 +602,30 @@ class Engine:
 
     # -- the rewrite ---------------------------------------------------
 
-    def _release_previous(self) -> None:
-        """Release the previous query's persists, this engine's and the
-        one stashed on the caller's session. The workload layer builds
-        a fresh Engine per query, so the previous persists can belong
-        to an Engine this instance never saw (ADVICE r5). Without it a
-        long-lived session accumulates one query's persisted builds per
-        execution, and CacheManager substitution plus storage-memory
-        pressure make repeat timings bimodal (Q5 at x1000 measured 13 s
-        with per-leg clearCache vs 32 s without)."""
-        if self.last_result is not None:
-            self.last_result.release()
-            self.last_result = None
-        prev = getattr(self.spark, "_drpt_prev_result", None)
-        if prev is not None:
-            prev.release()
-        self.spark._drpt_prev_result = None
-
     def reduce(self, rels: dict, edges: list,
                config: RPTConfig | None = None,
                opaque: set | None = None,
                host_prefiltered: "set | None" = None,
-               native_edges: "set | None" = None) -> dict:
+               native_edges: "set | None" = None,
+               session: "SparkSession | None" = None) -> dict:
         """Apply robust predicate transfer; returns alias -> reduced DF.
 
         ``host_prefiltered`` and ``native_edges`` are the SQL path's
         host-plan evidence for gates "dup" and "native"
-        (apply_transfer).
+        (apply_transfer). ``session`` is the statement session the
+        relations are already bound to (Engine.sql's clone); without
+        one, a transfer that runs binds the relations into a new clone
+        of the engine's session.
 
-        Persisted build sides from the PREVIOUS reduce are released
-        here: Spark's CacheManager substitutes any matching subplan
-        with a leaked cached relation, so an unreleased persist from
-        query N silently rewrites query N+1's scans (full-width
-        InMemoryRelation instead of a pruned FileScan). One query's
-        persists live exactly until the next query plans.
+        The statement session owns the transfer's persisted builds:
+        they are released when it is freed, that is when the returned
+        DataFrames and every DataFrame derived from them are gone. No
+        other statement releases them, and none outlives its
+        statement, so Spark's CacheManager never substitutes one
+        statement's cached relation into a later statement's plan.
         """
         cfg = (config or self.config).validate()
-        self._release_previous()
+        self.last_result = None
 
         dfs: dict = {}
         nodes: list = []
@@ -700,6 +688,9 @@ class Engine:
             return dfs
         if _all_broadcast(rows_est.values(), cfg):
             return dfs
+        if session is None:
+            session = clone_session(self.spark)
+            dfs = {a: bind(d, session) for a, d in dfs.items()}
 
         import time as _time
         t_plan = _time.perf_counter()
@@ -725,8 +716,7 @@ class Engine:
             tree, pass_mode=cfg.pass_mode,
             # the reference's backward broadcast belongs to the DAG
             # (join_order) schedule, GenerateStageModificationsFromDAG
-            class_broadcast=(cfg.class_broadcast
-                             and cfg.heuristic in ("join_order", "catalyst")),
+            class_broadcast=cfg.heuristic in ("join_order", "catalyst"),
             edges=graph.edges)
 
         if cfg.display_dag:
@@ -773,12 +763,13 @@ class Engine:
             # the reference prints its per-op summary at QueryEnd when
             # rpt_profiling is set (rpt_profiling.hpp:114-216)
             print(res.format_profile())
+        if res.persisted:
+            # the finalizer holds only the JVM handles: a DataFrame of
+            # ``session`` among its arguments would keep it alive
+            weakref.finalize(session, unpersist, res.persisted).atexit = False
+        out, res.dfs = res.dfs, {}
         self.last_result = res
-        try:
-            self.spark._drpt_prev_result = res
-        except Exception:
-            pass
-        return res.dfs
+        return out
 
     # -- final-join composition -----------------------------------------
 

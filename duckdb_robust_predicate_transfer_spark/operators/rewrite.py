@@ -32,6 +32,7 @@ the stages.
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass, field, replace
 
@@ -132,9 +133,16 @@ class Decision:
 
 @dataclass
 class TransferResult:
+    #: alias -> reduced DataFrame. Engine.reduce hands them to its
+    #: caller and empties this, so Engine.last_result holds no
+    #: DataFrame of the statement
     dfs: dict
     plan: TransferPlan
     stats: list = field(default_factory=list)
+    #: (JVM Dataset ``DataFrame._jdf``, plan key) of each build this
+    #: statement persisted, one entry per persist. They live as long as
+    #: the statement's session: Engine.reduce releases them when it is
+    #: freed, which empties this list
     persisted: list = field(default_factory=list)
     #: ops that actually landed a predicate/semi join on their probe
     #: (gate survivors) — lets callers audit WHICH keys reduced a
@@ -168,14 +176,6 @@ class TransferResult:
             if d.gate:
                 out[d.gate] = out.get(d.gate, 0) + 1
         return out
-
-    def release(self):
-        for df in self.persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self.persisted.clear()
 
     def format_profile(self) -> str:
         """Per-step and per-pass reduction summary — the analogue of the
@@ -216,6 +216,45 @@ class TransferResult:
                 lines.append(f"drop  {op.phase:<8}  {edge:<24} {d.gate:<7}"
                              f"  {_num(d.value)} vs {_num(d.threshold)}")
         return "\n".join(lines)
+
+
+#: plan key (the semantic hash CacheManager matches plans by) -> the
+#: number of live persists of that plan. Plan-identical builds of two
+#: statements share one CacheManager entry, so only the last of them to
+#: be released unpersists it.
+_LIVE: dict = {}
+#: guards _LIVE and the persist/unpersist calls it counts; re-entrant,
+#: since a finalizer may release a statement on any thread
+_LIVE_LOCK = threading.RLock()
+
+
+def _persist(df: DataFrame, held: list) -> DataFrame:
+    """``df.persist()``, recorded in ``held`` as (JVM Dataset, plan
+    key) and counted in _LIVE."""
+    with _LIVE_LOCK:
+        df = df.persist()
+        key = df._jdf.queryExecution().normalized().semanticHash()
+        _LIVE[key] = _LIVE.get(key, 0) + 1
+    held.append((df._jdf, key))
+    return df
+
+
+def unpersist(held: list) -> None:
+    """Release the persists in ``held`` (``_persist``'s records) and
+    empty the list. A plan that another live statement also persisted
+    stays cached until that one goes. Errors are ignored: the
+    SparkContext may have stopped already."""
+    with _LIVE_LOCK:
+        for jdf, key in held:
+            n = _LIVE.pop(key, 1) - 1
+            if n:
+                _LIVE[key] = n
+                continue
+            try:
+                jdf.unpersist(False)
+            except Exception:
+                pass
+        held.clear()
 
 
 def _num(x) -> str:
@@ -962,9 +1001,8 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
 
     def persisted(alias: str) -> DataFrame:
         df = s.dfs[alias]
-        if cfg.persist_reduced and df not in res.persisted:
-            df = s.dfs[alias] = df.persist()
-            res.persisted.append(df)
+        if not df.is_cached:
+            df = s.dfs[alias] = _persist(df, res.persisted)
         return df
 
     def observe(alias: str, persist: bool = False) -> float:

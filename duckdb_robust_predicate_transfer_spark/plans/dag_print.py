@@ -1,9 +1,9 @@
-"""ASCII transfer-DAG rendering + profiling summary.
+"""ASCII transfer-DAG rendering.
 
 The analogue of the reference's utils/dag_printer.cpp (boxes with
 table name + formatted cardinality, edge labels parent_col/child_col,
-gated by rpt_display_dag) and rpt_profiling.hpp's per-operator summary
-(rows in/out, % removed, forward/backward rollups).
+gated by rpt_display_dag). The per-op profiling summary is
+TransferResult.format_profile (operators/rewrite.py).
 """
 
 from __future__ import annotations
@@ -114,29 +114,3 @@ def render_boxes(tree, rows_est: dict) -> str:
     lines, _ = subtree(tree.root)
     return "\n".join(lines)
 
-
-def profiling_summary(stats: list) -> str:
-    """Per-step rows in/out + % removed, with forward/backward rollups
-    (mirrors RPTProfilingState's QueryEnd table,
-    rpt_profiling.hpp:114-216)."""
-    lines = [f"{'phase':9s} {'build->probe':28s} {'rows_in':>10s} "
-             f"{'rows_out':>10s} {'removed':>8s}"]
-    roll = {"forward": [0, 0], "backward": [0, 0]}
-    for st in stats:
-        op = st.op
-        if st.rows_in >= 0:
-            pct = (100.0 * (st.rows_in - st.rows_out) / st.rows_in
-                   if st.rows_in else 0.0)
-            roll[op.phase][0] += st.rows_in
-            roll[op.phase][1] += st.rows_out
-            lines.append(
-                f"{op.phase:9s} {op.build + '->' + op.probe:28s} "
-                f"{st.rows_in:10d} {st.rows_out:10d} {pct:7.1f}%")
-        else:
-            lines.append(f"{op.phase:9s} {op.build + '->' + op.probe:28s} "
-                         f"{'(lazy)':>10s}")
-    for phase, (rin, rout) in roll.items():
-        if rin:
-            pct = 100.0 * (rin - rout) / rin
-            lines.append(f"{phase} total: {rin} -> {rout} ({pct:.1f}% removed)")
-    return "\n".join(lines)

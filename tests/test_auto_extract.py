@@ -538,14 +538,14 @@ def test_native_rf_restore_across_engine_instances(spark, sf_dir):
 def test_all_broadcast_bail_skips_evidence(spark, sf_dir, monkeypatch):
     """A statement whose relations all but the largest fit a broadcast
     bails right after extraction, from footer counts: it runs no
-    host-plan evidence pass, returns the plain rows, and releases the
-    previous statement's persists as any later statement's planning
-    does. The statement text is used by no other test, so the module
-    memos miss."""
+    host-plan evidence pass, returns the plain rows, and leaves the
+    previous statement's persists alone, since they belong to that
+    statement's DataFrame. The statement text is used by no other test,
+    so the module memos miss."""
     from duckdb_robust_predicate_transfer_spark.plans import catalyst_order
 
     e1 = Engine(spark, sf_dir, FORCE)
-    e1.sql(FLAGSHIP_SQL)
+    first = e1.sql(FLAGSHIP_SQL)
     assert e1.last_result is not None and e1.last_result.persisted
     held = list(e1.last_result.persisted)
     calls: list = []
@@ -562,35 +562,68 @@ def test_all_broadcast_bail_skips_evidence(spark, sf_dir, monkeypatch):
     want = Engine(spark, sf_dir, RPTConfig(enabled=False)).sql(
         sql, auto_rpt=False).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-    assert not e1.last_result.persisted, "previous persists not released"
-    for df in held:
-        assert not df.storageLevel.useMemory
+    assert e1.last_result.persisted == held, "the bail released them"
+    for jdf, _ in held:
+        assert jdf.storageLevel().useMemory()
+    del first
+    assert not e1.last_result.persisted
 
 
 def test_persist_release_across_engine_instances(spark, sf_dir):
-    """Persisted build sides release when the NEXT query plans, even
-    through a different Engine instance (the workload layer builds a
-    fresh Engine per query). Instance-scoped release let a long-lived
-    session accumulate one query's persisted builds per execution —
+    """Persisted build sides release when their statement's DataFrame
+    is dropped, whichever Engine instance planned it (the workload
+    layer builds a fresh Engine per query) and while that instance
+    lives on. A leaked persist would let a long-lived session
+    accumulate one query's persisted builds per execution —
     CacheManager substitutes the leaked InMemoryRelations into later
     plans and storage pressure makes repeat timings bimodal (Q5 at
     x1000: 13 s with per-leg clearCache vs 32 s without)."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     e1 = Engine(spark, sf_dir, FORCE)
-    e1.sql(FLAGSHIP_SQL)
+    df1 = e1.sql(FLAGSHIP_SQL)
     assert e1.last_sql_rewritten
     assert e1.last_result is not None and e1.last_result.persisted
     held = list(e1.last_result.persisted)
-    # fresh instance, next query plans: e1's persists must unpersist.
-    # The second query must differ (EUROPE vs ASIA): with an identical
-    # text e2 re-persists plan-identical builds and CacheManager matches
-    # the held DataFrames to e2's fresh entries, masking the check.
+    df1.collect()
+    # the last DataFrame of the statement goes, both engines stay: the
+    # persists release with no further query, gc.collect or clearCache
     e2 = Engine(spark, sf_dir, FORCE)
-    e2.sql(FLAGSHIP_SQL.replace("'ASIA'", "'EUROPE'"))
-    assert e2.last_sql_rewritten
-    assert not e1.last_result.persisted, "session stash release missed"
-    for df in held:
-        assert not df.storageLevel.useMemory, (
-            "previous query's persisted build leaked across instances")
+    del df1
+    assert not e1.last_result.persisted, "statement release missed"
+    for jdf, _ in held:
+        assert not jdf.storageLevel().useMemory(), (
+            "a dropped statement's persisted build leaked")
+    assert jsc.getPersistentRDDs().size() == before
+    assert e2.last_result is None
+
+
+def test_statement_persists_outlive_other_statements(spark, sf_dir):
+    """Statement A's persisted builds belong to A's DataFrame: a
+    different engaged statement B, planned and run through another
+    Engine after A was planned, leaves them cached, so A's execution
+    reads them. Dropping A's DataFrame releases them, with A's Engine
+    still alive and no later statement."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    ea = Engine(spark, sf_dir, FORCE)
+    a = ea.sql(FLAGSHIP_SQL)
+    assert ea.last_sql_rewritten and ea.last_result.persisted
+    held = list(ea.last_result.persisted)
+    eb = Engine(spark, sf_dir, FORCE)
+    b = eb.sql(FLAGSHIP_SQL.replace("'ASIA'", "'AMERICA'"))
+    assert eb.last_sql_rewritten
+    b.collect()
+    a.collect()
+    plan = a._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, "B released A's builds"
+    for jdf, _ in held:
+        assert jdf.storageLevel().useMemory()
+    del a, b
+    assert not ea.last_result.persisted
+    for jdf, _ in held:
+        assert not jdf.storageLevel().useMemory()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_left_join_is_null_filter_never_baked(spark, sf_dir):

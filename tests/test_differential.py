@@ -43,7 +43,8 @@ CONFIGS = [
     RPTConfig(heuristic="join_order", **FORCE),
     RPTConfig(heuristic="join_order", flip_roots=False, **FORCE),
     RPTConfig(heuristic="catalyst", **FORCE),
-    RPTConfig(persist_reduced=False, **FORCE),
+    # the size-bound persists off
+    RPTConfig(**{**FORCE, "persist_min_rows": 10**18}),
 ]
 
 
@@ -174,7 +175,7 @@ def test_multi_filter_build_persists_once(spark, sf_dir):
     once (persist) even below the persist size bound, so the second
     filter reads cached rows instead of re-running the reduction."""
     from duckdb_robust_predicate_transfer_spark.operators.rewrite import (
-        apply_transfer)
+        apply_transfer, unpersist)
     from duckdb_robust_predicate_transfer_spark.plans.ir import (
         TransferOp, TransferPlan)
 
@@ -195,7 +196,7 @@ def test_multi_filter_build_persists_once(spark, sf_dir):
         # n feeds two different column sets -> persisted despite the bound
         assert len(res.persisted) == 1
     finally:
-        res.release()
+        unpersist(res.persisted)
 
 
 def test_wide_join_graph_differential(spark, sf_dir):
@@ -301,7 +302,8 @@ def test_concurrent_sql_on_one_session(spark, sf_dir):
     """Two threads run Engine.sql on one SparkSession at once: an
     engaged query that shadows ``orders`` and another query over
     ``orders``. Each statement shadows views only in its own cloned
-    session, so both return their rewrite-off results every round."""
+    session, so both return their rewrite-off results every round, and
+    each statement's persisted builds stay cached while it executes."""
     import threading
 
     engaged_sql = """
@@ -320,21 +322,30 @@ def test_concurrent_sql_on_one_session(spark, sf_dir):
     want = {q: _collect_set(Engine(spark, sf_dir, off).sql(q))
             for q in (engaged_sql, other_sql)}
     e = Engine(spark, sf_dir, cfg)
-    e.sql(engaged_sql)
+    engaged = e.sql(engaged_sql)
     assert e.last_sql_rewritten
     assert any(op.probe == "orders" for op in e.last_result.applied), \
         "premise: the engaged query shadows orders"
+    assert e.last_result.persisted, "premise: the engaged query persists"
+    del engaged
 
     rounds = 4
     barrier = threading.Barrier(2)
     got: dict = {q: [] for q in want}
+    released: list = []
     errors: list = []
 
     def run(q):
         try:
             for _ in range(rounds):
                 barrier.wait(timeout=300)
-                got[q].append(_collect_set(Engine(spark, sf_dir, cfg).sql(q)))
+                e = Engine(spark, sf_dir, cfg)
+                df = e.sql(q)
+                held = list(e.last_result.persisted
+                            if e.last_result else ())
+                got[q].append(_collect_set(df))
+                released.extend(j for j, _ in held
+                                if not j.storageLevel().useMemory())
         except Exception as exc:  # surfaced by the main thread
             errors.append(exc)
             barrier.abort()
@@ -348,6 +359,7 @@ def test_concurrent_sql_on_one_session(spark, sf_dir):
     assert not errors, errors
     for q, results in got.items():
         assert results == [want[q]] * rounds
+    assert not released, "a build was released before its statement ran"
 
 
 def test_memo_put_concurrent_eviction():
@@ -385,3 +397,76 @@ def test_memo_put_concurrent_eviction():
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[:3]
     assert len(cache) <= cap
+
+
+def test_shared_persist_released_by_last_holder():
+    """Plan-identical builds of two live statements share one
+    CacheManager entry, so only the last holder's release unpersists
+    it. The count is shared by every thread whose statement persists or
+    is freed: concurrent persists and releases of the same plans must
+    leave no count behind and unpersist each plan once it is free."""
+    import sys
+    import threading
+
+    from duckdb_robust_predicate_transfer_spark.operators import rewrite
+
+    class Plan:
+        """The JVM Dataset calls _persist and unpersist make."""
+
+        def __init__(self, key, log):
+            self.key, self.log = key, log
+
+        def queryExecution(self):
+            return self
+
+        normalized = queryExecution
+
+        def semanticHash(self):
+            return self.key
+
+        def unpersist(self, blocking):
+            self.log.append(self.key)
+
+    class Df:
+        def __init__(self, key, log):
+            self._jdf = Plan(key, log)
+
+        def persist(self):
+            return self
+
+    log: list = []
+    a, b = [], []
+    rewrite._persist(Df("shared", log), a)
+    rewrite._persist(Df("shared", log), b)
+    rewrite.unpersist(a)
+    assert log == [] and a == []
+    rewrite.unpersist(b)
+    assert log == ["shared"] and "shared" not in rewrite._LIVE
+
+    keys = [("stress", k) for k in range(4)]
+    errors: list = []
+
+    def hammer():
+        try:
+            for _ in range(500):
+                held: list = []
+                for k in keys:
+                    rewrite._persist(Df(k, log), held)
+                rewrite.unpersist(held)
+        except Exception as exc:  # surfaced by the main thread
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert not any(k in rewrite._LIVE for k in keys)
+    assert set(log) == {"shared", *keys}

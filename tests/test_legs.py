@@ -102,3 +102,25 @@ def test_timed_leg_returns_seconds():
     assert timed_leg(spark, lambda: None) >= 0.0
     assert spark.log[-1] == ("clearCache",)
     assert common._CONFIG_OVERRIDE is None
+
+
+def test_paired_bench_refuses_trees_placed_apart(tmp_path):
+    """tools/paired_bench.py compares only trees placed alike: a
+    checkout against a bare copy is refused, two bare copies pass."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "paired_bench.py")
+    spec = importlib.util.spec_from_file_location("_paired_bench", path)
+    pb = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pb)
+    a, b = tmp_path / "a", tmp_path / "b"
+    a.mkdir()
+    b.mkdir()
+    assert pb.placement_mismatch(str(a), str(b)) == []
+    (a / ".git").mkdir()
+    (b / ".bench_build").mkdir()
+    assert pb.placement_mismatch(str(a), str(b)) == [".git", ".bench_build"]
+    (b / ".git").mkdir()
+    assert pb.placement_mismatch(str(a), str(b)) == [".bench_build"]

@@ -3,14 +3,20 @@ r10 "Next round" #1: the r10 driver run showed +74% on a no-code-change
 control leg, so single-block comparisons on this host are not bankable).
 
 Runs bench.py alternately from checkout A and checkout B (fresh process
-per run, same env, A/B A/B ... interleaving so machine drift hits both
-sides equally), then reports per-leg medians/mins and the control-leg
-agreement (cascade off + native_rf — code paths identical in both
-checkouts, so their ratio measures MACHINE state, not code).
+per run, same env, A/B B/A A/B ... interleaving, so machine drift and
+the warm-up a pair's first run pays hit both sides equally), then
+reports per-leg medians/mins and the control-leg agreement (cascade
+off + native_rf — code paths identical in both checkouts, so their
+ratio measures MACHINE state, not code).
 
-Usage:
-  python tools/paired_bench.py --a /tmp/r9tree --b /root/repo \
-      --pairs 3 --out PAIRED_BENCH_r11.json
+The two trees must be placed alike: a pair's result has followed where
+each tree sat, so a checkout (holding ``.git`` or a ``.bench_build``
+cache) against a bare copy is refused. Export both as sibling copies:
+
+  git archive BASE | tar -x -C ../base
+  git archive HEAD | tar -x -C ../head
+  python tools/paired_bench.py --a ../base --b ../head \
+      --pairs 3 --out PAIRED_BENCH.json
 """
 
 from __future__ import annotations
@@ -37,6 +43,19 @@ def run_bench(tree: str, env: dict) -> dict:
                        f"tail={p.stderr[-500:]}")
 
 
+#: what a checkout or an earlier run leaves in a tree; the two trees
+#: of a pair must agree on each
+PLACEMENT_MARKERS = (".git", ".bench_build")
+
+
+def placement_mismatch(a: str, b: str) -> list:
+    """The PLACEMENT_MARKERS that exactly one of trees ``a`` and ``b``
+    holds."""
+    return [m for m in PLACEMENT_MARKERS
+            if os.path.exists(os.path.join(a, m))
+            != os.path.exists(os.path.join(b, m))]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--a", required=True, help="checkout A (baseline)")
@@ -45,17 +64,22 @@ def main() -> None:
     ap.add_argument("--runs", default="2", help="BENCH_RUNS inside each")
     ap.add_argument("--out", default="PAIRED_BENCH_r11.json")
     args = ap.parse_args()
+    bad = placement_mismatch(args.a, args.b)
+    if bad:
+        sys.exit(f"trees not placed alike: only one holds {bad}; "
+                 "compare two sibling copies")
 
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     env["BENCH_RUNS"] = args.runs
     env["BENCH_EXTRA"] = "0"  # r9's bench has no EXTRA; keep legs equal
 
     results: dict = {"a": [], "b": []}
     t_start = time.time()
     for i in range(args.pairs):
-        for side, tree in (("a", args.a), ("b", args.b)):
+        order = (("a", args.a), ("b", args.b))
+        for side, tree in order if i % 2 == 0 else order[::-1]:
             t0 = time.time()
             r = run_bench(tree, env)
             r["_wall"] = round(time.time() - t0, 1)
