@@ -110,7 +110,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     # lazy plan would recompute the (now cheap, but still corpus-wide)
     # fold three times. localCheckpoint — not persist() — so the
     # CacheManager never pattern-matches this subtree into later
-    # queries' plans, and the blocks free themselves on GC.
+    # queries' plans. The returned pairs read these blocks, so they are
+    # not released here; they stay listed in getPersistentRDDs() after
+    # the pairs are dropped and Python's gc.collect() has run, until a
+    # JVM garbage collection lets Spark's ContextCleaner free them.
     sigs = (minhash_signature(df, id_col, text_col, k, n_shingle, hash_fn)
             .localCheckpoint(eager=True))
     # The band join shuffles only (id, band_id, band_hash) — NOT the

@@ -1464,10 +1464,13 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 def _portable_minhash_pairs(e):
     """(doc_a < doc_b) candidate pairs via the md5-portable MinHash+LSH
     pipeline — shared by q_minhash_lsh_pairs and q_dedup_clusters."""
-    # NOTE: no fan_out here — the heavy stage (8 md5s per token row) runs
-    # AFTER the distinct's exchange, already parallel; fanning out the
-    # light explode stage was measured as a net loss (q_minhash_lsh_pairs
-    # 0.80 -> 1.64 s execute: one extra exchange per self-join side)
+    # NOTE: no fan_out here. The optimizer drops tok's distinct under
+    # min(), so the eight md5s per token row run in the map-side partial
+    # aggregate, once, and both self-join sides read its one exchange.
+    # Fanning out the explode stage was measured as a net loss on the
+    # earlier plan of four per-band aggregates (q_minhash_lsh_pairs
+    # 0.80 -> 1.64 s execute: one extra exchange per self-join side);
+    # it has not been measured again on this one.
     w = (e.table("documents")
          .select("doc_id", F.split(F.col("text"), " ", -1).alias("arr"))
          .filter(F.size("arr") >= 3))
@@ -1483,13 +1486,14 @@ def _portable_minhash_pairs(e):
     sig = tok.groupBy("doc_id").agg(
         *[F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("t")))).alias(f"h{i}")
           for i in range(8)])
-    bands = None
-    for b in range(4):
-        part = sig.select(
-            "doc_id", F.lit(b).alias("band"),
-            F.md5(F.concat(F.col(f"h{2 * b}"),
-                           F.col(f"h{2 * b + 1}"))).alias("bh"))
-        bands = part if bands is None else bands.unionByName(part)
+    # the four (band, bh) rows of a document come from one inline over
+    # one row of sig: a union of four projections would let column
+    # pruning give each band its own scan and aggregate
+    bands = sig.select("doc_id", F.inline(F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.md5(F.concat(F.col(f"h{2 * b}"),
+                                F.col(f"h{2 * b + 1}"))).alias("bh"))
+        for b in range(4)])))
     a, bb = bands.alias("a"), bands.alias("b")
     return (a.join(bb, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.bh") == F.col("b.bh"))

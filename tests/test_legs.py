@@ -104,9 +104,8 @@ def test_timed_leg_returns_seconds():
     assert common._CONFIG_OVERRIDE is None
 
 
-def test_paired_bench_refuses_trees_placed_apart(tmp_path):
-    """tools/paired_bench.py compares only trees placed alike: a
-    checkout against a bare copy is refused, two bare copies pass."""
+def _paired_bench():
+    """tools/paired_bench.py, loaded as a module."""
     import importlib.util
     import os
 
@@ -115,6 +114,13 @@ def test_paired_bench_refuses_trees_placed_apart(tmp_path):
     spec = importlib.util.spec_from_file_location("_paired_bench", path)
     pb = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pb)
+    return pb
+
+
+def test_paired_bench_refuses_trees_placed_apart(tmp_path):
+    """tools/paired_bench.py compares only trees placed alike: a
+    checkout against a bare copy is refused, two bare copies pass."""
+    pb = _paired_bench()
     a, b = tmp_path / "a", tmp_path / "b"
     a.mkdir()
     b.mkdir()
@@ -124,3 +130,32 @@ def test_paired_bench_refuses_trees_placed_apart(tmp_path):
     assert pb.placement_mismatch(str(a), str(b)) == [".git", ".bench_build"]
     (b / ".git").mkdir()
     assert pb.placement_mismatch(str(a), str(b)) == [".bench_build"]
+
+
+def test_paired_bench_perfbench_summary():
+    """tools/paired_bench.py --perfbench: seeds parse as an inclusive
+    range, and each end-to-end metric reports both sides' medians and
+    quartiles and the pairs each side won in its own direction, a tie
+    counting for neither."""
+    pb = _paired_bench()
+    assert pb.parse_seeds("41-45") == [41, 42, 43, 44, 45]
+    assert pb.parse_seeds("7") == [7]
+
+    def run(pass_s, rate, correct=True):
+        return {"correct": correct, "failed": 0 if correct else 1,
+                "metrics": {"pass_s": {"value": pass_s},
+                            "rate": {"value": rate}}}
+
+    results = {"a": [run(5.0, 1), run(4.0, 2), run(6.0, 3), run(3.0, 4)],
+               "b": [run(3.0, 2), run(4.0, 2), run(2.0, 1),
+                     run(1.0, 5, correct=False)]}
+    s = pb.perfbench_summary(results, [
+        {"name": "pass_s", "better": "lower"},
+        {"name": "rate", "better": "higher"}])
+    assert (s["correct_a"], s["correct_b"], s["failed_b"]) == (4, 3, 1)
+    assert s["pass_s"]["a"]["median"] == 4.5
+    assert (s["pass_s"]["a"]["q1"], s["pass_s"]["a"]["q3"]) == (3.75, 5.25)
+    assert s["pass_s"]["a_iqr"] == 1.5
+    assert s["pass_s"]["median_b_minus_a"] == -2.0
+    assert (s["pass_s"]["wins_a"], s["pass_s"]["wins_b"]) == (0, 3)
+    assert (s["rate"]["wins_a"], s["rate"]["wins_b"]) == (1, 2)

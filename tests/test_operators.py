@@ -1030,6 +1030,67 @@ def test_dedup_clusters_matches_duckdb_on_both_paths(spark, sf_dir,
     assert got == want
 
 
+def test_connected_components_releases_dead_checkpoints(spark, conf_set):
+    """connected_components leaves behind only the checkpoint its labels
+    read: none on the local finish (a LocalRelation), one on the loop
+    (the last round's labels), none when the loop raises. The edge
+    list and every superseded round are unpersisted, and the labels
+    still collect. Only the RDDs a call adds are counted: Spark's
+    ContextCleaner may free earlier tests' RDDs at any moment."""
+    from duckdb_robust_predicate_transfer_spark.operators.cluster import (
+        connected_components)
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "id_a bigint, id_b bigint")
+    before = persisted()
+    local = connected_components(pairs)
+    assert persisted() - before == set()
+    assert {r.label for r in local.collect()} == {0}
+    with conf_set("spark.sql.autoBroadcastJoinThreshold", "-1"):
+        loop = connected_components(pairs)
+        held = persisted() - before
+        assert len(held) == 1
+        assert {r.label for r in loop.collect()} == {0}
+        del loop
+        with pytest.raises(RuntimeError, match="max_iters=2"):
+            connected_components(pairs, max_iters=2, pointer_jump=False)
+        assert persisted() - before <= held
+
+
+def test_near_dup_pipeline_evaluates_each_subtree_once(spark, sf_dir):
+    """The final executed plan of the portable MinHash pair pipeline
+    scans documents and runs the signature aggregate once (four band
+    projections of it used to give each band its own scan and
+    aggregate), and the undirected edge list over its pairs runs the
+    band join once (a union of two projections ran it twice)."""
+    import re
+
+    from duckdb_robust_predicate_transfer_spark.operators.cluster import (
+        undirected_edges)
+    from duckdb_robust_predicate_transfer_spark.workload.common import eng
+    from duckdb_robust_predicate_transfer_spark.workload.pipeline import (
+        _portable_minhash_pairs)
+
+    def final_plan_lines(df):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0].splitlines()
+
+    pairs = _portable_minhash_pairs(eng(spark, sf_dir))
+    lines = final_plan_lines(pairs)
+    assert sum("FileScan parquet" in ln for ln in lines) == 1
+    assert sum("partial_min(md5(" in ln for ln in lines) == 1
+    edges = undirected_edges(pairs, "doc_a", "doc_b")
+    joins = re.compile(r"(HashJoin|SortMergeJoin|NestedLoopJoin) ")
+    assert sum(bool(joins.search(ln)) for ln in final_plan_lines(edges)) == 1
+    assert edges.count() == 2 * pairs.count()
+
+
 def test_bitmap_escalation_requires_string_keys(spark):
     """The probe-big bitmap escalation (bloom_probe_min_rows) only fires
     on string/binary probe keys: integer keys probe a broadcast hash

@@ -41,6 +41,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from duckdb_robust_predicate_transfer_spark.catalog import get_catalog
+    from duckdb_robust_predicate_transfer_spark.operators.cluster import (
+        undirected_edges)
     from duckdb_robust_predicate_transfer_spark.operators.dedup import (
         minhash_signature, simhash_signature)
     from duckdb_robust_predicate_transfer_spark.session import get_spark
@@ -63,11 +65,7 @@ def main() -> None:
     # checkpointed und/labels), WITHOUT checkpointing the result
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long")
-    und = (pairs.select(F.col("id_a").alias("src"),
-                        F.col("id_b").alias("dst"))
-           .union(pairs.select(F.col("id_b").alias("src"),
-                               F.col("id_a").alias("dst")))
-           .distinct().localCheckpoint(eager=True))
+    und = undirected_edges(pairs).distinct().localCheckpoint(eager=True)
     labels = (und.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint(eager=True))

@@ -17,6 +17,16 @@ cache) against a bare copy is refused. Export both as sibling copies:
   git archive HEAD | tar -x -C ../head
   python tools/paired_bench.py --a ../base --b ../head \
       --pairs 3 --out PAIRED_BENCH.json
+
+``--perfbench WORKLOAD --seeds 41-50`` pairs the repository benchmark
+instead: one pair of untraced ``perfbench/run.py`` runs per seed, the
+first side alternating by pair, with the run length of tree A's
+BENCHMARK.json. It reads only each run's JSON line and reports, per
+end-to-end metric that BENCHMARK.json names, each side's median and
+quartiles, the pairs each side won, and how many runs were correct:
+
+  python tools/paired_bench.py --a ../base --b ../head \
+      --perfbench llm_pipeline --seeds 41-50 --out PAIRED_LLM.json
 """
 
 from __future__ import annotations
@@ -35,6 +45,22 @@ def run_bench(tree: str, env: dict) -> dict:
     p = subprocess.run([sys.executable, os.path.join(tree, "bench.py")],
                        capture_output=True, text=True, env=env,
                        cwd=tree, timeout=3600)
+    return last_json(p, tree)
+
+
+def run_perfbench(tree: str, workload: str, seed: int, seconds) -> dict:
+    """One untraced ``perfbench/run.py`` run from ``tree``; its JSON
+    line."""
+    p = subprocess.run(
+        [sys.executable, os.path.join("perfbench", "run.py"),
+         "--workload", workload, "--seed", str(seed),
+         "--seconds", str(seconds), "--trace", "0"],
+        capture_output=True, text=True, cwd=tree, timeout=900)
+    return last_json(p, tree)
+
+
+def last_json(p: subprocess.CompletedProcess, tree: str) -> dict:
+    """The last JSON object line of ``p``'s standard output."""
     for line in reversed(p.stdout.splitlines()):
         line = line.strip()
         if line.startswith("{"):
@@ -56,18 +82,91 @@ def placement_mismatch(a: str, b: str) -> list:
             != os.path.exists(os.path.join(b, m))]
 
 
+def parse_seeds(text: str) -> list:
+    """``"41-50"`` -> [41, ..., 50]; ``"7"`` -> [7]."""
+    lo, _, hi = text.partition("-")
+    return list(range(int(lo), int(hi or lo) + 1))
+
+
+def spread(vals: list) -> dict:
+    """Median and quartiles of ``vals``."""
+    q1, med, q3 = (statistics.quantiles(vals, n=4, method="inclusive")
+                   if len(vals) > 1 else vals * 3)
+    return {"median": med, "q1": q1, "q3": q3, "all": vals}
+
+
+def perfbench_summary(results: dict, end_to_end: list) -> dict:
+    """Per end-to-end metric (BENCHMARK.json's ``end_to_end`` entries):
+    each side's median and quartiles, and the pairs each side won; a
+    tie counts for neither. ``results`` holds each side's JSON lines in
+    pair order."""
+    out: dict = {}
+    for side in ("a", "b"):
+        out[f"correct_{side}"] = sum(bool(r.get("correct"))
+                                     for r in results[side])
+        out[f"failed_{side}"] = sum(r.get("failed", 0)
+                                    for r in results[side])
+    for m in end_to_end:
+        name, lower = m["name"], m["better"] == "lower"
+        va, vb = ([r["metrics"][name]["value"] for r in results[side]]
+                  for side in ("a", "b"))
+        better = (lambda x, y: x < y) if lower else (lambda x, y: x > y)
+        a, b = spread(va), spread(vb)
+        out[name] = {
+            "a": a, "b": b,
+            "wins_a": sum(better(x, y) for x, y in zip(va, vb)),
+            "wins_b": sum(better(y, x) for x, y in zip(va, vb)),
+            "a_iqr": round(a["q3"] - a["q1"], 4),
+            "median_b_minus_a": round(b["median"] - a["median"], 4)}
+    return out
+
+
+def perfbench_pairs(args) -> None:
+    """One pair per seed: ``perfbench/run.py`` from tree A and tree B
+    with the same seed, the first side alternating by pair."""
+    with open(os.path.join(args.a, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    seeds = parse_seeds(args.seeds)
+    results: dict = {"a": [], "b": []}
+    for i, seed in enumerate(seeds):
+        order = (("a", args.a), ("b", args.b))
+        for side, tree in order if i % 2 == 0 else order[::-1]:
+            r = run_perfbench(tree, args.perfbench, seed,
+                              bench["run_seconds"])
+            results[side].append(r)
+            print(f"# seed {seed} side {side}: correct={r.get('correct')} "
+                  + " ".join(f"{k}={v['value']}"
+                             for k, v in r["metrics"].items()),
+                  file=sys.stderr, flush=True)
+    summary = perfbench_summary(results, bench["end_to_end"])
+    out = {"workload": args.perfbench, "seeds": seeds, "summary": summary,
+           "raw": results, "a_tree": args.a, "b_tree": args.b}
+    with open(args.out or f"PAIRED_PERFBENCH_{args.perfbench}.json",
+              "w") as f:
+        json.dump(out, f, indent=1)
+    print(json.dumps(summary))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--a", required=True, help="checkout A (baseline)")
     ap.add_argument("--b", required=True, help="checkout B (candidate)")
     ap.add_argument("--pairs", type=int, default=3)
     ap.add_argument("--runs", default="2", help="BENCH_RUNS inside each")
-    ap.add_argument("--out", default="PAIRED_BENCH_r11.json")
+    ap.add_argument("--perfbench", metavar="WORKLOAD",
+                    help="pair perfbench/run.py runs of this workload "
+                         "instead of bench.py runs, one pair per seed")
+    ap.add_argument("--seeds", default="41-50",
+                    help="perfbench seeds, A-B inclusive")
+    ap.add_argument("--out", default=None)
     args = ap.parse_args()
     bad = placement_mismatch(args.a, args.b)
     if bad:
         sys.exit(f"trees not placed alike: only one holds {bad}; "
                  "compare two sibling copies")
+    if args.perfbench:
+        perfbench_pairs(args)
+        return
 
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -142,7 +241,7 @@ def main() -> None:
             / len(pq)), 3)
     out = {"summary": summary, "raw": results,
            "a_tree": args.a, "b_tree": args.b}
-    with open(args.out, "w") as f:
+    with open(args.out or "PAIRED_BENCH_r11.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(summary["control_legs"]))
     print(json.dumps({k: v for k, v in summary.items()
