@@ -3,11 +3,13 @@
 Mirrors the reference extension's session settings
 (rpt_extension.cpp:56-69): ``rpt_filter_type`` (all|bf_only|
 minmax_only), ``rpt_pass_mode`` (both|forward_only), ``rpt_heuristic``
-(largest_root|join_order), ``rpt_flip_roots``, ``rpt_profiling``,
-``rpt_display_dag`` — re-expressed for a Spark execution model, where
-the exact-key semi-join tier replaces the in-memory Bloom filter as
-the default transfer mechanism (a distinct key-set is a perfect Bloom
-filter, and AQE broadcasts small ones automatically).
+(largest_root|join_order), ``rpt_flip_roots``, ``rpt_display_dag`` —
+re-expressed for a Spark execution model, where the exact-key
+semi-join tier replaces the in-memory Bloom filter as the default
+transfer mechanism (a distinct key-set is a perfect Bloom filter, and
+AQE broadcasts small ones automatically). ``rpt_profiling`` has no
+switch: ``TransferResult.format_profile(df)`` reads every statement's
+record from the run of ``df``.
 """
 
 from __future__ import annotations
@@ -144,70 +146,27 @@ class RPTConfig:
     #: 0 disables. Separates TPC-H Q3/Q8's paying-too-much ops (probe
     #: 4-12x keys) from Q5/cascade's structural wins (probe 10-130x).
     bf_benefit_probe_ratio: float = 8.0
-    #: skip shuffle-tier ops that cannot SAVE an exchange (gate 2b3):
-    #: a shuffled semi join exchanges the probe's full current rows by
-    #: the op keys — the very exchange the final probe<->build join
-    #: pays anyway — so it is redundant unless the probe also has a
-    #: DIFFERENT-key edge to a neighbor too big to broadcast (then the
-    #: reduction shrinks that second, otherwise-unavoidable shuffle of
-    #: the probe). The reference still wins on every edge because its
-    #: filter is scan-local (no shuffle, reduction lands BEFORE the
-    #: join's exchange) — in Spark only the broadcast/sketch tiers have
-    #: that property, and they remain eligible. r5 shipped the degree-1
-    #: special case (Q3/Q10 at x1000: pure 15-20% loss); the r6
-    #: clean-room A/B generalized it — the no-shuffle-semi leg beat
-    #: full rpt on EVERY x1000 query with a live shuffle op, because
-    #: their probes' other joins are all broadcast dims (Q5 13.8->11.1s,
-    #: Q7 10.7->5.5s, Q8 13.6->10.3s; off 30.3/15.1/14.3s).
+    #: skip shuffle-tier ops that cannot SAVE an exchange (gate 2b3): a
+    #: shuffled semi pays the same exchange of the probe as the final
+    #: join, so it only pays when the probe also has a different-key
+    #: edge to a neighbor too big to broadcast. The r6 x1000 A/B: the
+    #: no-shuffle-semi leg won on every query with a live shuffle op
+    #: (Q5 13.8->11.1s, Q7 10.7->5.5s, Q8 13.6->10.3s). The reasoning
+    #: sits with gate 2b3 in operators/rewrite.decide.
     skip_redundant_shuffle_semi: bool = True
-    #: gate 2f — SUBTREE SKETCH RESCUE: when gate 2b3 is about to drop a
-    #: forward shuffle-tier hop (its shuffled semi saves no exchange),
-    #: re-express the hop scan-locally instead of losing it. This is the
-    #: reference's forward-pass-over-reduced-rows semantics
-    #: (rpt_optimizer.cpp:884-937, build from the materialized reduced
-    #: collection physical_create_bf.cpp:201-242): the build side is an
-    #: already-reduced/filtered intermediate whose selectivity composes
-    #: transitively — exactly what Spark's native InjectRuntimeFilter
-    #: gets by building its bloom from a join SUBTREE, and what
-    #: per-table key semis cannot express without a huge shuffle build
-    #: (JOB_REGIME_r07: native beat rpt 1.5-3x on jq10/jq11/jq13 for
-    #: precisely this). The rescued op first OBSERVES the build's true
-    #: cardinality (one count job), then ships either a broadcast
-    #: exact-key semi (observed <= broadcast_key_rows — the mis-tiered
-    #: case where the 0.2 decay guess hid a genuinely broadcastable key
-    #: set, e.g. jq13's movie_company at 1% after its company semi) or
-    #: a correctly-sized scan-fused Bloom bitmap (operators/bloom.py) —
-    #: both land BEFORE the probe's first exchange, costing no shuffle.
-    #: Guards that keep the r6 sketch-regime lesson (SKETCH_REGIME_r06:
-    #: Q5 sketch 2.6x WIN, Q7 sketch 0.38x LOSS):
-    #: - the build's reduction lineage must be SCAN-LOCAL (broadcast
-    #:   semis / bloom probes / minmax only): Q7's loser build (orders)
-    #:   carried a shuffled semi, so its eager re-derivation paid a
-    #:   full exchange; Q5's winner lineages were scan+filter only.
-    #: - both passes are eligible, but a backward hop only LANDS when
-    #:   its observed build is broadcast-tier (gate 3a still kills
-    #:   shuffle-tier backward hops after the observation): the
-    #:   selective-arm-at-the-root shape (JOB jq15) distributes
-    #:   root-side selectivity to the other arms backward, and the
-    #:   observation is what proves the build shrank to a key set the
-    #:   probe's scan can absorb for free.
-    #: - the op's max forward-downstream probe (footer rows, following
-    #:   build->probe chains) must be at least
-    #:   sketch_rescue_probe_factor x the build's base scan — the eager
-    #:   observe+build jobs re-scan the build base once each, and only
-    #:   downstream mass repays them (jq13: castinfo 100M vs
-    #:   movie_company 25M; transitive value counts because the reduced
-    #:   probe feeds later broadcast-tier hops).
-    #: - observed cardinality must stay within rewrite.SKETCH_MAX_KEYS.
-    #: - the PROBE keys must be string/binary-typed: the rescue's repay
-    #:   is the probe join's per-row cost (string hashing + equality on
-    #:   every surviving row), which the pre-exchange cut removes;
-    #:   integer-key joins are too cheap per row to repay an eager
-    #:   bloom over a 100M+-row build lineage. Measured in-round at
-    #:   x1000: the unconditioned rescue planted orders->lineitem on
-    #:   Q3/Q10 and lineitem->orders on Q7 (15-31 s eager builds,
-    #:   Q7 2.8x -> 0.89x); every JOB rescue win (jq10/jq11/jq13/jq15)
-    #:   is string-key.
+    #: gate 2f — SUBTREE SKETCH RESCUE: when gate 2b3 would drop a
+    #: shuffle-tier hop, re-express it scan-locally instead: observe the
+    #: build, then ship a broadcast key set or a sized Bloom filter that
+    #: lands before the probe's first exchange — what Spark's
+    #: InjectRuntimeFilter gets by building from a join subtree
+    #: (JOB_REGIME_r07: native beat rpt 1.5-3x on jq10/jq11/jq13). Its
+    #: guards keep the SKETCH_REGIME_r06 lesson (Q7's eager build over a
+    #: shuffled lineage lost 0.38x): a scan-local build lineage, string
+    #: or binary probe keys (x1000: integer-key rescues turned Q7's 2.8x
+    #: into 0.89x), at most rewrite.SKETCH_MAX_KEYS observed keys,
+    #: enough downstream rows (sketch_rescue_probe_factor), and on the
+    #: backward pass an observed broadcast-tier build. The guards and
+    #: their measurements sit with gate 2f in operators/rewrite.decide.
     sketch_rescue: bool = True
     #: minimum ratio of max-downstream-probe footer rows to the rescued
     #: build's base footer rows (see sketch_rescue). The rescue costs
@@ -218,42 +177,17 @@ class RPTConfig:
     #: value is movie_info (20M), while still refusing hops whose whole
     #: downstream is under half the build's own scan.
     sketch_rescue_probe_factor: float = 0.5
-    #: gate "dup" — the same exchange-benefit test for the BROADCAST
-    #: tier: suppress a key-set semi that only duplicates a host
-    #: broadcast-hash join, row for row, and adds its eager build jobs
-    #: on top. Two kinds of evidence, either one suppresses:
-    #: - the edge graph: every OTHER graph neighbor of the probe is
-    #:   itself broadcastable (rows_est <= host_broadcast_rows), so the
-    #:   final plan joins the probe with broadcast-hash joins only,
-    #:   which drop misses at the same per-row hash cost the semi pays.
-    #:   Measured on the JOB-regime fixture (string keys, all-small
-    #:   dims after LIKE filters): jq1 0.63x, jq4 0.57x at 100M fact
-    #:   rows — pure fixed-cost losses on 1-2 s queries. On the SQL
-    #:   path the host plan must also really pre-filter the pair
-    #:   (below). host_broadcast_rows=0 turns this branch off.
-    #: - the HOST PLAN: the un-rewritten physical plan already
-    #:   inner-broadcast-hash-joins this build into the probe's scan
-    #:   pipeline BELOW the probe's first shuffle
-    #:   (plans/catalyst_order.scan_prefilter_pairs), so the host drops
-    #:   the same rows at the same pre-exchange position even though
-    #:   the probe crosses an exchange later. Measured: TPC-H Q9 at
-    #:   x1000, whose only op (part->lineitem broadcast semi, 87%
-    #:   removal) sat under the host's own part BHJ directly above the
-    #:   lineitem scan and cost 8% (GATE2E_AB_r08: with this branch
-    #:   off, Q9 lands part->lineitem). Extra guards: SQL path only,
-    #:   an unreduced build, and a huge probe (> 10x
-    #:   broadcast_key_rows) so any backward op building from it is
-    #:   shuffle-tier and already skipped by gate 3a.
-    #: Exemptions that keep every certified win: a probe with any
-    #: too-big neighbor (its shuffle join IS the exchange the reduction
-    #: shrinks — Q5/Q7/Q17/Q22 at x1000, the cascade fixtures), a probe
-    #: a later forward op builds from (the cascade), opaque probes
-    #: (anti/full-outer joins the edge graph cannot see —
-    #: Extraction.opaque), probes carrying shared-subquery/virtual
-    #: edges (the engine withholds their host-plan pairs: their semi
-    #: reaches subquery occurrences the host join cannot — Q17's 2.5x),
-    #: and the min/max tier (prunes the scan, separately
-    #: payoff-checked).
+    #: gate "dup" — the exchange-benefit test for the BROADCAST tier:
+    #: suppress a key-set semi that only duplicates a host
+    #: broadcast-hash join, on either evidence: every other neighbor of
+    #: the probe broadcasts (JOB regime at 100M: jq1 0.63x, jq4 0.57x;
+    #: host_broadcast_rows=0 turns this branch off), or the host plan
+    #: already broadcast-joins the build below the probe's first shuffle
+    #: (plans/catalyst_order.scan_prefilter_pairs; TPC-H Q9 at x1000,
+    #: GATE2E_AB_r08). Exempt: probes with a too-big neighbor, probes a
+    #: later forward op builds from (the cascade), opaque probes,
+    #: shared-subquery probes (Q17's 2.5x) and the min/max tier. The
+    #: guards sit with gate "dup" in operators/rewrite.decide.
     skip_no_exchange_probe: bool = True
     #: shuffle-tier ops (build keys too big to broadcast) only run when
     #: the build side is genuinely selective: estimated/observed build
@@ -306,42 +240,27 @@ class RPTConfig:
     #: default.
     backward_broadcast_only: bool = True
     #: one filtering mechanism per edge (the reference's --no-jfp
-    #: ablation discipline, test_job_queries.sh:123-138): when the
-    #: auto-SQL transfer actually applies ops, Spark's own runtime
-    #: bloom injection on the SAME joins is pure double-filtering —
-    #: its creation jobs re-derive key sets our semi joins already
-    #: shipped (measured at TPCH_SCALE x100: composed Q7 4.21s vs rpt
-    #: alone 2.54s). With this on and the caller's injection on,
-    #: Engine.sql applies one rule, in the statement's own cloned
-    #: session (the caller's keeps its value): the statement runs with
-    #: the caller's injection and only its eager transfer jobs run with
-    #: it off, while an op whose edge a native bloom of the original
-    #: plan covers drops at gate "native" (operators/rewrite.decide) —
-    #: covered edges ride native, the rest ride the transfer, and a
-    #: statement whose every op drops is a plain bail (the cession).
-    #: CERTIFIED CLUSTER DEFAULT (r6): run COMPOSED — leave Spark's
-    #: runtime bloom filters enabled alongside the engine and let this
-    #: rule arbitrate. Composed beats transfer-alone on geomean at every
-    #: certified scale: x300 1.098 vs 1.028 (TPCH_SCALE_X300_r05), x1000
-    #: 1.139 vs 1.124 (TPCH_SCALE_X1000_r06), JOB-regime 1.203 vs ~1.0
-    #: (JOB_REGIME_r06) — native blooms reach shapes the gates skip
-    #: (Q21's self-join, jq3's deep fanout) while engaged edges stay
-    #: single-mechanism. At true cluster scale Spark enables runtime
-    #: blooms by itself once scans clear the 10 GB gate, so composed is
-    #: what production looks like anyway. Suppressed eager jobs removed
-    #: composed's one interaction loss (Q22; EAGER_AB_r10 re-checked it
-    #: at the 100M JOB regime: 1.043x faster than with injection live).
-    #: Off: the no-suppression ablation (injection stays as the caller
-    #: set it throughout, eager jobs included, and no gate "native"
-    #: runs).
+    #: ablation discipline, test_job_queries.sh:123-138): native runtime
+    #: blooms on the joins the transfer filters only double the work
+    #: (TPCH_SCALE x100: composed Q7 4.21s vs rpt alone 2.54s). With
+    #: this on and the caller's injection on, Engine.sql runs the
+    #: statement with the caller's injection and only its eager
+    #: transfer jobs with it off, and an op whose edge a native bloom of
+    #: the original plan covers drops at gate "native": covered edges
+    #: ride native, the rest ride the transfer, and a statement whose
+    #: every op drops is a plain bail (the cession). The certified
+    #: cluster default is this composed mode: x300 1.098 vs 1.028
+    #: (TPCH_SCALE_X300_r05), x1000 1.139 vs 1.124
+    #: (TPCH_SCALE_X1000_r06), JOB 1.203 vs ~1.0 (JOB_REGIME_r06), and
+    #: EAGER_AB_r10 measured the eager jobs 1.043x faster with
+    #: injection off. Off: injection stays as the caller set it, and no
+    #: gate "native" runs.
     suppress_native_rf: bool = True
     #: persist a reduced build side that feeds both a key set and the
     #: final join when it is big enough that recomputing it would cost
     #: more than materializing it. A persist lives exactly as long as
     #: its statement's DataFrame (Engine.reduce)
     persist_min_rows: int = 5_000_000
-    #: collect per-step rows-in/rows-out (reference: rpt_profiling)
-    profiling: bool = False
     #: print the transfer DAG (reference: rpt_display_dag)
     display_dag: bool = False
     #: print the DAG derived from the host optimizer's join order as 2-D

@@ -68,6 +68,17 @@ class Rel:
     colocated_on: tuple = ()
 
 
+class Reduced(dict):
+    """alias -> DataFrame as ``Engine.reduce`` returns it, with the
+    host-size hints ``join_all`` reads: ``rows`` (alias -> estimated or
+    observed rows) and ``broadcast_rows`` (hint a relation at or below
+    it; 0 hints none). A later reduce() cannot change them."""
+
+    def __init__(self, dfs=(), rows=None, broadcast_rows: float = 0):
+        super().__init__(dfs)
+        self.rows, self.broadcast_rows = rows or {}, broadcast_rows
+
+
 def _norm_cols(c) -> tuple:
     if isinstance(c, str):
         return (c,)
@@ -168,12 +179,6 @@ class Engine:
         #: transfer. It holds no DataFrame of the statement, so it never
         #: keeps the statement's persists alive (see reduce())
         self.last_result: TransferResult | None = None
-        #: alias -> rows as of the last reduce(): local-filter-discounted
-        #: footer estimates, overwritten in place with OBSERVED counts by
-        #: the transfer's min/max+bloom jobs (apply_transfer mutates the
-        #: dict). join_all reads this to broadcast-hint small sides.
-        self.last_rows_est: dict = {}
-        self._host_broadcast_rows: int = self.config.host_broadcast_rows
 
     def table(self, name: str) -> DataFrame:
         return self.catalog.table(name)
@@ -581,10 +586,10 @@ class Engine:
                             alias, shared_tables[inst.table])):
                     continue
                 shadow = red[alias]
-                rows = self.last_rows_est.get(alias, 0.0)
-                if (0.0 < rows <= self._host_broadcast_rows
-                        and all(self.last_rows_est.get(n, float("inf"))
-                                >= rows for n in nbr.get(alias, ()))):
+                rows = red.rows.get(alias, 0.0)
+                if (0.0 < rows <= red.broadcast_rows
+                        and all(red.rows.get(n, float("inf")) >= rows
+                                for n in nbr.get(alias, ()))):
                     shadow = F.broadcast(shadow)
                 shadow.createOrReplaceTempView(inst.table)
                 shadowed = True
@@ -608,7 +613,8 @@ class Engine:
                host_prefiltered: "set | None" = None,
                native_edges: "set | None" = None,
                session: "SparkSession | None" = None) -> dict:
-        """Apply robust predicate transfer; returns alias -> reduced DF.
+        """Apply robust predicate transfer; returns alias -> reduced DF,
+        as a ``Reduced`` dict that carries join_all's broadcast hints.
 
         ``host_prefiltered`` and ``native_edges`` are the SQL path's
         host-plan evidence for gates "dup" and "native"
@@ -667,17 +673,14 @@ class Engine:
             nodes.append(TableNode(alias=alias, rows=base_rows,
                                    filtered=alias in filtered))
 
-        # live handle: apply_transfer's observed counts flow through to
-        # join_all's broadcast decisions without another stash. Gated on
-        # cfg.enabled — host-size feedback is part of the extension
-        # (cfg.enabled=False must reproduce native Spark exactly, or the
-        # off leg of every benchmark stops being the reference baseline)
-        if cfg.enabled and cfg.host_broadcast_rows > 0:
-            self.last_rows_est = rows_est
-            self._host_broadcast_rows = cfg.host_broadcast_rows
-        else:
-            self.last_rows_est = {}
-            self._host_broadcast_rows = 0
+        # the host-size hints travel with the result: rows_est is a live
+        # handle, so apply_transfer's observed counts reach join_all's
+        # broadcast decisions. Off when cfg.enabled is False —
+        # host-size feedback is part of the extension (cfg.enabled=False
+        # must reproduce native Spark exactly, or the off leg of every
+        # benchmark stops being the reference baseline)
+        hints = ((rows_est, cfg.host_broadcast_rows)
+                 if cfg.enabled and cfg.host_broadcast_rows > 0 else ())
 
         jedges = normalize_edges(edges)
 
@@ -685,9 +688,9 @@ class Engine:
         # reference bails out unchanged when the graph has <=1 edge
         # (rpt_optimizer.cpp:1592-1595)
         if not cfg.enabled or graph.n_edges() <= 1:
-            return dfs
+            return Reduced(dfs, *hints)
         if _all_broadcast(rows_est.values(), cfg):
-            return dfs
+            return Reduced(dfs, *hints)
         if session is None:
             session = clone_session(self.spark)
             dfs = {a: bind(d, session) for a, d in dfs.items()}
@@ -704,7 +707,8 @@ class Engine:
             # reference reusing DuckDB's join order as the transfer DAG
             # (rpt_optimizer.cpp:494-713); fall back to declaration
             # order when leaves can't be resolved
-            order = physical_alias_order(self.join_all(dfs, jedges), dfs)
+            order = physical_alias_order(
+                self.join_all(Reduced(dfs, *hints), jedges), dfs)
             if order is not None:
                 tree = execution_order_dag(graph, order,
                                            flip_roots=cfg.flip_roots)
@@ -731,7 +735,8 @@ class Engine:
             from .plans.catalyst_order import physical_alias_order
             from .plans.dag_print import render_boxes
 
-            order = physical_alias_order(self.join_all(dfs, jedges), dfs)
+            order = physical_alias_order(
+                self.join_all(Reduced(dfs, *hints), jedges), dfs)
             ptree = (execution_order_dag(graph, order,
                                          flip_roots=cfg.flip_roots)
                      if order is not None else tree)
@@ -759,17 +764,13 @@ class Engine:
                              native_edges=native_edges)
         res.planning_ms = planning_ms
         res.tables = tables
-        if cfg.profiling:
-            # the reference prints its per-op summary at QueryEnd when
-            # rpt_profiling is set (rpt_profiling.hpp:114-216)
-            print(res.format_profile())
         if res.persisted:
             # the finalizer holds only the JVM handles: a DataFrame of
             # ``session`` among its arguments would keep it alive
             weakref.finalize(session, unpersist, res.persisted).atexit = False
         out, res.dfs = res.dfs, {}
         self.last_result = res
-        return out
+        return Reduced(out, *hints)
 
     # -- final-join composition -----------------------------------------
 
@@ -783,9 +784,10 @@ class Engine:
         edge dropped by the spanning tree) is applied as a post-join
         filter — the transfer tree may drop it, the query must not.
 
-        Size feedback into the host join: any non-anchor relation whose
-        last_rows_est entry (observed by the transfer where it measured,
-        filter-discounted footer estimate otherwise) is at or below
+        Size feedback into the host join: when ``dfs`` is reduce()'s
+        result, any non-anchor relation whose ``Reduced.rows`` entry
+        (observed by the transfer where it measured, filter-discounted
+        footer estimate otherwise) is at or below
         ``host_broadcast_rows`` gets an explicit broadcast hint. This is
         what the static planner cannot do — it weighs a filtered dim at
         its full footer size, plans a sort-merge join, and shuffles the
@@ -798,10 +800,12 @@ class Engine:
         if not edges:
             raise ValueError("join_all needs at least one edge")
 
+        hints = dfs if isinstance(dfs, Reduced) else Reduced()
+
         def side(alias):
             df = dfs[alias]
-            rows = self.last_rows_est.get(alias, 0.0)
-            if 0.0 < rows <= self._host_broadcast_rows:
+            rows = hints.rows.get(alias, 0.0)
+            if 0.0 < rows <= hints.broadcast_rows:
                 return F.broadcast(df)
             return df
 

@@ -135,14 +135,17 @@ def build_bloom(df: DataFrame, cols, est_rows: float,
     return BloomSketch(row[0], m_bits, n_rows, ranges)
 
 
-def probe_bloom(df: DataFrame, cols, sketch: BloomSketch) -> DataFrame:
+def probe_bloom(df: DataFrame, cols, sketch: BloomSketch,
+                name: str = "bf") -> DataFrame:
     """Filter df to rows whose key hash might be in the filter: false
     positives pass (later exact joins drop them), true matches never
-    fail. An empty build keeps no rows."""
+    fail. An empty build keeps no rows. ``name`` is the column of the
+    one-row relation the filter's subquery reads, by which a plan
+    reader can tell this filter from others."""
     if sketch.data is None:
         return df.where(F.lit(False))
     spark = df.sparkSession
     # a pyarrow Table always takes the Arrow path to a LocalRelation,
     # whatever spark.sql.execution.arrow.pyspark.enabled says
-    bf = spark.createDataFrame(pa.table({"bf": [sketch.data]})).scalar()
+    bf = spark.createDataFrame(pa.table({name: [sketch.data]})).scalar()
     return df.where(_catalyst(spark, _MIGHT_CONTAIN, bf, F.xxhash64(*cols)))

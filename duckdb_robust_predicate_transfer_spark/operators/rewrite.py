@@ -83,24 +83,6 @@ MINMAX_MAX_BUILD_BASE = 4_000_000
 MINMAX_MAX_CLUSTERING = 0.5
 
 
-@dataclass
-class StepStat:
-    op: TransferOp
-    rows_in: int = -1
-    rows_out: int = -1
-    build_rows: int = -1
-    #: wall time of the eager min/max agg job (runs whenever the tier is
-    #: active — the one transfer op that is not lazy)
-    minmax_ms: float = 0.0
-    #: wall time to materialize the build key set / bloom sketch
-    #: (profiling only: forced with a count, like the reference's
-    #: sink+finalize timers, rpt_profiling.hpp:16-90)
-    build_ms: float = 0.0
-    #: wall time of the forced probe-side count (profiling only — the
-    #: probe op is lazy in production, fused into the consumer's stage)
-    probe_ms: float = 0.0
-
-
 @dataclass(frozen=True)
 class Decision:
     """The gate stack's verdict on one scheduled op: the tier it lands
@@ -121,7 +103,7 @@ class Decision:
     #: an eager job measured a count while this op was decided or
     #: applied
     observed: bool = False
-    #: the min/max tier lands too (eager agg, or bitmap stat columns)
+    #: the min/max tier lands too (eager agg, or the bloom build's stats)
     minmax: bool = False
     #: gate that suppressed the key tier of a "minmax" decision: the
     #: drop reported when the range then prunes nothing
@@ -129,6 +111,12 @@ class Decision:
     #: forward sketch rescue (gate 2f): the bloom's observed cardinality
     #: is re-checked before the probe is touched
     rescue: bool = False
+    #: wall time of the eager jobs run for this op: observe counts,
+    #: the min/max agg and the bloom build (0 when it ran none)
+    ms: float = 0.0
+    #: column-alias stem (``__k{n}``) of the key set or bloom this op
+    #: probes with; format_profile finds the op's node by it
+    tag: str | None = None
 
 
 @dataclass
@@ -138,30 +126,34 @@ class TransferResult:
     #: DataFrame of the statement
     dfs: dict
     plan: TransferPlan
-    stats: list = field(default_factory=list)
     #: (JVM Dataset ``DataFrame._jdf``, plan key) of each build this
     #: statement persisted, one entry per persist. They live as long as
     #: the statement's session: Engine.reduce releases them when it is
     #: freed, which empties this list
     persisted: list = field(default_factory=list)
-    #: ops that actually landed a predicate/semi join on their probe
-    #: (gate survivors) — lets callers audit WHICH keys reduced a
-    #: relation, e.g. the shared-subquery shadow soundness check
-    applied: list = field(default_factory=list)
     #: wall time spent in graph build + heuristic + scheduling (set by
     #: Engine.reduce — the reference's optimizer-time probe,
     #: rpt_profiling.hpp:16-40)
     planning_ms: float = 0.0
-    #: tier each applied op landed as, parallel to ``applied``:
-    #: "sketch" | "exact_broadcast" | "exact_shuffle" | "minmax" |
-    #: "empty" — certification tooling reads it to attribute wins to
-    #: the gate-2f rescue vs the ordinary tiers
-    applied_tiers: list = field(default_factory=list)
     #: one Decision per scheduled op, in schedule order, as the apply
-    #: step settled it (a landing tier, or the dropping gate)
+    #: step settled it (a landing tier, or the dropping gate): the
+    #: statement's only per-op record
     decisions: list = field(default_factory=list)
     #: alias -> base table name of each relation (set by Engine.reduce)
     tables: dict = field(default_factory=dict)
+
+    @property
+    def applied(self) -> list:
+        """Ops that landed a predicate or semi join on their probe, in
+        schedule order — which keys reduced a relation (the
+        shared-subquery shadow soundness check reads it)."""
+        return [d.op for d in self.decisions if d.tier]
+
+    @property
+    def applied_tiers(self) -> list:
+        """The tier each op of ``applied`` landed as: "sketch" |
+        "exact_broadcast" | "exact_shuffle" | "minmax" | "empty"."""
+        return [d.tier for d in self.decisions if d.tier]
 
     @property
     def drops(self) -> dict:
@@ -177,44 +169,68 @@ class TransferResult:
                 out[d.gate] = out.get(d.gate, 0) + 1
         return out
 
-    def format_profile(self) -> str:
-        """Per-step and per-pass reduction summary — the analogue of the
-        reference's rpt_profiling printed table (rpt_profiling.hpp:
-        114-216: optimizer time, per-op rows in/out AND per-op timers,
-        forward/backward rollups with % rows removed). Meaningful only
-        when profiling was enabled."""
+    def node_rows(self, df: DataFrame) -> dict:
+        """Decision index -> (rows in, rows out) of each landed op whose
+        node ran in ``df``'s executed plan (``df``: the statement's
+        final DataFrame, already executed), read from the plan's metrics
+        (plans/catalyst_order.transfer_node_rows). Rows in may be None
+        when no node below counts rows."""
+        from ..plans.catalyst_order import transfer_node_rows
+
+        found = transfer_node_rows(df)
+        out = {}
+        for i, d in enumerate(self.decisions):
+            got = d.tag and found.get(
+                (d.tag, frozenset(c.lower() for c in d.op.probe_cols)))
+            if got:
+                out[i] = got
+        return out
+
+    def format_profile(self, df: DataFrame) -> str:
+        """Per-op and per-pass summary of the statement whose final
+        DataFrame ``df`` has executed — the analogue of the reference's
+        rpt_profiling table printed at QueryEnd (rpt_profiling.hpp:
+        114-216: optimizer time, per-op rows in/out and timers,
+        forward/backward rollups with % rows removed).
+
+        A landed op's line gives its tier, the wall time of its eager
+        jobs (``Decision.ms``) and the rows in and out of the node its
+        landing produced in ``df``'s executed plan (``node_rows``):
+        "not run" when that node is not in the plan (AQE pruned an empty
+        relation), "-" for the min/max and empty tiers, whose predicates
+        Catalyst folds into the probe's own filter. A dropped op's line
+        gives its gate and the quantity compared with the threshold.
+        Reading starts no Spark job and leaves ``df``'s plan as it
+        was."""
+        rows = self.node_rows(df)
         lines = [f"planning: {self.planning_ms:.2f} ms",
-                 "step  phase     build -> probe           build_rows"
-                 "     rows_in    rows_out   removed"
-                 "   minmax_ms  build_ms  probe_ms"]
+                 "step  phase     build -> probe           tier"
+                 "             eager_ms     rows_in    rows_out   removed"]
         totals = {"forward": [0, 0, 0.0], "backward": [0, 0, 0.0]}
-        for i, st in enumerate(self.stats):
-            op = st.op
-            pct = ""
-            step_ms = st.minmax_ms + st.build_ms + st.probe_ms
-            totals[op.phase][2] += step_ms
-            if st.rows_in > 0 and st.rows_out >= 0:
-                totals[op.phase][0] += st.rows_in
-                totals[op.phase][1] += st.rows_out
-                pct = f"{100.0 * (st.rows_in - st.rows_out) / st.rows_in:6.2f}%"
+        for i, d in enumerate(self.decisions):
+            op = d.op
+            totals[op.phase][2] += d.ms
             edge = f"{op.build}({','.join(op.build_cols)}) -> {op.probe}"
-            lines.append(
-                f"{i:>4}  {op.phase:<8}  {edge:<24} {st.build_rows:>10}"
-                f"  {st.rows_in:>10}  {st.rows_out:>10}   {pct:>7}"
-                f"  {st.minmax_ms:>9.1f} {st.build_ms:>9.1f}"
-                f" {st.probe_ms:>9.1f}")
-        for phase, (tin, tout, tms) in totals.items():
-            if tin or tms:
-                pct = (f"{100.0 * (tin - tout) / tin:6.2f}%" if tin else "")
-                lines.append(
-                    f"      {phase:<8}  TOTAL{'':<20} {'':>10}  {tin:>10}"
-                    f"  {tout:>10}   {pct:>7}  {tms:>29.1f}")
-        for d in self.decisions:
             if d.gate:
-                op = d.op
-                edge = f"{op.build}({','.join(op.build_cols)}) -> {op.probe}"
                 lines.append(f"drop  {op.phase:<8}  {edge:<24} {d.gate:<7}"
                              f"  {_num(d.value)} vs {_num(d.threshold)}")
+                continue
+            rin, rout = rows.get(i, ("not run" if d.tag else "-",) * 2)
+            pct = ""
+            if isinstance(rin, int) and rin > 0:
+                totals[op.phase][0] += rin
+                totals[op.phase][1] += rout
+                pct = f"{100.0 * (rin - rout) / rin:6.2f}%"
+            lines.append(
+                f"{i:>4}  {op.phase:<8}  {edge:<24} {d.tier:<15}"
+                f" {d.ms:>9.1f}  {'-' if rin is None else rin:>10}"
+                f"  {rout:>10}   {pct:>7}")
+        for phase, (tin, tout, tms) in totals.items():
+            if tin or tms:
+                pct = f"{100.0 * (tin - tout) / tin:6.2f}%" if tin else ""
+                lines.append(
+                    f"      {phase:<8}  TOTAL{'':<20} {'':<15} {tms:>9.1f}"
+                    f"  {tin:>10}  {tout:>10}   {pct:>7}")
         return "\n".join(lines)
 
 
@@ -427,7 +443,7 @@ class TransferState:
     op to op: estimates (overwritten by observed counts), which
     relations were reduced, and what each one knows. ``rows_est`` is
     used in place — observed counts reach the caller
-    (Engine.last_rows_est)."""
+    (engine.Reduced.rows)."""
 
     def __init__(self, dfs: dict, rows_est: dict, filtered: set,
                  plan: TransferPlan, cfg: RPTConfig,
@@ -944,7 +960,7 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                    host_prefiltered: "set | None" = None,
                    native_edges: "set | None" = None) -> TransferResult:
     """Execute the schedule over ``dfs`` (alias -> DataFrame), mutating a
-    copy; returns reduced DataFrames plus optional per-step stats.
+    copy; returns reduced DataFrames plus one Decision per op.
     ``probe_paths`` (alias -> parquet path) enables footer-range-aware
     min/max skipping for base-table probes. ``colocated``
     (alias -> frozenset of bucket columns) marks relations whose join on
@@ -975,18 +991,24 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                       native_edges=native_edges)
     res = TransferResult(dfs=s.dfs, plan=plan)
     inf = float("inf")
-    #: (build alias, build_cols, reduction epoch) -> keys DataFrame; when
+    #: (tier, build alias, build_cols, reduction epoch) -> (filter, tag),
+    #: tier "keys" (the key-set DataFrame) or "sketch" (the bloom): when
     #: one build side feeds several probes on the same columns (a column
     #: equivalence class, e.g. nation.n_nationkey into both customer and
-    #: supplier), build the key set once and share the broadcast — the
-    #: reference's one-CREATE-per-class broadcast, rpt_optimizer.cpp:
-    #: 1070-1158. The epoch (number of reductions applied to the build so
-    #: far) keys the cache so a later, further-reduced build is not
-    #: served a stale key set.
-    keys_cache: dict = {}
-    #: same sharing for the bitmap tier: one build feeding several
-    #: probes on the same columns builds the bloom once
-    bloom_cache: dict = {}
+    #: supplier), the filter is built once and shared — the reference's
+    #: one-CREATE-per-class broadcast, rpt_optimizer.cpp:1070-1158. The
+    #: epoch (number of reductions applied to the build so far) keeps a
+    #: later, further-reduced build from being served a stale filter.
+    #: ``tag`` (``__k{n}``, n counting the statement's filters) names the
+    #: filter's columns, so format_profile can find where it landed.
+    filters: dict = {}
+
+    def shared(tier: str, op: TransferOp, make):
+        key = (tier, op.build, op.build_cols, s.epochs.get(op.build, 0))
+        if key not in filters:
+            tag = f"__k{len(filters)}"
+            filters[key] = (make(tag), tag)
+        return filters[key]
 
     # stacked-CREATE merge (the analogue of BuildStackedBFOperators,
     # rpt_optimizer.cpp:1174-1216: adjacent CREATEs over one table share
@@ -1005,26 +1027,35 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
             df = s.dfs[alias] = _persist(df, res.persisted)
         return df
 
+    #: seconds of eager jobs run so far for the op being applied
+    spent = [0.0]
+
+    def timed(job):
+        t0 = time.perf_counter()
+        out = job()
+        spent[0] += time.perf_counter() - t0
+        return out
+
     def observe(alias: str, persist: bool = False) -> float:
-        return float((persisted(alias) if persist
-                      else s.dfs[alias]).count())
+        return float(timed((persisted(alias) if persist
+                            else s.dfs[alias]).count))
+
+    def record(d: Decision) -> None:
+        res.decisions.append(replace(d, ms=spent[0] * 1e3))
 
     #: landed ops a native bloom covers, kept only to carry their
     #: probe's reduction into a later op (gate "native")
     for_reach: set = set()
     for op in plan.ops:
+        spent[0] = 0.0
         d = decide(op, s, cfg, observe)
         if d.tier is None:
-            res.decisions.append(d)
+            record(d)
             continue
         if s.covered(op) and op.build not in s.reduced:
             for_reach.add(op)
         build, probe = s.dfs[op.build], s.dfs[op.probe]
         est = s.rows_est.get(op.build, inf)
-        st = StepStat(op=op)
-        if cfg.profiling:
-            st.rows_in = probe.count()
-            st.build_rows = build.count()
 
         # persist a build side that was itself reduced: it feeds the
         # key-set job(s) AND the final join (the analogue of CREATE_BF's
@@ -1041,16 +1072,14 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                              or op.build in multi_filter_builds)):
             build = persisted(op.build)
 
-        landed = None
+        landed = tag = None
         if d.minmax and d.tier != "sketch":
-            t0 = time.perf_counter()
             # the footer range is a superset of the probe's actual range
             # (reductions only shrink it), so "build range covers the
             # footer range => the predicate prunes nothing" stays valid
             # even for an already-reduced probe
-            n, pred = _minmax_filter(probe, build, op,
-                                     probe_path=s.probe_paths.get(op.probe))
-            st.minmax_ms = (time.perf_counter() - t0) * 1e3
+            n, pred = timed(lambda: _minmax_filter(
+                probe, build, op, probe_path=s.probe_paths.get(op.probe)))
             # AQE-style mid-schedule feedback (SURVEY §7: "measure at
             # persist time ... a place we can beat the reference"): the
             # agg just measured this relation exactly, so every later
@@ -1077,17 +1106,14 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
             # residual on the cascade.
             from .bloom import build_bloom, probe_bloom
 
-            t0 = time.perf_counter()
-            bck = (op.build, op.build_cols, s.epochs.get(op.build, 0))
-            bloom = bloom_cache.get(bck)
-            if bloom is None:
-                # a decayed estimate can undershoot the reduced build;
-                # build_bloom's resize rule self-corrects with one
-                # rebuild (ref physical_create_bf.cpp:385-406)
-                bloom = bloom_cache[bck] = build_bloom(
-                    build, list(op.build_cols), est if est != inf else 1e6,
-                    stat_cols=_minmax_cols(build, op) if d.minmax else [])
-            st.build_ms = (time.perf_counter() - t0) * 1e3
+            # a decayed estimate can undershoot the reduced build;
+            # build_bloom's resize rule self-corrects with one rebuild
+            # (ref physical_create_bf.cpp:385-406)
+            bloom, tag = timed(lambda: shared("sketch", op, lambda _: (
+                build_bloom(build, list(op.build_cols),
+                            est if est != inf else 1e6,
+                            stat_cols=(_minmax_cols(build, op)
+                                       if d.minmax else [])))))
             n = s.note(op.build, float(bloom.n_rows))
             bb = (s.rows_base or {}).get(op.build, 0.0)
             if d.rescue and n > 0 and (
@@ -1096,12 +1122,11 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                 # the observed build is too weak/big to probe with:
                 # the bitmap job is sunk (one scan, same as the
                 # observe-then-refuse path), the probe is withheld
-                res.decisions.append(Decision(
+                record(Decision(
                     op, gate="gate2b3", value=n, observed=True,
                     threshold=(SKETCH_MAX_KEYS
                                if n > SKETCH_MAX_KEYS
                                else cfg.max_build_keep_frac * bb)))
-                res.stats.append(st)
                 continue
             if n == 0:
                 s.dfs[op.probe] = probe.where(F.lit(False))
@@ -1111,30 +1136,21 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
                 if pred is not None:
                     probe = probe.where(pred)
                 s.dfs[op.probe] = probe_bloom(probe, list(op.probe_cols),
-                                              bloom)
+                                              bloom, name=f"{tag}_bf")
             landed = "sketch"
         elif d.tier != "minmax" and landed != "empty":
-            ck = (op.build, op.build_cols, s.epochs.get(op.build, 0))
-            keys = keys_cache.get(ck)
-            if keys is None:
-                keys = build.select(
-                    *[F.col(b).alias(f"__k{i}")
-                      for i, b in enumerate(op.build_cols)])
+            def key_set(tag: str) -> DataFrame:
+                keys = build.select(*[F.col(b).alias(f"{tag}_{i}")
+                                      for i, b in enumerate(op.build_cols)])
                 # broadcast semi join dedups in hash-table build; an
                 # extra distinct shuffle would only slow it down
-                keys = keys_cache[ck] = (
-                    F.broadcast(keys) if est <= cfg.broadcast_key_rows
-                    else keys.dropDuplicates())
-                if cfg.profiling:
-                    # force the key-set materialization so its cost is
-                    # attributed to the CREATE, not the consumer stage
-                    # (the reference's sink+finalize timers)
-                    t0 = time.perf_counter()
-                    keys.count()
-                    st.build_ms = (time.perf_counter() - t0) * 1e3
+                return (F.broadcast(keys) if est <= cfg.broadcast_key_rows
+                        else keys.dropDuplicates())
+
+            keys, tag = shared("keys", op, key_set)
             cond = None
             for i, p in enumerate(op.probe_cols):
-                c = F.col(p) == F.col(f"__k{i}")
+                c = F.col(p) == F.col(f"{tag}_{i}")
                 cond = c if cond is None else (cond & c)
             s.dfs[op.probe] = probe.join(keys, cond, "left_semi")
             landed = ("exact_shuffle" if est > cfg.broadcast_key_rows
@@ -1142,22 +1158,15 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
 
         observed = d.observed or d.minmax or d.tier == "sketch"
         if landed:
-            res.applied.append(op)
-            res.applied_tiers.append(landed)
             s.land(op, landed)
-            d = replace(d, tier=landed, observed=observed,
+            d = replace(d, tier=landed, observed=observed, tag=tag,
                         value=est if landed.startswith("exact") else d.value)
         else:
             # survived every gate but landed nothing (suppressed key
             # tier with a no-op minmax range, usually)
             d = replace(d, tier=None, gate=d.suppressed or "noop",
                         observed=observed)
-        res.decisions.append(d)
-        if cfg.profiling:
-            t0 = time.perf_counter()
-            st.rows_out = s.dfs[op.probe].count()
-            st.probe_ms = (time.perf_counter() - t0) * 1e3
-        res.stats.append(st)
+        record(d)
 
     # gate "native", settled: an op kept for reach that no later landing
     # built from only doubles the native bloom on its edge. It drops
@@ -1165,20 +1174,16 @@ def apply_transfer(dfs: dict, rows_est: dict, filtered: set,
     # input, so a statement left with nothing else bails to the host —
     # the cession (their eager jobs have already run; a repeat of the
     # statement hits the engine's bail cache)
-    idle = {op for i, op in enumerate(res.applied) if op in for_reach
-            and not any(o.build == op.probe for o in res.applied[i + 1:])}
+    applied = res.applied
+    idle = {op for i, op in enumerate(applied) if op in for_reach
+            and not any(o.build == op.probe for o in applied[i + 1:])}
     back = {op.probe for op in idle
-            if all(o in idle for o in res.applied if o.probe == op.probe)}
-    if back:
-        for p in back:
-            s.dfs[p] = dfs[p]
-            s.rows_est[p] = s.rows_pre[p]
-        gone = {op for op in idle if op.probe in back}
-        kept = [(o, t) for o, t in zip(res.applied, res.applied_tiers)
-                if o not in gone]
-        res.applied = [o for o, _ in kept]
-        res.applied_tiers = [t for _, t in kept]
-        res.decisions = [
-            replace(d, tier=None, gate="native", minmax=False)
-            if d.op in gone else d for d in res.decisions]
+            if all(o in idle for o in applied if o.probe == op.probe)}
+    for p in back:
+        s.dfs[p] = dfs[p]
+        s.rows_est[p] = s.rows_pre[p]
+    res.decisions = [
+        replace(d, tier=None, gate="native", minmax=False, tag=None)
+        if d.op in idle and d.op.probe in back else d
+        for d in res.decisions]
     return res

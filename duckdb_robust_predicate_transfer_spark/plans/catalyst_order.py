@@ -16,6 +16,10 @@ Everything here is best-effort: any resolution failure returns None
 and the caller falls back to declaration order (the behavior of the
 plain ``join_order`` heuristic). The traversal never triggers a Spark
 job — ``sparkPlan`` is pure planning.
+
+The same toolkit reads a statement back after it ran:
+``transfer_node_rows`` takes the row counts of each transfer landing
+from the executed plan's metrics, without a job.
 """
 
 from __future__ import annotations
@@ -71,8 +75,10 @@ def _norm_path(p: str) -> str:
 def _leaf_paths(node) -> "list | None":
     """Structural root paths of a leaf scan, or None.
 
-    FileSourceScanExec exposes relation().location().rootPaths(); the
-    toString() fallback below truncates Location metadata at
+    A physical FileSourceScanExec and an optimized logical
+    LogicalRelation over a HadoopFsRelation both expose
+    relation().location().rootPaths(); the toString() fallback of
+    scan_prefilter_pairs truncates Location metadata at
     spark.sql.maxMetadataStringLength (default 100 chars), which made
     long fixture paths silently match nothing (ADVICE r7).
     """
@@ -219,19 +225,6 @@ _XXHASH_COL = re.compile(r"xxhash64\((\w+)#\d+")
 _CREATE_COL = re.compile(r"bloom_filter_agg\(xxhash64\((\w+)#\d+")
 
 
-def _logical_leaf_paths(node) -> "list | None":
-    """rootPaths of a LOGICAL leaf relation (LogicalRelation over
-    HadoopFsRelation), or None. The physical `_leaf_paths` twin reads
-    FileSourceScanExec; optimized logical leaves expose the same
-    location through relation().location()."""
-    try:
-        rp = node.relation().location().rootPaths()
-        return [_norm_path(rp.apply(i).toString())
-                for i in range(rp.size())]
-    except Exception:
-        return None
-
-
 def native_bloom_edges(fresh: DataFrame, table_paths: dict,
                        table_cols: "dict | None" = None) -> "list | None":
     """Edges of the native runtime blooms Spark's InjectRuntimeFilter
@@ -288,7 +281,7 @@ def native_bloom_edges(fresh: DataFrame, table_paths: dict,
                 if kids:
                     stack.extend(kids)
                     continue
-                roots = _logical_leaf_paths(n)
+                roots = _leaf_paths(n)
                 for r in roots or ():
                     if r in path_to_table:
                         out.add(path_to_table[r])
@@ -399,3 +392,98 @@ def physical_alias_order(joined: DataFrame, alias_dfs: dict) -> "list | None":
         return order
     except Exception:
         return None
+
+
+
+#: a transfer filter's tag in a column name: ``__k{n}_{i}`` (key-set
+#: column i) or ``__k{n}_bf`` (bloom column)
+_TAG = re.compile(r"\b(__k\d+)_")
+_ATTR = re.compile(r"(\w+)#\d+")
+#: the key columns of a might_contain probe: xxhash64(cols..., seed)
+_XXHASH_ARGS = re.compile(r"xxhash64\((.*?), -?\d+\)")
+_SEMI_JOINS = ("BroadcastHashJoinExec", "ShuffledHashJoinExec",
+               "SortMergeJoinExec")
+
+
+def _ran_children(node) -> list:
+    """Children of an executed node, through the adaptive wrapper, query
+    stages, reused exchanges and cached plans (whose nodes ran where
+    the cache was filled)."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    if name == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()]
+    return _jseq(node.children())
+
+
+def _rows(node) -> "int | None":
+    m = node.metrics().get("numOutputRows")
+    return m.get().value() if m.isDefined() else None
+
+
+def _rows_below(node) -> "int | None":
+    """numOutputRows of the first node at or below ``node`` on its
+    first-child path that counts rows."""
+    while (n := _rows(node)) is None:
+        kids = _ran_children(node)
+        if not kids:
+            return None
+        node = kids[0]
+    return n
+
+
+def transfer_node_rows(df: DataFrame) -> dict:
+    """(tag, frozenset of lowercased probe columns) -> (rows in, rows
+    out) of each node a transfer landing produced in ``df``'s executed
+    plan: a left-semi join whose build keys carry the tag, or a Filter
+    whose ``might_contain`` reads a bloom column that does. Rows in are
+    read at the probe-side input; a bloom's Filter may also hold probe
+    predicates Catalyst combined into it, read after its rows in.
+
+    Call it once ``df`` has executed: it reads metrics only, so it
+    starts no job and leaves the plan as it was. A node found more than
+    once keeps the reading with the most rows in; a node AQE removed
+    (an empty relation) has no entry. {} when the plan cannot be read.
+    """
+    out: dict = {}
+    seen: set = set()
+    try:
+        stack = [df._jdf.queryExecution().executedPlan()]
+        while stack:
+            node = stack.pop()
+            kids = _ran_children(node)
+            name = node.getClass().getSimpleName()
+            found = []
+            if name == "InMemoryTableScanExec":
+                h = kids[0].hashCode()
+                if h in seen:
+                    continue
+                seen.add(h)
+            elif (name in _SEMI_JOINS
+                  and node.joinType().toString() == "LeftSemi"):
+                probe = node.leftKeys().toString()
+                found = [(t, probe) for t in
+                         set(_TAG.findall(node.rightKeys().toString()))]
+            elif name == "FilterExec":
+                segs = node.condition().toString().split("might_contain(")
+                subs = _jseq(node.subqueries()) if len(segs) > 1 else []
+                for seg, sub in (zip(segs[1:], subs)
+                                 if len(subs) == len(segs) - 1 else ()):
+                    m = _XXHASH_ARGS.search(seg)
+                    found += [(t, m.group(1) if m else "") for t in
+                              set(_TAG.findall(sub.output().toString()))]
+            for tag, probe in found:
+                key = (tag, frozenset(
+                    c.lower() for c in _ATTR.findall(probe)))
+                got = (_rows_below(kids[0]), _rows(node))
+                if key not in out or (got[0] or 0) > (out[key][0] or 0):
+                    out[key] = got
+            stack.extend(kids)
+        return out
+    except Exception:
+        return {}

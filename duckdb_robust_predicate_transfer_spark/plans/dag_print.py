@@ -2,8 +2,9 @@
 
 The analogue of the reference's utils/dag_printer.cpp (boxes with
 table name + formatted cardinality, edge labels parent_col/child_col,
-gated by rpt_display_dag). The per-op profiling summary is
-TransferResult.format_profile (operators/rewrite.py).
+gated by rpt_display_dag). The per-op summary of rpt_profiling is
+TransferResult.format_profile(df) (operators/rewrite.py), read from the
+executed plan once the statement's DataFrame ``df`` has run.
 """
 
 from __future__ import annotations

@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from .catalyst_order import _jseq
 from .ir import JoinEdge
 
 #: logical-plan node classes the walk may pass through. Anything else
@@ -105,10 +106,6 @@ class Extraction:
 
 def _cls(jobj) -> str:
     return jobj.getClass().getSimpleName()
-
-
-def _jseq(seq) -> list:
-    return [seq.apply(i) for i in range(seq.size())]
 
 
 def _conjuncts(expr) -> list:

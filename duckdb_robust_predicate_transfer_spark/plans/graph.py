@@ -124,45 +124,11 @@ def join_order_dag(graph: JoinGraph, flip_roots: bool = True) -> RootedTree:
     if not graph.nodes:
         return RootedTree(root="")
     rows = {a: n.rows for a, n in graph.nodes.items()}
-
-    # union the edges in declared order into an undirected forest
-    chosen: list = []
-    comp: dict = {a: a for a in graph.nodes}
-
-    def find(x):
-        while comp[x] != x:
-            comp[x] = comp[comp[x]]
-            x = comp[x]
-        return x
-
-    for e in graph.edges:
-        ra, rb = find(e.left), find(e.right)
-        if ra != rb:
-            comp[ra] = rb
-            chosen.append(e)
-
-    anchor = max(graph.nodes, key=lambda a: (rows[a], a))
-    if not flip_roots:
-        # root at the last edge's later endpoint (the final join output)
-        anchor = chosen[-1].right if chosen else anchor
-
-    # root the chosen forest at the anchor via BFS
-    adj = defaultdict(list)
-    for e in chosen:
-        adj[e.left].append((e.right, e))
-        adj[e.right].append((e.left, e))
-    parent: dict = {}
-    seen = {anchor}
-    q = deque([anchor])
-    while q:
-        u = q.popleft()
-        for v, e in adj[u]:
-            if v not in seen:
-                seen.add(v)
-                parent[v] = (u, e)
-                q.append(v)
-    # disconnected components: leave them rootless (no transfer)
-    return _bfs_levels(anchor, parent, graph)
+    largest = max(graph.nodes, key=lambda a: (rows[a], a))
+    # without flip_roots: root at the last chosen edge's later endpoint
+    # (the final join output)
+    return _rooted_forest(graph, graph.edges, lambda chosen: (
+        largest if flip_roots or not chosen else chosen[-1].right))
 
 
 def execution_order_dag(graph: JoinGraph, order: list,
@@ -189,7 +155,19 @@ def execution_order_dag(graph: JoinGraph, order: list,
         range(len(graph.edges)),
         key=lambda i: (max(pos.get(graph.edges[i].left, 0),
                            pos.get(graph.edges[i].right, 0)), i))
+    if flip_roots:
+        anchor = max(graph.nodes, key=lambda a: (rows[a], a))
+    else:
+        anchor = max(graph.nodes, key=lambda a: pos.get(a, -1))
+    return _rooted_forest(graph, [graph.edges[i] for i in ranked],
+                          lambda chosen: anchor)
 
+
+def _rooted_forest(graph: JoinGraph, edges: list, anchor) -> RootedTree:
+    """Union ``edges``, in order, into a spanning forest (an edge joins
+    two components or is skipped), then root it by BFS at
+    ``anchor(chosen edges)``. Components the anchor does not reach stay
+    rootless: no transfer crosses a cross product."""
     chosen: list = []
     comp: dict = {a: a for a in graph.nodes}
 
@@ -199,25 +177,20 @@ def execution_order_dag(graph: JoinGraph, order: list,
             x = comp[x]
         return x
 
-    for i in ranked:
-        e = graph.edges[i]
+    for e in edges:
         ra, rb = find(e.left), find(e.right)
         if ra != rb:
             comp[ra] = rb
             chosen.append(e)
 
-    if flip_roots:
-        anchor = max(graph.nodes, key=lambda a: (rows[a], a))
-    else:
-        anchor = max(graph.nodes, key=lambda a: pos.get(a, -1))
-
+    root = anchor(chosen)
     adj = defaultdict(list)
     for e in chosen:
         adj[e.left].append((e.right, e))
         adj[e.right].append((e.left, e))
     parent: dict = {}
-    seen = {anchor}
-    q = deque([anchor])
+    seen = {root}
+    q = deque([root])
     while q:
         u = q.popleft()
         for v, e in adj[u]:
@@ -225,7 +198,7 @@ def execution_order_dag(graph: JoinGraph, order: list,
                 seen.add(v)
                 parent[v] = (u, e)
                 q.append(v)
-    return _bfs_levels(anchor, parent, graph)
+    return _bfs_levels(root, parent, graph)
 
 
 def column_equivalence_classes(edges) -> dict:

@@ -139,34 +139,87 @@ def test_single_edge_bails_out(spark, sf_dir):
 
 
 def test_profiling_stats(spark, sf_dir):
-    e = Engine(spark, sf_dir, RPTConfig(profiling=True, **FORCE))
-    e.reduce(STAR_RELS, STAR_EDGES)
+    """The statement's record: one Decision per scheduled op with its
+    eager-job wall time, and format_profile(df) reading each landed
+    op's rows in and out from the run of ``df``."""
+    e = Engine(spark, sf_dir, RPTConfig(**FORCE))
+    df = e.reduce_and_join(STAR_RELS, STAR_EDGES)
+    df.collect()
     res = e.last_result
-    stats = res.stats
-    assert stats, "profiling should record per-step stats"
-    for st in stats:
-        assert st.rows_out <= st.rows_in
-        # per-op wall-time counters (the reference's rpt_profiling
-        # sink/finalize/probe timers, rpt_profiling.hpp:16-226)
-        assert st.build_ms >= 0 and st.probe_ms >= 0 and st.minmax_ms >= 0
-    # forced counts mean the probe timers must have actually ticked
-    assert sum(st.probe_ms for st in stats) > 0
+    rows = res.node_rows(df)
+    landed = [i for i, d in enumerate(res.decisions) if d.tier]
+    assert landed and sorted(rows) == landed, (rows, res.decisions)
+    for rin, rout in rows.values():
+        assert 0 <= rout <= rin
+    assert sum(rin - rout for rin, rout in rows.values()) > 0
+    assert all(d.ms >= 0 for d in res.decisions)
     assert res.planning_ms > 0
-    prof = res.format_profile()
-    assert "planning:" in prof and "build_ms" in prof and "TOTAL" in prof
+    prof = res.format_profile(df)
+    assert "planning:" in prof and "eager_ms" in prof and "TOTAL" in prof
     # one line per dropped Decision: gate, compared quantity, threshold
     # (the information gate drops the backward echoes once identity
     # stops counting as information)
-    e.reduce(STAR_RELS, STAR_EDGES, RPTConfig(
-        profiling=True, **{**FORCE, "require_selective_build": True}))
+    df = e.reduce_and_join(STAR_RELS, STAR_EDGES, RPTConfig(
+        **{**FORCE, "require_selective_build": True}))
+    df.collect()
     res = e.last_result
-    prof = res.format_profile()
+    prof = res.format_profile(df)
     dropped = [d for d in res.decisions if d.gate]
     drop_lines = [ln for ln in prof.splitlines() if ln.startswith("drop")]
     assert dropped and len(drop_lines) == len(dropped), prof
     for d, ln in zip(dropped, drop_lines):
         assert f" {d.gate} " in ln and " vs " in ln, ln
     assert sum(res.drops.values()) == len(dropped)
+
+
+def test_profile_rows_read_from_the_run(spark, sf_dir):
+    """format_profile reads rows from the executed plan, not from extra
+    jobs: for every probe of the flagship whose ops land on the exact
+    tier, the first op's rows in are the filtered, unreduced relation's
+    count and the last op's rows out are the reduced relation's count.
+    Reading starts no job and leaves the executed plan as it was."""
+    e = Engine(spark, sf_dir, RPTConfig(**FORCE))
+    red = e.reduce(STAR_RELS, STAR_EDGES)
+    df = e.join_all(red, STAR_EDGES)
+    df.collect()
+    res = e.last_result
+    tracker = spark.sparkContext.statusTracker()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    jobs = set(tracker.getJobIdsForGroup())
+    res.format_profile(df)
+    rows = res.node_rows(df)
+    assert set(tracker.getJobIdsForGroup()) == jobs
+    assert df._jdf.queryExecution().executedPlan().toString() == plan
+
+    plain = Engine(spark, sf_dir, RPTConfig(enabled=False)).reduce(
+        STAR_RELS, STAR_EDGES)
+    ops: dict = {}
+    for i, d in enumerate(res.decisions):
+        if d.tier and d.tier.startswith("exact"):
+            ops.setdefault(d.op.probe, []).append(i)
+    assert len(ops) >= 3, res.decisions
+    for probe, idx in ops.items():
+        assert rows[idx[0]][0] == plain[probe].count(), (probe, rows)
+        assert rows[idx[-1]][1] == red[probe].count(), (probe, rows)
+
+
+def test_broadcast_hints_travel_with_the_result(spark, sf_dir):
+    """join_all's broadcast hints come from the reduce() result it is
+    given: a later reduce() with the rewrite off leaves them alone."""
+    def hints(df) -> int:
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return plan.count("ResolvedHint (strategy=broadcast)")
+
+    e = Engine(spark, sf_dir,
+               RPTConfig(**{**FORCE, "host_broadcast_rows": 1_000_000}))
+    red = e.reduce(STAR_RELS, STAR_EDGES)
+    joined = hints(e.join_all(red, STAR_EDGES))
+    # join_all hinted small sides beyond the key sets' own hints
+    assert joined > sum(hints(df) for df in red.values())
+    e.reduce({"l": "lineitem", "o": "orders"},
+             [("l", "o", "l_orderkey", "o_orderkey")],
+             RPTConfig(enabled=False))
+    assert hints(e.join_all(red, STAR_EDGES)) == joined
 
 
 def test_multi_filter_build_persists_once(spark, sf_dir):
@@ -228,7 +281,7 @@ def test_colocated_edge_skips_transfer(spark, sf_dir):
     def run(colocate: bool):
         co = ("l_orderkey",) if colocate else ()
         co_o = ("o_orderkey",) if colocate else ()
-        e = Engine(spark, sf_dir, RPTConfig(**FORCE, profiling=True))
+        e = Engine(spark, sf_dir, RPTConfig(**FORCE))
         e.reduce(
             {"l": Rel("lineitem", df=lineitem, colocated_on=co),
              "o": Rel("orders", df=orders, colocated_on=co_o),
@@ -239,8 +292,8 @@ def test_colocated_edge_skips_transfer(spark, sf_dir):
 
     with_edge = run(colocate=False)
     without_edge = run(colocate=True)
-    edges_with = {(s.op.build, s.op.probe) for s in with_edge.stats}
-    edges_without = {(s.op.build, s.op.probe) for s in without_edge.stats}
+    edges_with = {(op.build, op.probe) for op in with_edge.applied}
+    edges_without = {(op.build, op.probe) for op in without_edge.applied}
     assert ("o", "l") in edges_with or ("l", "o") in edges_with
     assert ("o", "l") not in edges_without
     assert ("l", "o") not in edges_without
@@ -265,10 +318,10 @@ def test_provable_noop_ops_skipped(spark, sf_dir):
     edges = [("o", "c", "o_custkey", "c_custkey"),
              ("l", "o", "l_orderkey", "o_orderkey")]
 
-    e = Engine(spark, sf_dir, RPTConfig(profiling=True, **gates_off))
+    e = Engine(spark, sf_dir, RPTConfig(**gates_off))
     r = e.reduce_and_join(dict(rels), list(edges))
-    executed = {(s.op.phase, s.op.build, s.op.probe)
-                for s in e.last_result.stats}
+    executed = {(op.phase, op.build, op.probe)
+                for op in e.last_result.applied}
     assert ("forward", "c", "o") in executed
     assert ("forward", "o", "l") in executed
     assert not any(p == "backward" for p, _, _ in executed), executed
@@ -287,13 +340,13 @@ def test_broadcast_tier_bypasses_probe_size_gate(spark, sf_dir):
     TPCH_SCALE 100x regression). Here the probe is far below the gate
     yet the op must still execute."""
     e = Engine(spark, sf_dir, RPTConfig(
-        profiling=True, min_probe_rows=10**9,
+        min_probe_rows=10**9,
         all_broadcast_bail_rows=0, host_broadcast_rows=0))
     e.reduce({"c": "customer", "n": "nation",
               "rg": Rel("region", "r_name = 'ASIA'")},
              [("c", "n", "c_nationkey", "n_nationkey"),
               ("n", "rg", "n_regionkey", "r_regionkey")])
-    executed = {(s.op.build, s.op.probe) for s in e.last_result.stats}
+    executed = {(op.build, op.probe) for op in e.last_result.applied}
     assert ("rg", "n") in executed, executed
     assert ("n", "c") in executed, executed
 
